@@ -146,22 +146,26 @@ final case class MetricSet(
     metrics: Seq[MetricLike],
     schedule: Option[String] = None)
 
-/** CloudWatch comparison operators used by SLAs (cw_alarm.py:42-45). */
+/** CloudWatch comparison operators used by SLAs (cw_alarm.py:42-45).
+  * `breaches` compares in Spark SQL's double ordering: NaN equals
+  * itself and sorts above every other double, so `NaN > 5.0` breaches
+  * here exactly as it does in a SQL predicate. */
 sealed abstract class ComparisonOperator(val name: String) {
   def breaches(value: Double, threshold: Double): Boolean
 }
 object ComparisonOperator {
+  import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
   case object GreaterThanThreshold extends ComparisonOperator("GREATER_THAN_THRESHOLD") {
-    def breaches(v: Double, t: Double): Boolean = v > t
+    def breaches(v: Double, t: Double): Boolean = compareDoubles(v, t) > 0
   }
   case object GreaterThanOrEqualToThreshold extends ComparisonOperator("GREATER_THAN_OR_EQUAL_TO_THRESHOLD") {
-    def breaches(v: Double, t: Double): Boolean = v >= t
+    def breaches(v: Double, t: Double): Boolean = compareDoubles(v, t) >= 0
   }
   case object LessThanThreshold extends ComparisonOperator("LESS_THAN_THRESHOLD") {
-    def breaches(v: Double, t: Double): Boolean = v < t
+    def breaches(v: Double, t: Double): Boolean = compareDoubles(v, t) < 0
   }
   case object LessThanOrEqualToThreshold extends ComparisonOperator("LESS_THAN_OR_EQUAL_TO_THRESHOLD") {
-    def breaches(v: Double, t: Double): Boolean = v <= t
+    def breaches(v: Double, t: Double): Boolean = compareDoubles(v, t) <= 0
   }
   val all: Seq[ComparisonOperator] = Seq(
     GreaterThanThreshold, GreaterThanOrEqualToThreshold,
@@ -170,13 +174,15 @@ object ComparisonOperator {
     throw new IllegalArgumentException(s"unknown comparison operator: $s"))
 }
 
-/** Missing-data policies (cw_alarm.py:46-49; CloudWatch semantics). */
-sealed abstract class TreatMissingData(val name: String)
+/** Missing-data policies (cw_alarm.py:46-49; CloudWatch semantics).
+  * `missingVote` is the vote a slot without a datapoint casts; IGNORE
+  * and MISSING abstain (None). */
+sealed abstract class TreatMissingData(val name: String, val missingVote: Option[Boolean])
 object TreatMissingData {
-  case object NotBreaching extends TreatMissingData("NOT_BREACHING")
-  case object Breaching    extends TreatMissingData("BREACHING")
-  case object Ignore       extends TreatMissingData("IGNORE")
-  case object Missing      extends TreatMissingData("MISSING")
+  case object NotBreaching extends TreatMissingData("NOT_BREACHING", Some(false))
+  case object Breaching    extends TreatMissingData("BREACHING", Some(true))
+  case object Ignore       extends TreatMissingData("IGNORE", None)
+  case object Missing      extends TreatMissingData("MISSING", None)
   val all: Seq[TreatMissingData] = Seq(NotBreaching, Breaching, Ignore, Missing)
   def fromName(s: String): TreatMissingData = all.find(_.name == s).getOrElse(
     throw new IllegalArgumentException(s"unknown treat_missing_data: $s"))

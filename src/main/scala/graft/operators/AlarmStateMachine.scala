@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import scala.collection.mutable
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, StringType, StructField, StructType}
+import graft.model.{ComparisonOperator, TreatMissingData}
 
 /**
  * Threshold comparison + alarm state machine, batch variant (O-23;
@@ -12,24 +14,30 @@ import org.apache.spark.sql.functions._
  * implemented:
  *
  *  - breach per datapoint: value <op> threshold for the four
- *    comparison operators (cw_alarm.py:42-45);
+ *    comparison operators (cw_alarm.py:42-45), in Spark SQL ordering;
  *  - alarm when ≥ datapoints_to_alarm (M) of the last
- *    evaluation_periods (N) datapoints breach;
+ *    evaluation_periods (N) votes breach;
  *  - treat_missing_data ∈ NOT_BREACHING (default) | BREACHING | IGNORE
  *    | MISSING (cw_alarm.py:46-49): the series timeline is densified to
- *    one slot per period, and missing slots count as non-breaching /
- *    breaching / are skipped (window looks further back over real
- *    datapoints) / yield INSUFFICIENT_DATA when the whole window is
- *    empty;
+ *    one slot per period, and missing slots vote non-breaching /
+ *    breaching / abstain, so the window spans the last N real
+ *    datapoints / abstain and yield INSUFFICIENT_DATA when none of the
+ *    last N slots holds a real datapoint;
  *  - state-change rows (OK→ALARM etc.) are flagged for notification
  *    (alarm actions fire on transition, not level).
  *
- * Scale: running-sum window functions partitioned by the full SLA
- * config plus one narrow-row equi-join on the vote index (the "N votes
- * ago" lookup) — O(1) per-row state, linear per-series scan, no
- * driver-side state, no per-row vote-array buffering. Timeline
- * densification uses sequence() per series bounded by the series' own
- * [min,max] window, so a sparse series doesn't explode.
+ * One pass: a broadcast join of the SLAs, one hash repartition on the
+ * full SLA key (a series may carry several SLAs, and two differing only
+ * in `period` have separate grids and vote streams), a sort by key and
+ * window_start within partitions, and one walk per key over its dense
+ * slot grid. The walk keeps the last N votes in a ring buffer with a
+ * running breach count, so a slot costs O(1). Its vote and state rule
+ * ([[vote]], [[state]]) is the one streaming.AlarmStream.applySlot runs.
+ *
+ * The grid is CLAMPED to the key's last maxSlotsPerSeries slots: one
+ * corrupt far-future timestamp (epoch-millis read as seconds) would
+ * otherwise ask for ~1e10 slots and kill alarming for every healthy
+ * series with it.
  */
 object AlarmStateMachine {
 
@@ -37,13 +45,23 @@ object AlarmStateMachine {
   val StateAlarm = "ALARM"
   val StateInsufficient = "INSUFFICIENT_DATA"
 
-  /** Per-datapoint breach predicate with operator dispatch
-    * (cw_alarm.py:42-45). */
-  def breaches(value: Column, op: Column, threshold: Column): Column =
-    when(op === "GREATER_THAN_THRESHOLD", value > threshold)
-      .when(op === "GREATER_THAN_OR_EQUAL_TO_THRESHOLD", value >= threshold)
-      .when(op === "LESS_THAN_THRESHOLD", value < threshold)
-      .when(op === "LESS_THAN_OR_EQUAL_TO_THRESHOLD", value <= threshold)
+  private val KeyCols = Seq("series_id", "period", "threshold",
+    "comparison_operator", "datapoints_to_alarm", "evaluation_periods",
+    "treat_missing_data")
+
+  /** A slot's vote: a real datapoint votes whether it breaches, a
+    * missing slot casts the policy's missing vote (None = abstains). */
+  private[graft] def vote(value: Option[Double], op: ComparisonOperator,
+      threshold: Double, policy: TreatMissingData): Option[Boolean] =
+    value.map(op.breaches(_, threshold)).orElse(policy.missingVote)
+
+  /** The state after a slot, from the breaches among the last N votes
+    * cast and whether any of the last N slots held a real datapoint. */
+  private[graft] def state(policy: TreatMissingData, datapointsToAlarm: Int,
+      breaches: Int, realInLastN: Boolean): String =
+    if (policy == TreatMissingData.Missing && !realInLastN) StateInsufficient
+    else if (breaches >= datapointsToAlarm) StateAlarm
+    else StateOk
 
   /**
    * Evaluate alarm states over windowed series values.
@@ -53,125 +71,92 @@ object AlarmStateMachine {
    * @param slas   (series_id, period, threshold, comparison_operator,
    *               datapoints_to_alarm, evaluation_periods,
    *               treat_missing_data) — tiny; broadcast
-   * @return one row per (series_id, slot): window_start, metricvalue
-   *         (null when the slot was missing), breaching, statevalue,
-   *         prev_state, transitioned
+   * @return one row per (SLA key, slot): the key columns, window_start,
+   *         metricvalue (null when the slot was missing), breaching,
+   *         statevalue, prev_state (null on the first slot), transitioned
    */
   def evaluate(series: DataFrame, slas: DataFrame,
       maxSlotsPerSeries: Long = 200000L): DataFrame = {
-    // Fail fast on bad SLA config (mirrors the streaming path):
-    // breaches() has no otherwise-branch, so a typo'd operator would
-    // make every slot silently abstain — the alarm could never fire
-    // and nothing would report the misconfiguration.
+    // Fail fast on bad SLA config (mirrors the streaming path): a
+    // typo'd operator would otherwise make every slot silently abstain
+    // — the alarm could never fire and nothing would report it.
     graft.pipeline.DriverBounds.boundedCollect(
       slas.select(col("period").cast("long"), col("comparison_operator"),
-        col("treat_missing_data")).distinct(), 10000L,
+        col("treat_missing_data"), coalesce(col("threshold").isNotNull &&
+          col("datapoints_to_alarm").isNotNull && col("evaluation_periods") >= 1,
+          lit(false))).distinct(), 10000L,
       "AlarmStateMachine distinct SLA configs (definition metadata)")
       .foreach { r =>
         require(!r.isNullAt(0) && r.getLong(0) > 0,
           s"SLA period must be positive, got ${r.get(0)}")
-        graft.model.ComparisonOperator.fromName(r.getString(1))
-        graft.model.TreatMissingData.fromName(r.getString(2))
+        ComparisonOperator.fromName(r.getString(1))
+        TreatMissingData.fromName(r.getString(2))
+        require(r.getBoolean(3), "SLA threshold and datapoints_to_alarm must " +
+          "be set and evaluation_periods must be at least 1")
       }
-    val joined = series.join(broadcast(slas), Seq("series_id"), "inner")
+    val key = KeyCols.map(col)
+    val rows = series
+      .select(col("series_id"), col("window_start").cast("long").as("window_start"),
+        col("metricvalue"))
+      .filter(col("window_start").isNotNull)
+      .join(broadcast(slas.select(key: _*)), Seq("series_id"))
+      .select(key :+ col("window_start") :+ col("metricvalue"): _*)
+    val out = StructType(rows.schema.fields ++ Seq(
+      StructField("breaching", BooleanType), StructField("statevalue", StringType),
+      StructField("prev_state", StringType), StructField("transitioned", BooleanType)))
+    rows.repartition(key: _*)
+      .sortWithinPartitions(key :+ col("window_start"): _*)
+      .mapPartitions(walk(_, maxSlotsPerSeries))(Encoders.row(out))
+  }
 
-    // Densify each series to one slot per period over its own span —
-    // missing-data policies need explicit missing slots. The span is
-    // CLAMPED to the last maxSlotsPerSeries slots: one corrupt
-    // far-future timestamp (epoch-millis read as seconds) would
-    // otherwise ask sequence() for ~1e10 elements and OOM the whole
-    // job, killing alarming for every healthy series with it.
-    val bounds = joined.groupBy(
-        col("series_id"), col("period"), col("threshold"),
-        col("comparison_operator"), col("datapoints_to_alarm"),
-        col("evaluation_periods"), col("treat_missing_data"))
-      .agg(min("window_start").as("_lo"), max("window_start").as("_hi"))
-    val clampedLo = greatest(col("_lo"),
-      col("_hi") - lit(maxSlotsPerSeries) * col("period").cast("long"))
-    val slots = bounds.select(
-      col("series_id"), col("period"), col("threshold"),
-      col("comparison_operator"), col("datapoints_to_alarm"),
-      col("evaluation_periods"), col("treat_missing_data"),
-      explode(sequence(clampedLo, col("_hi"), col("period").cast("long")))
-        .as("window_start"))
-
-    val dense = slots.join(
-      series.select(col("series_id").as("_sid"), col("window_start").as("_ws"),
-        col("metricvalue")),
-      slots("series_id") === col("_sid") && slots("window_start") === col("_ws"),
-      "left").drop("_sid", "_ws")
-
-    val present = col("metricvalue").isNotNull
-    val realBreach = breaches(col("metricvalue"), col("comparison_operator"), col("threshold"))
-
-    // Missing-slot breach contribution by policy. For IGNORE the window
-    // ranges over the last N *real* datapoints, which we emulate by
-    // carrying the slot's breach flag as null and counting over a
-    // larger lookback of non-null flags.
-    val slotBreach = when(present, realBreach)
-      .when(col("treat_missing_data") === "BREACHING", lit(true))
-      .when(col("treat_missing_data") === "NOT_BREACHING", lit(false))
-      .otherwise(lit(null).cast("boolean")) // IGNORE / MISSING: slot doesn't vote
-
-    // partition by the FULL SLA config, not just the series: a series
-    // may carry several SLAs (warning + critical threshold), and mixing
-    // their rows in one window would interleave vote streams and lag()
-    // states across configs. `period` IS part of the config — two SLAs
-    // differing only in period must not share one vote stream.
-    val keyCols = Seq("series_id", "period", "threshold",
-      "comparison_operator", "datapoints_to_alarm",
-      "evaluation_periods", "treat_missing_data")
-    val w = Window.partitionBy(keyCols.map(col): _*).orderBy("window_start")
-    val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    // Counting formulation of "breaches among the last N votes": a null
-    // vote (IGNORE/MISSING missing slot) doesn't advance the vote index,
-    // so the window spans the last N *real* datapoints; for
-    // NOT_BREACHING/BREACHING every slot votes and the window is the
-    // last N slots. Running sums keep per-row state O(1) — no per-row
-    // vote-array buffering — and evaluation_periods is unbounded (the
-    // old collect_list frame capped lookback at 100 slots).
-    val cur = dense
-      .withColumn("__vote", slotBreach)
-      .withColumn("__rb", sum(when(col("__vote"), 1L).otherwise(0L)).over(wRun))
-      .withColumn("__vi", count(col("__vote")).over(wRun))
-      .withColumn("__rn", row_number().over(w))
-      .withColumn("__lp", max(when(present, col("__rn"))).over(wRun))
-      .withColumn("__target", col("__vi") - col("evaluation_periods"))
-
-    // breaches among the last N votes = running breaches now minus
-    // running breaches as of N votes ago; the "as of N votes ago"
-    // lookup is an equi-join on the vote index (lag() would need a
-    // literal offset). Same-key partitioning on both sides — one
-    // narrow-row shuffle, no driver state.
-    val voteIdx = cur.filter(col("__vote").isNotNull)
-      .select(keyCols.map(c => col(c).as(s"__k_$c")) ++
-        Seq(col("__vi").as("__j"), col("__rb").as("__rb_j")): _*)
-    val joinCond = keyCols.map(c => col(c) === col(s"__k_$c"))
-      .reduce(_ && _) && col("__j") === col("__target")
-    val looked = cur.join(voteIdx, joinCond, "left")
-      .drop(keyCols.map(c => s"__k_$c") :+ "__j": _*)
-
-    val breachCount = col("__rb") -
-      when(col("__target") >= 1, coalesce(col("__rb_j"), lit(0L))).otherwise(lit(0L))
-    // a real datapoint within the last N slots? (slots are dense, so
-    // slot distance = row distance)
-    val anyReal = col("__lp").isNotNull &&
-      (col("__rn") - col("__lp")) < col("evaluation_periods")
-
-    val state =
-      when(col("treat_missing_data") === "MISSING" && !anyReal, StateInsufficient)
-        .when(breachCount >= col("datapoints_to_alarm"), StateAlarm)
-        .otherwise(StateOk)
-
-    val withState = looked
-      .withColumn("breaching", coalesce(col("__vote"), lit(false)))
-      .withColumn("statevalue", state)
-    val prev = lag(col("statevalue"), 1).over(w)
-    withState
-      .withColumn("prev_state", prev)
-      .withColumn("transitioned",
-        prev.isNotNull && prev =!= col("statevalue"))
-      .drop("__vote", "__rb", "__vi", "__rn", "__lp", "__target", "__rb_j")
+  /** Walks one partition, sorted by key then window_start, key by key:
+    * one output row per slot, or per row where rows share a slot. Rows
+    * are (key columns, window_start, metricvalue). */
+  private def walk(rows: Iterator[Row], maxSlots: Long): Iterator[Row] = {
+    val in = rows.buffered
+    def ws(r: Row): Long = r.getLong(KeyCols.length)
+    Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+      val first = in.next()
+      val key = KeyCols.indices.map(first.get)
+      val period = first.getAs[Number](1).longValue
+      // rows a clamp span behind the newest can hold no slot: drop them
+      val kept = mutable.ArrayDeque(first)
+      while (in.hasNext && key.indices.forall(i =>
+          java.util.Objects.equals(in.head.get(i), key(i)))) {
+        kept += in.next()
+        while (ws(kept.head) < ws(kept.last) - maxSlots * period) kept.removeHead()
+      }
+      val threshold = first.getAs[Number](2).doubleValue
+      val op = ComparisonOperator.fromName(first.getString(3))
+      val m = first.getAs[Number](4).intValue
+      val n = first.getAs[Number](5).intValue
+      val policy = TreatMissingData.fromName(first.getString(6))
+      val votes = mutable.Queue.empty[Boolean] // the last n votes cast
+      var breaches = 0
+      var sinceReal = n // slots since the last real datapoint, capped at n
+      var prev: String = null
+      var i = 0
+      val hi = ws(kept.last)
+      (math.max(ws(first), hi - maxSlots * period) to hi by period).iterator.flatMap { w =>
+        while (i < kept.length && ws(kept(i)) < w) i += 1 // off the grid
+        val from = i
+        while (i < kept.length && ws(kept(i)) == w) i += 1
+        if (from == i) Iterator.single(w -> null)
+        else (from until i).iterator.map(j => w -> kept(j).get(KeyCols.length + 1))
+      }.map { case (w, value) => // value null: a missing slot
+        val v = vote(Option(value).map(_.asInstanceOf[Number].doubleValue), op, threshold, policy)
+        v.foreach { b =>
+          votes += b
+          if (b) breaches += 1
+          if (votes.length > n && votes.dequeue()) breaches -= 1
+        }
+        sinceReal = if (value != null) 0 else math.min(sinceReal + 1, n)
+        val s = state(policy, m, breaches, sinceReal < n)
+        val row = Row.fromSeq(key ++ Seq(w, value, v.getOrElse(false), s, prev,
+          prev != null && prev != s))
+        prev = s
+        row
+      }
+    }
   }
 }

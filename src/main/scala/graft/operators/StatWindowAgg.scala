@@ -20,7 +20,11 @@ import org.apache.spark.sql.functions._
  *    partitioning/merge order (a 100 TB shuffle must not change the
  *    answer in the low bits);
  *  - per-series skew (one hot series) is handled by AQE skew handling;
- *    the window key also spreads a hot series across time buckets.
+ *    the window key also spreads a hot series across time buckets;
+ *  - NaN and ±Infinity are no-data, dropped before grouping as on the
+ *    streaming path: cast to DECIMAL they turn NULL, so Sum would skip
+ *    them while SampleCount and the Average divisor counted them, and
+ *    Maximum would return NaN.
  */
 object StatWindowAgg {
 
@@ -43,6 +47,12 @@ object StatWindowAgg {
         if (f > 0.0 && f <= 1.0) Some(f) else None
       } catch { case _: NumberFormatException => None }
     else None
+
+  /** Drops NaN and ±Infinity values (no-data; see the object doc). */
+  private def finite(datapoints: DataFrame, valueCol: String): DataFrame = {
+    val v = col(valueCol)
+    datapoints.filter(v.isNull || (!isnan(v) && !v.isin(Double.PositiveInfinity, Double.NegativeInfinity)))
+  }
 
   /**
    * Aggregate datapoints into per-series statistic windows.
@@ -72,9 +82,10 @@ object StatWindowAgg {
     val pStats: Seq[(String, Double)] =
       allStats.flatMap(s => percentileFraction(s).map(s -> _))
 
-    val joined = datapoints.join(
+    val dps = finite(datapoints, "value")
+    val joined = dps.join(
       broadcast(defsF.select("unique_id", "statistic", "period", "frequency")),
-      datapoints("series_id") === defsF("unique_id"), "inner")
+      dps("series_id") === defsF("unique_id"), "inner")
 
     // O-17: windows are per-period; period is a group key so series
     // with different periods coexist in one pass.
@@ -136,7 +147,7 @@ object StatWindowAgg {
         case None => throw new IllegalArgumentException(s"unknown statistic: $p")
       }
     }
-    datapoints.groupBy(col("series_id"), windowStart.as("window_start"))
+    finite(datapoints, valueCol).groupBy(col("series_id"), windowStart.as("window_start"))
       .agg(agg.as("metricvalue"))
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.model.{ComparisonOperator, TreatMissingData}
+import graft.operators.AlarmStateMachine
 
 /**
  * Streaming alarm state machine (O-23 streaming variant; SURVEY.md §7
@@ -76,32 +77,23 @@ object AlarmStream {
     SlaConf(p.period, p.threshold, p.comparisonOperator,
       p.datapointsToAlarm, p.evaluationPeriods, p.treatMissingData)
 
-  /** Evaluate ONE slot (real or missing) against the machine. */
-  private[streaming] def applySlot(s: AlarmState, seriesId: String, ws: Long,
+  /** Evaluate ONE slot (real or missing) against the machine, by the
+    * vote and state rule the batch variant runs
+    * ([[AlarmStateMachine.vote]], [[AlarmStateMachine.state]]). */
+  private[graft] def applySlot(s: AlarmState, seriesId: String, ws: Long,
       value: Option[Double], conf: SlaConf): (AlarmState, Option[Transition]) = {
     val op = ComparisonOperator.fromName(conf.comparisonOperator)
     val n = math.max(conf.evaluationPeriods, 1)
     val policy = TreatMissingData.fromName(conf.treatMissingData)
-    val realBreach = value.map(v => op.breaches(v, conf.threshold))
-    val slotVote: Option[Boolean] = realBreach.orElse(policy match {
-      case TreatMissingData.NotBreaching => Some(false)
-      case TreatMissingData.Breaching => Some(true)
-      case _ => None // IGNORE / MISSING: slot doesn't vote
-    })
+    val slotVote = AlarmStateMachine.vote(value, op, conf.threshold, policy)
     val slotVotes = (s.slotVotes :+ slotVote).takeRight(n)
-    val realVotes = (s.realVotes ++ realBreach).takeRight(n)
-    val counted = policy match {
-      case TreatMissingData.Ignore | TreatMissingData.Missing =>
-        realVotes // last N real datapoints, gaps skipped
-      case _ => slotVotes.flatten // last N slots (all voted)
-    }
-    // MISSING: insufficient iff no real datapoint in the last N
-    // slots — same trigger as the batch variant.
-    val newState =
-      if (policy == TreatMissingData.Missing && !slotVotes.exists(_.isDefined))
-        "INSUFFICIENT_DATA"
-      else if (counted.count(identity) >= conf.datapointsToAlarm) "ALARM"
-      else "OK"
+    val realVotes = (s.realVotes ++ slotVote.filter(_ => value.isDefined)).takeRight(n)
+    // the last N cast votes: every slot votes unless the policy
+    // abstains on missing slots, then only real datapoints do (so
+    // under MISSING a voting slot is a real one)
+    val cast = if (policy.missingVote.isEmpty) realVotes else slotVotes.flatten
+    val newState = AlarmStateMachine.state(policy, conf.datapointsToAlarm,
+      cast.count(identity), slotVotes.exists(_.isDefined))
     val next = AlarmState(slotVotes, realVotes, newState,
       Some(ws), Some(conf))
     val out = if (newState != s.state)

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import graft.model.{ComparisonOperator, TreatMissingData}
 import graft.operators.AlarmStateMachine
 import graft.streaming.AlarmStream
 import graft.streaming.AlarmStream.{AlarmState, SeriesPoint}
@@ -101,6 +102,35 @@ class AlarmMachineSpec extends SparkTestBase {
     assert(out.contains((60, 180L, "OK")), s"$out")
     // the 120s config densifies its OWN slot grid from the same rows
     assert(out.filter(_._1 == 120).map(_._2) == Set(0L, 120L), s"$out")
+  }
+
+  test("far-future window: the slot grid is clamped to the last maxSlotsPerSeries slots") {
+    val rows = AlarmStateMachine.evaluate(
+        seriesDf(Seq(0L -> Some(9.0), 60L -> Some(9.0), 6000000L -> Some(9.0))),
+        slaDf(5.0, "GREATER_THAN_THRESHOLD", 1, 1), maxSlotsPerSeries = 3)
+      .select("window_start", "metricvalue", "statevalue", "prev_state")
+      .orderBy("window_start").collect()
+      .map(r => (r.getLong(0), Option(r.get(1)), r.getString(2), Option(r.getString(3))))
+    assert(rows.toSeq == Seq(
+      (5999820L, None, "OK", None), (5999880L, None, "OK", Some("OK")),
+      (5999940L, None, "OK", Some("OK")), (6000000L, Some(9.0), "ALARM", Some("OK"))))
+  }
+
+  test("NaN metricvalue breaches by Spark ordering, batch and stream alike") {
+    // NaN sorts above every double: it breaches GREATER_*, never LESS_*
+    val s = Seq(0L -> Some(1.0), 60L -> Some(Double.NaN), 120L -> None,
+      180L -> Some(Double.NaN), 240L -> Some(9.0))
+    for (op <- ComparisonOperator.all.map(_.name);
+         missing <- TreatMissingData.all.map(_.name)) {
+      def pt(ws: Long, v: Option[Double]) =
+        SeriesPoint("s1", ws, v, 60L, 5.0, op, 1, 2, missing)
+      val stream = s.scanLeft(AlarmStream.EmptyState) { case (st, (ws, v)) =>
+        AlarmStream.advance(Iterator(pt(ws, v)), st)._1 }.tail
+        .map(st => st.lastWindow.get -> st.state)
+      assert(states(s, 5.0, op, 1, 2, missing) == stream, s"$op $missing")
+    }
+    assert(states(s, 5.0, "GREATER_THAN_THRESHOLD", 1, 1)(1) == 60L -> "ALARM")
+    assert(states(s, 5.0, "LESS_THAN_THRESHOLD", 1, 1)(1) == 60L -> "OK")
   }
 
   test("streaming IGNORE matches batch across gaps") {

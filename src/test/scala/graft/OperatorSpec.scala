@@ -41,6 +41,24 @@ class OperatorSpec extends SparkTestBase {
     assert(plan.contains("BroadcastHashJoin"), s"defs join must broadcast:\n$plan")
   }
 
+  test("StatWindowAgg: NaN and ±Infinity datapoints are no-data") {
+    // one series per statistic, each over the window [1, 3, NaN, ±Inf]
+    val stats = Seq("Sum" -> 4.0, "Average" -> 2.0, "SampleCount" -> 2.0, "Maximum" -> 3.0)
+    val values = Seq(1.0, 3.0, Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+    val dp = (for ((s, _) <- stats; v <- values) yield (s, ts(10), v))
+      .toDF("series_id", "ts", "value")
+    val defs = stats.map { case (s, _) => (s, s, 60, "minute") }
+      .toDF("unique_id", "statistic", "period", "frequency")
+    val got = StatWindowAgg.aggregate(dp, defs).collect()
+      .map(r => r.getString(0) -> r.getDouble(5)).toMap
+    assert(got == stats.toMap)
+    stats.foreach { case (s, want) =>
+      val one = StatWindowAgg.aggregateOne(dp.filter(col("series_id") === s), s, 60)
+        .collect().map(_.getDouble(2)).toSeq
+      assert(one == Seq(want), s)
+    }
+  }
+
   test("10-minute end alignment (O-13)") {
     val df = Seq(ts(1234), ts(600), ts(599)).toDF("ts")
     assert(df.select(TimeFns.alignEnd10MinEpoch(col("ts"))).as[Long].collect().toSet

@@ -66,6 +66,52 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("batch alarm machine equals a slot-by-slot replay of the streaming machine") {
+    val spark = SparkTestBase.session
+    import spark.implicits._
+    import graft.operators.AlarmStateMachine
+    import graft.streaming.AlarmStream.SlaConf
+    // one random gapped series (absent slots are gaps, some values NaN)
+    // per operator × policy × 1 ≤ M ≤ N ≤ 6, each under two SLAs that
+    // differ only in period
+    val valueGen = Gen.frequency(6 -> Gen.chooseNum(0.0, 10.0).map(Option(_)),
+      1 -> Gen.const(Some(Double.NaN)), 3 -> Gen.const(None))
+    val cases = (for (op <- ComparisonOperator.all; policy <- TreatMissingData.all;
+        n <- 1 to 6; m <- 1 to n) yield (op.name, policy.name, m, n)).zipWithIndex.map {
+      case ((op, policy, m, n), i) =>
+        val values = Gen.listOfN(14, valueGen).apply(Gen.Parameters.default, Seed(i.toLong)).get
+        val pts = values.zipWithIndex.collect { case (Some(v), j) => (j * 60L, v) }
+        (s"s$i", pts, (p: Long) => SlaConf(p, 5.0, op, m, n, policy))
+    }
+    val periods = Seq(60L, 120L)
+    val series = cases.flatMap { case (sid, pts, _) => pts.map { case (ws, v) => (sid, ws, v) } }
+      .toDF("series_id", "window_start", "metricvalue")
+    val slas = cases.flatMap { case (sid, _, conf) => periods.map(conf).map(c =>
+        (sid, c.period, c.threshold, c.comparisonOperator, c.datapointsToAlarm,
+          c.evaluationPeriods, c.treatMissingData)) }
+      .toDF("series_id", "period", "threshold", "comparison_operator",
+        "datapoints_to_alarm", "evaluation_periods", "treat_missing_data")
+    val got = AlarmStateMachine.evaluate(series, slas)
+      .select("series_id", "period", "window_start", "statevalue", "prev_state", "transitioned")
+      .collect().groupBy(r => (r.getString(0), r.getLong(1))).map { case (k, rs) =>
+        k -> rs.toSeq.sortBy(_.getLong(2)).map(r =>
+          (r.getLong(2), r.getString(3), Option(r.getString(4)), r.getBoolean(5))) }
+    for ((sid, pts, conf) <- cases; p <- periods if pts.nonEmpty) {
+      // the batch grid runs from the first window to the last, on the
+      // SLA's own period; rows off the grid are not slots
+      val byWs = pts.toMap
+      var st = AlarmStream.EmptyState
+      var prev = Option.empty[String]
+      val want = (pts.head._1 to pts.last._1 by p).map { ws =>
+        st = AlarmStream.applySlot(st, sid, ws, byWs.get(ws), conf(p))._1
+        val row = (ws, st.state, prev, prev.exists(_ != st.state))
+        prev = Some(st.state)
+        row
+      }
+      assert(got((sid, p)) == want, s"$sid period $p ${conf(p)} over $pts")
+    }
+  }
+
   test("comparison operators are complementary at the boundary") {
     forAll2(Gen.chooseNum(-100.0, 100.0), Gen.chooseNum(-100.0, 100.0)) { (v, t) =>
       import ComparisonOperator._

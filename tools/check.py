@@ -1,8 +1,13 @@
 #!/usr/bin/env python3
 """Local correctness checker mimicking the driver's DuckDB-oracle
 compare: run graft.Verify output against oracle_sql.json on the same
-sf dir. Usage: check.py [sfDir] [outDir] [--skip-verify] [names...]"""
+sf dir. Usage: check.py [sfDir] [outDir] [--skip-verify] [names...]
+
+Builds and runs the tree this script lives in. Query names limit both
+the Verify dump (SPARK_GRAFT_ONLY) and the compare."""
 import json, math, sys, subprocess, os
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
@@ -16,8 +21,9 @@ if not skip:
     # make the comparator silently grade STALE output as current
     import shutil
     shutil.rmtree(out, ignore_errors=True)
+    env = dict(os.environ, SPARK_GRAFT_ONLY=",".join(names)) if names else None
     r = subprocess.run(["sbt", "-batch", f'runMain graft.Verify {sf} {out}'],
-                       capture_output=True, text=True, cwd="/root/repo")
+                       capture_output=True, text=True, cwd=ROOT, env=env)
     sys.stdout.write(r.stdout[-3000:])
     if r.returncode != 0:
         sys.stdout.write(r.stderr[-3000:]); sys.exit(1)
