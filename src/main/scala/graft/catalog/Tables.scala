@@ -30,7 +30,6 @@ object Tables {
     * would lose precision above 2^53 ns and could flip second
     * boundaries). */
   def read(spark: SparkSession, sfDir: String, table: String): DataFrame = {
-    graft.plans.NativeFns.register(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = spark.read.parquet(s"$sfDir/$table.parquet")
     df.schema.fields.find(f => f.name == "ts" &&

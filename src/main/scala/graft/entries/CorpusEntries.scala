@@ -159,7 +159,6 @@ private[graft] object CorpusEntries {
     // (partial leak), item 4 untouched (must report zeros).
     "q_contamination_report" -> { (s, dir) =>
       val d = docs(s, dir).select("doc_id", "text")
-      graft.plans.NativeFns.register(s)
       val bench = d.filter(col("doc_id") < 5)
       val chunk3 = bench.filter(col("doc_id") === 3).select(
         array_join(slice(graft.plans.WordShingles.shingles(col("text"), 1),

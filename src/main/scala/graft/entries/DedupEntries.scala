@@ -191,7 +191,6 @@ private[graft] object DedupEntries {
     // copy is stripped.
     "q_dedup_substring" -> { (s, dir) =>
       val base = docs(s, dir).select(col("doc_id"), col("text"))
-      graft.plans.NativeFns.register(s)
       val chunk = base.filter(col("doc_id") === 1).select(
         array_join(slice(graft.plans.WordShingles.shingles(col("text"), 1),
           1, 30), " ").as("__c"))

@@ -19,7 +19,6 @@ private[graft] object VectorEntries {
     // scalar (vec_id, pos, component) rows — posexplode of the sketch
     // array — so the comparator hashes plain integers.
     "q_embed_project" -> { (s, dir) =>
-      graft.plans.NativeFns.register(s)
       Tables.read(s, dir, "embeddings")
         .select(col("vec_id"),
           posexplode(graft.plans.VecProject.project(col("embedding"), k = 16)))

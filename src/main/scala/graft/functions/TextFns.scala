@@ -66,13 +66,9 @@ object TextFns {
     * docs. Shingles come from the native single-pass
     * [[graft.plans.WordShingles]] (byte-identical to the composed
     * `wordNgrams`, whose interpreted transform/slice chain re-split
-    * the text per gram); callers must have native functions registered
-    * — free for anything reading through `Tables.read`. */
+    * the text per gram). */
   def shingleFingerprint(text: Column, n: Int = 3): Column =
     array_min(transform(graft.plans.WordShingles.shingles(text, n), s => md5(s)))
-
-  private def countIn(toks: Column, words: Seq[String]): Column =
-    size(filter(toks, t => t.isin(words.map(_.asInstanceOf[Any]): _*)))
 
   /** Marker stopwords per language for the n-gram/stopword language-ID
     * heuristic. Deliberately tiny: language ID at pipeline scale is a
@@ -88,7 +84,8 @@ object TextFns {
     * fixed order en→fr→de→es); no hits at all → "und". */
   def langId(text: Column): Column = {
     // Native single-pass marker counter (round 11): the composed form
-    // (kept below as langIdComposed, the oracle-replicable reference)
+    // (kept in test scope as ComposedReferences.langIdComposed, the
+    // oracle-replicable reference)
     // ran four interpreted ArrayFilter lambdas — each re-tokenizing
     // the document — plus a regex pass for the CJK probe; one row of
     // q_lang_id paid ~5 full scans. lang_marker_counts returns
@@ -106,20 +103,6 @@ object TextFns {
     when(c.getItem(0) > 0, "zh").otherwise(pick)
   }
 
-  /** The pre-round-11 composed form of [[langId]] — five scans of the
-    * document through interpreted higher-order functions. Kept as the
-    * executable specification the native path is tested against and
-    * the shape external SQL oracles replicate. */
-  def langIdComposed(text: Column): Column = {
-    val toks = tokens(lower(text))
-    val order = Seq("en", "fr", "de", "es")
-    val counts = order.map(l => l -> countIn(toks, langMarkers(l)))
-    val maxCount = greatest(counts.map(_._2): _*)
-    val pick = counts.foldRight(lit("und")) { case ((l, c), acc) =>
-      when(c === maxCount && c > 0, l).otherwise(acc) }
-    when(regexp_count(text, lit("[\\x{4e00}-\\x{9fff}]")) > 0, "zh").otherwise(pick)
-  }
-
   /** Gopher-style repetition/shape signals (public Gopher &
     * RefinedWeb-era filtering rules): repeated-n-gram ratio, mean word
     * length, symbol-to-word ratio. Integer counts + single divisions →
@@ -133,8 +116,7 @@ object TextFns {
     // a dozen times and q_doc_signals alone cost 16 s of the sf0.1
     // bench. Results are bit-identical (WordShingles is byte-for-byte
     // the composed form; distinct=true folds array_distinct into the
-    // same pass). Callers need native functions registered — free via
-    // `Tables.read`.
+    // same pass).
     val grams = graft.plans.WordShingles.shingles(text, n)
     val gramsDistinct = graft.plans.WordShingles.shingles(text, n, distinct = true)
     val nToks = size(graft.plans.WordShingles.shingles(text, 1))
@@ -222,18 +204,5 @@ object TextFns {
     when(scheme === "", lit(null).cast("string"))
       .otherwise(concat(scheme, lit("://"), host, path,
         when(queryNorm === "", lit("")).otherwise(concat(lit("?"), queryNorm))))
-  }
-
-  /** Pre-round-11 composed [[qualityScore]] — kept as the executable
-    * specification for the parity spec and external oracles. */
-  def qualityScoreComposed(text: Column): Column = {
-    val chars = length(text).cast("double")
-    val lenScore = least(chars / 500.0, lit(1.0))
-    val alpha = regexp_count(text, lit("[A-Za-z]")).cast("double")
-    val alphaRatio = when(chars > 0, alpha / chars).otherwise(0.0)
-    val toks = tokens(lower(text))
-    val stop = countIn(toks, langMarkers.values.flatten.toSeq.distinct).cast("double")
-    val stopScore = least(stop * 10.0 / greatest(size(toks), lit(1)).cast("double"), lit(1.0))
-    round((lenScore + alphaRatio + stopScore) / 3.0, 6)
   }
 }

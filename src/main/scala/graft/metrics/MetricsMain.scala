@@ -58,6 +58,8 @@ object MetricsMain {
         Runtime.getRuntime.availableProcessors().toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      // business-metric SQL may call the native expressions by name
+      .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     try {
       val published = MetricsJob.run(spark, sfDir, account, setName, at)

@@ -51,7 +51,6 @@ object Bm25 {
     * Columns: (idCol, term, tf, df, score). */
   def termScores(docs: DataFrame, terms: Seq[String],
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    graft.plans.NativeFns.register(docs.sparkSession)
     val toks = docs.select(col(idCol),
       graft.plans.WordShingles.shingles(col(textCol), 1).as("__toks"))
     // per-doc length + corpus totals from the same tokenization

@@ -56,7 +56,6 @@ object Bpe {
   /** Corpus → (word, cnt, seq) training vocabulary. One full-volume
     * pass; everything downstream is vocabulary-bounded. */
   def wordVocab(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    graft.plans.NativeFns.register(docs.sparkSession)
     docs.select(explode(
         graft.plans.WordShingles.shingles(col(textCol), 1)).as("word"))
       .filter(!col("word").contains(Sep))
@@ -127,7 +126,6 @@ object Bpe {
     * (len(seq) − len(replace(seq, SepSep, Sep))) + 1. */
   def encode(docs: DataFrame, merges: Seq[(String, String)],
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    graft.plans.NativeFns.register(docs.sparkSession)
     val words = docs.select(col(idCol), explode(
         graft.plans.WordShingles.shingles(col(textCol), 1)).as("word"))
       .filter(!col("word").contains(Sep))

@@ -58,7 +58,6 @@ object Classifier {
    * parity spec pins against.
    */
   def withIlog2Fx(df: DataFrame, xCol: String, outCol: String): DataFrame = {
-    graft.plans.NativeFns.register(df.sparkSession)
     df.withColumn(outCol, graft.plans.Ilog2Fx.ilog2(
       greatest(col(xCol).cast("long"), lit(1L))))
   }
@@ -152,8 +151,9 @@ object Classifier {
    * expression ([[graft.plans.HashedFeats]] — one pass over the
    * document bytes, a reused MessageDigest, no intermediate hex/conv
    * strings), replacing the composed higher-order-function chain
-   * ([[hashedTokensComposed]], kept as the parity reference the spec
-   * pins both renditions against): transform/flatten/sequence are
+   * (`ComposedReferences.hashedTokensComposed` in the test tree, the
+   * parity reference the spec pins both renditions against):
+   * transform/flatten/sequence are
    * CodegenFallback, and the hashed family md5-hashes every char
    * 3-gram of the corpus — the board's heaviest remaining
    * featurization.
@@ -162,27 +162,6 @@ object Classifier {
     require(buckets > 0, "buckets must be positive")
     require(n >= 1 && n <= 3, "char n-gram order must be in [1, 3]")
     graft.plans.HashedFeats.feats(textCol, buckets.toLong, n)
-  }
-
-  /** The composed Column-API rendition of [[hashedTokens]] —
-    * superseded in the hot path by the native expression; retained as
-    * the independent reference for the PipelineSpec parity pin (the
-    * [[withIlog2FxStaged]] discipline). */
-  private[graft] def hashedTokensComposed(textCol: Column, buckets: Int,
-      n: Int = 3): Column = {
-    require(buckets > 0, "buckets must be positive")
-    require(n >= 1 && n <= 3, "char n-gram order must be in [1, 3]")
-    val words = graft.plans.WordShingles.shingles(textCol, 1)
-    val feats = flatten(transform(words, w => {
-      val padded = concat(lit("<"), w, lit(">"))
-      val grams = transform(
-        sequence(lit(1), length(padded) - lit(n - 1)),
-        i => concat(lit("c:"), padded.substr(i, lit(n))))
-      concat(array(concat(lit("w:"), w)), grams)
-    }))
-    transform(feats, f =>
-      pmod(graft.operators.Sampling.hash48(f), lit(buckets.toLong))
-        .cast("string"))
   }
 
   /**
@@ -213,7 +192,6 @@ object Classifier {
 
   private def trainTok(docs: DataFrame, tokenOf: Column,
       labelCol: String): DataFrame = {
-    graft.plans.NativeFns.register(docs.sparkSession)
     val tok = docs.select(col(labelCol).cast("string").as("label"),
       tokenOf.as("token"))
     val tc = tok.groupBy("label", "token")
@@ -249,7 +227,6 @@ object Classifier {
   def nbUpdate(model: DataFrame, classDocCounts: DataFrame,
       newDocs: DataFrame, labelCol: String = "label",
       textCol: String = "text"): DataFrame = {
-    graft.plans.NativeFns.register(newDocs.sparkSession)
     val newTc = newDocs.select(col(labelCol).cast("string").as("label"),
         tokens(col(textCol)).as("token"))
       .groupBy("label", "token").agg(count(lit(1)).cast("long").as("cnt"))
@@ -344,7 +321,6 @@ object Classifier {
 
   private def scoreTok(docs: DataFrame, tokenOf: Column, model: DataFrame,
       idCol: String, broadcastModel: Boolean): DataFrame = {
-    graft.plans.NativeFns.register(docs.sparkSession)
     val labels = model.select("label", "prior_fx").distinct()
     val weights = model.select("token", "label", "w_fx")
     val contrib = docs.select(col(idCol), tokenOf.as("token"))

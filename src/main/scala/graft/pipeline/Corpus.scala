@@ -27,7 +27,6 @@ object Corpus {
     // a negative overlap makes stride exceed the chunk size and
     // silently DROPS the tokens between consecutive windows
     require(overlapTokens >= 0, "overlap must be non-negative")
-    graft.plans.NativeFns.register(docs.sparkSession)
     val stride = chunkTokens - overlapTokens
     val toks = graft.plans.WordShingles.shingles(col(textCol), 1)
     val nChunks = greatest(
@@ -59,33 +58,8 @@ object Corpus {
     * hex-digit ascii max is 'f' = 102), so `%` equals `pmod` on it. */
   def hashFold(c: Column): Column = graft.plans.Md5Fold31.fold(c)
 
-  /** The composed built-in-function rendition of [[hashFold]] —
-    * superseded in the hot path by the native expression (round 17:
-    * [[graft.plans.Md5Fold31]] computes the fold straight off the
-    * digest bytes — no 32-char hex string, no four substring/ascii
-    * passes); retained as the independent reference for the
-    * PipelineSpec parity pin. */
-  private[graft] def hashFoldComposed(c: Column): Column = {
-    val h = md5(c)
-    ascii(substring(h, 1, 1)) * 31 * 31 * 31 +
-      ascii(substring(h, 2, 1)) * 31 * 31 +
-      ascii(substring(h, 3, 1)) * 31 +
-      ascii(substring(h, 4, 1))
-  }
-
   /** Deterministic content-hash bucket in [0, 100). */
   def hashBucket(c: Column): Column = hashBucketN(c, 100)
-
-  /** The composed rendition of the fused [[graft.plans.HashedGrams]]
-    * gram hashing [[dsirScore]] uses (round 18): per word bigram, the
-    * salted md5-ascii fold mod `buckets` — built from WordShingles +
-    * concat + the fully composed fold so the reference shares no code
-    * with the native expression's digest path. Retained for the
-    * PipelineSpec parity pin. */
-  private[graft] def dsirGramBucketsComposed(text: Column,
-      buckets: Int): Column =
-    transform(graft.plans.WordShingles.shingles(text, 2),
-      g => hashFoldComposed(concat(lit("dsir:"), g)) % buckets)
 
   /**
    * Stratified sampling for data mixing: per-stratum keep-percentages
@@ -101,7 +75,6 @@ object Corpus {
    */
   def stratifiedSample(docs: DataFrame, strataCol: String,
       quotas: Map[String, Int], textCol: String = "text"): DataFrame = {
-    graft.plans.NativeFns.register(docs.sparkSession)
     val quota = quotas.foldLeft(lit(0)) { case (acc, (k, pct)) =>
       when(col(strataCol) === k, pct).otherwise(acc) }
     docs.filter(hashBucket(concat(lit("sample:"), col(textCol))) < quota)
@@ -128,7 +101,6 @@ object Corpus {
   def mixToTarget(docs: DataFrame, strataCol: String,
       weights: Map[String, Long], totalTarget: Long,
       textCol: String = "text"): DataFrame = {
-    graft.plans.NativeFns.register(docs.sparkSession)
     require(weights.values.forall(_ > 0), "weights must be positive")
     require(totalTarget > 0, "target must be positive")
     val wsum = weights.values.sum
@@ -161,7 +133,6 @@ object Corpus {
    */
   def boilerplateNgrams(docs: DataFrame, n: Int, minDf: Long,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    graft.plans.NativeFns.register(docs.sparkSession)
     docs.select(col(idCol),
         explode(graft.plans.WordShingles.shingles(col(textCol), n,
           distinct = true)).as("gram"))
@@ -178,7 +149,6 @@ object Corpus {
    */
   def boilerplateCoverage(docs: DataFrame, n: Int, minDf: Long,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    graft.plans.NativeFns.register(docs.sparkSession)
     val grams = docs.select(col(idCol),
       explode(graft.plans.WordShingles.shingles(col(textCol), n)).as("gram"))
     val boiler = boilerplateNgrams(docs, n, minDf, textCol, idCol)
@@ -268,7 +238,6 @@ object Corpus {
    */
   def topNgramCoverage(docs: DataFrame, n: Int,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    graft.plans.NativeFns.register(docs.sparkSession)
     docs.select(col(idCol),
         explode(graft.plans.WordShingles.shingles(col(textCol), n)).as("gram"))
       .groupBy(col(idCol), col("gram")).agg(count(lit(1)).as("__c"))
@@ -330,7 +299,6 @@ object Corpus {
    */
   def decontaminate(docs: DataFrame, benchmark: DataFrame, n: Int = 8,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    graft.plans.NativeFns.register(docs.sparkSession)
     val benchGrams = benchmark
       .select(explode(graft.plans.WordShingles.shingles(col(textCol), n)).as("g"))
       .select(md5(col("g")).as("gh")).distinct()
@@ -375,7 +343,6 @@ object Corpus {
       textCol: String = "text", idCol: String = "doc_id",
       fpp: Double = 0.01, expectedBenchGrams: Long = 0L): DataFrame = {
     require(fpp > 0 && fpp < 1, "fpp must be in (0, 1)")
-    graft.plans.NativeFns.register(docs.sparkSession)
     val benchGrams = benchmark
       .select(explode(graft.plans.WordShingles.shingles(col(textCol), n,
         distinct = true)).as("g"))
@@ -420,7 +387,6 @@ object Corpus {
    */
   def contaminationReport(docs: DataFrame, benchmark: DataFrame, n: Int = 8,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    graft.plans.NativeFns.register(docs.sparkSession)
     val benchGrams = benchmark
       .select(col(idCol).as("bench_id"),
         explode(graft.plans.WordShingles.shingles(col(textCol), n, distinct = true))
@@ -475,7 +441,6 @@ object Corpus {
       threshold: Double = 0.95, bits: Int = 16, bands: Int = 4,
       vecCol: String = "embedding", idCol: String = "vec_id",
       maxBroadcastBench: Long = 100000L): DataFrame = {
-    graft.plans.NativeFns.register(corpus.sparkSession)
     import graft.functions.VectorFns
     def banded(df: DataFrame, id: String, v: String) =
       df.select(col(idCol).as(id), col(vecCol).as(v),
@@ -544,7 +509,6 @@ object Corpus {
       vecCol: String = "embedding", idCol: String = "vec_id",
       fpp: Double = 0.01, expectedBenchBands: Long = 0L): DataFrame = {
     require(fpp > 0 && fpp < 1, "fpp must be in (0, 1)")
-    graft.plans.NativeFns.register(corpus.sparkSession)
     import graft.functions.VectorFns
     // squared norm rides along from BEFORE the band explode: one
     // dot(v,v) per VECTOR instead of two norm recomputes per candidate
@@ -630,7 +594,6 @@ object Corpus {
   def leakageSafeSplit(docs: DataFrame, clusters: DataFrame,
       valPermyriad: Int, testPermyriad: Int,
       idCol: String = "doc_id"): DataFrame = {
-    graft.plans.NativeFns.register(docs.sparkSession)
     require(valPermyriad >= 0 && testPermyriad >= 0 &&
       valPermyriad + testPermyriad <= 10000, "split fractions exceed 1")
     val groupKey = coalesce(col("cluster_id"), col(idCol))
@@ -667,7 +630,6 @@ object Corpus {
 
   def capPerGroup(docs: DataFrame, groupCol: String, maxDocs: Int,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    graft.plans.NativeFns.register(docs.sparkSession)
     require(maxDocs > 0, "cap must be positive")
     // "cap:" salt: see stratifiedSample — composed samplers must not
     // share one hash or downstream keep rates decalibrate
@@ -739,7 +701,6 @@ object Corpus {
       idCol: String = "doc_id",
       directWindowMaxRows: Long = BudgetDirectWindowRows): DataFrame = {
     require(budget >= 0, "budget must be non-negative")
-    graft.plans.NativeFns.register(docs.sparkSession)
     // NaN/null scores are unrankable and DROPPED up front: Spark's
     // ordering puts NaN ABOVE every double, so one NaN-scored doc
     // would outrank the whole corpus and silently eat the budget.
@@ -872,7 +833,6 @@ object Corpus {
    */
   def groupPercentile(docs: DataFrame, groupCol: String,
       scoreCol: String, idCol: String = "doc_id"): DataFrame = {
-    graft.plans.NativeFns.register(docs.sparkSession)
     val ranked = docs.filter(col(scoreCol).isNotNull &&
       !isnan(col(scoreCol).cast("double")))
     val sbits = graft.plans.SortableDoubleBits
@@ -1012,7 +972,6 @@ object Corpus {
   def blocklistFilter(docs: DataFrame, phrases: DataFrame,
       maxPhraseTokens: Int = 8, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
-    graft.plans.NativeFns.register(docs.sparkSession)
     // distinct FIRST (round-15 ADVICE): a duplicated list entry would
     // double n_hits per occurrence (n_phrases is countDistinct and
     // unaffected), silently skewing hit-count threshold policies, and
@@ -1109,7 +1068,6 @@ object Corpus {
   def bigramFamiliarity(docs: DataFrame, reference: DataFrame,
       minCount: Long = 2L, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
-    graft.plans.NativeFns.register(docs.sparkSession)
     // document frequency, not occurrence frequency: a single spammy
     // doc repeating one bigram 10^6 times must not make it "familiar"
     val refCounts = reference
@@ -1170,7 +1128,6 @@ object Corpus {
       textCol: String = "text", idCol: String = "doc_id",
       uniPermille: Long = 0L): DataFrame = {
     require(uniPermille >= 0 && uniPermille <= 1000, "permille weight")
-    graft.plans.NativeFns.register(docs.sparkSession)
     // occurrence counts, not document frequency: MLE conditionals
     val lm = reference
       .select(explode(
@@ -1233,7 +1190,6 @@ object Corpus {
    */
   def gopherRepetition(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
-    graft.plans.NativeFns.register(docs.sparkSession)
     val base = docs.select(col(idCol), col(textCol).as("__text"))
 
     // per-doc duplicate stats over one split unit (lines/paragraphs)
@@ -1305,7 +1261,6 @@ object Corpus {
    */
   def vocabCoverage(docs: DataFrame, topN: Int, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
-    graft.plans.NativeFns.register(docs.sparkSession)
     val counts = docs.select(
         explode(graft.plans.WordShingles.shingles(col(textCol), 1)).as("token"))
       .groupBy("token").agg(count(lit(1)).cast("long").as("cnt"))
@@ -1348,7 +1303,6 @@ object Corpus {
   def dupNgramCharPpm(docs: DataFrame, ns: Seq[Int],
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(ns.nonEmpty, "need at least one n")
-    graft.plans.NativeFns.register(docs.sparkSession)
     val perN = ns.map { n =>
       docs.select(col(idCol),
           explode(graft.plans.WordShingles.shingles(col(textCol), n)).as("__g"))
@@ -1386,7 +1340,6 @@ object Corpus {
    */
   def vocabShift(docsA: DataFrame, docsB: DataFrame, topN: Int,
       textCol: String = "text"): DataFrame = {
-    graft.plans.NativeFns.register(docsA.sparkSession)
     def counts(d: DataFrame, cn: String) = d.select(
         explode(graft.plans.WordShingles.shingles(col(textCol), 1)).as("token"))
       .groupBy("token").agg(count(lit(1)).cast("long").as(cn))
@@ -1467,7 +1420,6 @@ object Corpus {
    */
   def snapshotChurn(oldDocs: DataFrame, newDocs: DataFrame,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    graft.plans.NativeFns.register(oldDocs.sparkSession)
     // changed ids only: (id, md5) join — 48-byte rows, text stays put
     val changed = oldDocs.select(col(idCol), md5(col(textCol)).as("__oh"))
       .join(newDocs.select(col(idCol), md5(col(textCol)).as("__nh")), Seq(idCol))
@@ -1620,7 +1572,6 @@ object Corpus {
   def collocations(docs: DataFrame, minPairCount: Long = 5L,
       minLiftPpm: Long = 2000000L, textCol: String = "text"): DataFrame = {
     require(minPairCount >= 1, "minPairCount must be >= 1")
-    graft.plans.NativeFns.register(docs.sparkSession)
     val uni = docs.select(
         explode(graft.plans.WordShingles.shingles(col(textCol), 1)).as("token"))
       .groupBy("token").agg(count(lit(1)).cast("long").as("cnt"))
@@ -1661,7 +1612,6 @@ object Corpus {
   def vocabProfile(docs: DataFrame, topK: Int = 10,
       strataCol: String = "source", textCol: String = "text"): DataFrame = {
     require(topK >= 1, "positive topK")
-    graft.plans.NativeFns.register(docs.sparkSession)
     val counts = docs.select(col(strataCol).as("__s"),
         explode(graft.plans.WordShingles.shingles(col(textCol), 1))
           .as("__tok"))
@@ -1721,15 +1671,15 @@ object Corpus {
   def dsirScore(raw: DataFrame, target: DataFrame, buckets: Int = 10000,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(buckets >= 2 && buckets <= 1000000, "bucket count sanity")
-    graft.plans.NativeFns.register(raw.sparkSession)
     // fused gram hashing (round 18, r17 VERDICT #5): the former
     // explode(word_shingles) + concat("dsir:", g) + md5_fold31 chain
     // allocated a gram string AND a salted copy per n-gram on BOTH
     // corpus sides; hashed_grams streams salt + token byte slices
     // into one reused digest — value-identical buckets (md5 is
     // incremental over byte updates), no intermediate strings.
-    // Composed rendition retained below as
-    // [[dsirGramBucketsComposed]], parity-pinned in PipelineSpec.
+    // Composed rendition kept in test scope as
+    // `ComposedReferences.dsirGramBucketsComposed`, parity-pinned in
+    // PipelineSpec.
     def grams(df: DataFrame, cols: Column*) = df.select(cols :+
         explode(graft.plans.HashedGrams.grams(col(textCol), 2, "dsir:",
           buckets)).as("__b"): _*)
@@ -1902,7 +1852,6 @@ object Corpus {
   def textRankKeywords(docs: DataFrame, iters: Int, k: Int,
       textCol: String = "text"): DataFrame = {
     require(iters >= 1 && k >= 1, "positive iterations and k")
-    graft.plans.NativeFns.register(docs.sparkSession)
     val bi = docs.select(
         explode(graft.plans.WordShingles.shingles(col(textCol), 2)).as("gram"))
       .select(element_at(split(col("gram"), " ", 2), 1).as("a"),
@@ -1980,7 +1929,6 @@ object Corpus {
     * shared by the exact and minhash-estimated overlap operators. */
   private def srcShingleSets(docs: DataFrame, shingleN: Int,
       textCol: String, srcCol: String): DataFrame = {
-    graft.plans.NativeFns.register(docs.sparkSession)
     docs.select(col(srcCol).as("__src"),
         explode(graft.plans.WordShingles.shingles(col(textCol), shingleN,
           distinct = true)).as("__sh"))
@@ -2082,7 +2030,6 @@ object Corpus {
    */
   def sourceLangMix(docs: DataFrame, srcCol: String = "source",
       langCol: String = "lang", textCol: String = "text"): DataFrame = {
-    graft.plans.NativeFns.register(docs.sparkSession)
     val cnt = docs.select(col(srcCol).as("source"), col(langCol).as("lang"),
         size(graft.plans.WordShingles.shingles(col(textCol), 1))
           .cast("long").as("__t"))
@@ -2352,7 +2299,6 @@ object Corpus {
    */
   def ccnetBuckets(docs: DataFrame, reference: DataFrame,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    graft.plans.NativeFns.register(docs.sparkSession)
     import graft.functions.TextFns
     val dl = docs.select(col(idCol), col(textCol),
       TextFns.langId(col(textCol)).as("lang"))

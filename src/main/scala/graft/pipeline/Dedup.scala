@@ -48,7 +48,6 @@ object Dedup {
    */
   def minhashSignatures(docs: DataFrame, textCol: String, idCol: String,
       shingleN: Int, k: Int): DataFrame = {
-    graft.plans.NativeFns.register(docs.sparkSession)
     // native single-pass shingling: byte-identical to
     // array_distinct(TextFns.wordNgrams(...)) — the composed form the
     // oracle replicates — without the five CodegenFallback hops
@@ -122,7 +121,6 @@ object Dedup {
       bands: Int = 4, threshold: Double = 0.5): DataFrame = {
     require(k % bands == 0, "bands must divide k")
     val rows = k / bands
-    graft.plans.NativeFns.register(docs.sparkSession)
     val signed = docs.select(col(idCol),
         graft.plans.WordShingles.shingles(col(textCol), shingleN,
           distinct = true).as("shingles"))
@@ -236,7 +234,6 @@ object Dedup {
     * constant, and at corpus scale that one value becomes a single
     * quadratic banding bucket (N empty docs → N²/2 hamming-0 pairs). */
   def simhashDf(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
-    graft.plans.NativeFns.register(docs.sparkSession)
     docs.select(col(idCol),
         graft.plans.WordShingles.shingles(col(textCol), 1).as("__toks"))
       .filter(size(col("__toks")) > 0)
@@ -504,7 +501,6 @@ object Dedup {
       thresholdPpm: Long = 400000L): DataFrame = {
     require(thresholdPpm > 0 && thresholdPpm <= 1000000L,
       "thresholdPpm must be in (0, 1e6]")
-    graft.plans.NativeFns.register(docs.sparkSession)
     val withShingles = docs.select(col(idCol),
         graft.plans.WordShingles.shingles(col(textCol), shingleN,
           distinct = true).as("shingles"))
@@ -554,7 +550,6 @@ object Dedup {
       idCol: String, shingleN: Int, maxDf: Int,
       minSharedShingles: Int): (DataFrame, DataFrame) = {
     require(minSharedShingles >= 1, "minSharedShingles must be >= 1")
-    graft.plans.NativeFns.register(docs.sparkSession)
     val withShingles = docs.select(col(idCol),
       graft.plans.WordShingles.shingles(col(textCol), shingleN,
         distinct = true).as("shingles"))
@@ -721,7 +716,6 @@ object Dedup {
       idCol: String = "vec_id", threshold: Double = 0.95,
       bits: Int = 16, bands: Int = 4,
       carryVectors: Boolean = false, dim: Int = 64): DataFrame = {
-    graft.plans.NativeFns.register(vecs.sparkSession)
     // `bits` (and the bits/bands band-key width) is the FIRST scale
     // knob: band-key space must grow with the corpus, or every bucket
     // holds a constant fraction of it and candidate generation
@@ -828,7 +822,6 @@ object Dedup {
    */
   def stripDuplicateParagraphs(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", minParagraphChars: Int = 0): DataFrame = {
-    graft.plans.NativeFns.register(docs.sparkSession)
     def paras = split(col(textCol), "\\n{2,}")
     val keyed = docs.select(col(idCol),
         posexplode(paras).as(Seq("pos", "para")))
@@ -904,7 +897,6 @@ object Dedup {
   def stripDuplicateWindows(docs: DataFrame, windowTokens: Int,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(windowTokens > 0, "window must be at least one token")
-    graft.plans.NativeFns.register(docs.sparkSession)
     // Window key (round 11; was md5): a 128-bit pair of xxhash64s —
     // 16 bytes against the md5 hex string's 32, on the operator's
     // dominant shuffle (the ~W rows per token position that made this
@@ -1146,7 +1138,6 @@ object Dedup {
       else math.max(1L, batch.select("__fp").distinct().count())
     val bloom = batch.stat.bloomFilter(col("__fp"), items, fpp)
     val bytes = graft.plans.BloomMightContain.serialize(bloom)
-    graft.plans.NativeFns.register(newDocs.sparkSession)
     // survivors: O(batch + fpp·|index|) rows, one pruned column — the
     // only part of the index that ever reaches an exchange. AQE picks
     // the confirm-join strategy from the survivors' ACTUAL size (tiny

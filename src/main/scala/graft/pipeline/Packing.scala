@@ -46,7 +46,6 @@ object Packing {
       idCol: String = "doc_id"): DataFrame = {
     require(capacity > 0, "capacity must be positive")
     val spark = docs.sparkSession
-    graft.plans.NativeFns.register(spark)
     val parts = math.max(2, spark.sparkContext.defaultParallelism)
     // persist so phase 1 and phase 2 see the SAME physical partitioning
     val sized = docs.select(col(idCol),
@@ -94,7 +93,6 @@ object Packing {
     require(capacity > 0 && shards > 0, "capacity and shards must be positive")
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.plans.NativeFns.register(spark)
     val sized = docs.select(
         pmod(col(idCol), lit(shards)).cast("long").as("shard"),
         col(idCol).cast("long").as("doc_id"),

@@ -33,7 +33,6 @@ object PhraseSearch {
   /** (term, idCol, pos) positional postings, 0-based positions. */
   def positionalPostings(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
-    graft.plans.NativeFns.register(docs.sparkSession)
     docs.select(col(idCol), posexplode(
         graft.plans.WordShingles.shingles(col(textCol), 1))
       .as(Seq("pos", "term")))

@@ -31,7 +31,6 @@ object RecordLinkage {
   def link(left: DataFrame, right: DataFrame, nameCol: String,
       exactCols: Seq[(String, Long)], idCol: String,
       maxDf: Int = 50, minScore: Long = 800L): DataFrame = {
-    graft.plans.NativeFns.register(left.sparkSession)
     def withToks(df: DataFrame, id: String) = df.select(
       col(idCol).as(id),
       graft.plans.WordShingles.shingles(col(nameCol), 1, distinct = true)

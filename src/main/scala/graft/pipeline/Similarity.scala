@@ -46,7 +46,6 @@ object Similarity {
       vecCol: String = "embedding", idCol: String = "vec_id",
       bits: Int = 16, bands: Int = 8,
       broadcastQueries: Boolean = true): DataFrame = {
-    graft.plans.NativeFns.register(corpus.sparkSession)
     def banded(df: DataFrame, id: String, v: String) =
       df.select(col(idCol).as(id), col(vecCol).as(v),
           explode(VectorFns.srpBands(
@@ -200,7 +199,6 @@ object Similarity {
       newCents: DataFrame, epsilon: Double,
       vecCol: String = "embedding", idCol: String = "vec_id",
       labelCol: String = "label"): DataFrame = {
-    graft.plans.NativeFns.register(index.sparkSession)
     val oldC = oldCents.select(col(labelCol).as("cell"), col("centroid").as("__oc"))
     val newC = newCents.select(col(labelCol).as("cell"), col("centroid").as("__nc"))
     val diff = zip_with(col("__oc"), col("__nc"), (a, b) => a - b)
@@ -397,28 +395,12 @@ object Similarity {
     * accumulation, so engines agree bit-for-bit). Round 17: rendered
     * by the native codegen'd [[graft.plans.VecDist2]] (the [[VecDot]]
     * hot-path treatment applied to the distance kernel — the composed
-    * zip_with/aggregate form below is interpreted per element and PQ
-    * encode calls it once per (vector, subspace, code) triple);
+    * zip_with/aggregate form, `ComposedReferences.dist2FoldComposed`
+    * in the test tree, is interpreted per element and PQ encode calls
+    * it once per (vector, subspace, code) triple);
     * bit-identical, parity-pinned in PipelineSpec. */
   private def dist2Fold(a: Column, b: Column): Column =
-    // SPARK_GRAFT_DIST2_COMPOSED=1 swaps in the composed rendition for
-    // ProfileScale A/B cells ONLY (r17 VERDICT #7: confirm the native
-    // kernel at 1×/10× before banking it). The two forms are
-    // bit-identical (parity-pinned below), so the toggle can never
-    // change a query result — it is a measurement instrument, not a
-    // semantics switch; no declared query depends on it.
-    if (sys.env.get("SPARK_GRAFT_DIST2_COMPOSED").contains("1"))
-      dist2FoldComposed(a, b)
-    else graft.plans.VecDist2.dist2(a, b)
-
-  /** The composed higher-order-function rendition — superseded in the
-    * hot path; retained as the independent reference for the
-    * PipelineSpec parity pin. */
-  private[graft] def dist2FoldComposed(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => (x.cast("double") - y.cast("double")) *
-        (x.cast("double") - y.cast("double"))),
-      lit(0.0), (acc, v) => acc + v)
+    graft.plans.VecDist2.dist2(a, b)
 
   /**
    * PQ encoding: each vector → its nearest codebook entry per

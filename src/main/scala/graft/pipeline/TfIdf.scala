@@ -26,7 +26,6 @@ object TfIdf {
   /** (idCol, term, tf, df, score) — one row per distinct (doc, term). */
   def termScores(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
-    graft.plans.NativeFns.register(docs.sparkSession)
     val posting = docs.select(col(idCol),
         explode(graft.plans.WordShingles.shingles(col(textCol), 1)).as("term"))
     val tf = posting.groupBy(col(idCol), col("term"))

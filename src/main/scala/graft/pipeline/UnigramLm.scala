@@ -92,7 +92,6 @@ object UnigramLm {
       maxWordLen: Int, maxPieceLen: Int, nBest: Int = 1,
       checkpoint: Boolean = true): DataFrame = {
     require(nBest >= 1, "nBest must be positive")
-    graft.plans.NativeFns.register(words.sparkSession)
     val pc = pieces.select(col("piece"), col("w").cast("long").as("__w"))
     val cands = words
       .filter(length(col("word")).between(1, maxWordLen))
@@ -257,7 +256,6 @@ object UnigramLm {
     require(vocabSize >= 1 && rounds >= 1, "positive vocab size and rounds")
     require(maxPieceLen >= 1 && maxWordLen >= maxPieceLen,
       "piece length within word length")
-    graft.plans.NativeFns.register(docs.sparkSession)
     val words = docs.select(explode(
         graft.plans.WordShingles.shingles(col(textCol), 1)).as("word"))
       .filter(!col("word").contains(Sep))
@@ -333,7 +331,6 @@ object UnigramLm {
   def encode(docs: DataFrame, vocab: DataFrame, maxPieceLen: Int = 4,
       dpMaxLen: Int = 12, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
-    graft.plans.NativeFns.register(docs.sparkSession)
     val docWords = docs.select(col(idCol),
       explode(graft.plans.WordShingles.shingles(col(textCol), 1)).as("word"))
     // checkpoint: BOTH branches (DP words, char-fallback words) read
@@ -391,7 +388,6 @@ object UnigramLm {
       maxPieceLen: Int = 4, dpMaxLen: Int = 12,
       seedTag: String = "subword-reg", textCol: String = "text"): DataFrame = {
     require(nBest >= 1, "nBest must be positive")
-    graft.plans.NativeFns.register(docs.sparkSession)
     // checkpoint: the DP branch and the char-fallback branch both
     // read this table — uncached, the corpus tokenize+count would
     // run twice, contradicting the one-corpus-pass claim above
@@ -445,7 +441,6 @@ object UnigramLm {
       maxPieceLen: Int = 4, maxWordLen: Int = 12,
       textCol: String = "text"): DataFrame = {
     require(vocabSize >= 1, "positive vocab size")
-    graft.plans.NativeFns.register(docs.sparkSession)
     val words = docs.select(explode(
         graft.plans.WordShingles.shingles(col(textCol), 1)).as("word"))
       .filter(!col("word").contains(Sep))

@@ -164,7 +164,6 @@ object Wordpiece {
       maxPieceLen: Int = 8, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
     require(maxWordLen >= 1 && maxPieceLen >= 1, "positive length caps")
-    graft.plans.NativeFns.register(docs.sparkSession)
     val p = pieces.select(col("piece").as("__pc"), col("is_initial").as("__pi"))
     val occurrences = docs.select(col(idCol), explode(
         graft.plans.WordShingles.shingles(col(textCol), 1)).as("word"))
@@ -218,7 +217,6 @@ object Wordpiece {
       maxWordLen: Int = 16, maxPieceLen: Int = 8, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
     require(maxWordLen >= 1 && maxPieceLen >= 1, "positive length caps")
-    graft.plans.NativeFns.register(docs.sparkSession)
     val p = pieces.select(col("piece").as("__pc"), col("is_initial").as("__pi"),
       length(col("piece")).as("__pl"))
     val occurrences = docs.select(col(idCol), explode(

@@ -1,10 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression,
+  Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
@@ -80,15 +81,9 @@ case class BloomMightContain(left: Expression, right: Expression)
 
 object BloomMightContain {
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain",
-      exprs => BloomMightContain(exprs.head, exprs(1)),
-      "built-in")
-
   /** Column API: `mightContain(col, serializedFilter)`. */
   def mightContain(value: Column, bloomBytes: Array[Byte]): Column =
-    call_function("bloom_might_contain", value, lit(bloomBytes))
+    column(BloomMightContain(expression(value), Literal(bloomBytes)))
 
   /** Serialize a filter for embedding as a plan literal. */
   def serialize(bf: BloomFilter): Array[Byte] = {

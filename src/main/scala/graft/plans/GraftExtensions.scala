@@ -3,96 +3,71 @@ package graft.plans
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import graft.plans.FnArgs.{flagArg, intArg, longArg, stringArg}
 
 /**
- * Session-extension entry point: registers the engine's native
- * expressions at session build time, so a deployment enables them with
+ * The one SQL name table for the engine's native expressions. SQL
+ * text (business-metric queries, `selectExpr`, `expr`) resolves
+ * `xx_minhash`, `vec_dot`, ... only in a session built with
  * `spark.sql.extensions=graft.plans.GraftExtensions` (or
- * `.withExtensions(new GraftExtensions)`) and every session — SQL or
- * Column API — sees them without per-session registration calls.
+ * `.withExtensions(new GraftExtensions)`, as `MetricsMain` does).
+ * The Column API (`XxMinHash.minhash`, `VecDot(a, b)`, ...) builds
+ * its Catalyst expression directly and needs no registration: it runs
+ * on any vanilla session.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach(ext.injectFunction)
+}
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("xx_minhash"),
-      new ExpressionInfo(classOf[XxMinHash].getName, "xx_minhash"),
-      (exprs: Seq[Expression]) => XxMinHash(exprs.head,
-        k = FnArgs.intArg("xx_minhash", "k", exprs(1)),
-        seed = FnArgs.longArg("xx_minhash", "seed", exprs(2)))))
-    ext.injectFunction((
-      new FunctionIdentifier("md5_minhash"),
-      new ExpressionInfo(classOf[Md5MinHash].getName, "md5_minhash"),
-      (exprs: Seq[Expression]) => Md5MinHash(exprs.head,
-        k = FnArgs.intArg("md5_minhash", "k", exprs(1)))))
-    ext.injectFunction((
-      new FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (exprs: Seq[Expression]) => SimHash64(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-      (exprs: Seq[Expression]) => VecDot(exprs.head, exprs(1),
-        pad = FnArgs.flagArg("vec_dot", "pad", exprs.lift(2)))))
-    ext.injectFunction((
-      new FunctionIdentifier("word_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "word_shingles"),
-      (exprs: Seq[Expression]) => WordShingles(exprs.head,
-        n = FnArgs.intArg("word_shingles", "n", exprs(1)),
-        distinct = FnArgs.flagArg("word_shingles", "distinct", exprs.lift(2)))))
-    ext.injectFunction((
-      new FunctionIdentifier("sortable_double_bits"),
-      new ExpressionInfo(classOf[SortableDoubleBits].getName, "sortable_double_bits"),
-      (exprs: Seq[Expression]) => SortableDoubleBits(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("bloom_might_contain"),
-      new ExpressionInfo(classOf[BloomMightContain].getName, "bloom_might_contain"),
-      (exprs: Seq[Expression]) => BloomMightContain(exprs.head, exprs(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("vec_project_i64"),
-      new ExpressionInfo(classOf[VecProject].getName, "vec_project_i64"),
-      (exprs: Seq[Expression]) => VecProject(exprs.head,
-        k = FnArgs.intArg("vec_project_i64", "k", exprs(1)),
-        dim = FnArgs.intArg("vec_project_i64", "dim", exprs(2)),
-        seed = FnArgs.longArg("vec_project_i64", "seed", exprs(3)),
-        scale = FnArgs.longArg("vec_project_i64", "scale", exprs(4)))))
-    ext.injectFunction((
-      new FunctionIdentifier("lang_marker_counts"),
-      new ExpressionInfo(classOf[LangMarkerCounts].getName, "lang_marker_counts"),
-      (exprs: Seq[Expression]) => LangMarkerCounts(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("ilog2_fx"),
-      new ExpressionInfo(classOf[Ilog2Fx].getName, "ilog2_fx"),
-      (exprs: Seq[Expression]) => Ilog2Fx(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("viterbi_seg"),
-      new ExpressionInfo(classOf[ViterbiSeg].getName, "viterbi_seg"),
-      (exprs: Seq[Expression]) => ViterbiSeg(exprs.head, exprs(1),
-        nBest = FnArgs.intArg("viterbi_seg", "nBest", exprs(2)))))
-    ext.injectFunction((
-      new FunctionIdentifier("wp_greedy"),
-      new ExpressionInfo(classOf[WpGreedy].getName, "wp_greedy"),
-      (exprs: Seq[Expression]) => WpGreedy(exprs.head, exprs(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("hashed_feats"),
-      new ExpressionInfo(classOf[HashedFeats].getName, "hashed_feats"),
-      (exprs: Seq[Expression]) => HashedFeats(exprs.head,
-        buckets = FnArgs.longArg("hashed_feats", "buckets", exprs(1)),
-        n = FnArgs.intArg("hashed_feats", "n", exprs(2)))))
-    ext.injectFunction((
-      new FunctionIdentifier("vec_dist2"),
-      new ExpressionInfo(classOf[VecDist2].getName, "vec_dist2"),
-      (exprs: Seq[Expression]) => VecDist2(exprs.head, exprs(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("md5_fold31"),
-      new ExpressionInfo(classOf[Md5Fold31].getName, "md5_fold31"),
-      (exprs: Seq[Expression]) => Md5Fold31(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("srp_sig"),
-      new ExpressionInfo(classOf[SrpSig].getName, "srp_sig"),
-      (exprs: Seq[Expression]) => SrpSig(exprs.head,
-        bits = FnArgs.intArg("srp_sig", "bits", exprs(1)),
-        dim = FnArgs.intArg("srp_sig", "dim", exprs(2)),
-        seed = FnArgs.longArg("srp_sig", "seed", exprs(3)))))
-  }
+object GraftExtensions {
+
+  private def fn(name: String, cls: Class[_])(
+      build: Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+
+  /** (name, info, builder) per native expression. Parameter positions
+    * go through [[FnArgs]], so a non-literal argument fails analysis
+    * naming the function. */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo,
+      Seq[Expression] => Expression)] = Seq(
+    fn("xx_minhash", classOf[XxMinHash])(e => XxMinHash(e.head,
+      k = intArg("xx_minhash", "k", e(1)),
+      seed = longArg("xx_minhash", "seed", e(2)))),
+    fn("md5_minhash", classOf[Md5MinHash])(e => Md5MinHash(e.head,
+      k = intArg("md5_minhash", "k", e(1)))),
+    fn("simhash64", classOf[SimHash64])(e => SimHash64(e.head)),
+    fn("vec_dot", classOf[VecDot])(e => VecDot(e.head, e(1),
+      pad = flagArg("vec_dot", "pad", e.lift(2)))),
+    fn("word_shingles", classOf[WordShingles])(e => WordShingles(e.head,
+      n = intArg("word_shingles", "n", e(1)),
+      distinct = flagArg("word_shingles", "distinct", e.lift(2)))),
+    fn("sortable_double_bits", classOf[SortableDoubleBits])(
+      e => SortableDoubleBits(e.head)),
+    fn("bloom_might_contain", classOf[BloomMightContain])(
+      e => BloomMightContain(e.head, e(1))),
+    fn("vec_project_i64", classOf[VecProject])(e => VecProject(e.head,
+      k = intArg("vec_project_i64", "k", e(1)),
+      dim = intArg("vec_project_i64", "dim", e(2)),
+      seed = longArg("vec_project_i64", "seed", e(3)),
+      scale = longArg("vec_project_i64", "scale", e(4)))),
+    fn("lang_marker_counts", classOf[LangMarkerCounts])(
+      e => LangMarkerCounts(e.head)),
+    fn("ilog2_fx", classOf[Ilog2Fx])(e => Ilog2Fx(e.head)),
+    fn("viterbi_seg", classOf[ViterbiSeg])(e => ViterbiSeg(e.head, e(1),
+      nBest = intArg("viterbi_seg", "nBest", e(2)))),
+    fn("wp_greedy", classOf[WpGreedy])(e => WpGreedy(e.head, e(1))),
+    fn("hashed_feats", classOf[HashedFeats])(e => HashedFeats(e.head,
+      buckets = longArg("hashed_feats", "buckets", e(1)),
+      n = intArg("hashed_feats", "n", e(2)))),
+    fn("vec_dist2", classOf[VecDist2])(e => VecDist2(e.head, e(1))),
+    fn("md5_fold31", classOf[Md5Fold31])(e => Md5Fold31(e.head)),
+    fn("srp_sig", classOf[SrpSig])(e => SrpSig(e.head,
+      bits = intArg("srp_sig", "bits", e(1)),
+      dim = intArg("srp_sig", "dim", e(2)),
+      seed = longArg("srp_sig", "seed", e(3)))),
+    fn("hashed_grams", classOf[HashedGrams])(e => HashedGrams(e.head,
+      n = intArg("hashed_grams", "n", e(1)),
+      salt = stringArg("hashed_grams", "salt", e(2)),
+      mod = intArg("hashed_grams", "mod", e(3)))))
 }

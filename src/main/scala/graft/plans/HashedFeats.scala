@@ -2,18 +2,18 @@ package graft.plans
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Native fastText-style hashed featurization — byte-for-byte the
- * composed form in [[graft.pipeline.Classifier.hashedTokensComposed]]:
+ * composed form `graft.ComposedReferences.hashedTokensComposed`:
  * per whitespace word `w`, the word feature `w:w` plus one `c:g`
  * feature per char n-gram `g` of the boundary-padded `<w>`, each
  * bucketed by `pmod(md5-48-bit-prefix, buckets)` and emitted as the
@@ -132,14 +132,6 @@ object HashedFeats {
     new GenericArrayData(out.toArray)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hashed_feats",
-      exprs => HashedFeats(exprs.head,
-        buckets = FnArgs.longArg("hashed_feats", "buckets", exprs(1)),
-        n = FnArgs.intArg("hashed_feats", "n", exprs(2))),
-      "built-in")
-
   def feats(text: Column, buckets: Long, n: Int): Column =
-    call_function("hashed_feats", text, lit(buckets), lit(n))
+    column(HashedFeats(expression(text), buckets, n))
 }

@@ -2,12 +2,12 @@ package graft.plans
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -30,8 +30,8 @@ import org.apache.spark.unsafe.types.UTF8String
  * intermediate strings). The digest of the streamed bytes is
  * identical to the digest of the concatenated string because md5 is
  * incremental over byte updates, and the WordShingles join separator
- * is exactly one ' ' byte. Retained composed rendition:
- * [[graft.pipeline.Corpus.dsirGramBucketsComposed]], parity-pinned in
+ * is exactly one ' ' byte. Composed reference rendition (test scope):
+ * `graft.ComposedReferences.dsirGramBucketsComposed`, parity-pinned in
  * PipelineSpec.
  */
 case class HashedGrams(child: Expression, n: Int, salt: String, mod: Int)
@@ -123,15 +123,6 @@ object HashedGrams {
     new GenericArrayData(out)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hashed_grams",
-      exprs => HashedGrams(exprs.head,
-        n = FnArgs.intArg("hashed_grams", "n", exprs(1)),
-        salt = FnArgs.stringArg("hashed_grams", "salt", exprs(2)),
-        mod = FnArgs.intArg("hashed_grams", "mod", exprs(3))),
-      "built-in")
-
   def grams(text: Column, n: Int, salt: String, mod: Int): Column =
-    call_function("hashed_grams", text, lit(n), lit(salt), lit(mod))
+    column(HashedGrams(expression(text), n, salt, mod))
 }

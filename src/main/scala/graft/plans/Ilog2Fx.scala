@@ -1,10 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /**
@@ -86,9 +86,5 @@ object Ilog2Fx {
     ((30L + e) << FracBits) + f
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ilog2_fx", exprs => Ilog2Fx(exprs.head), "built-in")
-
-  def ilog2(x: Column): Column = call_function("ilog2_fx", x)
+  def ilog2(x: Column): Column = column(Ilog2Fx(expression(x)))
 }

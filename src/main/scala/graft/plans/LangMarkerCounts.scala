@@ -1,11 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -130,9 +130,5 @@ object LangMarkerCounts {
     new GenericArrayData(out.map(Int.box(_): Any))
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lang_marker_counts", exprs => LangMarkerCounts(exprs.head), "built-in")
-
-  def counts(text: Column): Column = call_function("lang_marker_counts", text)
+  def counts(text: Column): Column = column(LangMarkerCounts(expression(text)))
 }

@@ -2,11 +2,11 @@ package graft.plans
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -70,9 +70,5 @@ object Md5Fold31 {
       hexAscii((d(1) >> 4) & 0xf) * 31 + hexAscii(d(1) & 0xf)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_fold31", exprs => Md5Fold31(exprs.head), "built-in")
-
-  def fold(c: Column): Column = call_function("md5_fold31", c)
+  def fold(c: Column): Column = column(Md5Fold31(expression(c)))
 }

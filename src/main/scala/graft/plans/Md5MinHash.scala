@@ -2,12 +2,12 @@ package graft.plans
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -129,14 +129,6 @@ object Md5MinHash {
     new GenericArrayData(out)
   }
 
-  /** Register as a SQL-callable temp function. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_minhash",
-      exprs => Md5MinHash(exprs.head,
-        k = FnArgs.intArg("md5_minhash", "k", exprs(1))),
-      "built-in")
-
   def minhash(shingles: Column, k: Int): Column =
-    call_function("md5_minhash", shingles, lit(k))
+    column(Md5MinHash(expression(shingles), k))
 }

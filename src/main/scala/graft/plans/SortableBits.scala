@@ -1,10 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
 /**
@@ -64,9 +64,5 @@ object SortableDoubleBits {
   def fromSortable(s: Long): Double =
     java.lang.Double.longBitsToDouble(if (s >= 0) s else s ^ 0x7FFFFFFFFFFFFFFFL)
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sortable_double_bits", exprs => SortableDoubleBits(exprs.head), "built-in")
-
-  def sortableBits(d: Column): Column = call_function("sortable_double_bits", d)
+  def sortableBits(d: Column): Column = column(SortableDoubleBits(expression(d)))
 }

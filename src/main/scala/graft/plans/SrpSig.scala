@@ -1,13 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -130,13 +130,6 @@ object SrpSig {
     UTF8String.fromBytes(out)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "srp_sig", exprs => SrpSig(exprs.head,
-        bits = FnArgs.intArg("srp_sig", "bits", exprs(1)),
-        dim = FnArgs.intArg("srp_sig", "dim", exprs(2)),
-        seed = FnArgs.longArg("srp_sig", "seed", exprs(3))), "built-in")
-
   def apply(vec: Column, bits: Int, dim: Int, seed: Long): Column =
-    call_function("srp_sig", vec, lit(bits), lit(dim), lit(seed))
+    column(SrpSig(expression(vec), bits, dim, seed))
 }

@@ -1,11 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /**
@@ -102,14 +102,10 @@ object VecDot {
     acc
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => VecDot(exprs.head, exprs(1),
-        pad = FnArgs.flagArg("vec_dot", "pad", exprs.lift(2))), "built-in")
-
-  def apply(a: Column, b: Column): Column = call_function("vec_dot", a, b)
+  def apply(a: Column, b: Column): Column =
+    column(VecDot(expression(a), expression(b)))
 
   /** Zero-padding variant (min-length fold) for literal-plane SRP. */
   def padded(a: Column, b: Column): Column =
-    call_function("vec_dot", a, b, org.apache.spark.sql.functions.lit(true))
+    column(VecDot(expression(a), expression(b), pad = true))
 }

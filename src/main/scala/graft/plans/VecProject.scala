@@ -1,11 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
 /**
@@ -113,18 +113,7 @@ object VecProject {
     new GenericArrayData(acc)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_project_i64",
-      exprs => VecProject(exprs.head,
-        k = FnArgs.intArg("vec_project_i64", "k", exprs(1)),
-        dim = FnArgs.intArg("vec_project_i64", "dim", exprs(2)),
-        seed = FnArgs.longArg("vec_project_i64", "seed", exprs(3)),
-        scale = FnArgs.longArg("vec_project_i64", "scale", exprs(4))),
-      "built-in")
-
   def project(vec: Column, k: Int, dim: Int = 64, seed: Long = 42L,
       scale: Long = 1000000L): Column =
-    call_function("vec_project_i64", vec, lit(k), lit(dim), lit(seed),
-      lit(scale))
+    column(VecProject(expression(vec), k, dim, seed, scale))
 }

@@ -1,11 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -180,8 +180,8 @@ object ViterbiSeg {
       // would busy-loop forever in an executor thread (np also wraps
       // past Long.MaxValue, selecting unreachable paths). The engine
       // always supplies single-char candidates so this cannot fire
-      // from declared queries, but viterbi_seg is a registered SQL
-      // function: fail loudly on a malformed call instead of hanging.
+      // from declared queries, but viterbi_seg is a public SQL
+      // function (GraftExtensions): fail loudly on a malformed call instead of hanging.
       if (bestK == 0) throw new IllegalArgumentException(
         s"viterbi_seg: no admissible candidate covers prefix position $j" +
           " (single-char candidates must be supplied for every position)")
@@ -273,13 +273,6 @@ object ViterbiSeg {
     new GenericArrayData(out)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "viterbi_seg",
-      exprs => ViterbiSeg(exprs.head, exprs(1),
-        nBest = FnArgs.intArg("viterbi_seg", "nBest", exprs(2))),
-      "built-in")
-
   def seg(word: Column, cands: Column, nBest: Int): Column =
-    call_function("viterbi_seg", word, cands, lit(nBest))
+    column(ViterbiSeg(expression(word), expression(cands), nBest))
 }

@@ -1,11 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -118,14 +118,6 @@ object WordShingles {
     new GenericArrayData(seen.toArray)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_shingles",
-      exprs => WordShingles(exprs.head,
-        n = FnArgs.intArg("word_shingles", "n", exprs(1)),
-        distinct = FnArgs.flagArg("word_shingles", "distinct", exprs.lift(2))),
-      "built-in")
-
   def shingles(text: Column, n: Int, distinct: Boolean = false): Column =
-    call_function("word_shingles", text, lit(n), lit(distinct))
+    column(WordShingles(expression(text), n, distinct))
 }

@@ -1,12 +1,12 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /**
@@ -92,12 +92,6 @@ object WpGreedy {
     new GenericInternalRow(Array[Any](if (unk) 0L else np, unk))
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "wp_greedy",
-      exprs => WpGreedy(exprs.head, exprs(1)),
-      "built-in")
-
   def walk(len: Column, matches: Column): Column =
-    call_function("wp_greedy", len, matches)
+    column(WpGreedy(expression(len), expression(matches)))
 }

@@ -1,12 +1,12 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -101,16 +101,6 @@ object XxMinHash {
     mins
   }
 
-  /** Register the expression in the session's function registry so it
-    * is callable from both the Column API (via [[minhash]]) and SQL. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "xx_minhash",
-      exprs => XxMinHash(exprs.head,
-        k = FnArgs.intArg("xx_minhash", "k", exprs(1)),
-        seed = FnArgs.longArg("xx_minhash", "seed", exprs(2))),
-      "built-in")
-
   def minhash(shingles: Column, k: Int, seed: Long = 42L): Column =
-    call_function("xx_minhash", shingles, lit(k), lit(seed))
+    column(XxMinHash(expression(shingles), k, seed))
 }

@@ -51,7 +51,6 @@ object StreamNearDup {
     require(k % bands == 0, "bands must divide k")
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.plans.NativeFns.register(spark)
     val rows = k / bands
     val horizonMs = horizonMin * 60000L
 

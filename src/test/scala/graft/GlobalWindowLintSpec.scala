@@ -45,6 +45,9 @@ import org.scalatest.funsuite.AnyFunSuite
  * window there — at 100 TB the piece inventory is tens of millions
  * of rows and the shrink schedule keeps 80% per round, so no
  * pre-prune bounds it.
+ *
+ * The second test is a source lint of the same kind: `src/main`
+ * reaches the native expressions by class, never by SQL name.
  */
 class GlobalWindowLintSpec extends AnyFunSuite {
 
@@ -89,5 +92,31 @@ class GlobalWindowLintSpec extends AnyFunSuite {
          |A NEW site must either partition its window, use the two-phase
          |prefix-scan rank idiom (Packing.streamPacks / UnigramLm.usageRank),
          |or document its input bound and join this allowlist.""".stripMargin)
+  }
+
+  test("src/main reaches native expressions by class, never by SQL name") {
+    // the Column API builds each native expression directly; SQL names
+    // live only in GraftExtensions. A string lookup in src/main works
+    // only on sessions someone registered first (the "undefined
+    // function md5_fold31" bug class on a vanilla session).
+    val names = graft.plans.GraftExtensions.functions.map(_._1.funcName)
+    val pat = java.util.regex.Pattern.compile(
+      "call_function\\s*\\(\\s*\"(" + names.mkString("|") + ")\"" +
+        "|createOrReplaceTempFunction|\\bNativeFns\\b")
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val hits = scala.collection.mutable.Buffer.empty[String]
+    val stream = java.nio.file.Files.walk(root)
+    try {
+      stream.iterator().forEachRemaining { p =>
+        if (p.toString.endsWith(".scala")) {
+          val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+            .replaceAll("(?s)/\\*.*?\\*/", " ")
+            .replaceAll("//[^\n]*", " ")
+          val m = pat.matcher(src)
+          while (m.find()) hits += s"${root.relativize(p)}: ${m.group()}"
+        }
+      }
+    } finally stream.close()
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

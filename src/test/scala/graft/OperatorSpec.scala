@@ -195,19 +195,24 @@ class OperatorSpec extends SparkTestBase {
   }
 
   test("GraftExtensions injects xx_minhash; SQL resolves it") {
-    // the extensions hook applies cleanly (builder-time wiring)...
+    // the extensions hook injects exactly the name table (builder-time
+    // wiring)...
+    val injected = scala.collection.mutable.Buffer.empty[String]
     new graft.plans.GraftExtensions()(
-      new org.apache.spark.sql.SparkSessionExtensions)
-    // ...and the same builder function resolves through the registry
-    // in SQL form
-    val s2 = spark.newSession()
-    graft.plans.XxMinHash.register(s2)
-    val out = s2.sql("SELECT xx_minhash(array('a','b'), 4, 42) AS sig")
+      new org.apache.spark.sql.SparkSessionExtensions {
+        override def injectFunction(f: FunctionDescription): Unit = {
+          injected += f._1.funcName
+          super.injectFunction(f)
+        }
+      })
+    assert(injected.toSeq ==
+      graft.plans.GraftExtensions.functions.map(_._1.funcName))
+    // ...and the same builders resolve through the registry in SQL form
+    val out = sqlSession.sql("SELECT xx_minhash(array('a','b'), 4, 42) AS sig")
       .collect().head.getSeq[Long](0)
     assert(out.size == 4)
     // ilog2_fx resolves in SQL and is exact at powers of two
-    graft.plans.NativeFns.register(s2)
-    assert(s2.sql("SELECT ilog2_fx(1024L) AS lg")
+    assert(sqlSession.sql("SELECT ilog2_fx(1024L) AS lg")
       .collect().head.getLong(0) == 10L * (1L << 20))
   }
 

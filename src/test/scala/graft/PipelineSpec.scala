@@ -759,7 +759,7 @@ class PipelineSpec extends SparkTestBase {
         graft.plans.VecDist2.dist2(col("a"), col("b")).as("d2"))
       .orderBy("id").as[(Long, Option[Double])].collect().toSeq
     val composed = d.select(col("id"),
-        graft.pipeline.Similarity.dist2FoldComposed(col("a"), col("b")).as("d2"))
+        ComposedReferences.dist2FoldComposed(col("a"), col("b")).as("d2"))
       .orderBy("id").as[(Long, Option[Double])].collect().toSeq
     assert(native == composed, s"$native vs $composed")
     assert(native(2)._2.isEmpty && native(3)._2.contains(0.0))
@@ -775,7 +775,7 @@ class PipelineSpec extends SparkTestBase {
     val native = d.select(col("s"),
       graft.pipeline.Corpus.hashFold(col("s")).as("h"))
     val composed = d.select(col("s"),
-      graft.pipeline.Corpus.hashFoldComposed(col("s")).as("h"))
+      ComposedReferences.hashFoldComposed(col("s")).as("h"))
     assert(native.schema("h").dataType == composed.schema("h").dataType,
       s"${native.schema("h").dataType} vs ${composed.schema("h").dataType}")
     val nv = native.orderBy("s").as[(String, Int)].collect().toSeq
@@ -794,11 +794,10 @@ class PipelineSpec extends SparkTestBase {
     // multi-byte words, short docs below the gram width, empty.
     val d = Seq("", "one", "new york city", "a  b\tc", "héllo wörld",
       "日本語 テキスト 行", "x y x y x", "  lead trail  ").toDF("s")
-    graft.plans.NativeFns.register(spark)
     val native = d.select(col("s"),
       graft.plans.HashedGrams.grams(col("s"), 2, "dsir:", 10000).as("b"))
     val composed = d.select(col("s"),
-      graft.pipeline.Corpus.dsirGramBucketsComposed(col("s"), 10000).as("b"))
+      ComposedReferences.dsirGramBucketsComposed(col("s"), 10000).as("b"))
     assert(native.schema("b").dataType.asInstanceOf[
         org.apache.spark.sql.types.ArrayType].elementType ==
       org.apache.spark.sql.types.IntegerType)
@@ -1365,7 +1364,7 @@ class PipelineSpec extends SparkTestBase {
     }
     // null vector and null element both collapse to the all-zeros
     // signature (the composed form's when-coalesced contract), not NULL
-    val nulls = spark.sql(
+    val nulls = sqlSession.sql(
       """SELECT srp_sig(CAST(NULL AS ARRAY<DOUBLE>), 16, 64, 42) AS a,
         |srp_sig(array(CAST(NULL AS DOUBLE), 1.0), 16, 64, 42) AS b""".stripMargin)
       .collect().head
@@ -1528,7 +1527,6 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("XxMinHash expression: codegen path, determinism, banding finds dups") {
-    graft.plans.XxMinHash.register(spark)
     val sig = docsDf.select(col("doc_id"),
       graft.plans.XxMinHash.minhash(
         graft.functions.TextFns.wordNgrams(col("text"), 3), 12).as("sig"))
@@ -1589,7 +1587,6 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("native WordShingles is bit-identical to the composed split/slice/join form") {
-    graft.plans.NativeFns.register(spark)
     // real corpus text plus crafted whitespace edge cases
     val crafted = Seq("", " ", "a", "a b", "  a  b  ", "a\tb\nc d",
       "x \t\n y", "one two three four", "dup dup dup dup",
@@ -1869,14 +1866,14 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("SQL registration rejects non-literal compile-time params with analyzer error") {
-    graft.plans.NativeFns.register(spark)
-    val df = Seq(("a b c d", 2)).toDF("text", "n")
+    val df = sqlSession.createDataFrame(Seq(("a b c d", 2))).toDF("text", "n")
     val e = intercept[org.apache.spark.sql.AnalysisException] {
       df.selectExpr("word_shingles(text, n)").collect()
     }
     assert(e.getMessage.contains("word_shingles"), e.getMessage)
     val e2 = intercept[org.apache.spark.sql.AnalysisException] {
-      Seq((Array(1.0f), Array(1.0f), true)).toDF("a", "b", "p")
+      sqlSession.createDataFrame(Seq((Array(1.0f), Array(1.0f), true)))
+        .toDF("a", "b", "p")
         .selectExpr("vec_dot(a, b, p)").collect()
     }
     assert(e2.getMessage.contains("vec_dot"), e2.getMessage)
@@ -1960,8 +1957,7 @@ class PipelineSpec extends SparkTestBase {
     assert(out(1)._2 == ref(full))
     assert(out(2)._2 == ref(long), "components beyond dim ignored")
     // a null element must null the sketch, not mint a partial one
-    graft.plans.NativeFns.register(spark)
-    val nulled = spark.sql("SELECT vec_project_i64(array(CAST(1.0 AS FLOAT), " +
+    val nulled = sqlSession.sql("SELECT vec_project_i64(array(CAST(1.0 AS FLOAT), " +
       "CAST(NULL AS FLOAT)), 4, 64, 42, 1000000) AS p").collect()
     assert(nulled.head.isNullAt(0))
   }
@@ -2440,12 +2436,11 @@ class PipelineSpec extends SparkTestBase {
       "word the. les, und")                 // punctuation-attached
     val df = inputs.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("id", "text")
-    graft.plans.NativeFns.register(spark)
     val rows = df.select(col("id"),
         TextFns.langId(col("text")).as("nat"),
-        TextFns.langIdComposed(col("text")).as("ref"),
+        ComposedReferences.langIdComposed(col("text")).as("ref"),
         TextFns.qualityScore(col("text")).as("qnat"),
-        TextFns.qualityScoreComposed(col("text")).as("qref"))
+        ComposedReferences.qualityScoreComposed(col("text")).as("qref"))
       .collect()
     rows.foreach { r =>
       assert(r.getString(1) == r.getString(2),
@@ -2821,7 +2816,7 @@ class PipelineSpec extends SparkTestBase {
           Classifier.hashedTokens(col("text"), buckets, n).as("f"))
         .orderBy("doc_id").as[(Long, Seq[String])].collect().toSeq
       val composed = d.select(col("doc_id"),
-          Classifier.hashedTokensComposed(col("text"), buckets, n).as("f"))
+          ComposedReferences.hashedTokensComposed(col("text"), buckets, n).as("f"))
         .orderBy("doc_id").as[(Long, Seq[String])].collect().toSeq
       assert(native == composed,
         s"buckets=$buckets n=$n:\n$native\nvs composed\n$composed")
