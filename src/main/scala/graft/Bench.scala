@@ -127,6 +127,14 @@ import org.apache.spark.sql.SparkSession
   * methodology is unchanged when the budget fits (5 interleaved trials
   * on a clean host); on a degraded host the artifact degrades to fewer
   * samples per query instead of to nothing.
+  *
+  * Run records: a [[RunMetrics]] listener counts each sample's Spark
+  * jobs, stages, tasks, shuffle, spill, GC and peak task memory, split
+  * into construction (the query function's eager jobs) and execution
+  * by job start time. `BENCH_DETAIL.json` carries them under "runs"
+  * (schema in ENGINE.md); `SPARK_GRAFT_ONLY=<q> SPARK_GRAFT_TRIALS=1`
+  * gives one query's record. The listener is drained and read after
+  * the timed window closes, so what is timed does not change.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -143,34 +151,13 @@ object Bench {
     val wallBudget =
       sys.env.getOrElse("SPARK_GRAFT_WALL_BUDGET", "1800").toDouble
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+    val cpus = LocalSession.cpus(Runtime.getRuntime.availableProcessors())
     // 5 base trials (round 9; was 3): host stall windows hit 10-30% of
     // samples in bad stretches, and a 3-sample median flips as soon as
     // 2 samples stall. 5 samples tolerate 2; with the repair passes an
     // unstable query gets up to 7.
     val trials = math.max(1, sys.env.getOrElse("SPARK_GRAFT_TRIALS", "5").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Interleaved sweeps put ~300 codegen units (74 queries × ~4
-      // whole-stage/expression units) between a query's consecutive
-      // trials; the default codegen cache (100 entries, static conf
-      // spark.sql.codegen.cache.maxEntries) evicts a query's compiled
-      // classes before its next trial, so EVERY trial would repay
-      // janino compilation + JIT — a fixed ~100-200 ms tax that is
-      // pure harness artifact (a real cluster job compiles once and
-      // runs for hours). Sizing the cache to hold the full sweep keeps
-      // the steady-state-codegen regime the medians are meant to
-      // measure. Cache entries are generated-class references — a few
-      // thousand is a trivial heap cost.
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus)
     // Untimed warm-up at the next-smaller scale factor pays parquet
     // reader class loading and the bulk of codegen compilation once.
     // sf0.01 (not sf0.001) so row counts are high enough to trigger
@@ -302,20 +289,29 @@ object Bench {
     // the regression verdict, where an extra sample can only lower a
     // minimum toward the query's true uncontended cost.
     val confirmSamples: SampleBuf = scala.collection.mutable.Map.empty
+    // One run record (JSON object) per committed sample, board and
+    // confirmation sweeps alike, tagged with its sweep index: the
+    // layer counters that explain a sample's wall time. RunMetrics is
+    // attached after the warm-up, so warm-up jobs are never counted.
+    val runs = scala.collection.mutable.Map.empty[String,
+      scala.collection.mutable.ArrayBuffer[String]]
+    val metrics = RunMetrics.attach(spark)
     // Process CPU time (all JVM threads) — the stall discriminator: a
     // host stall inflates wall while the query's CPU seconds stay put.
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
     def processCpuSec(): Double = osBean.getProcessCpuTime / 1e9
-    // The host-weather canary pair — see graft.Canary (factored out
-    // round 15 so ProfileQuery cells carry the same readings). spin =
+    // Locale.ROOT: a comma-decimal default locale would emit invalid JSON.
+    def f6(v: Double) = String.format(java.util.Locale.ROOT, "%.6f", Double.box(v))
+    def f3(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    // The host-weather canary pair — see graft.Canary. spin =
     // CPU availability; bw = effective memory bandwidth (round-14
     // second phase: the spin canary is register-resident and blind to
     // exactly the resource Spark contends on — same-day closing runs
     // showed query minima drifting +11%/+46% while spin stayed flat,
     // monotone in query size: a bandwidth signature, not a CPU one).
-    def canarySpin(): Double = Canary.spin(cpus.toInt)
-    def canaryBw(): Double = Canary.bw(cpus.toInt)
+    def canarySpin(): Double = Canary.spin(cpus)
+    def canaryBw(): Double = Canary.bw(cpus)
     // (sweep index, position within sweep, spin secs, bandwidth secs)
     // — full series to BENCH_DETAIL.json so a taint verdict carries
     // its own evidence.
@@ -435,15 +431,19 @@ object Bench {
         org.apache.spark.sql.DataFrame)],
         into: SampleBuf = samples, context: String = ""): Unit = {
       sweepIdx += 1
-      // time ONE query; returns the sample for the caller to commit
+      // time ONE query; returns the sample and its run record for the
+      // caller to commit
       def timeOne(name: String,
           fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-          : (Double, Double, Boolean) = {
+          : ((Double, Double, Boolean), String) = {
         // a timing starts only on a streaming-quiet JVM (parent
         // session AND the child-session replay registry)
         require(leakedStreams().isEmpty,
           s"streaming residue before $name: " +
             leakedStreams().map(_.name).mkString(","))
+        metrics.reset()
+        var df: org.apache.spark.sql.DataFrame = null
+        var built = 0L
         val cpu0 = processCpuSec()
         val t0 = System.nanoTime()
         // toRdd.count(), NOT Dataset.count() (round 10, format 4):
@@ -455,7 +455,10 @@ object Bench {
         // / q_dedup_substring timed as scans). toRdd executes the
         // query's own physical plan with every output column
         // materialized — what a consumer of the result actually pays.
-        val ok = try { fn(spark, sfDir).queryExecution.toRdd.count(); true }
+        val ok = try {
+          df = fn(spark, sfDir)
+          built = System.nanoTime()
+          df.queryExecution.toRdd.count(); true }
           catch { case scala.util.control.NonFatal(e) =>
             // first failure message per query goes into the artifact —
             // a silent -1 is undiagnosable from the driver's capture.
@@ -471,9 +474,24 @@ object Bench {
             false }
         val dt = (System.nanoTime() - t0) / 1e9
         val dcpu = processCpuSec() - cpu0
+        // Run record, read after the window closed. Jobs that started
+        // by `built` (mapped onto the jobs' wall clock) ran during
+        // construction: the eager checkpoint / collect rounds of the
+        // iterative operators. Catalyst phase times are read only now:
+        // before execution the tracker holds the analysis phase alone.
+        if (built == 0L) built = System.nanoTime()
+        val builtMs = System.currentTimeMillis() - (System.nanoTime() - built) / 1000000L
+        val (constructed, all) = metrics.read(builtMs)
+        val constructS = math.min(dt, (built - t0) / 1e9)
+        val phases = Option(df).fold(Seq.empty[String])(_.queryExecution.tracker
+          .phases.toSeq.sortBy(_._1).map { case (phase, p) =>
+            "\"" + phase + "\":" + (p.endTimeMs - p.startTimeMs) })
+        val run = s"""{"sweep":$sweepIdx,"construct_s":${f6(constructS)},""" +
+          s""""execute_s":${f6(dt - constructS)},"construct_jobs":${constructed.jobs},""" +
+          all.jsonFields + phases.mkString(",\"phase_ms\":{", ",", "}}")
         spark.catalog.clearCache()
         if (streamingQueries.contains(name)) drainStreamingResidue()
-        (dt, dcpu, ok)
+        ((dt, dcpu, ok), run)
       }
       // 40-query windows, each bracketed by canary probes (the probe
       // cadence the old per-40 reading had, plus one closing probe per
@@ -524,9 +542,11 @@ object Bench {
                 gateForced += 1 }
               else if (defers + redos > 0)
                 gateLog += ((ctx, attempt, bwEnd, "ok"))
-              buf.foreach { case (name, sample) =>
+              buf.foreach { case (name, (sample, run)) =>
                 into.getOrElseUpdate(name,
-                  scala.collection.mutable.ArrayBuffer.empty) += sample }
+                  scala.collection.mutable.ArrayBuffer.empty) += sample
+                runs.getOrElseUpdate(name,
+                  scala.collection.mutable.ArrayBuffer.empty) += run }
               carried = Some(bwEnd)
               committed = true
             }
@@ -735,9 +755,6 @@ object Bench {
     }
     // failed queries report -1 (never a fake wall time) and are listed
     // in "errors" so a broken engine can't benchmark as a fast one.
-    // Locale.ROOT: a comma-decimal default locale would emit invalid JSON.
-    def f6(v: Double) = String.format(java.util.Locale.ROOT, "%.6f", Double.box(v))
-    def f3(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     // spread lo = bestMin (board + confirmation minima): the spread
     // minimum is FLOOR material (make_baseline.py reads it), and a
     // solo confirmation sample is the best uncontended-cost estimate
@@ -837,7 +854,11 @@ object Bench {
     // before spark.stop, so this is ~the full run), per-trial sweep
     // walls, the trial-1 projection, and the budget verdict.
     val wallJson = s"""{"elapsed":${f3(elapsedSec)},"per_trial":${trialWalls.map(f3).mkString("[", ",", "]")},"projected":${f3(wallProjected)},"budget":${f3(wallBudget)},"over":${wallProjected > wallBudget},"planned":$trials,"adapted":$budgetAdapted}"""
-    val detail = s"""{"format":4,"metric":"total","value":$total,"floor":$floor,"unit":"sec","wall":$wallJson,"warmup":$warmupJson,"trials":$trialsRun,"reran":$needRerun,"tainted":$tainted,"queries":${qmap(engine, f6)},"verification":${qmap(verif, f6)},"verification_total":$verifTotal,"spread":$spread,"unstable":$unstable,"errors":$errors,"baseline_n":${ratios.size},"baseline_ratios":$ratioJson,"regressions":$regJson,"regressions_raw":$regRawJson,"confirm_sweeps":$confirms,"confirm_min":$confirmMinJson,"confirm_errors":$confirmErrJson,"canary":$canaryJson,"canary_bw":$canaryBwJson,"canary_series":$canarySeriesJson,"stall_excluded":$stallExcluded,"gate":{"enabled":$gateEnabled,"drift":$gateDrift,"deferred":$gateDeferred,"redo":$gateRedo,"forced":$gateForced,"slept_sec":${f3(gateSleptSec)},"sleep_cap":${f3(gateWallCap)}},"gate_log":$gateLogJson,"sf":"$sfDir"}"""
+    // per-query run records in sample order (see `runs`)
+    val runsJson = runs.toSeq.sortBy(_._1)
+      .map { case (n, rs) => "\"" + n + "\":" + rs.mkString("[", ",", "]") }
+      .mkString("{", ",", "}")
+    val detail = s"""{"format":4,"metric":"total","value":$total,"floor":$floor,"unit":"sec","wall":$wallJson,"warmup":$warmupJson,"trials":$trialsRun,"reran":$needRerun,"tainted":$tainted,"queries":${qmap(engine, f6)},"verification":${qmap(verif, f6)},"verification_total":$verifTotal,"spread":$spread,"unstable":$unstable,"errors":$errors,"baseline_n":${ratios.size},"baseline_ratios":$ratioJson,"regressions":$regJson,"regressions_raw":$regRawJson,"confirm_sweeps":$confirms,"confirm_min":$confirmMinJson,"confirm_errors":$confirmErrJson,"canary":$canaryJson,"canary_bw":$canaryBwJson,"canary_series":$canarySeriesJson,"stall_excluded":$stallExcluded,"gate":{"enabled":$gateEnabled,"drift":$gateDrift,"deferred":$gateDeferred,"redo":$gateRedo,"forced":$gateForced,"slept_sec":${f3(gateSleptSec)},"sleep_cap":${f3(gateWallCap)}},"gate_log":$gateLogJson,"runs":$runsJson,"sf":"$sfDir"}"""
     // Two detail files per run (round-15 lesson, encoded): the
     // canonical BENCH_DETAIL.json (what make_baseline.py and the
     // round tooling read — latest run wins) PLUS a mode-keyed copy

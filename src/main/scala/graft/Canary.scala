@@ -1,10 +1,7 @@
 package graft
 
 /**
- * The host-weather canary pair (round 14, factored out round 15 so
- * ProfileQuery's cells carry the same evidence standard as Bench
- * artifacts — the sf1 memory cells showed 2x wall spread between
- * trials with no weather column to attribute it to).
+ * The host-weather canary pair Bench reads around its sweeps (round 14).
  *
  *  - [[spin]]: fixed deterministic CPU work (`threads` threads, each
  *    a constant-iteration integer mix loop). Wall time on a quiet
@@ -25,25 +22,7 @@ object Canary {
 
   @volatile private var sink = 0L
 
-  // allocated on first bw() call and KEPT between readings (a probe
-  // that reallocates measures the allocator, not the bus) — but
-  // releasable: ProfileQuery measures JVM heap peaks, and a
-  // permanently-live 512 MiB array would inflate every heapPeak
-  // reading by ~512 MB and break comparability with pre-round-15
-  // memory cells (round-15 review). Bench never releases (its heap
-  // readings don't exist and the retained array keeps probes
-  // allocator-free).
-  private var bwArrRef: Array[Long] = null
-
-  private def bwArr: Array[Long] = synchronized {
-    if (bwArrRef == null) bwArrRef = new Array[Long](64 << 20) // 512 MiB
-    bwArrRef
-  }
-
-  /** Drop the bandwidth array so heap measurements taken after the
-    * canary reading don't carry its 512 MiB. The next bw() call
-    * re-allocates (outside any timed window in ProfileQuery). */
-  def releaseBw(): Unit = synchronized { bwArrRef = null }
+  private lazy val bwArr = new Array[Long](64 << 20) // 512 MiB
 
   /** Wall seconds to drain `threads` fixed-iteration spin threads. */
   def spin(threads: Int): Double = {

@@ -1,13 +1,13 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round evidence tool: dumps `.explain("formatted")` for
   * the named queries to `<outDir>/<query>_<tag>.txt` — the
   * before/after plan files the optimization judge checks claims
-  * against (plans/r17/...). Runs at the bench's sf and core count so
-  * the plans match what the bench times.
+  * against (plans/r17/...), and the way to regenerate any plan PLANS.md
+  * shows. Runs on the bench's session settings ([[LocalSession]]) and
+  * sf, so the plans match what the bench times.
   *
   * Usage: runMain graft.PlanDump <tag> <outDir> <query>[,<query>...]
   */
@@ -18,16 +18,7 @@ object PlanDump {
     val outDir = Paths.get(args(1))
     val names = args(2).split(',').map(_.trim).filter(_.nonEmpty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(LocalSession.cpus(32), logLevel = "ERROR")
     Files.createDirectories(outDir)
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

@@ -1,10 +1,7 @@
 package graft
 
-import scala.collection.concurrent.TrieMap
-import scala.collection.mutable.ArrayBuffer
 import scala.util.chaining._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.catalog.Tables
@@ -42,28 +39,12 @@ import graft.pipeline.{Corpus, Dedup, Graphs, Packing, Similarity}
  */
 object ProfileScale {
 
-  /** (taskRunTimeMs, shuffleReadBytes, shuffleWriteBytes) per task,
-    * keyed by stage. */
-  private final class StageListener extends SparkListener {
-    val stages = TrieMap.empty[Int, ArrayBuffer[(Long, Long, Long)]]
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        val buf = stages.getOrElseUpdate(t.stageId, ArrayBuffer.empty)
-        buf.synchronized {
-          buf += ((m.executorRunTime,
-            m.shuffleReadMetrics.totalBytesRead,
-            m.shuffleWriteMetrics.bytesWritten))
-        }
-      }
-    }
-  }
-
-  private[graft] final case class RunStats(
+  private final case class RunStats(
       elapsedSec: Double, rows: Long, shuffleReadMB: Double,
       shuffleWriteMB: Double, worstSkew: Double, skewStageTasks: Int)
 
-  /** Run one plan and collect stage metrics. Skew is measured only on
+  /** Each cell's shuffle bytes and per-stage task times come from
+    * [[RunMetrics]]. Skew is measured only on
     * stages with ≥ 8 tasks, max task ≥ 200 ms AND median task ≥ 50 ms:
     * a stage whose median is a few milliseconds can show a 8×+
     * max/median from a single GC pause or scheduler hiccup — that is
@@ -91,12 +72,9 @@ object ProfileScale {
   private val profileTrials =
     math.max(1, sys.env.getOrElse("SPARK_GRAFT_PROFILE_TRIALS", "2").toInt)
 
-  private[graft] def profiled(spark: SparkSession)(plan: => DataFrame): RunStats =
-    (1 to profileTrials).map(_ => profiledOnce(spark)(plan)).minBy(_.elapsedSec)
-
-  private[graft] def profiledOnce(spark: SparkSession)(plan: => DataFrame): RunStats = {
-    val listener = new StageListener
-    spark.sparkContext.addSparkListener(listener)
+  private def profiledOnce(spark: SparkSession, metrics: RunMetrics)(
+      plan: => DataFrame): RunStats = {
+    metrics.reset()
     val t0 = System.nanoTime()
     // toRdd.count(), NOT Dataset.count() (round 10): count() builds a
     // NEW Aggregate plan over the query and re-optimizes it, and
@@ -109,17 +87,11 @@ object ProfileScale {
     // active — and counting the RDD adds nothing Catalyst can exploit.
     val rows = plan.queryExecution.toRdd.count()
     val elapsed = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(1000) // let the listener bus drain
-    spark.sparkContext.removeSparkListener(listener)
-    spark.catalog.clearCache()
-    var read = 0L; var write = 0L
+    val (_, c) = metrics.read()
     var worst = 1.0; var worstTasks = 0
-    listener.stages.values.foreach { buf =>
-      val tasks = buf.synchronized(buf.toVector)
-      read += tasks.map(_._2).sum
-      write += tasks.map(_._3).sum
+    metrics.stageTaskMs.values.foreach { tasks =>
       if (tasks.length >= 8) {
-        val durs = tasks.map(_._1).sorted
+        val durs = tasks.sorted
         val max = durs.last
         val med = durs(durs.length / 2)
         if (max >= 200 && med >= 50 && max.toDouble / med > worst) {
@@ -128,7 +100,9 @@ object ProfileScale {
         }
       }
     }
-    RunStats(elapsed, rows, read / 1048576.0, write / 1048576.0, worst, worstTasks)
+    spark.catalog.clearCache()
+    RunStats(elapsed, rows, c.shuffleReadB / 1048576.0,
+      c.shuffleWriteB / 1048576.0, worst, worstTasks)
   }
 
   /** m disjoint-vocabulary copies of the near-dup corpus: every token
@@ -145,7 +119,7 @@ object ProfileScale {
       .repartition(spark.sparkContext.defaultParallelism)
   }
 
-  private[graft] def scaledVecs(spark: SparkSession, sfDir: String, m: Int): DataFrame = {
+  private def scaledVecs(spark: SparkSession, sfDir: String, m: Int): DataFrame = {
     val base = Tables.read(spark, sfDir, "embeddings")
     (0 until m).map { k =>
       base.select((col("vec_id") + lit(k * 1000000L)).as("vec_id"),
@@ -186,13 +160,8 @@ object ProfileScale {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outPath = if (args.length > 0) args(0) else "PROFILE_r09.json"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(32, logLevel = "ERROR")
+    val metrics = RunMetrics.attach(spark)
 
     val ops: Seq[(String, Int => DataFrame)] = Seq(
       "dedup_exact" -> (m => Dedup.exactDedup(scaledDocs(spark, sfDir, m))),
@@ -1151,11 +1120,11 @@ object ProfileScale {
     val best = scala.collection.mutable.Map.empty[String, RunStats]
     (1 to profileTrials).foreach { round =>
       cells.foreach { case (key, thunk) =>
-        val s = profiledOnce(spark)(thunk())
+        val s = profiledOnce(spark, metrics)(thunk())
         best(key) = best.get(key).map(merged(_, s)).getOrElse(s)
         System.err.println(f"[profile] round $round $key%-30s " +
-          f"${s.elapsedSec}%6.2fs ${s.shuffleWriteMB}%8.1fMB " +
-          f"skew ${s.worstSkew}%4.2f")
+          f"${s.elapsedSec}%6.2fs ${s.shuffleWriteMB}%8.3fMB " +
+          f"skew ${s.worstSkew}%4.2f rows ${s.rows} read ${s.shuffleReadMB}%.3fMB")
       }
     }
     // Targeted re-trials: a cell whose best skew still clears the
@@ -1167,7 +1136,7 @@ object ProfileScale {
     cells.foreach { case (key, thunk) =>
       var extra = 0
       while (best(key).worstSkew > skewBar && extra < 2) {
-        val s = profiledOnce(spark)(thunk())
+        val s = profiledOnce(spark, metrics)(thunk())
         best(key) = merged(best(key), s)
         extra += 1
         System.err.println(f"[profile] retrial $extra $key%-28s " +

@@ -695,7 +695,7 @@ object Dedup {
    * verifies. The scale path for "are these two documents semantically
    * identical" at 100 TB.
    *
-   * Shape choice (measured record in PLANS.md, ProfileEmbedShape;
+   * Shape choice (measured record in PLANS.md's crossover table;
    * re-derived round 10 on materialized incompressible fixtures —
    * earlier tables were invalid, see the PLANS.md note): the default
    * dedupes candidates on the ID PAIR and rejoins the vectors

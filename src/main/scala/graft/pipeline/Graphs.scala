@@ -188,7 +188,7 @@ object Graphs {
     // held ~5^r copies of the base lineage and Catalyst re-analysis
     // grew exponentially: at sf0.1 the 4-round bench fixture spent
     // 32-45 s of driver-side analysis against <2 s of actual job
-    // execution (measured with ProfileQuery; this single query was
+    // execution (construction vs execution split; this single query was
     // 22% of the round-12 board). localCheckpoint materializes AND
     // truncates lineage to a LogicalRDD, making every round's plan
     // constant-size. Cluster note: localCheckpoint blocks live in the

@@ -47,7 +47,11 @@ import org.scalatest.funsuite.AnyFunSuite
  * pre-prune bounds it.
  *
  * The second test is a source lint of the same kind: `src/main`
- * reaches the native expressions by class, never by SQL name.
+ * reaches the native expressions by class, never by SQL name. The
+ * third keeps the harness to one session factory (`LocalSession`, plus
+ * the production `MetricsMain`) and one SparkListener (`RunMetrics`):
+ * a second builder or listener is how settings and counters drifted
+ * apart across a dozen mains before.
  */
 class GlobalWindowLintSpec extends AnyFunSuite {
 
@@ -118,5 +122,37 @@ class GlobalWindowLintSpec extends AnyFunSuite {
       }
     } finally stream.close()
     assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("src/main builds sessions in one factory and listens in one listener") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val pats = Map(
+      "SparkSession.builder()" -> "\\bSparkSession\\s*\\.\\s*builder\\b",
+      "SparkListener" -> "\\b(extends|new)\\s+([\\w.]+\\.)?SparkListener\\b")
+      .map { case (k, re) => k -> java.util.regex.Pattern.compile(re) }
+    val found = scala.collection.mutable.Map.empty[(String, String), Int]
+    val stream = java.nio.file.Files.walk(root)
+    try {
+      stream.iterator().forEachRemaining { p =>
+        if (p.toString.endsWith(".scala")) {
+          val rel = root.relativize(p).toString
+          val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+            .replaceAll("(?s)/\\*.*?\\*/", " ")
+            .replaceAll("//[^\n]*", " ")
+          pats.foreach { case (k, pat) =>
+            val m = pat.matcher(src)
+            while (m.find()) found((k, rel)) = found.getOrElse((k, rel), 0) + 1
+          }
+        }
+      }
+    } finally stream.close()
+    val allowed = Map(
+      ("SparkSession.builder()", "graft/LocalSession.scala") -> 1,
+      ("SparkSession.builder()", "graft/metrics/MetricsMain.scala") -> 1,
+      ("SparkListener", "graft/RunMetrics.scala") -> 1)
+    assert(found.toMap == allowed,
+      s"""observed: ${found.toSeq.sortBy(_._1).mkString(", ")}
+         |A new session goes through graft.LocalSession; new counters go
+         |into graft.RunMetrics.""".stripMargin)
   }
 }

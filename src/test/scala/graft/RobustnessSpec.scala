@@ -216,18 +216,30 @@ class RobustnessSpec extends SparkTestBase {
   test("Lineage.cycle: superseded checkpoint blocks are released deterministically") {
     val sc = spark.sparkContext
     spark.catalog.clearCache()
-    val before = sc.getPersistentRDDs.size
+    // The registry is shared with every suite, and the ContextCleaner
+    // unpersists other suites' dead RDDs whenever GC runs. So the
+    // assertions name this test's checkpoint RDDs by id, and count
+    // only the ids registered since `before`; the cleaner can remove
+    // ids but never adds one.
+    val before = sc.getPersistentRDDs.keySet.toSet
+    def added = sc.getPersistentRDDs.keySet.toSet -- before
+    def checkpointId(df: org.apache.spark.sql.DataFrame): Int = {
+      val lp = df.queryExecution.logical
+      lp.getClass.getMethod("rdd").invoke(lp)
+        .asInstanceOf[org.apache.spark.rdd.RDD[_]].id
+    }
     val a = spark.range(100).toDF("v").localCheckpoint()
-    assert(sc.getPersistentRDDs.size == before + 1,
-      "localCheckpoint registers one persistent RDD")
+    val aId = checkpointId(a)
+    assert(added == Set(aId), "localCheckpoint registers one persistent RDD")
     val b = graft.pipeline.Lineage.cycle(a.withColumn("w", col("v") * 2), a)
+    val bId = checkpointId(b)
     // the new checkpoint replaced the old in the registry — release
     // is deterministic, not GC-dependent (the round-14 ADVICE fix)
-    assert(sc.getPersistentRDDs.size == before + 1,
+    assert(!sc.getPersistentRDDs.contains(aId) && added == Set(bId),
       "cycle releases the superseded checkpoint as the new one lands")
     assert(b.count() == 100, "the new frame is readable after release")
     graft.pipeline.Lineage.release(b)
-    assert(sc.getPersistentRDDs.size == before)
+    assert(!sc.getPersistentRDDs.contains(bId) && added.isEmpty)
     // release of a non-checkpoint frame is a silent no-op
     graft.pipeline.Lineage.release(spark.range(3).toDF("v"))
   }
