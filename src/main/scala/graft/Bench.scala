@@ -2,152 +2,87 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Driver-run benchmark: one JSON line with per-query wall times on
-  * SPARK_GRAFT_SF_DIR. Queries run through the same SparkEntry
-  * contract the correctness gate uses.
+/** Driver-run benchmark: per-query wall times on SPARK_GRAFT_SF_DIR.
+  * Queries run through the same SparkEntry contract the correctness
+  * gate uses. Only the board's own samples feed the reported numbers;
+  * nothing probes the host and nothing re-times a query outside the
+  * sweeps below.
   *
-  * Methodology (round 6, reworked round 9): each query is timed over N
-  * independent trials (default 3, SPARK_GRAFT_TRIALS) and the reported
-  * number is the MEDIAN, with per-query [min,max] spread recorded
-  * alongside. A single-trial bench cannot distinguish a code
-  * regression from JIT/code-cache warm-up order — round 5 recorded
-  * 3–6x "regressions" on queries whose code had not changed.
+  * What is timed ("format":4, round 10): `queryExecution.toRdd.count()`,
+  * which executes the query's own physical plan with every output
+  * column materialized. `Dataset.count()` re-optimizes an Aggregate
+  * over the plan, and Catalyst then deletes final sorts, pure compute
+  * projections and reassembly left-joins, so several format ≤ 3
+  * numbers were bare scans (ENGINE.md round-10 forensics). Format-4
+  * totals are not comparable to format ≤ 3 totals.
   *
-  * Interleaved trial rounds (round 9): round 8 ran a query's N trials
-  * back-to-back, so one sustained machine-load spike poisoned ALL
-  * THREE trials of whichever queries it covered (q_normalize: min
-  * trial 4.6 s in the spiked run vs 0.27 s in every stable run on
-  * identical code) — the median defended against per-trial noise but
-  * not against a spike wider than one query's trial window. Trials
-  * are now interleaved: the FULL query sweep runs once per trial
-  * round, and per-query stats aggregate across rounds. A load spike
-  * now inflates at most one sample per query (the sweep takes ~10 s+,
-  * far wider than its own per-query window), which the cross-round
-  * median discards.
+  * Interleaved trials (round 9): the full sweep runs once per trial
+  * round (SPARK_GRAFT_TRIALS, default 5) and per-query statistics
+  * aggregate across rounds, so a load spike wider than one query's
+  * window inflates at most one sample per query. Each query reports
+  * its MEDIAN; "value" sums the engine medians and "floor" sums the
+  * per-query minima over ok samples. An untimed warm-up at the next
+  * smaller scale factor runs first (SPARK_GRAFT_WARMUP: the subset
+  * below by default, "full" for the whole board, "0" for none).
   *
-  * Taint auto-repair (round 9): whenever aggregation flags ANY
-  * unstable query, the bench re-sweeps only the unstable queries and
-  * re-aggregates, up to SPARK_GRAFT_RERUNS (default 2) passes — an
-  * unstable query ends up with 6-7 samples at the default 5 base
-  * trials, whose median discards up to three stall-inflated ones.
-  * Only instability that survives every
-  * pass counts toward the taint threshold. "reran" records the repair
-  * pass count (0 = clean first try), so a repaired artifact is
-  * distinguishable from a clean one.
+  * Stall filter (round 14): each sample also records its process-CPU
+  * delta. A host stall inflates wall while CPU stays put, so a sample
+  * whose wall is > 1.2x the query's fastest (+50 ms) while its CPU
+  * stays within 1.25x of that sample's CPU is left out of the median
+  * when at least 3 clean samples remain; "stall_excluded" counts them.
   *
-  * Verification bucket (round 9): q_alarm_stream_parity is a
-  * correctness VERIFICATION HARNESS (driver-collected fixture →
-  * MemoryStream replay, see StreamParity.scala) — it measures the
-  * replay harness, not an engine operator, and at 4.4–5.0 s it was
-  * the single largest and most variable term in the round-8 headline.
-  * It still runs (the correctness gate is untouchable) but its median
-  * is reported under "verification" and EXCLUDED from "value", so the
-  * headline number is engine-only. "format":4 versions this artifact
-  * schema (format 3 = round 9: floor/reran/verification fields,
-  * queries driven by Dataset.count(); format 2 = round 8: errors as
-  * name→message object, hygiene outside the timed window; format 1 =
-  * rounds ≤7). FORMAT 4 (round 10) changes WHAT IS TIMED: queries
-  * execute via queryExecution.toRdd.count(), materializing every
-  * output column, because Dataset.count() re-optimizes an Aggregate
-  * plan in which Catalyst deletes final sorts, pure compute
-  * projections, and reassembly left-joins — several format≤3
-  * per-query numbers were bare scans (see ENGINE.md round-10
-  * forensics). Format-4 totals are therefore NOT comparable to
-  * format≤3 totals: they time strictly more work, honestly.
+  * Repair and taint (rounds 8-9): a query whose median sits > 20% and
+  * > 100 ms over its minimum is unstable. Up to SPARK_GRAFT_RERUNS
+  * (default 2) extra sweeps re-time only the unstable queries, and
+  * "reran" counts them. More than 8 queries still unstable marks the
+  * artifact `"tainted":true`.
   *
-  * Streaming isolation (round 8): streaming queries run LAST within
-  * every sweep, and after each one the bench tears down streaming
-  * residue (stop leftover streams, StateStore.stop()) and verifies the
-  * JVM is streaming-quiet before the next timing starts — checking
-  * BOTH the parent session's StreamingQueryManager and StreamParity's
-  * registry of child-session replays (managers are per-session, so
-  * the parent alone would never see a leaked replay).
+  * Wall budget (round 17): the driver kills the bench at a fixed wall
+  * timeout, and round 16 shipped no artifact (rc=124). After trial 1
+  * a projected wall prints to stderr; the trial loop stops early when
+  * the next trial would pass 90% of SPARK_GRAFT_WALL_BUDGET (default
+  * 1800 s, 0 = unbounded), and repair sweeps stop at 75% of it.
+  * "trials" is the count actually run; "wall" carries the plan.
   *
-  * Taint guard (round 8): >8 unstable queries (after the round-9
-  * auto-repair pass) marks the whole artifact `"tainted":true` — a
-  * polluted JVM or loaded machine can no longer masquerade as an
-  * engine regression. SPARK_GRAFT_SKIP (comma-separated query names)
-  * excludes queries from a run for A/B forensics; SPARK_GRAFT_ONLY
-  * restricts a run to the listed queries (same forensics tool from
-  * the other side — isolate a suspect set on an otherwise-idle JVM).
+  * Streaming isolation (rounds 8, 13): `*_stream_parity` queries run
+  * LAST in every sweep. After each one the bench stops leftover
+  * streams and unloads the state store, and every timing requires a
+  * streaming-quiet JVM (the parent session and StreamParity's
+  * child-session replays). They are verification harnesses, reported
+  * under "verification" and outside the engine-only "value".
   *
-  * Stall instrumentation (round 14): six round-13 closing attempts
-  * were tainted by ambient host stalls with NO instrument that could
-  * tell "environment" from "engine" — the claim was an inference from
-  * floor stability. Two direct measurements close that gap:
+  * Selection: SPARK_GRAFT_ONLY / SPARK_GRAFT_SKIP (comma-separated
+  * query names). SPARK_GRAFT_ORDER_SEED permutes the batch order; a
+  * permuted run whose medians match the sorted run shows the timings
+  * are order-independent. Each run also writes a mode-keyed copy of
+  * the artifact (BENCH_DETAIL_sorted.json / BENCH_DETAIL_perm<seed>.json).
   *
-  *  1. CPU canary: a fixed deterministic spin (cpus threads, each a
-  *     constant-iteration integer mix loop) runs at the start of every
-  *     sweep and every 40 queries within it. Its wall time on a quiet
-  *     host is a constant; under external load / cgroup throttle it
-  *     inflates proportionally to stolen CPU. The full canary series
-  *     (per sweep, with in-sweep index) lands in BENCH_DETAIL.json;
-  *     the artifact line carries min/median/max — a tainted run now
-  *     SHOWS the stall instead of asserting it.
-  *
-  *  2. Per-sample process-CPU deltas: each timed query sample records
-  *     process CPU seconds consumed during its wall window. A host
-  *     stall means wall inflates while CPU does not (the work is the
-  *     same; the time went to waiting). A sample is STALL-SUSPECT when
-  *     wall > 1.2x the query's fastest sample (+50 ms absolute) AND
-  *     its CPU delta stays within 1.25x of that fastest sample's CPU.
-  *     Medians are computed over clean samples when >=3 remain
-  *     (minima always over all samples — a stall can only inflate,
-  *     never deflate, a minimum); "stall_excluded" counts the dropped
-  *     samples so the filtering is visible, not silent.
-  *
-  * Canary-gated sweeps + confirmation isolation (round 15): every
-  * sweep (trial, repair, confirmation) is preceded by a bandwidth-
-  * canary GATE that defers the sweep (bounded sleep-and-retry) while
-  * the probe reads >GATE_DRIFT x the session's best — the run waits
-  * out measured contention windows instead of timing through them;
-  * all decisions land in "gate_log". Confirmation sweeps write to a
-  * SEPARATE sample buffer: board medians / instability / taint are
-  * computed from board trials alone (solo calm-context samples biased
-  * them downward — round-15 ADVICE), while floors, spread minima, and
-  * the regression verdict fold the confirmation minima in (a minimum
-  * can only improve toward the true uncontended cost).
-  *
-  * Gate reference rework (round 17): the gate/redo reference is the
-  * min of the LAST 16 probes, not the all-time session best, and
-  * total defer/redo sleep is capped (SPARK_GRAFT_GATE_WALL, default
-  * 8% of the wall budget) — see the inline comment at the reference
-  * for the measured pathology (a persistently-jittery host chasing
-  * one lucky probe burned ~370 s/trial in gate interventions).
-  *
-  * Budget-adaptive trials (round 17): the driver kills the bench at a
-  * fixed wall timeout, and round 16 shipped NO artifact because the
-  * board outgrew it (rc=124, parsed:null). The trial loop now stops
-  * early when the next sweep (at the last sweep's measured cost) would
-  * pass 90% of SPARK_GRAFT_WALL_BUDGET (default 1800 s — the recorded
-  * r15-completed/r16-killed bracket; 0 disables), and the repair /
-  * confirmation loops respect the budget too. Per-query numbers stay
-  * medians over however many interleaved trials ran; "trials" reports
-  * the ACTUAL count and "wall" carries {planned, adapted}. The
-  * methodology is unchanged when the budget fits (5 interleaved trials
-  * on a clean host); on a degraded host the artifact degrades to fewer
-  * samples per query instead of to nothing.
+  * Baseline (report only): "baseline_ratios" is each query's minimum
+  * over its BENCH_BASELINE_F4.json floor, and ratios > 1.5x are listed
+  * under "regressions". Floors are only comparable at the same scale
+  * factor and core count, so the ratios are filled only when the floor
+  * file's "sf" and "cpus" match this run; otherwise "baseline_n" is 0.
   *
   * Run records: a [[RunMetrics]] listener counts each sample's Spark
   * jobs, stages, tasks, shuffle, spill, GC and peak task memory, split
   * into construction (the query function's eager jobs) and execution
-  * by job start time. `BENCH_DETAIL.json` carries them under "runs"
-  * (schema in ENGINE.md); `SPARK_GRAFT_ONLY=<q> SPARK_GRAFT_TRIALS=1`
-  * gives one query's record. The listener is drained and read after
-  * the timed window closes, so what is timed does not change.
+  * by job start time. `BENCH_DETAIL.json` carries them under "runs",
+  * one per committed sample (schema in ENGINE.md);
+  * `SPARK_GRAFT_ONLY=<q> SPARK_GRAFT_TRIALS=1` gives one query's
+  * record. The listener is drained and read after the timed window
+  * closes, so what is timed does not change.
+  *
+  * Output: the full artifact goes to BENCH_DETAIL.json; stdout carries
+  * three JSON lines — per-query medians, totals, and the
+  * driver-contract line last (ENGINE.md "Round-18 bench stdout
+  * contract").
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val runStartNs = System.nanoTime()
     def elapsedSec: Double = (System.nanoTime() - runStartNs) / 1e9
-    // Wall-budget instrument (round 17, after BENCH_r16 died rc=124
-    // with no artifact at all): the driver kills the bench process at
-    // a fixed wall timeout, and the board outgrowing that budget must
-    // be DETECTED (pre-flight, after trial 1) rather than discovered
-    // as a timeout with parsed:null. The budget default is the
-    // conservative bound recorded in ENGINE.md (r15's ~169 s/trial
-    // board completed, r16's ~253 s/trial died; the projection below
-    // flags while there is still time to read the warning).
+    // The default is the conservative bound recorded in ENGINE.md
+    // (r15's ~169 s/trial board completed, r16's ~253 s/trial died).
     val wallBudget =
       sys.env.getOrElse("SPARK_GRAFT_WALL_BUDGET", "1800").toDouble
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -161,27 +96,21 @@ object Bench {
     // Untimed warm-up at the next-smaller scale factor pays parquet
     // reader class loading and the bulk of codegen compilation once.
     // sf0.01 (not sf0.001) so row counts are high enough to trigger
-    // JIT of every hot loop. Runs in the SAME sorted order as the
-    // timed sweeps — no ordering tricks; per-query cross-round medians
-    // (not the warm-up pass) are what make the timings
-    // order-independent.
+    // JIT of every hot loop. Runs in the same order as the timed
+    // sweeps; per-query cross-round medians (not the warm-up pass) are
+    // what make the timings order-independent.
     val warmDir = Seq("sf0.01", "sf0.001")
       .map(n => new java.io.File(new java.io.File(sfDir).getParentFile, n))
       .find(d => d.isDirectory && d.getPath != new java.io.File(sfDir).getPath)
       .getOrElse(new java.io.File("/nonexistent"))
-    // Warmup mode (round-18, r17 VERDICT #3a): the full-board warmup
-    // pass cost ~340 s of untimed wall on the round-17 driver host —
-    // enough by itself to push the budget-adaptive trial loop from 3
-    // trials down to 1. JIT/codegen warmup does not need all 206
-    // queries: it must touch (a) every native graft expression family
-    // (each has its own codegen path through janino) and (b) each
-    // heavyweight machinery class — parquet scan, shuffle exchange,
-    // window, broadcast join, object-hash/sort aggregate, streaming
-    // state store + replay — which the subset below covers. Default is
-    // the subset; SPARK_GRAFT_WARMUP=full (or legacy "1") restores the
-    // full-board pass, "0" disables. The artifact's "warmup" field
-    // records the mode ("subset" / "full" / false) so cross-round
-    // deltas stay attributable.
+    // Warmup mode (round 18): the full-board warm-up cost ~340 s of
+    // untimed wall on the round-17 driver host. JIT/codegen warm-up
+    // must touch (a) every native graft expression family (each has
+    // its own codegen path through janino) and (b) each heavyweight
+    // machinery class — parquet scan, shuffle exchange, window,
+    // broadcast join, object-hash/sort aggregate, streaming state
+    // store + replay — which the subset below covers. The artifact's
+    // "warmup" field records the mode ("subset" / "full" / false).
     val warmupMode = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "subset") match {
       case "0" => "off"
       case "1" | "full" => "full"
@@ -207,21 +136,12 @@ object Bench {
       "q_rollup_revenue",      // join+agg+window SQL machinery
       "q_pagerank",            // iterative localCheckpoint machinery
       "q_cusum_stream_parity") // streaming state store + replay
-    // Queries that start Structured Streaming work: run last within
-    // each sweep and tear down their JVM residue so batch timings
-    // never inherit it. All current streaming queries are also
-    // verification harnesses; the two sets are kept separate because
-    // the properties are independent (a future streaming ingest
-    // benchmark would be streaming but NOT verification).
-    // Derived, not hand-listed (round 13): a hand-written set drifted
-    // the moment StreamParityEntries grew (round 12 added three
-    // stream-parity queries that ran interleaved with batch queries,
-    // leaked state-store residue into subsequent batch timings, and
-    // counted in the engine-only headline). Derived by the
-    // `_stream_parity` NAMING CONVENTION over the whole declared
-    // surface — not from StreamParityEntries alone, because
-    // q_alarm_stream_parity lives in MetricsEntries and a future
-    // alarm-family parity row would re-create the drift.
+    // Queries that start Structured Streaming work, derived by the
+    // `_stream_parity` naming convention over the whole declared
+    // surface (round 13): a hand-written set drifted the moment
+    // StreamParityEntries grew, and q_alarm_stream_parity lives in
+    // MetricsEntries. All are also verification harnesses; the two
+    // sets stay separate because the properties are independent.
     val streamingQueries =
       SparkEntry.queries.keySet.filter(_.endsWith("_stream_parity"))
     // Verification harnesses measure the test harness (fixture
@@ -232,10 +152,6 @@ object Bench {
       .split(',').map(_.trim).filter(_.nonEmpty).toSet
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    // SPARK_GRAFT_ORDER_SEED permutes the batch-query order (streaming
-    // still last): a permuted run whose medians match the sorted run
-    // within noise proves the timings are order-independent — the
-    // check that caught round 7's streaming-residue coupling.
     val orderSeed = sys.env.get("SPARK_GRAFT_ORDER_SEED").map(_.toLong)
     val sorted = SparkEntry.queries.toSeq
       .filterNot { case (n, _) => skip.contains(n) }
@@ -277,22 +193,12 @@ object Bench {
     }
     val errMsgs = scala.collection.mutable.Map.empty[String, String]
     // per-sample (wall seconds, process-CPU-delta seconds, ok)
-    type SampleBuf = scala.collection.mutable.Map[String,
+    val samples = scala.collection.mutable.Map.empty[String,
       scala.collection.mutable.ArrayBuffer[(Double, Double, Boolean)]]
-    val samples: SampleBuf = scala.collection.mutable.Map.empty
-    // Confirmation-sweep samples live in a SEPARATE buffer (round-15
-    // ADVICE): solo calm-context samples mixed into the board buffer
-    // biased flagged queries' medians downward and could flip
-    // instability flags (new-minima effect widens median-min gaps) —
-    // the board statistics (value/unstable/tainted/spread) must
-    // describe the board run alone. Confirmation samples feed ONLY
-    // the regression verdict, where an extra sample can only lower a
-    // minimum toward the query's true uncontended cost.
-    val confirmSamples: SampleBuf = scala.collection.mutable.Map.empty
-    // One run record (JSON object) per committed sample, board and
-    // confirmation sweeps alike, tagged with its sweep index: the
-    // layer counters that explain a sample's wall time. RunMetrics is
-    // attached after the warm-up, so warm-up jobs are never counted.
+    // One run record (JSON object) per sample, tagged with its sweep
+    // index: the layer counters that explain a sample's wall time.
+    // RunMetrics is attached after the warm-up, so warm-up jobs are
+    // never counted.
     val runs = scala.collection.mutable.Map.empty[String,
       scala.collection.mutable.ArrayBuffer[String]]
     val metrics = RunMetrics.attach(spark)
@@ -304,254 +210,78 @@ object Bench {
     // Locale.ROOT: a comma-decimal default locale would emit invalid JSON.
     def f6(v: Double) = String.format(java.util.Locale.ROOT, "%.6f", Double.box(v))
     def f3(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    // The host-weather canary pair — see graft.Canary. spin =
-    // CPU availability; bw = effective memory bandwidth (round-14
-    // second phase: the spin canary is register-resident and blind to
-    // exactly the resource Spark contends on — same-day closing runs
-    // showed query minima drifting +11%/+46% while spin stayed flat,
-    // monotone in query size: a bandwidth signature, not a CPU one).
-    def canarySpin(): Double = Canary.spin(cpus)
-    def canaryBw(): Double = Canary.bw(cpus)
-    // (sweep index, position within sweep, spin secs, bandwidth secs)
-    // — full series to BENCH_DETAIL.json so a taint verdict carries
-    // its own evidence.
-    val canarySeries =
-      scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Double, Double)]
     var sweepIdx = 0
-    // Canary-gated sweeps (round 15, the VERDICT's composition of the
-    // round-14 instrument): every sweep is preceded by a bandwidth
-    // probe, and the sweep DEFERS (sleep-and-retry, bounded attempts)
-    // while the probe reads more than GATE_DRIFT x the session's best
-    // reading — i.e. the run WAITS OUT measured contention windows
-    // instead of timing through them and repairing afterward. The gate
-    // can only skip bad weather, never manufacture good numbers: a
-    // probe is ~1 s of untimed wall, and when no calm window appears
-    // within the attempt budget the sweep proceeds anyway with the
-    // forced decision recorded. Every gate decision lands in the
-    // artifact ("gate_log": [context, attempt, bw secs, verdict]), so
-    // a tainted:false claim carries the weather record that earned it.
-    val gateEnabled = sys.env.getOrElse("SPARK_GRAFT_GATE", "1") != "0"
-    val gateDrift = sys.env.getOrElse("SPARK_GRAFT_GATE_DRIFT", "1.5").toDouble
-    val gateTries = math.max(1, sys.env.getOrElse("SPARK_GRAFT_GATE_TRIES", "5").toInt)
-    val gateSleepMs = math.max(0L,
-      sys.env.getOrElse("SPARK_GRAFT_GATE_SLEEP_MS", "8000").toLong)
-    // Sliding-window gate reference (round 17): the reference used to
-    // be the session's ALL-TIME best probe, which is right for a fast
-    // host with occasional contention patches but pathological on a
-    // host with PERSISTENT bandwidth jitter — one lucky 0.033 s probe
-    // pinned the reference while typical calm probes read 0.06 s, so
-    // most gate decisions saw ">1.5x best = dirty" and the run burned
-    // hundreds of seconds in defer-sleeps and window redos (measured
-    // this round: 25 defers + 10 redos, ~370 s/trial of gate overhead,
-    // canary drift 14x on an IDLE box). The reference is now the MIN
-    // OF THE LAST 16 PROBES: a transient patch still reads dirty
-    // against the recent calm level, but a persistently-jittery host
-    // converges to its own regime instead of chasing an unrepeatable
-    // best. A second bound caps TOTAL gate sleep at
-    // SPARK_GRAFT_GATE_WALL seconds (default 8% of the wall budget;
-    // counted across defers), after which decisions go straight to
-    // "forced" — the gate can skip weather, never sink the artifact.
-    val gateWallCap =
-      sys.env.get("SPARK_GRAFT_GATE_WALL").map(_.toDouble)
-        .getOrElse(if (wallBudget > 0) wallBudget * 0.08 else 300.0)
-    var gateSleptSec = 0.0
-    val recentBw = scala.collection.mutable.Queue.empty[Double]
-    def pushBw(bw: Double): Unit = {
-      recentBw.enqueue(bw)
-      while (recentBw.size > 16) recentBw.dequeue()
+    // Time ONE query: its sample and its run record. The timed window
+    // is the QUERY alone — cache-clear and streaming teardown are
+    // harness hygiene between timings, and charging them to the query
+    // would re-create the measurement distortion the teardown exists
+    // to prevent.
+    def timeOne(name: String,
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+        : ((Double, Double, Boolean), String) = {
+      // a timing starts only on a streaming-quiet JVM (parent
+      // session AND the child-session replay registry)
+      require(leakedStreams().isEmpty,
+        s"streaming residue before $name: " +
+          leakedStreams().map(_.name).mkString(","))
+      metrics.reset()
+      var df: org.apache.spark.sql.DataFrame = null
+      var built = 0L
+      val cpu0 = processCpuSec()
+      val t0 = System.nanoTime()
+      // toRdd.count(), NOT Dataset.count() (round 10, format 4): see
+      // the scaladoc. toRdd executes the query's own physical plan
+      // with every output column materialized — what a consumer of
+      // the result actually pays.
+      val ok = try {
+        df = fn(spark, sfDir)
+        built = System.nanoTime()
+        df.queryExecution.toRdd.count(); true }
+        catch { case scala.util.control.NonFatal(e) =>
+          // first failure message per query goes into the artifact —
+          // a silent -1 is undiagnosable from the driver's capture.
+          // Strip EVERY control character plus quote/backslash: one
+          // raw control byte (U+0000-U+001F) in the message would
+          // invalidate the whole detail JSON, losing the artifact,
+          // not just the row.
+          errMsgs.getOrElseUpdate(name,
+            (e.getMessage match {
+              case null => e.getClass.getName
+              case m => e.getClass.getName + ": " + m
+            }).replaceAll("[\\u0000-\\u001f\"\\\\]", " ").take(300))
+          false }
+      val dt = (System.nanoTime() - t0) / 1e9
+      val dcpu = processCpuSec() - cpu0
+      // Run record, read after the window closed. Jobs that started
+      // by `built` (mapped onto the jobs' wall clock) ran during
+      // construction: the eager checkpoint / collect rounds of the
+      // iterative operators. Catalyst phase times are read only now:
+      // before execution the tracker holds the analysis phase alone.
+      if (built == 0L) built = System.nanoTime()
+      val builtMs = System.currentTimeMillis() - (System.nanoTime() - built) / 1000000L
+      val (constructed, all) = metrics.read(builtMs)
+      val constructS = math.min(dt, (built - t0) / 1e9)
+      val phases = Option(df).fold(Seq.empty[String])(_.queryExecution.tracker
+        .phases.toSeq.sortBy(_._1).map { case (phase, p) =>
+          "\"" + phase + "\":" + (p.endTimeMs - p.startTimeMs) })
+      val run = s"""{"sweep":$sweepIdx,"construct_s":${f6(constructS)},""" +
+        s""""execute_s":${f6(dt - constructS)},"construct_jobs":${constructed.jobs},""" +
+        all.jsonFields + phases.mkString(",\"phase_ms\":{", ",", "}}")
+      spark.catalog.clearCache()
+      if (streamingQueries.contains(name)) drainStreamingResidue()
+      ((dt, dcpu, ok), run)
     }
-    def bwRef: Double =
-      if (recentBw.isEmpty) Double.MaxValue else recentBw.min
-    def gateSleep(): Unit = {
-      Thread.sleep(gateSleepMs)
-      gateSleptSec += gateSleepMs / 1000.0
-    }
-    def gateCanIntervene: Boolean = gateSleptSec < gateWallCap
-    var bestBw = Double.MaxValue
-    val gateLog =
-      scala.collection.mutable.ArrayBuffer.empty[(String, Int, Double, String)]
-    var gateDeferred = 0
-    var gateForced = 0
-    // Mid-sweep weather gate (round 16, the round-15 verdict's last
-    // instrument gap): the start gate defers sweep starts, but both
-    // round-15 closing runs were tainted by bandwidth patches landing
-    // INSIDE sweeps — measured by the per-40-query canary and ignored
-    // by the gate. Now every 40-query window is bracketed by probes:
-    // a dirty START probe defers the window (sleep + re-probe, cheap),
-    // a dirty END probe DISCARDS the window's just-taken samples and
-    // re-runs them after the pause (bounded by SPARK_GRAFT_MID_TRIES
-    // re-runs — a re-run costs a window's wall, so the budget is
-    // small). Exhausted budgets commit anyway with "forced" logged —
-    // the gate can skip weather, never manufacture numbers. Every
-    // decision lands in gate_log as ("win-<context>-<idx>", attempt,
-    // bw, verdict) with verdict in defer/redo/ok/forced.
-    val midTries = math.max(0,
-      sys.env.getOrElse("SPARK_GRAFT_MID_TRIES", "2").toInt)
-    var gateRedo = 0
-    // Seed the session-best reference from THREE spaced probes before
-    // the first gate decision: a single seed probe taken inside a
-    // dirty window would set the reference high and wave every
-    // subsequent dirty sweep through (the round-15 sorted closing run
-    // seeded at 0.233 s vs the session's true 0.035 floor — trial-1
-    // passed a gate it should have deferred).
-    def gateSeed(): Unit = if (gateEnabled && bestBw == Double.MaxValue) {
-      (1 to 3).foreach { i =>
-        val bw = canaryBw()
-        bestBw = math.min(bestBw, bw)
-        pushBw(bw)
-        gateLog += (("seed", i, bw, "seed"))
-        if (i < 3) Thread.sleep(math.min(gateSleepMs, 2000L))
-      }
-    }
-    def gateSweep(context: String): Unit = if (gateEnabled) {
-      gateSeed()
-      var attempt = 1
-      var go = false
-      while (!go) {
-        val bw = canaryBw()
-        bestBw = math.min(bestBw, bw)
-        val calm = bw <= bwRef * gateDrift
-        pushBw(bw)
-        val last = attempt >= gateTries || !gateCanIntervene
-        val verdict =
-          if (calm) "ok"
-          else if (last) { gateForced += 1; "forced" }
-          else { gateDeferred += 1; "defer" }
-        gateLog += ((context, attempt, bw, verdict))
-        go = calm || last
-        if (!go) { gateSleep(); attempt += 1 }
-      }
-    }
-    // One timed pass over `qs`; appends one sample per query. The
-    // timed window is the QUERY alone — cache-clear and streaming
-    // teardown are harness hygiene between timings, and charging them
-    // to the query would re-create the measurement distortion the
-    // teardown exists to prevent.
+    // One timed pass over `qs`; appends one sample and one run record
+    // per query.
     def sweep(qs: Seq[(String, (SparkSession, String) =>
-        org.apache.spark.sql.DataFrame)],
-        into: SampleBuf = samples, context: String = ""): Unit = {
+        org.apache.spark.sql.DataFrame)]): Unit = {
       sweepIdx += 1
-      // time ONE query; returns the sample and its run record for the
-      // caller to commit
-      def timeOne(name: String,
-          fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-          : ((Double, Double, Boolean), String) = {
-        // a timing starts only on a streaming-quiet JVM (parent
-        // session AND the child-session replay registry)
-        require(leakedStreams().isEmpty,
-          s"streaming residue before $name: " +
-            leakedStreams().map(_.name).mkString(","))
-        metrics.reset()
-        var df: org.apache.spark.sql.DataFrame = null
-        var built = 0L
-        val cpu0 = processCpuSec()
-        val t0 = System.nanoTime()
-        // toRdd.count(), NOT Dataset.count() (round 10, format 4):
-        // count() re-optimizes a new Aggregate plan and Catalyst then
-        // deletes whatever the count doesn't need — final sorts, pure
-        // compute projections (q_normalize, q_url_features, ... timed
-        // as bare scans through format 3), and entire left-outer joins
-        // with uniquely-keyed aggregated right sides (q_strip_paragraphs
-        // / q_dedup_substring timed as scans). toRdd executes the
-        // query's own physical plan with every output column
-        // materialized — what a consumer of the result actually pays.
-        val ok = try {
-          df = fn(spark, sfDir)
-          built = System.nanoTime()
-          df.queryExecution.toRdd.count(); true }
-          catch { case scala.util.control.NonFatal(e) =>
-            // first failure message per query goes into the artifact —
-            // a silent -1 is undiagnosable from the driver's capture.
-            // Strip EVERY control character plus quote/backslash: one
-            // raw control byte (U+0000-U+001F) in the message would
-            // invalidate the whole detail JSON, losing the artifact,
-            // not just the row.
-            errMsgs.getOrElseUpdate(name,
-              (e.getMessage match {
-                case null => e.getClass.getName
-                case m => e.getClass.getName + ": " + m
-              }).replaceAll("[\\u0000-\\u001f\"\\\\]", " ").take(300))
-            false }
-        val dt = (System.nanoTime() - t0) / 1e9
-        val dcpu = processCpuSec() - cpu0
-        // Run record, read after the window closed. Jobs that started
-        // by `built` (mapped onto the jobs' wall clock) ran during
-        // construction: the eager checkpoint / collect rounds of the
-        // iterative operators. Catalyst phase times are read only now:
-        // before execution the tracker holds the analysis phase alone.
-        if (built == 0L) built = System.nanoTime()
-        val builtMs = System.currentTimeMillis() - (System.nanoTime() - built) / 1000000L
-        val (constructed, all) = metrics.read(builtMs)
-        val constructS = math.min(dt, (built - t0) / 1e9)
-        val phases = Option(df).fold(Seq.empty[String])(_.queryExecution.tracker
-          .phases.toSeq.sortBy(_._1).map { case (phase, p) =>
-            "\"" + phase + "\":" + (p.endTimeMs - p.startTimeMs) })
-        val run = s"""{"sweep":$sweepIdx,"construct_s":${f6(constructS)},""" +
-          s""""execute_s":${f6(dt - constructS)},"construct_jobs":${constructed.jobs},""" +
-          all.jsonFields + phases.mkString(",\"phase_ms\":{", ",", "}}")
-        spark.catalog.clearCache()
-        if (streamingQueries.contains(name)) drainStreamingResidue()
-        ((dt, dcpu, ok), run)
-      }
-      // 40-query windows, each bracketed by canary probes (the probe
-      // cadence the old per-40 reading had, plus one closing probe per
-      // sweep). The end probe doubles as the next window's start probe
-      // ("carried") so calm sweeps pay the same probe count as before.
-      var carried: Option[Double] = None
-      qs.zipWithIndex.grouped(40).zipWithIndex.foreach { case (win, wi) =>
-        val startPos = win.head._2
-        var defers = 0
-        var redos = 0
-        var committed = false
-        while (!committed) {
-          val attempt = defers + redos + 1
-          val ctx = s"win-$context-$wi"
-          val bwStart = carried.getOrElse {
-            val b = canaryBw(); bestBw = math.min(bestBw, b); b
-          }
-          carried = None
-          canarySeries += ((sweepIdx, startPos, canarySpin(), bwStart))
-          val startDirty = gateEnabled && bwStart > bwRef * gateDrift
-          pushBw(bwStart)
-          if (startDirty && defers < gateTries - 1 && gateCanIntervene) {
-            // dirty start: defer the whole window before spending wall
-            gateLog += ((ctx, attempt, bwStart, "defer"))
-            gateDeferred += 1
-            defers += 1
-            gateSleep()
-          } else {
-            val buf = win.map { case ((name, fn), _) =>
-              name -> timeOne(name, fn) }
-            val bwEnd = canaryBw()
-            bestBw = math.min(bestBw, bwEnd)
-            canarySeries += ((sweepIdx, startPos + win.size,
-              canarySpin(), bwEnd))
-            val endDirty = gateEnabled && bwEnd > bwRef * gateDrift
-            pushBw(bwEnd)
-            if (endDirty && redos < midTries && gateCanIntervene) {
-              // a weather patch landed inside the window: the samples
-              // just taken are contaminated — discard and re-run them
-              // after the pause (the round-15 mid-sweep taint, acted on)
-              gateLog += ((ctx, attempt, bwEnd, "redo"))
-              gateRedo += 1
-              redos += 1
-              gateSleep()
-            } else {
-              val forced = endDirty
-              if (forced) { gateLog += ((ctx, attempt, bwEnd, "forced"))
-                gateForced += 1 }
-              else if (defers + redos > 0)
-                gateLog += ((ctx, attempt, bwEnd, "ok"))
-              buf.foreach { case (name, (sample, run)) =>
-                into.getOrElseUpdate(name,
-                  scala.collection.mutable.ArrayBuffer.empty) += sample
-                runs.getOrElseUpdate(name,
-                  scala.collection.mutable.ArrayBuffer.empty) += run }
-              carried = Some(bwEnd)
-              committed = true
-            }
-          }
-        }
+      qs.foreach { case (name, fn) =>
+        val (sample, run) = timeOne(name, fn)
+        samples.getOrElseUpdate(name,
+          scala.collection.mutable.ArrayBuffer.empty) += sample
+        runs.getOrElseUpdate(name,
+          scala.collection.mutable.ArrayBuffer.empty) += run
       }
     }
     // Interleaved trial rounds: full sweep once per trial, so a load
@@ -565,38 +295,27 @@ object Bench {
     // wall time for no additional bound.
     val trialWalls = scala.collection.mutable.ArrayBuffer.empty[Double]
     var wallProjected = 0.0
-    // Budget-ADAPTIVE trial count (round 17, the optimization round's
-    // harness fix): round 16's board outgrew the driver's wall timeout
-    // and shipped NO artifact (rc=124, parsed:null); round 17's
-    // instrument DETECTED the overrun after trial 1 but still ran to
-    // the kill. On a slow or contended host the fixed 5-trial plan is
-    // the wrong trade — a complete artifact from fewer trials beats a
-    // timeout with none — so the loop now stops sweeping when the
-    // NEXT trial (at the last trial's measured cost, +15% drift
-    // allowance) would push elapsed past 90% of the budget. The
-    // per-query numbers stay medians over however many interleaved
-    // trials ran; "trials" reports the ACTUAL count, with the plan and
-    // the adaptation visible in "wall" ({planned, adapted}). Medians
-    // from ≥3 samples keep the stall filter; 1-2 samples degrade
-    // gracefully (median = min/mean). SPARK_GRAFT_WALL_BUDGET=0
-    // disables adaptation (unbounded budget).
+    // Budget-adaptive trial count (round 17): a complete artifact
+    // from fewer trials beats a timeout with none, so the loop stops
+    // when the NEXT trial (at the last trial's measured cost, +15%
+    // drift allowance) would push elapsed past 90% of the budget.
+    // Medians from ≥3 samples keep the stall filter; 1-2 samples
+    // degrade gracefully (median = min/mean).
     var trialsRun = 0
     var budgetAdapted = false
     var continueTrials = true
     while (trialsRun < trials && continueTrials) {
       val t = trialsRun + 1
-      gateSweep(s"trial-$t")
       val t0 = elapsedSec
-      sweep(names, context = s"trial-$t"); System.gc()
+      sweep(names); System.gc()
       trialWalls += elapsedSec - t0
       trialsRun += 1
       if (t == 1) {
         // Pre-flight budget check: project the full-run wall from the
         // measured trial-1 sweep (remaining trials at trial-1 cost,
-        // +25% allowance for repair/confirmation sweeps and gating —
-        // the historical overhead band of clean runs). Printed to
-        // stderr IMMEDIATELY so a doomed run says so in its first
-        // minutes, and again in the artifact for the round record.
+        // +25% allowance for repair sweeps). Printed to stderr
+        // IMMEDIATELY so a doomed run says so in its first minutes,
+        // and again in the artifact for the round record.
         wallProjected = elapsedSec + (trials - 1) * trialWalls.head * 1.25
         val verdict = if (wallProjected > wallBudget) "OVER" else "OK"
         System.err.println(f"BENCH WALL BUDGET: trial1=${trialWalls.head}%.1fs " +
@@ -651,14 +370,44 @@ object Bench {
     def isUnstable(r: Timing) = r.ok && r.min > 0 &&
       (r.median - r.min) / r.min > 0.2 && r.median - r.min > 0.1
     val taintThreshold = 8
-    // Per-query regression ratios vs the committed format-4 baseline
-    // (BENCH_BASELINE_F4.json: clean-run per-query floors at the same
-    // sf — see tools/make_baseline.py). Ratio = this run's MIN over
-    // the baseline floor: floor-vs-floor, so host stalls (which
-    // inflate medians, not minima) can't fake a regression. >1.5x is
-    // flagged; all pre-format-4 numbers are void for this purpose
-    // (they timed count()-pruned plans). Loaded before the repair /
-    // confirmation loops because the confirmation pass keys off it.
+    var results = aggregate()
+    // Auto-repair: extra sweeps over ONLY the currently-unstable
+    // queries (up to SPARK_GRAFT_RERUNS, default 2), re-aggregating
+    // after each. An unstable query ends up with 6-7 samples at the
+    // default 5 base trials, whose median discards up to three
+    // stall-inflated ones — repair fires on ANY instability, not only
+    // past the taint threshold, because the passes are cheap (unstable
+    // queries only) and a 7-unstable run that goes unrepaired reports
+    // inflated medians while still claiming to be clean. Instability
+    // that survives every pass is either genuine or a sustained
+    // outage; the taint flag reports it honestly. Repairs stop at 75%
+    // of the wall budget: the artifact itself is the deliverable.
+    val maxRepairs = math.max(0, sys.env.getOrElse("SPARK_GRAFT_RERUNS", "2").toInt)
+    var repairs = 0
+    while (repairs < maxRepairs && results.exists(isUnstable) &&
+        (wallBudget <= 0 || elapsedSec < wallBudget * 0.75)) {
+      val unstableNames = results.filter(isUnstable).map(_.name).toSet
+      sweep(names.filter { case (n, _) => unstableNames.contains(n) })
+      results = aggregate()
+      repairs += 1
+    }
+    // A query's minimum over its ok samples only (round-15 ADVICE): a
+    // query that fails any sweep records a fast-exception wall, and
+    // spread/floor are floor material (make_baseline.py min-merges
+    // them) — one unguarded failed sample could publish a fake
+    // sub-floor minimum into the committed baseline.
+    def bestMin(name: String): Double =
+      samples.get(name).map(_.filter(_._3).map(_._1)).filter(_.nonEmpty)
+        .fold(Double.NaN)(_.min)
+    // Per-query ratios vs the committed format-4 baseline
+    // (BENCH_BASELINE_F4.json: per-query floors, see
+    // tools/make_baseline.py). Ratio = this run's minimum over the
+    // baseline floor: floor-vs-floor, so host stalls (which inflate
+    // medians, not minima) can't fake a regression. A floor is only a
+    // reference at the scale factor AND core count it was taken at —
+    // 32-core floors flagged every one-query run at 4 cores (4.6-14.4x)
+    // — so a file whose "sf" or "cpus" differs from this run's, or
+    // that lacks "cpus", yields no ratios (baseline_n 0).
     val baseline: Map[String, Double] = {
       val f = new java.io.File("BENCH_BASELINE_F4.json")
       if (!f.isFile) Map.empty
@@ -667,103 +416,19 @@ object Bench {
         val sfOk = """"sf"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(txt)
           .forall(m => new java.io.File(m.group(1)).getName ==
             new java.io.File(sfDir).getName)
-        if (!sfOk) Map.empty
+        val cpusOk = """"cpus"\s*:\s*([0-9]+)""".r.findFirstMatchIn(txt)
+          .exists(_.group(1).toInt == cpus)
+        if (!sfOk || !cpusOk) Map.empty
         else """"(q_[A-Za-z0-9_]+|bm_[A-Za-z0-9_]+)"\s*:\s*([0-9.eE+-]+)""".r
           .findAllMatchIn(txt)
           .map(m => m.group(1) -> m.group(2).toDouble)
           .filter(_._2 > 0).toMap
       } catch { case scala.util.control.NonFatal(_) => Map.empty }
     }
-    var results = aggregate()
-    // Auto-repair: extra sweeps over ONLY the currently-unstable
-    // queries (up to SPARK_GRAFT_RERUNS, default 2), re-aggregating
-    // after each. An unstable query ends up with 6-7 samples at the
-    // default 5 base trials, whose median discards up to three
-    // stall-inflated ones — repair fires on
-    // ANY instability, not only past the taint threshold, because the
-    // passes are cheap (unstable queries only) and a 7-unstable run
-    // that goes unrepaired reports inflated medians while still
-    // claiming to be clean. Instability that survives every pass is
-    // either genuine or a sustained outage; the taint flag reports it
-    // honestly. "reran" records the pass COUNT (0 = clean first try).
-    val maxRepairs = math.max(0, sys.env.getOrElse("SPARK_GRAFT_RERUNS", "2").toInt)
-    var repairs = 0
-    // repair/confirmation sweeps respect the wall budget too (they
-    // are quality refinements; the artifact itself is the deliverable)
-    def budgetRoom(frac: Double): Boolean =
-      wallBudget <= 0 || elapsedSec < wallBudget * frac
-    while (repairs < maxRepairs && results.exists(isUnstable) &&
-        budgetRoom(0.75)) {
-      val unstableNames = results.filter(isUnstable).map(_.name).toSet
-      gateSweep(s"repair-${repairs + 1}")
-      sweep(names.filter { case (n, _) => unstableNames.contains(n) },
-        context = s"repair-${repairs + 1}")
-      results = aggregate()
-      repairs += 1
-    }
-    val needRerun = repairs
-    // Regression confirmation (round 14): a query whose best trial sits
-    // >1.5x over its committed floor is either a real engine regression
-    // or a query that never saw a calm window during the board sweep.
-    // The round-14 isolation forensics showed the entire flagged set
-    // reaching 0.88-1.36x floor in a quiet JVM while full-board runs
-    // flagged them at 1.4-1.8x — regime contention (the bandwidth
-    // canary measured 6x effective-bandwidth swings mid-run), not the
-    // engine. So each flagged query now gets up to SPARK_GRAFT_CONFIRM
-    // (default 5) extra solo sweeps at the END of the run — the calmest
-    // context this process can offer (board idle, cache cleared,
-    // System.gc() between passes) — and the artifact reports BOTH
-    // lists: "regressions_raw" (pre-confirmation) and "regressions"
-    // (what survived). A real regression reproduces its inflated
-    // minimum under solo trials; a contention artifact does not. Extra
-    // samples can only LOWER a minimum toward the query's true
-    // uncontended cost — exactly the quantity the floor-vs-floor
-    // criterion is defined on — so this sharpens the estimator rather
-    // than biasing it.
-    // The regression minimum folds in confirmation samples (they run
-    // solo, the calmest context, and a minimum can only improve) while
-    // the board Timings stay confirmation-free — see confirmSamples.
-    def bestMin(name: String): Double = {
-      // ok samples only on BOTH sides (round-15 ADVICE closed the board
-      // half): a query that fails any sweep records a fast-exception
-      // wall, and spread/floor are floor material (make_baseline.py
-      // min-merges them) — one unguarded failed sample could publish a
-      // fake sub-floor minimum into the committed baseline.
-      val board = samples.get(name)
-        .map(_.filter(_._3).map(_._1)).filter(_.nonEmpty).map(_.min)
-      val solo = confirmSamples.get(name)
-        .map(_.filter(_._3).map(_._1)).filter(_.nonEmpty).map(_.min)
-      val mins = board.toSeq ++ solo.toSeq
-      if (mins.isEmpty) Double.NaN else mins.min
-    }
-    def flaggedOf(rs: Seq[Timing]): Set[String] = rs.collect {
-      case r if r.ok && r.min > 0 &&
-        baseline.get(r.name).exists(b => bestMin(r.name) / b > 1.5) => r.name
-    }.toSet
-    val regressionsRaw = results.flatMap(r => baseline.get(r.name).collect {
-      case b if r.ok && r.min > 0 && r.min / b > 1.5 => r.name -> r.min / b })
-    val maxConfirm = math.max(0, sys.env.getOrElse("SPARK_GRAFT_CONFIRM", "5").toInt)
-    var confirms = 0
-    while (confirms < maxConfirm && flaggedOf(results).nonEmpty &&
-        budgetRoom(0.8)) {
-      val flagged = flaggedOf(results)
-      System.gc()
-      gateSweep(s"confirm-${confirms + 1}")
-      sweep(names.filter { case (n, _) => flagged.contains(n) },
-        into = confirmSamples, context = s"confirm-${confirms + 1}")
-      confirms += 1
-    }
     // failed queries report -1 (never a fake wall time) and are listed
     // in "errors" so a broken engine can't benchmark as a fast one.
-    // spread lo = bestMin (board + confirmation minima): the spread
-    // minimum is FLOOR material (make_baseline.py reads it), and a
-    // solo confirmation sample is the best uncontended-cost estimate
-    // this process produces; max stays board-context. Medians /
-    // instability / taint never see confirmation samples.
-    // ok queries only: spread minima are floor material, and a !ok
-    // query's walls are exception times, not engine cost (round-15
-    // ADVICE — the filter in bestMin covers mixed ok/!ok samples, this
-    // one covers all-failed queries whose bestMin is NaN).
+    // Spread [bestMin, max] covers ok queries only: spread minima are
+    // floor material, and an all-failed query's bestMin is NaN.
     val spread = results.filter(_.ok).map(r =>
         "\"" + r.name + "\":[" + f6(bestMin(r.name)) + "," + f6(r.max) + "]")
       .mkString("{", ",", "}")
@@ -772,27 +437,13 @@ object Bench {
     val errors = results.collect { case r if !r.ok =>
       "\"" + r.name + "\":\"" + errMsgs.getOrElse(r.name, "unknown") + "\""
     }.mkString("{", ",", "}")
-    // Canary summary: on a quiet host the series is flat at its min;
-    // max/min >1.5 is direct evidence of a host stall window during
-    // this run (and its sweep indices say WHEN).
-    val canaryTimes = canarySeries.map(_._3).toSeq
-    val canaryBwTimes = canarySeries.map(_._4).toSeq
-    def canarySummary(ts: Seq[Double]) =
-      if (ts.isEmpty) "null"
-      else s"""{"n":${ts.size},"min":${f3(ts.min)},"median":${f3(medianOf(ts))},"max":${f3(ts.max)},"drift":${f3(ts.max / ts.min)}}"""
-    val canaryJson = canarySummary(canaryTimes)
-    val canaryBwJson = canarySummary(canaryBwTimes)
-    val canarySeriesJson = canarySeries
-      .map { case (sw, pos, s, b) => s"[$sw,$pos,${f3(s)},${f3(b)}]" }
-      .mkString("[", ",", "]")
     val stallExcluded = results.map(_.stallDropped).sum
     val (verif, engine) = results.partition(r => verificationQueries(r.name))
     val total = engine.collect { case r if r.ok => r.median }.sum
-    // "floor" = sum of per-query MINIMA (confirmation minima folded
-    // in, like spread): the engine's uncontended cost. On a quiet box
-    // floor ≈ value; under host stalls value inflates while floor
-    // stays put, so the pair separates engine regressions (both move)
-    // from environment noise (only value moves).
+    // "floor" = sum of per-query MINIMA: the engine's uncontended
+    // cost. On a quiet box floor ≈ value; under host stalls value
+    // inflates while floor stays put, so the pair separates engine
+    // regressions (both move) from environment noise (only value moves).
     val floor = engine.collect { case r if r.ok => bestMin(r.name) }.sum
     val verifTotal = verif.collect { case r if r.ok => r.median }.sum
     val unstableCount = results.count(isUnstable)
@@ -814,42 +465,12 @@ object Bench {
         .mkString("{", ",", "}")
     val ratios = results.flatMap(r => baseline.get(r.name).collect {
       case b if r.ok && r.min > 0 => r.name -> bestMin(r.name) / b })
-    val regressions = ratios.filter(_._2 > 1.5)
-    val ratioJson = ratios
-      .map { case (n, v) => "\"" + n + "\":" + f3(v) }.mkString("{", ",", "}")
-    val regJson = regressions.sortBy(-_._2)
-      .map { case (n, v) => "\"" + n + "\":" + f3(v) }.mkString("{", ",", "}")
-    val regRawJson = regressionsRaw.sortBy(-_._2)
-      .map { case (n, v) => "\"" + n + "\":" + f3(v) }.mkString("{", ",", "}")
-    // the final stdout line must survive the driver's ~2000-char tail
-    // capture: top-8 worst only there (full list in BENCH_DETAIL.json)
-    val regJsonTop = regressions.sortBy(-_._2).take(8)
-      .map { case (n, v) => "\"" + n + "\":" + f3(v) }.mkString("{", ",", "}")
+    val regressions = ratios.filter(_._2 > 1.5).sortBy(-_._2)
+    def ratioMap(rs: Seq[(String, Double)]) =
+      rs.map { case (n, v) => "\"" + n + "\":" + f3(v) }.mkString("{", ",", "}")
     if (regressions.nonEmpty) System.err.println(
       s"BENCH REGRESSIONS vs BENCH_BASELINE_F4 (min > 1.5x baseline floor): " +
-        regressions.sortBy(-_._2).map { case (n, v) => f"$n=$v%.2fx" }
-          .mkString(", "))
-    // confirmation-sample minima per confirmed query (provenance for
-    // floor re-basing) + the gate's decision log
-    val confirmMinJson = confirmSamples.toSeq.sortBy(_._1)
-      .collect { case (n, ss) if ss.exists(_._3) =>
-        // ok samples only — same hazard bestMin guards: a failed solo
-        // sweep's fast-exception wall would publish a fake sub-floor
-        // minimum in the very field floor re-basing reads
-        "\"" + n + "\":" + f6(ss.filter(_._3).map(_._1).min) }
-      .mkString("{", ",", "}")
-    val gateLogJson = gateLog
-      .map { case (ctx, att, bw, v) => s"""["$ctx",$att,${f3(bw)},"$v"]""" }
-      .mkString("[", ",", "]")
-    // Confirmation-sweep failures were invisible (round-15 ADVICE):
-    // "errors" lists board !ok results and aggregate() never re-runs
-    // after confirms, so a query erroring on every solo sweep shipped
-    // an artifact with no failure record. List every query with at
-    // least one failed solo sample, with its first captured message.
-    val confirmErrJson = confirmSamples.toSeq.sortBy(_._1)
-      .collect { case (n, ss) if ss.exists(!_._3) =>
-        "\"" + n + "\":\"" + errMsgs.getOrElse(n, "unknown") + "\"" }
-      .mkString("{", ",", "}")
+        regressions.map { case (n, v) => f"$n=$v%.2fx" }.mkString(", "))
     // Wall instrument summary: elapsed so far (the artifact writes
     // before spark.stop, so this is ~the full run), per-trial sweep
     // walls, the trial-1 projection, and the budget verdict.
@@ -858,7 +479,7 @@ object Bench {
     val runsJson = runs.toSeq.sortBy(_._1)
       .map { case (n, rs) => "\"" + n + "\":" + rs.mkString("[", ",", "]") }
       .mkString("{", ",", "}")
-    val detail = s"""{"format":4,"metric":"total","value":$total,"floor":$floor,"unit":"sec","wall":$wallJson,"warmup":$warmupJson,"trials":$trialsRun,"reran":$needRerun,"tainted":$tainted,"queries":${qmap(engine, f6)},"verification":${qmap(verif, f6)},"verification_total":$verifTotal,"spread":$spread,"unstable":$unstable,"errors":$errors,"baseline_n":${ratios.size},"baseline_ratios":$ratioJson,"regressions":$regJson,"regressions_raw":$regRawJson,"confirm_sweeps":$confirms,"confirm_min":$confirmMinJson,"confirm_errors":$confirmErrJson,"canary":$canaryJson,"canary_bw":$canaryBwJson,"canary_series":$canarySeriesJson,"stall_excluded":$stallExcluded,"gate":{"enabled":$gateEnabled,"drift":$gateDrift,"deferred":$gateDeferred,"redo":$gateRedo,"forced":$gateForced,"slept_sec":${f3(gateSleptSec)},"sleep_cap":${f3(gateWallCap)}},"gate_log":$gateLogJson,"runs":$runsJson,"sf":"$sfDir"}"""
+    val detail = s"""{"format":4,"metric":"total","value":$total,"floor":$floor,"unit":"sec","wall":$wallJson,"warmup":$warmupJson,"trials":$trialsRun,"reran":$repairs,"tainted":$tainted,"queries":${qmap(engine, f6)},"verification":${qmap(verif, f6)},"verification_total":$verifTotal,"spread":$spread,"unstable":$unstable,"errors":$errors,"baseline_n":${ratios.size},"baseline_ratios":${ratioMap(ratios)},"regressions":${ratioMap(regressions)},"stall_excluded":$stallExcluded,"runs":$runsJson,"cpus":$cpus,"sf":"$sfDir"}"""
     // Two detail files per run (round-15 lesson, encoded): the
     // canonical BENCH_DETAIL.json (what make_baseline.py and the
     // round tooling read — latest run wins) PLUS a mode-keyed copy
@@ -878,14 +499,15 @@ object Bench {
     // "warmup" records whether the untimed warm-up pass ran, so
     // cross-round deltas stay attributable (warm vs cold JIT numbers
     // are not comparable).
-    println(s"""{"format":4,"metric":"total","value":${f3(total)},"floor":${f3(floor)},"unit":"sec","warmup":$warmupJson,"trials":$trialsRun,"reran":$needRerun,"tainted":$tainted,"queries":${qmap(engine, f3)},"verification":${qmap(verif, f3)},"verification_total":${f3(verifTotal)},"sf":"$sfDir"}""")
+    println(s"""{"format":4,"metric":"total","value":${f3(total)},"floor":${f3(floor)},"unit":"sec","warmup":$warmupJson,"trials":$trialsRun,"reran":$repairs,"tainted":$tainted,"queries":${qmap(engine, f3)},"verification":${qmap(verif, f3)},"verification_total":${f3(verifTotal)},"sf":"$sfDir"}""")
     // The driver's artifact keeps only the last ~2000 characters of
     // stdout; round 9's compact line outgrew that window and the
     // capture clipped value/floor off the FRONT (BENCH_r09.json starts
     // mid-line). A final totals-only line — printed last, so the tail
     // capture always retains it whole — keeps the official artifact
     // self-contained however many queries the compact line carries.
-    println(s"""{"format":4,"metric":"total","value":${f3(total)},"floor":${f3(floor)},"unit":"sec","wall":$wallJson,"trials":$trialsRun,"reran":$needRerun,"tainted":$tainted,"unstable_n":$unstableCount,"nqueries":${engine.size},"baseline_n":${ratios.size},"regressions_n":${regressions.size},"regressions_raw_n":${regressionsRaw.size},"confirm_sweeps":$confirms,"regressions_top":$regJsonTop,"canary":$canaryJson,"canary_bw":$canaryBwJson,"stall_excluded":$stallExcluded,"gate":{"enabled":$gateEnabled,"deferred":$gateDeferred,"redo":$gateRedo,"forced":$gateForced,"slept_sec":${f3(gateSleptSec)}},"sf":"$sfDir"}""")
+    // Top-8 regressions only here (full list in BENCH_DETAIL.json).
+    println(s"""{"format":4,"metric":"total","value":${f3(total)},"floor":${f3(floor)},"unit":"sec","wall":$wallJson,"trials":$trialsRun,"reran":$repairs,"tainted":$tainted,"unstable_n":$unstableCount,"nqueries":${engine.size},"baseline_n":${ratios.size},"regressions_n":${regressions.size},"regressions_top":${ratioMap(regressions.take(8))},"stall_excluded":$stallExcluded,"cpus":$cpus,"sf":"$sfDir"}""")
     // THE driver-contract line, printed LAST (round-17 VERDICT #2):
     // one JSON object in exactly the documented shape — {"metric",
     // "value", "unit", "queries", "sf"} — whose "queries" map carries

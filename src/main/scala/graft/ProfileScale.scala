@@ -896,13 +896,6 @@ object ProfileScale {
         graft.operators.Skyline.pareto2D(scaled, "price_c", "neg_qty")
       })
 
-    // warm-up: every op once at 1× so the 1×-vs-10× comparison is
-    // JIT-steady on both sides
-    ops.foreach { case (_, f) => try f(1).count()
-      catch { case scala.util.control.NonFatal(_) => () }
-      spark.catalog.clearCache()
-    }
-
     def fmt(d: Double) = f"$d%.3f"
     // Targeted extensions beyond the 1×/5×/10× sweep:
     //
@@ -1077,6 +1070,17 @@ object ProfileScale {
             pats.exists(k.contains) })
       }
     val filteredRun = cells.size < ops.size * 3
+    // warm-up: every op that owns a selected 1×/5×/10× cell runs once
+    // at 1× so the 1×-vs-10× comparison is JIT-steady on both sides.
+    // The filter applies first: warming all ops for a one-op run cost
+    // minutes of wall for seconds of profiled cells.
+    val warmOps = cells.map(_._1).filterNot(_.endsWith("#ext"))
+      .map(_.takeWhile(_ != '#')).toSet
+    ops.filter { case (name, _) => warmOps(name) }.foreach { case (_, f) =>
+      try f(1).count()
+      catch { case scala.util.control.NonFatal(_) => () }
+      spark.catalog.clearCache()
+    }
     // Per-METRIC min across rounds: a stall only ever INFLATES elapsed
     // and task-duration skew (contention stretches whichever tasks
     // share the window), never deflates them, so the minimum of each

@@ -46,12 +46,21 @@ import org.scalatest.funsuite.AnyFunSuite
  * of rows and the shrink schedule keeps 80% per round, so no
  * pre-prune bounds it.
  *
- * The second test is a source lint of the same kind: `src/main`
- * reaches the native expressions by class, never by SQL name. The
- * third keeps the harness to one session factory (`LocalSession`, plus
- * the production `MetricsMain`) and one SparkListener (`RunMetrics`):
- * a second builder or listener is how settings and counters drifted
- * apart across a dozen mains before.
+ * The same lint runs over `src/test`, where an unpartitioned window
+ * is a naive reference an optimized operator is checked against. Its
+ * allowlist is PipelineSpec.scala: 1 — tokenBudgetSelect's cumulative
+ * reference window over the sf0.001 fixture. Keeping test sites
+ * listed keeps the "No Partition Defined" WindowExec warnings in the
+ * test log down to the ones named here.
+ *
+ * The other tests are source lints of the same kind: `src/main`
+ * reaches the native expressions by class, never by SQL name; the
+ * harness keeps one session factory (`LocalSession`, plus the
+ * production `MetricsMain`) and one SparkListener (`RunMetrics`) — a
+ * second builder or listener is how settings and counters drifted
+ * apart across a dozen mains before; and `src/main` reads exactly the
+ * listed `SPARK_GRAFT_*` environment keys, so a knob cannot come back
+ * without this list changing with it.
  */
 class GlobalWindowLintSpec extends AnyFunSuite {
 
@@ -61,34 +70,50 @@ class GlobalWindowLintSpec extends AnyFunSuite {
     "operators/Skyline.scala" -> 1,
     "operators/Profiling.scala" -> 1)
 
-  test("every unpartitioned window in src/main is a documented-bounded site") {
-    val root = java.nio.file.Paths.get("src/main/scala/graft")
-    // whole-file scan with comments stripped (round-15 review): a
-    // line-by-line scan misses `Window\n  .orderBy(` — ordinary
-    // formatter output — which is exactly the silent-ship this spec
-    // exists to prevent. `\bWindow` keeps WindowSpec variables like
-    // `partitionedWindow.orderBy(` from false-positiving; block
-    // comments are stripped so Packing.scala's doc, which NAMES the
-    // anti-pattern it avoids, doesn't count as a site.
-    val pat = java.util.regex.Pattern.compile(
-      "\\bWindow\\s*\\.\\s*(orderBy\\s*\\(|partitionBy\\s*\\(\\s*\\))")
-    val found = scala.collection.mutable.Map.empty[String, Int]
-    val stream = java.nio.file.Files.walk(root)
+  private val testAllowlist = Map("graft/PipelineSpec.scala" -> 1)
+
+  /** (path relative to `root`, source) of every `.scala` file under
+    * `root`, with block and line comments stripped (round-15 review):
+    * block comments go so Packing.scala's doc, which NAMES the
+    * anti-pattern it avoids, doesn't count as a site. */
+  private def sources(root: String): Seq[(String, String)] = {
+    val base = java.nio.file.Paths.get(root)
+    val stream = java.nio.file.Files.walk(base)
     try {
-      val it = stream.iterator()
-      while (it.hasNext) {
-        val p = it.next()
-        if (p.toString.endsWith(".scala")) {
-          val rel = root.relativize(p).toString
-          val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-            .replaceAll("(?s)/\\*.*?\\*/", " ")
-            .replaceAll("//[^\n]*", " ")
-          val m = pat.matcher(src)
-          while (m.find()) found(rel) = found.getOrElse(rel, 0) + 1
-        }
+      val out = Seq.newBuilder[(String, String)]
+      stream.iterator().forEachRemaining { p =>
+        if (p.toString.endsWith(".scala"))
+          out += base.relativize(p).toString ->
+            new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+              .replaceAll("(?s)/\\*.*?\\*/", " ")
+              .replaceAll("//[^\n]*", " ")
       }
+      out.result()
     } finally stream.close()
-    assert(found.toMap == allowlist,
+  }
+
+  /** Match count of `pat` per file under `root`, files without a
+    * match left out. */
+  private def countSites(root: String, pat: java.util.regex.Pattern)
+      : Map[String, Int] =
+    sources(root).map { case (rel, src) =>
+      val m = pat.matcher(src)
+      var n = 0
+      while (m.find()) n += 1
+      rel -> n
+    }.filter(_._2 > 0).toMap
+
+  // whole-file scan (round-15 review): a line-by-line scan misses
+  // `Window\n  .orderBy(` — ordinary formatter output — which is
+  // exactly the silent-ship this spec exists to prevent. `\bWindow`
+  // keeps WindowSpec variables like `partitionedWindow.orderBy(` from
+  // false-positiving.
+  private val globalWindow = java.util.regex.Pattern.compile(
+    "\\bWindow\\s*\\.\\s*(orderBy\\s*\\(|partitionBy\\s*\\(\\s*\\))")
+
+  test("every unpartitioned window in src/main is a documented-bounded site") {
+    val found = countSites("src/main/scala/graft", globalWindow)
+    assert(found == allowlist,
       s"""unpartitioned-window sites drifted from the documented-bounded
          |allowlist.
          |  observed: ${found.toSeq.sortBy(_._1).mkString(", ")}
@@ -96,6 +121,15 @@ class GlobalWindowLintSpec extends AnyFunSuite {
          |A NEW site must either partition its window, use the two-phase
          |prefix-scan rank idiom (Packing.streamPacks / UnigramLm.usageRank),
          |or document its input bound and join this allowlist.""".stripMargin)
+  }
+
+  test("every unpartitioned window in src/test is a documented reference") {
+    val found = countSites("src/test/scala", globalWindow)
+    assert(found == testAllowlist,
+      s"""observed: ${found.toSeq.sortBy(_._1).mkString(", ")}
+         |allowed:  ${testAllowlist.toSeq.sortBy(_._1).mkString(", ")}
+         |Partition the window, or name the reference it is and join the
+         |test allowlist.""".stripMargin)
   }
 
   test("src/main reaches native expressions by class, never by SQL name") {
@@ -107,52 +141,44 @@ class GlobalWindowLintSpec extends AnyFunSuite {
     val pat = java.util.regex.Pattern.compile(
       "call_function\\s*\\(\\s*\"(" + names.mkString("|") + ")\"" +
         "|createOrReplaceTempFunction|\\bNativeFns\\b")
-    val root = java.nio.file.Paths.get("src/main/scala")
-    val hits = scala.collection.mutable.Buffer.empty[String]
-    val stream = java.nio.file.Files.walk(root)
-    try {
-      stream.iterator().forEachRemaining { p =>
-        if (p.toString.endsWith(".scala")) {
-          val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-            .replaceAll("(?s)/\\*.*?\\*/", " ")
-            .replaceAll("//[^\n]*", " ")
-          val m = pat.matcher(src)
-          while (m.find()) hits += s"${root.relativize(p)}: ${m.group()}"
-        }
-      }
-    } finally stream.close()
+    val hits = sources("src/main/scala").flatMap { case (rel, src) =>
+      val m = pat.matcher(src)
+      Iterator.continually(m).takeWhile(_.find()).map(h => s"$rel: ${h.group()}")
+    }
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 
   test("src/main builds sessions in one factory and listens in one listener") {
-    val root = java.nio.file.Paths.get("src/main/scala")
     val pats = Map(
       "SparkSession.builder()" -> "\\bSparkSession\\s*\\.\\s*builder\\b",
       "SparkListener" -> "\\b(extends|new)\\s+([\\w.]+\\.)?SparkListener\\b")
-      .map { case (k, re) => k -> java.util.regex.Pattern.compile(re) }
-    val found = scala.collection.mutable.Map.empty[(String, String), Int]
-    val stream = java.nio.file.Files.walk(root)
-    try {
-      stream.iterator().forEachRemaining { p =>
-        if (p.toString.endsWith(".scala")) {
-          val rel = root.relativize(p).toString
-          val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-            .replaceAll("(?s)/\\*.*?\\*/", " ")
-            .replaceAll("//[^\n]*", " ")
-          pats.foreach { case (k, pat) =>
-            val m = pat.matcher(src)
-            while (m.find()) found((k, rel)) = found.getOrElse((k, rel), 0) + 1
-          }
-        }
-      }
-    } finally stream.close()
+    val found = pats.toSeq.flatMap { case (k, re) =>
+      countSites("src/main/scala", java.util.regex.Pattern.compile(re))
+        .map { case (rel, n) => (k, rel) -> n }
+    }.toMap
     val allowed = Map(
       ("SparkSession.builder()", "graft/LocalSession.scala") -> 1,
       ("SparkSession.builder()", "graft/metrics/MetricsMain.scala") -> 1,
       ("SparkListener", "graft/RunMetrics.scala") -> 1)
-    assert(found.toMap == allowed,
+    assert(found == allowed,
       s"""observed: ${found.toSeq.sortBy(_._1).mkString(", ")}
          |A new session goes through graft.LocalSession; new counters go
          |into graft.RunMetrics.""".stripMargin)
+  }
+
+  test("src/main reads exactly the listed SPARK_GRAFT_* keys") {
+    // Every key is a configuration the tests and the benchmark must
+    // cover; a new one must be added here on purpose.
+    val keys = Set("CPUS", "SF_DIR", "ONLY", "SKIP", "TRIALS", "WARMUP",
+      "WALL_BUDGET", "RERUNS", "ORDER_SEED", "PROFILE_ONLY",
+      "PROFILE_TRIALS").map("SPARK_GRAFT_" + _)
+    val pat = java.util.regex.Pattern.compile("SPARK_GRAFT_[A-Z0-9_]+")
+    val found = sources("src/main").flatMap { case (_, src) =>
+      val m = pat.matcher(src)
+      Iterator.continually(m).takeWhile(_.find()).map(_.group())
+    }.toSet
+    assert(found == keys,
+      s"""added: ${(found -- keys).toSeq.sorted.mkString(", ")}
+         |missing: ${(keys -- found).toSeq.sorted.mkString(", ")}""".stripMargin)
   }
 }

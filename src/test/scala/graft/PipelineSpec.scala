@@ -1673,9 +1673,6 @@ class PipelineSpec extends SparkTestBase {
     val docs = Tables.read(spark, sf0001, "documents").select("doc_id", "text")
     val packed = graft.pipeline.Packing.streamPacks(docs, 512L)
     // reference: the single-window global cumsum formulation
-    val w = org.apache.spark.sql.expressions.Window.orderBy("doc_id")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
     val ref = docs.select(col("doc_id"),
         size(graft.functions.TextFns.tokens(col("text"))).cast("long").as("n_tokens"))
       .withColumn("pack_id",

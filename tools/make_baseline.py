@@ -2,7 +2,9 @@
 """Build BENCH_BASELINE_F4.json from one or more clean (untainted)
 format-4 bench detail artifacts: per-query baseline floor = min over
 all inputs of that query's spread minimum. Only untainted inputs are
-accepted unless --force. Usage:
+accepted unless --force. All inputs must share one sf and one "cpus"
+(a floor is a reference only at the core count it was taken at; Bench
+ignores a floor file whose cpus differs from its run's). Usage:
   make_baseline.py out.json detail1.json [detail2.json ...]
 """
 import json, sys
@@ -11,7 +13,7 @@ args = [a for a in sys.argv[1:] if a != "--force"]
 force = "--force" in sys.argv
 out, inputs = args[0], args[1:]
 
-floors, sf, fmt = {}, None, None
+floors, sf, cpus = {}, None, None
 for path in inputs:
     d = json.load(open(path))
     if d.get("format") != 4:
@@ -22,6 +24,11 @@ for path in inputs:
     sf = sf or d.get("sf")
     if d.get("sf") != sf:
         sys.exit(f"{path}: sf {d.get('sf')} != {sf}")
+    if d.get("cpus") is None:
+        sys.exit(f"{path}: no cpus — floors of unknown core count")
+    cpus = cpus or d["cpus"]
+    if d["cpus"] != cpus:
+        sys.exit(f"{path}: cpus {d['cpus']} != {cpus}")
     spread = d.get("spread", {})
     for name, med in d.get("queries", {}).items():
         if med is None or med < 0:
@@ -29,7 +36,7 @@ for path in inputs:
         lo = spread.get(name, [med, med])[0]
         floors[name] = min(floors.get(name, lo), lo)
 
-json.dump({"format": 4, "sf": sf, "inputs": inputs,
+json.dump({"format": 4, "sf": sf, "cpus": cpus, "inputs": inputs,
            "queries": dict(sorted(floors.items()))},
           open(out, "w"), indent=1)
 print(f"wrote {out}: {len(floors)} query floors from {len(inputs)} run(s)")
