@@ -47,7 +47,7 @@ import org.apache.spark.sql.SparkSession
   * Streaming isolation (rounds 8, 13): `*_stream_parity` queries run
   * LAST in every sweep. After each one the bench stops leftover
   * streams and unloads the state store, and every timing requires a
-  * streaming-quiet JVM (the parent session and StreamParity's
+  * streaming-quiet JVM (the parent session and PipelineReplay's
   * child-session replays). They are verification harnesses, reported
   * under "verification" and outside the engine-only "value".
   *
@@ -169,10 +169,10 @@ object Bench {
     // providers AND their maintenance thread (a fresh stream restarts
     // it lazily). StreamingQueryManager is per-session and the parity
     // replay runs on a CHILD session, so the parent's spark.streams
-    // alone would never see a leaked replay — the StreamParity
-    // registry covers that side. Harmless no-op after batch queries.
+    // alone would never see a leaked replay — PipelineReplay's live
+    // set covers that side. Harmless no-op after batch queries.
     def leakedStreams() =
-      spark.streams.active.toSeq ++ graft.streaming.StreamParity.activeReplays
+      spark.streams.active.toSeq ++ graft.streaming.PipelineReplay.activeReplays
     def drainStreamingResidue(): Unit = {
       leakedStreams().foreach { q =>
         try q.stop() catch { case scala.util.control.NonFatal(_) => () }

@@ -82,8 +82,8 @@ private[graft] object MetricsEntries {
 
     // O-23 streaming parity: the SAME raw datapoints replayed through
     // StreamingAlarmPipeline via MemoryStream (one deterministic batch
-    // + per-series watermark sentinels, StreamParity scaladoc) must
-    // emit the batch machine's exact transition stream. The oracle
+    // + per-series watermark sentinels, PipelineReplay.replayTransitions)
+    // must emit the batch machine's exact transition stream. The oracle
     // recomputes the batch transitions in SQL and pins in_stream /
     // prev_match / state_match TRUE — any divergence (missing, extra,
     // or state-mismatched streaming transition) flips a pinned column
@@ -108,7 +108,7 @@ private[graft] object MetricsEntries {
       val statExpr = statBySid.foldLeft(lit(null).cast("string")) {
         case (acc, (sid, st)) => when(col("series_id") === sid, st).otherwise(acc)
       }
-      val streamed = graft.streaming.StreamParity.replayTransitions(
+      val streamed = graft.streaming.PipelineReplay.replayTransitions(
         s, pts, slasDf(s).withColumn("statistic", statExpr))
       val streamDf = streamed
         .map(t => (t.seriesId, t.windowStart, t.prevState, t.newState))

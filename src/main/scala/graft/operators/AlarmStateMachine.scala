@@ -63,23 +63,14 @@ object AlarmStateMachine {
     else if (breaches >= datapointsToAlarm) StateAlarm
     else StateOk
 
-  /**
-   * Evaluate alarm states over windowed series values.
-   *
-   * @param series (series_id, window_start:long, metricvalue:double) —
-   *               output of StatWindowAgg
-   * @param slas   (series_id, period, threshold, comparison_operator,
-   *               datapoints_to_alarm, evaluation_periods,
-   *               treat_missing_data) — tiny; broadcast
-   * @return one row per (SLA key, slot): the key columns, window_start,
-   *         metricvalue (null when the slot was missing), breaching,
-   *         statevalue, prev_state (null on the first slot), transitioned
-   */
-  def evaluate(series: DataFrame, slas: DataFrame,
-      maxSlotsPerSeries: Long = 200000L): DataFrame = {
-    // Fail fast on bad SLA config (mirrors the streaming path): a
-    // typo'd operator would otherwise make every slot silently abstain
-    // — the alarm could never fire and nothing would report it.
+  /** Fail fast on bad SLA config, for the batch machine and the
+    * streaming pipeline alike: a positive period, known operator and
+    * missing-data names, a threshold and datapoints_to_alarm, and
+    * evaluation_periods of at least 1. A typo'd operator would
+    * otherwise make every slot silently abstain — the alarm could
+    * never fire and nothing would report it; a null threshold would
+    * fail only once the first window is evaluated. */
+  private[graft] def requireSlaConfig(slas: DataFrame): Unit =
     graft.pipeline.DriverBounds.boundedCollect(
       slas.select(col("period").cast("long"), col("comparison_operator"),
         col("treat_missing_data"), coalesce(col("threshold").isNotNull &&
@@ -94,6 +85,22 @@ object AlarmStateMachine {
         require(r.getBoolean(3), "SLA threshold and datapoints_to_alarm must " +
           "be set and evaluation_periods must be at least 1")
       }
+
+  /**
+   * Evaluate alarm states over windowed series values.
+   *
+   * @param series (series_id, window_start:long, metricvalue:double) —
+   *               output of StatWindowAgg
+   * @param slas   (series_id, period, threshold, comparison_operator,
+   *               datapoints_to_alarm, evaluation_periods,
+   *               treat_missing_data) — tiny; broadcast
+   * @return one row per (SLA key, slot): the key columns, window_start,
+   *         metricvalue (null when the slot was missing), breaching,
+   *         statevalue, prev_state (null on the first slot), transitioned
+   */
+  def evaluate(series: DataFrame, slas: DataFrame,
+      maxSlotsPerSeries: Long = 200000L): DataFrame = {
+    requireSlaConfig(slas)
     val key = KeyCols.map(col)
     val rows = series
       .select(col("series_id"), col("window_start").cast("long").as("window_start"),

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.catalog.Schemas
 
 /**
  * Partition and catalog maintenance (O-26/O-27/O-28; reference:
@@ -86,11 +87,14 @@ object PartitionOps {
    * partition columns so Catalyst prunes expired partitions at scan
    * time instead of reading data files.
    */
-  def retain(records: DataFrame, ttlDays: Int, asOfEpoch: Long): DataFrame = {
-    val partDate = make_date(col("year"), col("month"), col("day"))
-    val cutoff = date_sub(to_date(timestamp_seconds(lit(asOfEpoch))), ttlDays)
-    records.filter(partDate >= cutoff)
-  }
+  def retain(records: DataFrame, ttlDays: Int, asOfEpoch: Long): DataFrame =
+    records.filter(retained(ttlDays, asOfEpoch))
+
+  /** The retention predicate on partition columns: the partition date
+    * is at or after `asOf` minus `ttlDays`. */
+  private def retained(ttlDays: Int, asOfEpoch: Long): Column =
+    make_date(col("year"), col("month"), col("day")) >=
+      date_sub(to_date(timestamp_seconds(lit(asOfEpoch))), ttlDays)
 
   /** Executable retention enforcement: drop expired partition
     * directories of a partitioned lake table (the engine-side form of
@@ -98,13 +102,8 @@ object PartitionOps {
     * match the expired partition tuples. Returns the dropped paths. */
   def enforceRetention(spark: SparkSession, lakeDir: String, ttlDays: Int,
       asOfEpoch: Long): Seq[String] = {
-    val records = spark.read.parquet(lakeDir)
-      .select("region", "year", "month", "day", "hour")
-    val drop = expired(records, ttlDays, asOfEpoch).collect().map { r =>
-      s"$lakeDir/region=${r.getAs[Any]("region")}/year=${r.getAs[Any]("year")}" +
-        s"/month=${r.getAs[Any]("month")}/day=${r.getAs[Any]("day")}" +
-        s"/hour=${r.getAs[Any]("hour")}"
-    }.toSeq
+    val drop = expired(spark.read.parquet(lakeDir), ttlDays, asOfEpoch)
+      .collect().map(RecordShape.partitionDir(lakeDir, _)).toSeq
     // recursive delete via Hadoop FileSystem (hdfs://, s3a://, and
     // plain local paths all resolve), and report only what was
     // actually removed — a path that survives a failed delete must not
@@ -118,7 +117,6 @@ object PartitionOps {
     }
   }
 
-  /** The complement: partitions an expiry job would drop. */
   /**
    * Backfill planner: hourly partitions that SHOULD exist between each
    * series' first and last observed hour but hold no data — the gap
@@ -196,10 +194,9 @@ object PartitionOps {
     nFiles.toLong
   }
 
-  def expired(records: DataFrame, ttlDays: Int, asOfEpoch: Long): DataFrame = {
-    val partDate = make_date(col("year"), col("month"), col("day"))
-    val cutoff = date_sub(to_date(timestamp_seconds(lit(asOfEpoch))), ttlDays)
-    records.select("region", "year", "month", "day", "hour").distinct()
-      .filter(partDate < cutoff)
-  }
+  /** The complement of [[retain]]: the distinct partition tuples an
+    * expiry job would drop, in [[Schemas.partitionColumnNames]] order. */
+  def expired(records: DataFrame, ttlDays: Int, asOfEpoch: Long): DataFrame =
+    records.select(Schemas.partitionColumnNames.map(col): _*).distinct()
+      .filter(!retained(ttlDays, asOfEpoch))
 }

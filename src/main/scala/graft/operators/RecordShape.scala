@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import graft.catalog.Schemas
 import graft.functions.TimeFns
 
 /**
@@ -39,7 +40,7 @@ object RecordShape {
   def toMetricsRecords(enriched: DataFrame, accountId: String, region: String,
       collectionEpoch: Long): DataFrame = {
     val ts = timestamp_seconds(col("window_start"))
-    enriched.select(
+    enriched.select(Seq(
       TimeFns.isoUtc(lit(collectionEpoch)).as("collectiontime"),
       col("namespace"), col("name"), col("period").cast("int").as("period"),
       col("frequency"), col("statistic"),
@@ -48,22 +49,35 @@ object RecordShape {
       TimeFns.isoUtc(col("window_start")).as("metrictimestamp"),
       col("metricvalue").cast("float").as("metricvalue"),
       col("series_id").as("id"),
-      col("name").as("label"),
-      // partition columns (glue_catalog_construct.py:52-67) derived
-      // BEFORE the write so partitionBy needs no extra pass (O-9/O-26).
-      lit(region).as("region"),
-      year(ts).cast("smallint").as("year"),
-      month(ts).cast("smallint").as("month"),
-      dayofmonth(ts).cast("smallint").as("day"),
-      hour(ts).cast("smallint").as("hour"))
+      col("name").as("label")) ++ partitionColumns(ts, region): _*)
   }
+
+  /** The five Hive partition columns ([[Schemas.partitionKeys]],
+    * glue_catalog_construct.py:52-67) of a record stamped at `ts`,
+    * derived BEFORE the write so partitionBy needs no extra pass
+    * (O-9/O-26). Batch records and streaming ingest both use it. */
+  private[graft] def partitionColumns(ts: Column, region: String): Seq[Column] = Seq(
+    lit(region).as("region"),
+    year(ts).cast("smallint").as("year"),
+    month(ts).cast("smallint").as("month"),
+    dayofmonth(ts).cast("smallint").as("day"),
+    hour(ts).cast("smallint").as("hour"))
 
   /** O-9 landing: write records with the reference's 5-key Hive layout
     * (kinesis_construct.py:125-146 conversion + prefix scheme
     * metrics_streamer.py:90-91). Partition registration is native —
-    * no add_partition step (O-27 collapses away). */
+    * no add_partition step (O-27 collapses away). The one lake write
+    * site: batch records and streaming ingest both land through it. */
   def writePartitioned(records: DataFrame, path: String): Unit =
     records.write.mode("append")
-      .partitionBy("region", "year", "month", "day", "hour")
+      .partitionBy(Schemas.partitionColumnNames: _*)
       .parquet(path)
+
+  /** The directory of one partition under `root`, from a row holding
+    * the five partition values in [[Schemas.partitionColumnNames]]
+    * order. */
+  private[graft] def partitionDir(root: String, partition: Row): String =
+    Schemas.partitionColumnNames.zipWithIndex
+      .map { case (k, i) => s"$k=${partition.get(i)}" }
+      .mkString(s"$root/", "/", "")
 }

@@ -48,8 +48,34 @@ object StatWindowAgg {
       } catch { case _: NumberFormatException => None }
     else None
 
+  /** Fails on a typo'd or out-of-range statistic — the one check the
+    * batch aggregation and the streaming alarm pipeline share. Without
+    * it an unmatched statistic silently produces NULL metricvalue rows
+    * (batch) or dies mid-stream when the first window closes. */
+  private[graft] def requireStatistic(statistic: String): Unit =
+    require(standardStats.contains(statistic) || percentileFraction(statistic).isDefined,
+      s"unsupported statistic: $statistic")
+
+  /** One statistic's aggregate over `valueCol`, shared by
+    * [[aggregateOne]] and the streaming [[graft.streaming.StreamingStatAgg]].
+    * Average divides AFTER casting the exact decimal sum to double, as
+    * [[aggregate]] does. */
+  private[graft] def statColumn(statistic: String, valueCol: String): Column = {
+    requireStatistic(statistic)
+    val v = col(valueCol)
+    val dec = v.cast("decimal(28,8)")
+    statistic match {
+      case "Average"     => sum(dec).cast("double") / count(v)
+      case "Sum"         => sum(dec).cast("double")
+      case "Minimum"     => min(v)
+      case "Maximum"     => max(v)
+      case "SampleCount" => count(v).cast("double")
+      case p => percentile_approx(v, lit(percentileFraction(p).get), lit(PercentileAccuracy))
+    }
+  }
+
   /** Drops NaN and ±Infinity values (no-data; see the object doc). */
-  private def finite(datapoints: DataFrame, valueCol: String): DataFrame = {
+  private[graft] def finite(datapoints: DataFrame, valueCol: String): DataFrame = {
     val v = col(valueCol)
     datapoints.filter(v.isNull || (!isnan(v) && !v.isin(Double.PositiveInfinity, Double.NegativeInfinity)))
   }
@@ -73,12 +99,7 @@ object StatWindowAgg {
       defsF.select("statistic").distinct(), 10000L,
       "StatWindowAgg distinct statistics (definition metadata)")
       .map(_.getString(0)).toSeq
-    // fail fast on a typo'd/out-of-range statistic: without this, an
-    // unmatched statistic silently produces NULL metricvalue rows
-    allStats.foreach { s =>
-      require(standardStats.contains(s) || percentileFraction(s).isDefined,
-        s"unsupported statistic in definitions: $s")
-    }
+    allStats.foreach(requireStatistic)
     val pStats: Seq[(String, Double)] =
       allStats.flatMap(s => percentileFraction(s).map(s -> _))
 
@@ -135,19 +156,7 @@ object StatWindowAgg {
       valueCol: String = "value", tsCol: String = "ts"): DataFrame = {
     val windowStart =
       (floor(unix_timestamp(col(tsCol)) / periodSeconds) * periodSeconds).cast("long")
-    val dec = col(valueCol).cast("decimal(28,8)")
-    val agg: Column = statistic match {
-      case "Average"     => sum(dec).cast("double") / count(col(valueCol))
-      case "Sum"         => sum(dec).cast("double")
-      case "Minimum"     => min(col(valueCol))
-      case "Maximum"     => max(col(valueCol))
-      case "SampleCount" => count(col(valueCol)).cast("double")
-      case p => percentileFraction(p) match {
-        case Some(f) => percentile_approx(col(valueCol), lit(f), lit(PercentileAccuracy))
-        case None => throw new IllegalArgumentException(s"unknown statistic: $p")
-      }
-    }
     finite(datapoints, valueCol).groupBy(col("series_id"), windowStart.as("window_start"))
-      .agg(agg.as("metricvalue"))
+      .agg(statColumn(statistic, valueCol).as("metricvalue"))
   }
 }

@@ -1,52 +1,39 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.model.{ComparisonOperator, TreatMissingData}
 import graft.operators.AlarmStateMachine
 
 /**
- * Streaming alarm state machine (O-23 streaming variant; SURVEY.md §7
- * "What's hard" #1/#5): per-series CloudWatch-style M-of-N evaluation
- * as flatMapGroupsWithState. State per series = ring buffer of the
- * last N breach votes + the current alarm state; each incoming window
- * value advances the machine and state *transitions* are emitted
- * (alarm actions fire on change, not level — cw_alarm.py:52-62).
+ * The per-slot alarm machine of the streaming O-23 path (SURVEY.md §7
+ * "What's hard" #1/#5): CloudWatch-style M-of-N evaluation over one
+ * SLA's vote history. It holds no Dataset wiring — the only streaming
+ * operator is [[StreamingAlarmPipeline.evaluateStream]], whose
+ * `flatMapGroupsWithState` keeps one [[AlarmState]] per (series, SLA)
+ * and feeds it closed windows and missing slots through the functions
+ * here. State *transitions* are emitted (alarm actions fire on change,
+ * not level — cw_alarm.py:52-62).
  *
  * CloudWatch evaluates every period on the wall clock, not only when a
  * datapoint arrives (cw_alarm.py:46-49 — the missing-data policies are
  * about exactly this), so the machine advances on two clocks:
  *
- *  - a point arriving after a gap first DENSIFIES the gap — every
- *    skipped period slot casts its own missing-data vote, so an
- *    N-window gap casts N votes exactly like the batch variant's
- *    densified timeline;
- *  - an event-time timer ([[GroupStateTimeout.EventTimeTimeout]]) fires
- *    when the watermark passes the end of the series' next expected
- *    slot, synthesizing missing-slot votes for SILENT series — a series
- *    that stops reporting transitions to INSUFFICIENT_DATA (MISSING
- *    policy) / OK (NOT_BREACHING) / ALARM (BREACHING) without any
- *    further input.
+ *  - a window closing after a gap first DENSIFIES the gap
+ *    ([[synthesizeSlots]]) — every skipped period slot casts its own
+ *    missing-data vote, so an N-window gap casts N votes exactly like
+ *    the batch variant's densified timeline;
+ *  - when the watermark passes the end of the series' next expected
+ *    slot, [[advanceToWatermark]] synthesizes missing-slot votes for a
+ *    SILENT series — a series that stops reporting transitions to
+ *    INSUFFICIENT_DATA (MISSING policy) / OK (NOT_BREACHING) / ALARM
+ *    (BREACHING) without any further input.
  *
- * Late points older than the series' last evaluated slot are dropped
- * (the watermark delay of [[transitions]] bounds how late a point can
- * usefully arrive — standard streaming tradeoff).
- *
- * Scale: state is O(evaluation_periods) booleans per series — millions
- * of series fit comfortably in the state store; keys partition across
- * executors by series hash. A silence of any length costs at most
- * evaluation_periods synthesized slots per timer firing (after N
- * missing votes the vote window is saturated and the state can no
- * longer change, so longer gaps jump straight to the watermark).
+ * Scale: state is O(evaluation_periods) booleans per series. A silence
+ * of any length costs at most evaluation_periods synthesized slots per
+ * timer firing (after N missing votes the vote window is saturated and
+ * the state can no longer change, so longer gaps jump straight to the
+ * watermark).
  */
 object AlarmStream {
-
-  final case class SeriesPoint(
-      seriesId: String, windowStart: Long, value: Option[Double],
-      period: Long, threshold: Double, comparisonOperator: String,
-      datapointsToAlarm: Int, evaluationPeriods: Int,
-      treatMissingData: String)
 
   /** SLA config snapshot carried in state so timer firings can
     * evaluate missing slots without an incoming point. */
@@ -73,10 +60,6 @@ object AlarmStream {
       seriesId: String, windowStart: Long, prevState: String,
       newState: String)
 
-  private def confOf(p: SeriesPoint): SlaConf =
-    SlaConf(p.period, p.threshold, p.comparisonOperator,
-      p.datapointsToAlarm, p.evaluationPeriods, p.treatMissingData)
-
   /** Evaluate ONE slot (real or missing) against the machine, by the
     * vote and state rule the batch variant runs
     * ([[AlarmStateMachine.vote]], [[AlarmStateMachine.state]]). */
@@ -100,34 +83,6 @@ object AlarmStream {
       Some(Transition(seriesId, ws, s.state, newState)) else None
     (next, out)
   }
-
-  /** Advance one series' machine over a batch of points (ordered by
-    * window), densifying any gap between consecutive points with
-    * missing-slot votes. Points at or before the last evaluated slot
-    * are dropped (already evaluated — replay/out-of-order safe). Pure
-    * function — unit-testable without Spark; semantics match
-    * graft.operators.AlarmStateMachine.evaluate. */
-  private[graft] def advance(
-      points: Iterator[SeriesPoint],
-      st: AlarmState): (AlarmState, List[Transition]) =
-    points.toSeq.sortBy(_.windowStart).foldLeft((st, List.empty[Transition])) {
-      case ((s, out), p) =>
-        if (s.lastWindow.exists(p.windowStart <= _)) (s, out)
-        else {
-          val conf = confOf(p)
-          // densify the gap: every skipped slot casts a missing vote
-          val (gapState, gapOut) = s.lastWindow match {
-            case Some(last) if p.period > 0 =>
-              synthesizeSlots(s, p.seriesId, last, p.windowStart, conf)
-            case _ => (s, List.empty[Transition])
-          }
-          val (next, tr) = applySlot(gapState, p.seriesId, p.windowStart,
-            p.value, conf)
-          // accumulator is reverse-chronological; gapOut arrives
-          // reverse-chronological from synthesizeSlots
-          (next, tr.toList ::: gapOut ::: out)
-        }
-    } match { case (s, out) => (s, out.reverse) }
 
   /** Synthesize missing-slot votes for slots in (from, until) stepping
     * by conf.period. Gaps longer than N slots jump: after N missing
@@ -180,62 +135,4 @@ object AlarmStream {
         }
       case _ => (s, Nil)
     }
-
-  /** Internal row shape carrying the watermark column (public only
-    * because Spark's generated deserializer code must access it). */
-  final case class TimedPoint(
-      seriesId: String, windowStart: Long, value: Option[Double],
-      period: Long, threshold: Double, comparisonOperator: String,
-      datapointsToAlarm: Int, evaluationPeriods: Int,
-      treatMissingData: String, eventTime: java.sql.Timestamp) {
-    def toPoint: SeriesPoint = SeriesPoint(seriesId, windowStart, value,
-      period, threshold, comparisonOperator, datapointsToAlarm,
-      evaluationPeriods, treatMissingData)
-  }
-
-  /** Wire the machine into a streaming Dataset of series points.
-    *
-    * @param watermarkDelay how long to admit late points; also how far
-    *        wall-clock evaluation of silent series trails event time
-    */
-  def transitions(points: Dataset[SeriesPoint],
-      watermarkDelay: String = "0 seconds"): Dataset[Transition] = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    points
-      .withColumn("eventTime", col("windowStart").cast("timestamp"))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[TimedPoint]
-      .transform(machine)
-  }
-
-  /** The flatMapGroupsWithState wiring, shared by [[transitions]]
-    * (which defines its own watermark) and [[evaluateStream]] (which
-    * must reuse the upstream aggregation's). */
-  private def machine(timed: Dataset[TimedPoint]): Dataset[Transition] = {
-    val spark = timed.sparkSession
-    import spark.implicits._
-    timed
-      .groupByKey(_.seriesId)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (key: String, it: Iterator[TimedPoint], gs: GroupState[AlarmState]) => {
-          val st = gs.getOption.getOrElse(EmptyState)
-          val wmSec = gs.getCurrentWatermarkMs() / 1000
-          val (afterPoints, out1) = advance(it.map(_.toPoint), st)
-          // catch up slots the watermark has closed (covers both the
-          // timer firing with no data and a data batch that moved the
-          // watermark past unreported slots)
-          val (next, out2) = advanceToWatermark(afterPoints, key, wmSec)
-          gs.update(next)
-          // re-arm: fire when the watermark closes the next expected slot
-          (next.lastWindow, next.conf) match {
-            case (Some(last), Some(conf)) if conf.period > 0 =>
-              val target = (last + 2 * conf.period) * 1000
-              if (target > gs.getCurrentWatermarkMs())
-                gs.setTimeoutTimestamp(target)
-            case _ => ()
-          }
-          (out1 ++ out2).iterator
-        })
-  }
 }

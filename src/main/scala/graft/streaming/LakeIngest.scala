@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import graft.catalog.Schemas
+import graft.operators.{PartitionOps, RecordShape}
 
 /**
  * Streaming JSON→Parquet partitioned lake ingest (O-8/O-9; reference:
@@ -16,7 +17,9 @@ import graft.catalog.Schemas
  * One Structured Streaming job replaces producer→Kinesis→Firehose→
  * add_partition: parse with the fixed schema (no inference — SURVEY
  * §1.3), derive partition columns BEFORE the write, land parquet with
- * partitionBy (partitions self-register; O-27 collapses away), and
+ * partitionBy (partitions self-register; O-27 collapses away) — the
+ * same columns and the same write as batch records
+ * ([[RecordShape.partitionColumns]], [[RecordShape.writePartitioned]]) — and
  * append unparseable records to an errors path exactly like Firehose's
  * `metric_errors/` prefix.
  */
@@ -84,19 +87,12 @@ object LakeIngest {
             .select("parsed.*").drop(corruptCol)
           val bad = b.filter(col(s"parsed.$corruptCol").isNotNull)
             .select(col("value"))
-          val ts = to_timestamp(col("metrictimestamp"))
           val withParts = good
-            .withColumn("region", lit(region))
-            .withColumn("year", year(ts).cast("smallint"))
-            .withColumn("month", month(ts).cast("smallint"))
-            .withColumn("day", dayofmonth(ts).cast("smallint"))
-            .withColumn("hour", hour(ts).cast("smallint"))
+            .select(col("*") +: RecordShape.partitionColumns(
+              to_timestamp(col("metrictimestamp")), region): _*)
             .persist()
           try {
-            withParts
-              .write.mode("append")
-              .partitionBy("region", "year", "month", "day", "hour")
-              .parquet(outDir)
+            RecordShape.writePartitioned(withParts, outDir)
             if (!bad.isEmpty) bad.write.mode("append").text(errDir)
             if (compactLagBatches > 0) {
               // distinct partition tuples of THIS batch: metadata-scale
@@ -104,19 +100,17 @@ object LakeIngest {
               // full day of regions is thousands of tuples, not data)
               val touched = graft.pipeline.DriverBounds.boundedCollect(
                 withParts
-                  .select("region", "year", "month", "day", "hour")
+                  .select(Schemas.partitionColumnNames.map(col): _*)
                   .filter(col("year").isNotNull)
                   .distinct(), 100000L,
                 "LakeIngest touched-partition tuples (batch metadata)")
-                .map(r => s"$outDir/region=${r.get(0)}/year=${r.get(1)}" +
-                  s"/month=${r.get(2)}/day=${r.get(3)}/hour=${r.get(4)}")
+                .map(RecordShape.partitionDir(outDir, _))
               touched.foreach(p => openPartitions(p) = batchId)
               val closed = openPartitions.collect {
                 case (p, last) if batchId - last >= compactLagBatches => p
               }.toSeq
               closed.foreach { p =>
-                graft.operators.PartitionOps.compactPartition(
-                  batch.sparkSession, p)
+                PartitionOps.compactPartition(batch.sparkSession, p)
                 openPartitions.remove(p)
               }
             }

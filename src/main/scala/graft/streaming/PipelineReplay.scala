@@ -4,18 +4,19 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
- * Deterministic MemoryStream replays of the LLM-pipeline streaming
- * operators ([[StreamDedup]], [[StreamSessions]], [[StreamFunnel]],
- * [[StreamingStatAgg]], [[StreamHeavyHitters]], [[StreamNearDup]]) —
- * the verification bridge that puts each streaming path under the
- * same DuckDB oracle as its batch twin, exactly as [[StreamParity]]
- * does for the alarm machine. The reference has no streaming
- * analytics surface at all (ingest only,
- * cdk_constructs/kinesis_construct.py:121-146); these replays verify
- * the engine-side streaming upgrades against their batch semantics.
+ * Deterministic MemoryStream replays of the streaming operators
+ * ([[StreamingAlarmPipeline]], [[StreamDedup]], [[StreamSessions]],
+ * [[StreamFunnel]], [[StreamingStatAgg]], [[StreamHeavyHitters]],
+ * [[StreamNearDup]], ...) — the verification bridge that puts each
+ * streaming path under the same DuckDB oracle as its batch twin. The
+ * reference has no streaming analytics surface at all (ingest only,
+ * cdk_constructs/kinesis_construct.py:121-146), and the alarm
+ * evaluation it wires (cw_alarm.py) must emit the same transition
+ * timeline on the stream as on the batch machine.
  *
  * VERIFICATION harnesses, not production operators: feeding a
  * MemoryStream requires the fixture on the driver, so callers collect
@@ -27,18 +28,34 @@ import org.apache.spark.sql.streaming.StreamingQuery
  *    split) so cross-engine comparison never depends on Spark's batch
  *    slicing; operators that fold state sort each group's slice, so
  *    intra-batch order is canonical;
- *  - append-mode window operators get a single out-of-band SENTINEL
- *    row (impossible key, filtered from the result) whose event time
- *    advances the global watermark strictly past every real window's
- *    close, forcing emission — the same hi+period+1s pattern as
- *    [[StreamParity]];
+ *  - append-mode window operators get SENTINEL rows (filtered from the
+ *    result) whose event time advances the global watermark strictly
+ *    past every real window's close, forcing emission — Spark fires an
+ *    event-time timer only once the watermark strictly exceeds it, so
+ *    a sentinel at exactly the close would leave the last window open;
  *  - every replay runs on a CHILD session with 2 shuffle partitions
  *    (state groups are few; the parent's 32 partitions would only
- *    multiply empty state-store tasks) and registers its query in
- *    [[ReplayRegistry]] so a leak is visible to Bench's drain.
+ *    multiply empty state-store tasks per micro-batch, measured ~3×
+ *    the whole alarm replay) and registers its query in a live set.
+ *    `StreamingQueryManager` is per-session, so a leaked replay never
+ *    shows in the parent's `spark.streams.active`; [[activeReplays]]
+ *    is how Bench's residue drain sees it.
  */
 object PipelineReplay {
   private val runId = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  private val live: java.util.Set[StreamingQuery] =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[StreamingQuery]()
+
+  /** Replay queries still running (empty unless a replay leaked).
+    * Prunes entries whose query has since stopped — e.g. a leaked
+    * replay a harness drain stopped from outside — so a past leak
+    * can't keep reporting residue after the JVM is quiet again. */
+  def activeReplays: Seq[StreamingQuery] = {
+    import scala.jdk.CollectionConverters._
+    live.removeIf(q => !q.isActive)
+    live.asScala.toSeq
+  }
 
   private def child(spark: SparkSession): SparkSession = {
     val c = spark.newSession()
@@ -48,22 +65,111 @@ object PipelineReplay {
 
   /** Start `df` into a named memory sink, run `feed` (addData +
     * processAllAvailable), return the collected sink rows; always
-    * stops the query and drops the sink view. */
+    * stops the query and drops the sink view. The query leaves the
+    * live set only once it is actually down — a failed stop() leaves
+    * it registered so a harness-level drain can see and retry it. */
   private def runToMemory(sess: SparkSession, df: DataFrame, mode: String)(
       feed: StreamingQuery => Unit): Seq[org.apache.spark.sql.Row] = {
     val name = s"pipeline_replay_${runId.incrementAndGet()}"
     val q = df.writeStream.format("memory").queryName(name)
       .outputMode(mode).start()
-    ReplayRegistry.live.add(q)
+    live.add(q)
     try {
       feed(q)
       sess.table(name).collect().toSeq
     } finally {
       try q.stop() finally {
-        if (!q.isActive) ReplayRegistry.live.remove(q)
+        if (!q.isActive) live.remove(q)
         sess.catalog.dropTempView(name)
       }
     }
+  }
+
+  /** Replay every series' raw datapoints through ONE
+    * [[StreamingAlarmPipeline.evaluateStream]] run; returns the
+    * transition stream over each series' windows (lo_s, hi_s], sorted
+    * by (series, window).
+    *
+    * @param points all series' (series_id, ts, value) fixture rows
+    * @param slas   static SLA config WITH a `statistic` column (the
+    *               statistic is an alarm property, so all SLAs share
+    *               one stream); one row per series — a series with
+    *               several SLAs needs per-(series, period) bounds,
+    *               which this replay does not model
+    *
+    * Determinism notes:
+    *  - all real points land in ONE micro-batch (the watermark is
+    *    still at its initial value, so nothing closes before every
+    *    point is absorbed);
+    *  - then one sentinel point per series at its own hi+period+1s
+    *    advances the watermark one second PAST every series' window hi
+    *    end, closing it;
+    *  - the GLOBAL watermark (max across sentinels) may run past an
+    *    early-ending series' fixture — the machine then evaluates that
+    *    series' sentinel window and synthesizes silent slots beyond its
+    *    hi. Those evaluations are strictly after hi, cannot affect any
+    *    transition at or before it, and are dropped by the per-series
+    *    (lo, hi] output filter;
+    *  - the transition at window lo is dropped per series: the batch
+    *    machine's lag() has no predecessor row there, so it reports
+    *    transitioned=false for its first window by construction. */
+  def replayTransitions(spark: SparkSession,
+      points: Seq[(String, Timestamp, Double)],
+      slas: DataFrame): Seq[AlarmStream.Transition] = {
+    if (points.isEmpty) return Seq.empty
+    val sess = child(spark)
+    import sess.implicits._
+    implicit val sq = sess.sqlContext
+    // rebuild the (tiny) SLA config frame on the child session — a
+    // parent-session plan must not leak into the child's stream
+    val childSlas = sess.createDataFrame(
+      java.util.Arrays.asList(slas.collect(): _*), slas.schema)
+    // period may arrive as int or long depending on the caller's
+    // config frame — normalize before the driver-side read
+    val periodRows = childSlas.select(col("series_id"),
+        col("period").cast("long")).collect()
+      .map(r => r.getString(0) -> r.getLong(1))
+    // ONE SLA row per series: two same-series rows — even with equal
+    // periods — make evaluateStream emit interleaved transition
+    // streams that a (series, window)-keyed parity join fans out into
+    // a silently wrong verdict
+    periodRows.groupBy(_._1).foreach { case (sid, ps) =>
+      require(ps.length == 1,
+        s"series $sid carries ${ps.length} SLA rows; the parity " +
+          "harness models exactly one SLA per series")
+    }
+    val periods = periodRows.toMap
+    // every fixture series needs its SLA row — a bare Map miss later
+    // would be an undiagnosable key-not-found
+    val orphans = points.iterator.map(_._1).toSet -- periods.keySet
+    require(orphans.isEmpty,
+      s"fixture series with no SLA row: ${orphans.toSeq.sorted.mkString(", ")}")
+    // per-series fixture bounds at that series' own period
+    val bounds: Map[String, (Long, Long)] = points.groupBy(_._1).map {
+      case (sid, pts) =>
+        val p = periods(sid)
+        val secs = pts.map(_._2.getTime / 1000)
+        sid -> (math.floorDiv(secs.min, p) * p, math.floorDiv(secs.max, p) * p)
+    }
+    val mem = MemoryStream[(String, Timestamp, Double)]
+    val out = StreamingAlarmPipeline.evaluateStream(
+      mem.toDF().toDF("series_id", "ts", "value"),
+      childSlas, statistic = "Sum", // default unused: every row has one
+      watermark = "0 seconds")
+    runToMemory(sess, out.toDF(), "append") { q =>
+      mem.addData(points: _*)
+      q.processAllAvailable()
+      mem.addData(bounds.toSeq.map { case (sid, (_, hi)) =>
+        (sid, new Timestamp((hi + periods(sid)) * 1000 + 1000), 0.0)
+      }: _*)
+      q.processAllAvailable()
+    }.map(r => AlarmStream.Transition(r.getString(0), r.getLong(1),
+        r.getString(2), r.getString(3)))
+      .filter { t =>
+        val (lo, hi) = bounds(t.seriesId)
+        t.windowStart > lo && t.windowStart <= hi
+      }
+      .sortBy(t => (t.seriesId, t.windowStart))
   }
 
   /** Replay documents through [[StreamDedup.dedupStream]] in the

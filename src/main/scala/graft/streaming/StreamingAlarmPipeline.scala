@@ -5,8 +5,7 @@ import org.apache.spark.sql.catalyst.util.QuantileSummaries
 import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.model.{ComparisonOperator, TreatMissingData}
-import graft.operators.StatWindowAgg
+import graft.operators.{AlarmStateMachine, StatWindowAgg}
 import graft.streaming.AlarmStream.{AlarmState, SlaConf, Transition}
 
 /**
@@ -15,18 +14,23 @@ import graft.streaming.AlarmStream.{AlarmState, SlaConf, Transition}
  * flow (Firehose buffer → CloudWatch statistic → alarm evaluation,
  * kinesis_construct.py + cw_alarm.py) as ONE stateful operator.
  *
- * Why one operator and not StreamingStatAgg chained into AlarmStream:
- * `flatMapGroupsWithState` downstream of a streaming aggregation
- * cannot work in append mode — a window emits (stamped at its start)
- * only after the watermark passed its end, so every emitted row is
- * already "late" for any downstream event-time filter, and a second
- * watermark node would pin the global min-of-nodes watermark at its
- * initial value forever (deadlock). Windowing, the statistic, and the
- * alarm machine therefore share one `flatMapGroupsWithState`: state =
- * open windows' partial aggregates + the alarm ring buffer, windows
- * close when the (single, upstream) watermark passes their end, and
- * closures feed [[AlarmStream.applySlot]] in window order with gap
- * densification — bit-the-same alarm semantics as the two-stage form.
+ * Why one operator and not [[StreamingStatAgg]] chained into a second
+ * stateful alarm stage: `flatMapGroupsWithState` downstream of a
+ * streaming aggregation cannot work in append mode — a window emits
+ * (stamped at its start) only after the watermark passed its end, so
+ * every emitted row is already "late" for any downstream event-time
+ * filter, and a second watermark node would pin the global
+ * min-of-nodes watermark at its initial value forever (deadlock).
+ * Windowing, the statistic, and the alarm machine therefore share one
+ * `flatMapGroupsWithState`: state = open windows' partial aggregates +
+ * the [[AlarmStream.AlarmState]] vote history, windows close when the
+ * (single, upstream) watermark passes their end, and closures feed
+ * [[AlarmStream.applySlot]] in window order with gap densification
+ * ([[AlarmStream.synthesizeSlots]]) and silent-series catch-up
+ * ([[AlarmStream.advanceToWatermark]]). This is the only streaming
+ * alarm operator; the SLA-config check
+ * ([[AlarmStateMachine.requireSlaConfig]]) and the statistic check
+ * ([[StatWindowAgg.requireStatistic]]) are the batch machine's own.
  *
  * Scale: state per series = O(open windows + evaluation_periods).
  * Open windows are bounded by watermark delay / period (a series
@@ -181,12 +185,6 @@ object StreamingAlarmPipeline {
     }
   }
 
-  private[graft] def validateStatistic(statistic: String): Unit =
-    if (!StatWindowAgg.standardStats.contains(statistic) &&
-        StatWindowAgg.percentileFraction(statistic).isEmpty)
-      throw new IllegalArgumentException(
-        s"unsupported streaming statistic: $statistic")
-
   /** Advance one series: absorb points into open windows, close every
     * window the watermark passed (in order, densifying gaps), handle
     * silent-series catch-up. Pure — unit-testable without Spark. */
@@ -202,11 +200,9 @@ object StreamingAlarmPipeline {
       case None => (st, Nil, None)
       case Some(c) =>
         // 1) absorb points into open windows (late = window already
-        //    evaluated → dropped, same contract as AlarmStream).
-        //    Non-finite values are dropped as no-data: BigDecimal(NaN)
-        //    would kill the stream, and the batch path's half-count
-        //    (counted but not summed after the NaN→decimal null cast)
-        //    is itself an artifact, not a semantic to replicate.
+        //    evaluated → dropped). Non-finite values are dropped as
+        //    no-data, as StatWindowAgg drops them: BigDecimal(NaN)
+        //    would kill the stream.
         val keepSamples = StatWindowAgg.percentileFraction(statistic).isDefined
         var open = st.open
         var lastData = st.lastDataSec
@@ -296,21 +292,12 @@ object StreamingAlarmPipeline {
     // when the first window closes (a mid-stream throw checkpoints a
     // poisoned source offset and crash-loops every restart).
     val perSla = slas.columns.contains("statistic")
-    validateStatistic(statistic)
+    StatWindowAgg.requireStatistic(statistic)
     if (perSla) graft.pipeline.DriverBounds.boundedCollect(
         slas.select("statistic").distinct(), 10000L,
         "StreamingAlarmPipeline distinct statistics (definition metadata)")
-      .foreach(r => Option(r.getString(0)).foreach(validateStatistic))
-    graft.pipeline.DriverBounds.boundedCollect(
-      slas.select(col("period").cast("long"), col("comparison_operator"),
-        col("treat_missing_data")).distinct(), 10000L,
-      "StreamingAlarmPipeline distinct SLA configs (definition metadata)")
-      .foreach { r =>
-        require(!r.isNullAt(0) && r.getLong(0) > 0,
-          s"SLA period must be positive, got ${r.get(0)}")
-        ComparisonOperator.fromName(r.getString(1)) // throws with the bad name
-        TreatMissingData.fromName(r.getString(2))
-      }
+      .foreach(r => Option(r.getString(0)).foreach(StatWindowAgg.requireStatistic))
+    AlarmStateMachine.requireSlaConfig(slas)
     val statCol =
       if (perSla)
         org.apache.spark.sql.functions.coalesce(col("statistic"),

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.StatWindowAgg
 
 /**
  * Streaming variant of the CW-statistic window aggregation (O-12 over
@@ -14,31 +15,25 @@ import org.apache.spark.sql.functions._
  * Append mode: a window emits once its watermark passes, which is
  * exactly the "scrape after the 10-minute alignment delay" behavior
  * the reference approximates with end-time snapping (O-13).
+ *
+ * The statistic rule is the batch one: NaN and ±Infinity are no-data
+ * ([[StatWindowAgg.finite]]) and the aggregate is
+ * [[StatWindowAgg.statColumn]], so the five standard statistics and
+ * pNN read as [[StatWindowAgg.aggregateOne]] reads them.
  */
 object StreamingStatAgg {
 
   /** @param datapoints streaming df (series_id, ts:timestamp, value)
     * @param statistic  CW statistic for all series in this stream
+    *                   (standard or pNN)
     * @param periodSeconds window width
     * @param watermark  max out-of-order delay, e.g. "10 minutes" */
   def aggregate(datapoints: DataFrame, statistic: String, periodSeconds: Int,
-      watermark: String = "10 minutes"): DataFrame = {
-    val dec = col("value").cast("decimal(28,8)")
-    val agg: Column = statistic match {
-      case "Average"     => sum(dec).cast("double") / count(col("value"))
-      case "Sum"         => sum(dec).cast("double")
-      case "Minimum"     => min(col("value"))
-      case "Maximum"     => max(col("value"))
-      case "SampleCount" => count(col("value")).cast("double")
-      case other => throw new IllegalArgumentException(
-        s"unsupported streaming statistic: $other")
-    }
-    datapoints
-      .withWatermark("ts", watermark)
+      watermark: String = "10 minutes"): DataFrame =
+    StatWindowAgg.finite(datapoints.withWatermark("ts", watermark), "value")
       .groupBy(col("series_id"), window(col("ts"), s"$periodSeconds seconds"))
-      .agg(agg.as("metricvalue"))
+      .agg(StatWindowAgg.statColumn(statistic, "value").as("metricvalue"))
       .select(col("series_id"),
         unix_timestamp(col("window.start")).as("window_start"),
         col("metricvalue"))
-  }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.model.{ComparisonOperator, TreatMissingData}
 import graft.operators.AlarmStateMachine
 import graft.streaming.AlarmStream
-import graft.streaming.AlarmStream.{AlarmState, SeriesPoint}
+import graft.streaming.AlarmStream.{AlarmState, SlaConf, Transition}
 
 /** Truth-table coverage of the M-of-N alarm machine (SURVEY §5.1):
   * operators × missing-data policies × window configs, batch and
@@ -30,6 +30,16 @@ class AlarmMachineSpec extends SparkTestBase {
     AlarmStateMachine.evaluate(seriesDf(series), slaDf(threshold, op, m, n, missing))
       .select("window_start", "statevalue").orderBy("window_start")
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+
+  /** Folds explicit slots (a missing slot is None) through the
+    * streaming per-slot machine; returns the final state and the
+    * transitions in slot order. */
+  private def foldSlots(st: AlarmState, conf: SlaConf,
+      slots: (Long, Option[Double])*): (AlarmState, List[Transition]) =
+    slots.foldLeft((st, List.empty[Transition])) { case ((s, out), (ws, v)) =>
+      val (next, tr) = AlarmStream.applySlot(s, "s1", ws, v, conf)
+      (next, out ++ tr)
+    }
 
   test("M-of-N: 2 of 3 breaching alarms, 1 of 3 does not") {
     val s = Seq(0L -> Some(10.0), 60L -> Some(1.0), 120L -> Some(10.0))
@@ -122,10 +132,9 @@ class AlarmMachineSpec extends SparkTestBase {
       180L -> Some(Double.NaN), 240L -> Some(9.0))
     for (op <- ComparisonOperator.all.map(_.name);
          missing <- TreatMissingData.all.map(_.name)) {
-      def pt(ws: Long, v: Option[Double]) =
-        SeriesPoint("s1", ws, v, 60L, 5.0, op, 1, 2, missing)
+      val conf = SlaConf(60L, 5.0, op, 1, 2, missing)
       val stream = s.scanLeft(AlarmStream.EmptyState) { case (st, (ws, v)) =>
-        AlarmStream.advance(Iterator(pt(ws, v)), st)._1 }.tail
+        AlarmStream.applySlot(st, "s1", ws, v, conf)._1 }.tail
         .map(st => st.lastWindow.get -> st.state)
       assert(states(s, 5.0, op, 1, 2, missing) == stream, s"$op $missing")
     }
@@ -134,12 +143,10 @@ class AlarmMachineSpec extends SparkTestBase {
   }
 
   test("streaming IGNORE matches batch across gaps") {
-    def pt(ws: Long, v: Option[Double]) = SeriesPoint("s1", ws, v, 60L, 5.0,
-      "LESS_THAN_THRESHOLD", 2, 2, "IGNORE")
+    val conf = SlaConf(60L, 5.0, "LESS_THAN_THRESHOLD", 2, 2, "IGNORE")
     // batch asserts ALARM at the second real breach despite the gap
-    val (st, t) = AlarmStream.advance(
-      Iterator(pt(0, Some(1.0)), pt(60, None), pt(120, Some(1.0))),
-      AlarmState(Nil, Nil, "OK", None, None))
+    val (st, t) = foldSlots(AlarmState(Nil, Nil, "OK", None, None), conf,
+      0L -> Some(1.0), 60L -> None, 120L -> Some(1.0))
     assert(st.state == "ALARM", s"streaming IGNORE diverged: $st")
     assert(t.map(_.newState) == List("ALARM"))
   }
@@ -154,24 +161,22 @@ class AlarmMachineSpec extends SparkTestBase {
   }
 
   test("streaming core: same truth table, incremental batches") {
-    def pt(ws: Long, v: Option[Double]) = SeriesPoint("s1", ws, v, 60L, 5.0,
-      "GREATER_THAN_OR_EQUAL_TO_THRESHOLD", 2, 3, "NOT_BREACHING")
-    val (st1, t1) = AlarmStream.advance(
-      Iterator(pt(0, Some(10.0)), pt(60, Some(1.0))),
-      AlarmState(Nil, Nil, "INSUFFICIENT_DATA", None, None))
+    val conf = SlaConf(60L, 5.0, "GREATER_THAN_OR_EQUAL_TO_THRESHOLD", 2, 3,
+      "NOT_BREACHING")
+    val (st1, t1) = foldSlots(
+      AlarmState(Nil, Nil, "INSUFFICIENT_DATA", None, None), conf,
+      0L -> Some(10.0), 60L -> Some(1.0))
     assert(t1.map(_.newState) == List("OK"))
-    val (st2, t2) = AlarmStream.advance(Iterator(pt(120, Some(10.0))), st1)
+    val (st2, t2) = foldSlots(st1, conf, 120L -> Some(10.0))
     assert(t2.map(_.newState) == List("ALARM"))
-    val (_, t3) = AlarmStream.advance(
-      Iterator(pt(180, Some(1.0)), pt(240, Some(1.0))), st2)
+    val (_, t3) = foldSlots(st2, conf, 180L -> Some(1.0), 240L -> Some(1.0))
     assert(t3.map(_.newState) == List("OK"))
   }
 
   test("streaming core: MISSING policy yields INSUFFICIENT_DATA on empty window") {
-    def pt(ws: Long, v: Option[Double]) = SeriesPoint("s1", ws, v, 60L, 5.0,
-      "GREATER_THAN_THRESHOLD", 1, 2, "MISSING")
-    val (_, t) = AlarmStream.advance(
-      Iterator(pt(0, None), pt(60, None)), AlarmState(Nil, Nil, "OK", None, None))
+    val conf = SlaConf(60L, 5.0, "GREATER_THAN_THRESHOLD", 1, 2, "MISSING")
+    val (_, t) = foldSlots(AlarmState(Nil, Nil, "OK", None, None), conf,
+      0L -> None, 60L -> None)
     assert(t.map(_.newState) == List("INSUFFICIENT_DATA"))
   }
 }

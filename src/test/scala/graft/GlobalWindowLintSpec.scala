@@ -60,7 +60,11 @@ import org.scalatest.funsuite.AnyFunSuite
  * second builder or listener is how settings and counters drifted
  * apart across a dozen mains before; and `src/main` reads exactly the
  * listed `SPARK_GRAFT_*` environment keys, so a knob cannot come back
- * without this list changing with it.
+ * without this list changing with it; and each streaming or lake
+ * mechanism has one home — MemoryStream replays live in
+ * `PipelineReplay`, `AlarmStream` holds the per-slot machine and no
+ * stateful wiring, and only `RecordShape` writes the lake partition
+ * layout.
  */
 class GlobalWindowLintSpec extends AnyFunSuite {
 
@@ -180,5 +184,22 @@ class GlobalWindowLintSpec extends AnyFunSuite {
     assert(found == keys,
       s"""added: ${(found -- keys).toSeq.sorted.mkString(", ")}
          |missing: ${(keys -- found).toSeq.sorted.mkString(", ")}""".stripMargin)
+  }
+
+  test("src/main keeps one replay harness, one alarm operator and one lake write site") {
+    val homes = Seq(
+      "MemoryStream" -> ("\\bMemoryStream\\b", "graft/streaming/PipelineReplay.scala"),
+      // the literal key list or the schema's name list
+      "partitionBy(\"region\"" -> (
+        "\\.partitionBy\\s*\\(\\s*(\"region\"|Schemas\\s*\\.\\s*partitionColumnNames)",
+        "graft/operators/RecordShape.scala"))
+    val strays = homes.flatMap { case (what, (re, home)) =>
+      countSites("src/main/scala", java.util.regex.Pattern.compile(re))
+        .keys.filter(_ != home).map(rel => s"$what in $rel (belongs in $home)")
+    } ++ countSites("src/main/scala/graft/streaming/AlarmStream.scala",
+        java.util.regex.Pattern.compile("\\bflatMapGroupsWithState\\b"))
+      .keys.map(_ => "flatMapGroupsWithState in streaming/AlarmStream.scala " +
+        "(the operator is StreamingAlarmPipeline.evaluateStream)")
+    assert(strays.isEmpty, strays.mkString("\n"))
   }
 }

@@ -15,7 +15,7 @@ class PlanSweepSpec extends SparkTestBase {
     // enables spark.sql.crossJoin.enabled for user SQL, SURVEY §3.1) —
     // user-authored metric SQL may legitimately cross-join tiny tables.
     // q_*_stream_parity: building those frames runs the streaming
-    // replay harnesses (StreamParity / PipelineReplay); their plan
+    // replay harnesses (PipelineReplay); their plan
     // shapes are covered by their own specs.
     // Derived by the `_stream_parity` naming convention over the whole
     // declared surface (same round-13 fix as Bench.streamingQueries):

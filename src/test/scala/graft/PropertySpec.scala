@@ -5,7 +5,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.model._
 import graft.streaming.AlarmStream
-import graft.streaming.AlarmStream.{AlarmState, SeriesPoint}
+import graft.streaming.AlarmStream.AlarmState
 
 /** Property-based coverage (SURVEY §5.2): alarm monotonicity,
   * unique_id charset/stability invariants, ingest record round-trip. */
@@ -53,10 +53,11 @@ class PropertySpec extends AnyFunSuite {
     forAll3(valuesGen, Gen.chooseNum(1, 4), Gen.chooseNum(1, 4)) { (vs, m0, n0) =>
       val n = math.max(m0, n0); val m = math.min(m0, n0)
       def run(values: List[Double]): String = {
-        val pts = values.zipWithIndex.map { case (v, i) =>
-          SeriesPoint("s", i * 60L, Some(v), 60L, 5.0,
-            "GREATER_THAN_THRESHOLD", m, n, "NOT_BREACHING") }
-        AlarmStream.advance(pts.iterator, AlarmState(Nil, Nil, "OK", None, None))._1.state
+        val conf = AlarmStream.SlaConf(60L, 5.0, "GREATER_THAN_THRESHOLD", m, n,
+          "NOT_BREACHING")
+        values.zipWithIndex.foldLeft(AlarmState(Nil, Nil, "OK", None, None)) {
+          case (st, (v, i)) => AlarmStream.applySlot(st, "s", i * 60L, Some(v), conf)._1
+        }.state
       }
       val base = run(vs)
       // raise every value above threshold → breach count can only grow

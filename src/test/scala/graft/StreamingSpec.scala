@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.streaming.{AlarmStream, LakeIngest}
+import graft.streaming.LakeIngest
 
 class StreamingSpec extends SparkTestBase {
   import spark.implicits._
@@ -69,6 +69,25 @@ class StreamingSpec extends SparkTestBase {
         .collect().map(r => (r.getLong(1), r.getDouble(2))).toMap
       assert(out.get(0L).contains(4.0)) // first window emitted after watermark passed
     } finally q.stop()
+  }
+
+  test("streaming stat agg applies the batch statistic rule: non-finite values are no-data") {
+    import java.sql.Timestamp
+    def t(e: Long) = new Timestamp(e * 1000)
+    // NaN / ±Infinity beside finite values, and a window holding only NaN
+    val points = Seq(
+      ("s1", t(10), 1.0), ("s1", t(20), Double.NaN),
+      ("s1", t(70), 2.0), ("s1", t(75), Double.PositiveInfinity), ("s1", t(80), 3.0),
+      ("s1", t(130), Double.NegativeInfinity), ("s1", t(140), 4.0),
+      ("s2", t(10), Double.NaN), ("s2", t(70), 5.0))
+    for (stat <- graft.operators.StatWindowAgg.standardStats :+ "p90") {
+      val streamed = graft.streaming.PipelineReplay
+        .replayStatAgg(spark, points, stat, 60).toSet
+      val batch = graft.operators.StatWindowAgg
+        .aggregateOne(points.toDF("series_id", "ts", "value"), stat, 60)
+        .as[(String, Long, Double)].collect().toSet
+      assert(streamed == batch, s"$stat: stream $streamed vs batch $batch")
+    }
   }
 
   test("lake ingest resumes from checkpoint without duplicating rows (O-9)") {
@@ -218,15 +237,16 @@ class StreamingSpec extends SparkTestBase {
 
   test("streaming alarm transitions via flatMapGroupsWithState (O-23)") {
     implicit val sq = spark.sqlContext
-    val mem = MemoryStream[AlarmStream.SeriesPoint]
-    val q = AlarmStream.transitions(mem.toDS())
+    val mem = MemoryStream[(String, java.sql.Timestamp, Double)]
+    // one datapoint per window under Maximum: each window's value is
+    // its one point
+    val q = graft.streaming.StreamingAlarmPipeline
+      .evaluateStream(mem.toDF().toDF("series_id", "ts", "value"),
+        alarmSlas("s1", 2, 3, "NOT_BREACHING"), "Maximum", watermark = "0 seconds")
       .writeStream.format("memory").queryName("alarm_out")
       .outputMode("append").start()
-    def pt(ws: Long, v: Double) = AlarmStream.SeriesPoint("s1", ws, Some(v),
-      60L, 5.0, "GREATER_THAN_THRESHOLD", 2, 3, "NOT_BREACHING")
+    def pt(ws: Long, v: Double) = ("s1", new java.sql.Timestamp(ws * 1000), v)
     try {
-      // times start at 600: the initial event-time watermark is 0 and
-      // the stateful operator drops rows at-or-before the watermark
       mem.addData(pt(600, 9.0), pt(660, 9.0))
       q.processAllAvailable()
       mem.addData(pt(720, 1.0), pt(780, 1.0), pt(840, 1.0))
@@ -236,7 +256,8 @@ class StreamingSpec extends SparkTestBase {
         .orderBy("windowStart")
         .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
       // batch 1: first point settles to OK, second breach → ALARM;
-      // batch 2: breaches age out of the 3-window at ws=180 → OK.
+      // batch 2: breaches age out of the 3-window at ws=780 → OK (the
+      // window at 840 is still open: the watermark sits at its start).
       assert(out == Seq(
         (600L, "INSUFFICIENT_DATA", "OK"),
         (660L, "OK", "ALARM"),
@@ -244,35 +265,11 @@ class StreamingSpec extends SparkTestBase {
     } finally q.stop()
   }
 
-  test("streaming alarm: silent series reaches INSUFFICIENT_DATA via event-time timer") {
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[AlarmStream.SeriesPoint]
-    val q = AlarmStream.transitions(mem.toDS())
-      .writeStream.format("memory").queryName("alarm_silent")
-      .outputMode("append").start()
-    def pt(id: String, ws: Long, v: Double) = AlarmStream.SeriesPoint(id, ws,
-      Some(v), 60L, 5.0, "GREATER_THAN_THRESHOLD", 1, 2, "MISSING")
-    try {
-      // s1 reports twice then goes silent; s2 keeps the watermark moving
-      mem.addData(pt("s1", 600, 9.0), pt("s1", 660, 9.0), pt("s2", 600, 1.0))
-      q.processAllAvailable()
-      mem.addData(pt("s2", 1200, 1.0)) // watermark → 1200s
-      q.processAllAvailable()
-      mem.addData(pt("s2", 1800, 1.0)) // lets the s1 timer fire (wm 1200)
-      q.processAllAvailable()
-      val out = spark.table("alarm_silent")
-        .filter(col("seriesId") === "s1")
-        .select("windowStart", "prevState", "newState")
-        .orderBy("windowStart")
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
-      // s1: point at 600 breaches (M=1) → ALARM; silence: the last real
-      // datapoint ages out of the N=2 slot window two slots after 660
-      // (slots 720, 780 missing) → INSUFFICIENT_DATA at ws=780.
-      assert(out == Seq(
-        (600L, "INSUFFICIENT_DATA", "ALARM"),
-        (780L, "ALARM", "INSUFFICIENT_DATA")), s"got $out")
-    } finally q.stop()
-  }
+  /** One SLA on `sid`: period 60, Maximum > 5.0, M of N. */
+  private def alarmSlas(sid: String, m: Int, n: Int, missing: String) =
+    Seq((sid, 60L, 5.0, "GREATER_THAN_THRESHOLD", m, n, missing))
+      .toDF("series_id", "period", "threshold", "comparison_operator",
+        "datapoints_to_alarm", "evaluation_periods", "treat_missing_data")
 
   test("end-to-end stream: datapoints → stat windows → alarm transitions") {
     implicit val sq = spark.sqlContext
@@ -382,16 +379,19 @@ class StreamingSpec extends SparkTestBase {
 
   test("streaming alarm: multi-window gap casts one missing vote per slot (BREACHING)") {
     implicit val sq = spark.sqlContext
-    val mem = MemoryStream[AlarmStream.SeriesPoint]
-    val q = AlarmStream.transitions(mem.toDS())
+    val mem = MemoryStream[(String, java.sql.Timestamp, Double)]
+    // M=3 of N=3, BREACHING: only ≥3 consecutive missing slots alarm
+    val q = graft.streaming.StreamingAlarmPipeline
+      .evaluateStream(mem.toDF().toDF("series_id", "ts", "value"),
+        alarmSlas("g1", 3, 3, "BREACHING"), "Maximum", watermark = "0 seconds")
       .writeStream.format("memory").queryName("alarm_gap")
       .outputMode("append").start()
-    // M=3 of N=3, BREACHING: only ≥3 consecutive missing slots alarm
-    def pt(ws: Long, v: Double) = AlarmStream.SeriesPoint("g1", ws, Some(v),
-      60L, 5.0, "GREATER_THAN_THRESHOLD", 3, 3, "BREACHING")
+    def pt(ws: Long, v: Double) = ("g1", new java.sql.Timestamp(ws * 1000), v)
     try {
-      // gap of exactly 3 windows (720, 780, 840 missing) between 660 and 900
-      mem.addData(pt(600, 1.0), pt(660, 1.0), pt(900, 1.0))
+      // gap of exactly 3 windows (720, 780, 840 missing) between 660
+      // and 900; the point at 960 moves the watermark to 900's end,
+      // which closes that window
+      mem.addData(pt(600, 1.0), pt(660, 1.0), pt(900, 1.0), pt(960, 1.0))
       q.processAllAvailable()
       val out = spark.table("alarm_gap")
         .select("windowStart", "prevState", "newState")
@@ -608,6 +608,15 @@ class StreamingSpec extends SparkTestBase {
       StreamingAlarmPipeline.evaluateStream(
         dp, slasWith(60L, "GREATER_THAN_THRESHOLD", "missng"), "Sum")
     }
+    // the batch machine's SLA check: evaluation_periods below 1 and a
+    // null threshold or datapoints_to_alarm die here, not when the
+    // first window is evaluated
+    for (bad <- Seq(okSlas.withColumn("evaluation_periods", lit(0)),
+        okSlas.withColumn("threshold", lit(null).cast("double")),
+        okSlas.withColumn("datapoints_to_alarm", lit(null).cast("int"))))
+      intercept[IllegalArgumentException] {
+        StreamingAlarmPipeline.evaluateStream(dp, bad, "Sum")
+      }
     // out-of-range and malformed percentiles are "unsupported", not a
     // deferred QuantileSummaries/NumberFormat crash
     for (bad <- Seq("p200", "p1.2.3", "p.", "p0"))
