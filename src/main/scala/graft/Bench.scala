@@ -66,11 +66,13 @@ import org.apache.spark.sql.SparkSession
   * Run records: a [[RunMetrics]] listener counts each sample's Spark
   * jobs, stages, tasks, shuffle, spill, GC and peak task memory, split
   * into construction (the query function's eager jobs) and execution
-  * by job start time. `BENCH_DETAIL.json` carries them under "runs",
-  * one per committed sample (schema in ENGINE.md);
+  * by job start time, plus the sample's output rows and its task skew
+  * (`RunMetrics.maxOverMedianTask`). `BENCH_DETAIL.json` carries them
+  * under "runs", one per committed sample (schema in ENGINE.md);
   * `SPARK_GRAFT_ONLY=<q> SPARK_GRAFT_TRIALS=1` gives one query's
-  * record. The listener is drained and read after the timed window
-  * closes, so what is timed does not change.
+  * record, and the same run over `tools/make_sf1.py` copies of an sf
+  * directory is a scale profile. The listener is drained and read
+  * after the timed window closes, so what is timed does not change.
   *
   * Output: the full artifact goes to BENCH_DETAIL.json; stdout carries
   * three JSON lines — per-query medians, totals, and the
@@ -227,6 +229,7 @@ object Bench {
       metrics.reset()
       var df: org.apache.spark.sql.DataFrame = null
       var built = 0L
+      var rows = -1L
       val cpu0 = processCpuSec()
       val t0 = System.nanoTime()
       // toRdd.count(), NOT Dataset.count() (round 10, format 4): see
@@ -236,7 +239,7 @@ object Bench {
       val ok = try {
         df = fn(spark, sfDir)
         built = System.nanoTime()
-        df.queryExecution.toRdd.count(); true }
+        rows = df.queryExecution.toRdd.count(); true }
         catch { case scala.util.control.NonFatal(e) =>
           // first failure message per query goes into the artifact —
           // a silent -1 is undiagnosable from the driver's capture.
@@ -257,6 +260,7 @@ object Bench {
       // construction: the eager checkpoint / collect rounds of the
       // iterative operators. Catalyst phase times are read only now:
       // before execution the tracker holds the analysis phase alone.
+      // `rows` is the count the timed window produced (-1 on failure).
       if (built == 0L) built = System.nanoTime()
       val builtMs = System.currentTimeMillis() - (System.nanoTime() - built) / 1000000L
       val (constructed, all) = metrics.read(builtMs)
@@ -266,7 +270,8 @@ object Bench {
           "\"" + phase + "\":" + (p.endTimeMs - p.startTimeMs) })
       val run = s"""{"sweep":$sweepIdx,"construct_s":${f6(constructS)},""" +
         s""""execute_s":${f6(dt - constructS)},"construct_jobs":${constructed.jobs},""" +
-        all.jsonFields + phases.mkString(",\"phase_ms\":{", ",", "}}")
+        all.jsonFields + s""","rows":$rows,"max_over_median_task":""" +
+        f3(metrics.maxOverMedianTask) + phases.mkString(",\"phase_ms\":{", ",", "}}")
       spark.catalog.clearCache()
       if (streamingQueries.contains(name)) drainStreamingResidue()
       ((dt, dcpu, ok), run)

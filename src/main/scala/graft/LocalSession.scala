@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one local session the harness mains (`Bench`, `Verify`,
-  * `PlanDump`, `ProfileScale`) run on, so their numbers and plans come
-  * from the same settings. `MetricsMain` is the production job and
+  * `PlanDump`) run on, so their numbers and plans come from the same
+  * settings. `MetricsMain` is the production job and
   * builds its own session from deployment settings. */
 object LocalSession {
 

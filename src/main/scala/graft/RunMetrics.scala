@@ -99,6 +99,28 @@ final class RunMetrics private (spark: SparkSession) extends SparkListener {
     synchronized(taskMs.map { case (s, ts) => s -> ts.toVector }.toMap)
   }
 
+  /** Task skew since the last `reset`: the worst max/median task run
+    * time over stages with ≥ 8 tasks, max task ≥ 200 ms AND median
+    * task ≥ 50 ms; 1.0 when no stage qualifies. A stage whose median
+    * is a few milliseconds can show an 8×+ max/median from a single GC
+    * pause or scheduler hiccup — that is task-launch jitter, not data
+    * skew, and at real scale such a stage is nowhere near the critical
+    * path. The floors keep the number about load imbalance a cluster
+    * would feel. */
+  def maxOverMedianTask: Double = {
+    var worst = 1.0
+    stageTaskMs.values.foreach { tasks =>
+      if (tasks.length >= 8) {
+        val durs = tasks.sorted
+        val max = durs.last
+        val med = durs(durs.length / 2)
+        if (max >= 200 && med >= 50 && max.toDouble / med > worst)
+          worst = max.toDouble / med
+      }
+    }
+    worst
+  }
+
   def detach(): Unit = spark.sparkContext.removeSparkListener(this)
 }
 

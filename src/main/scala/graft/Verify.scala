@@ -22,21 +22,11 @@ object Verify {
       // release operator-level caches between queries
       spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // jsonObject escapes quote, backslash and every control char: a tab
+    // or CR in oracle SQL would otherwise make a json.load of the file
+    // fail and drop every oracle compare.
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      graft.registry.DefinitionExport.jsonObject(SparkEntry.oracleSql.toSeq))
     spark.stop()
   }
 }

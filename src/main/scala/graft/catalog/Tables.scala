@@ -16,10 +16,6 @@ import graft.model.TableRef
  */
 object Tables {
 
-  val testTables: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   /** Read one lake table rooted at `sfDir` (parquet-per-table layout,
     * TESTDATA.md). Filters/projections on the result push down to the
     * parquet scan via Catalyst.
@@ -47,9 +43,4 @@ object Tables {
     refs.distinct.foreach { ref =>
       read(spark, sfDir, ref.table).createOrReplaceTempView(ref.alias)
     }
-
-  /** Register every test table as a view with its own name — the local
-    * equivalent of the Glue catalog being fully populated. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    registerDatasets(spark, sfDir, testTables.map(TableRef("lake", _)))
 }

@@ -250,8 +250,8 @@ private[graft] object VectorEntries {
     // retrieval both directions, fixed-point margin, mutual-best
     // pairs over margin >= 1.0. Sides bounded to vec_id < 1000 so the
     // oracle's all-pairs cosine replay stays tractable a decade up —
-    // the scale path swaps in ivfTopK/lshTopK lists (profiled in the
-    // ProfileScale bitext cell), margin arithmetic unchanged.
+    // the scale path swaps in ivfTopK/lshTopK lists (profiled in
+    // PROFILE_r18.json's bitext_mine row), margin arithmetic unchanged.
     "q_bitext_mine" -> { (s, dir) =>
       val e = spread(Tables.read(s, dir, "embeddings"))
         .filter(col("vec_id") < 1000)

@@ -15,12 +15,6 @@ import org.apache.spark.sql.functions._
  */
 object KeyFns {
 
-  /** O-29: frequency → period seconds (metric.py:92-101). */
-  def freqToPeriod(frequency: Column): Column =
-    when(frequency === "day", 86400)
-      .when(frequency === "hour", 3600)
-      .when(frequency === "minute", 60)
-
   /** O-30: unique_id — concat parts, strip non-word chars, lowercase
     * (metric.py:144-155). Callers pre-concat dimension name/value pairs
     * (minus *Bucket dims) into `parts`. */

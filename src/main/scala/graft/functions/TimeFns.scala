@@ -12,21 +12,11 @@ object TimeFns {
   /** O-13: snap a timestamp down to the previous 10-minute boundary —
     * end = t − (minute % 10, seconds, micros) — so the queried window
     * is complete/stable despite ingestion lag
-    * (metric_stream_producer.py:40-43). Pure epoch arithmetic keeps it
-    * codegen-friendly and timezone-proof. */
-  def alignEnd10Min(ts: Column): Column =
-    timestamp_seconds(floor(unix_timestamp(ts) / 600) * 600)
-
-  /** Epoch-second form of the 10-minute alignment (for bigint outputs
-    * that hash identically across engines). */
+    * (metric_stream_producer.py:40-43), as epoch seconds (a bigint
+    * output hashes identically across engines). Pure epoch arithmetic
+    * keeps it codegen-friendly and timezone-proof. */
   def alignEnd10MinEpoch(ts: Column): Column =
     (floor(unix_timestamp(ts) / 600) * 600).cast("long")
-
-  /** Window start for a period-seconds tumbling window, as epoch
-    * seconds (O-12 window bucketing; equivalent to
-    * window(ts, s"$period seconds").start with UTC origin). */
-  def windowStartEpoch(ts: Column, periodSeconds: Int): Column =
-    (floor(unix_timestamp(ts) / periodSeconds) * periodSeconds).cast("long")
 
   /** O-35: ISO-8601 UTC stamping of a fixed instant (reference stamps
     * wall-clock utcnow; the engine always takes the instant as input so

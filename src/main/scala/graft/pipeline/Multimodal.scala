@@ -251,35 +251,6 @@ object Multimodal {
     media.as[MediaRecord].mapPartitions(it => decodeBatch(it, frameStride))
   }
 
-  /** Debug instrumentation: per-kind decode cost of the SAME decode
-    * path [[extractFeatures]] runs, so a codec regression (e.g. the
-    * round-7 switch to real per-frame video decode) is attributable to
-    * its kind instead of showing up as an opaque q_media_features
-    * delta. One row per kind: (kind, n_records, decode_sec,
-    * payload_bytes). Not an oracle query — wall times are
-    * nondeterministic by nature; numbers land in PLANS.md. */
-  def timeByKind(media: DataFrame, frameStride: Int = 2): DataFrame = {
-    require(frameStride > 0, "frameStride must be positive")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      val acc = scala.collection.mutable.Map.empty[String, (Long, Long, Long)]
-      it.foreach { r =>
-        val t0 = System.nanoTime()
-        decodeBatch(Iterator(r), frameStride).foreach(_ => ())
-        val dt = System.nanoTime() - t0
-        val (n, ns, bytes) = acc.getOrElse(r.kind, (0L, 0L, 0L))
-        acc(r.kind) = (n + 1, ns + dt, bytes + r.payload.length)
-      }
-      acc.iterator.map { case (k, (n, ns, bytes)) => (k, n, ns, bytes) }
-    }.toDF("kind", "n", "nanos", "bytes")
-      .groupBy("kind")
-      .agg(sum("n").as("n_records"),
-        (sum("nanos") / 1e9).as("decode_sec"),
-        sum("bytes").as("payload_bytes"))
-      .orderBy("kind")
-  }
-
   /** Resize metadata transform (pure column math — no decode needed):
     * clamps to maxDim preserving aspect ratio. */
   def resizePlan(media: DataFrame, maxDim: Int): DataFrame = {

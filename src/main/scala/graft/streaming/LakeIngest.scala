@@ -63,9 +63,6 @@ object LakeIngest {
       .withColumn("parsed", from_json(col("value"), parseSchema,
         Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> corruptCol)))
 
-    records.sparkSession.sqlContext.setConf(
-      "spark.sql.streaming.schemaInference", "false")
-
     // open-partition tracker for the compaction pass; foreachBatch
     // invocations are serialized per query, so no synchronization
     val openPartitions = scala.collection.mutable.Map.empty[String, Long]

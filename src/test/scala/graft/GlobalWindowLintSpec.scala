@@ -60,7 +60,9 @@ import org.scalatest.funsuite.AnyFunSuite
  * second builder or listener is how settings and counters drifted
  * apart across a dozen mains before; and `src/main` reads exactly the
  * listed `SPARK_GRAFT_*` environment keys, so a knob cannot come back
- * without this list changing with it; and each streaming or lake
+ * without this list changing with it; the only `main`s are the
+ * harness mains `Bench`, `Verify` and `PlanDump` and the production
+ * `MetricsMain`; and each streaming or lake
  * mechanism has one home — MemoryStream replays live in
  * `PipelineReplay`, `AlarmStream` holds the per-slot machine and no
  * stateful wiring, and only `RecordShape` writes the lake partition
@@ -174,8 +176,7 @@ class GlobalWindowLintSpec extends AnyFunSuite {
     // Every key is a configuration the tests and the benchmark must
     // cover; a new one must be added here on purpose.
     val keys = Set("CPUS", "SF_DIR", "ONLY", "SKIP", "TRIALS", "WARMUP",
-      "WALL_BUDGET", "RERUNS", "ORDER_SEED", "PROFILE_ONLY",
-      "PROFILE_TRIALS").map("SPARK_GRAFT_" + _)
+      "WALL_BUDGET", "RERUNS", "ORDER_SEED").map("SPARK_GRAFT_" + _)
     val pat = java.util.regex.Pattern.compile("SPARK_GRAFT_[A-Z0-9_]+")
     val found = sources("src/main").flatMap { case (_, src) =>
       val m = pat.matcher(src)
@@ -184,6 +185,26 @@ class GlobalWindowLintSpec extends AnyFunSuite {
     assert(found == keys,
       s"""added: ${(found -- keys).toSeq.sorted.mkString(", ")}
          |missing: ${(keys -- found).toSeq.sorted.mkString(", ")}""".stripMargin)
+  }
+
+  test("src/main defines main in Bench, Verify, PlanDump and MetricsMain only") {
+    // A profile or forensic run is a Bench run (its run records carry
+    // the counters), not a new main with its own harness and schema.
+    val defMain = java.util.regex.Pattern.compile("\\bdef\\s+main\\s*\\(")
+    val objectName = java.util.regex.Pattern.compile("\\bobject\\s+(\\w+)")
+    val found = sources("src/main/scala").flatMap { case (rel, src) =>
+      val pkg = rel.stripPrefix("graft/").split('/').init
+      val m = defMain.matcher(src)
+      Iterator.continually(m).takeWhile(_.find()).map { h =>
+        // the object that encloses this main: the last one declared before it
+        val o = objectName.matcher(src.substring(0, h.start()))
+        val name = Iterator.continually(o).takeWhile(_.find())
+          .map(_.group(1)).toSeq.lastOption.getOrElse("?")
+        (pkg :+ name).mkString(".")
+      }
+    }.toSet
+    assert(found == Set("Bench", "Verify", "PlanDump", "metrics.MetricsMain"),
+      s"observed: ${found.toSeq.sorted.mkString(", ")}")
   }
 
   test("src/main keeps one replay harness, one alarm operator and one lake write site") {

@@ -27,4 +27,31 @@ class RunMetricsSpec extends SparkTestBase {
       assert(metrics.read()._2 == RunCounters())
     } finally metrics.detach()
   }
+
+  test("RunMetrics task skew: worst max/median over stages past the floors, else 1.0") {
+    val metrics = RunMetrics.attach(spark)
+    // one stage, one task per partition, each task sleeping ms(index)
+    def stage(ms: Int => Int, tasks: Int): Unit = {
+      spark.sparkContext.parallelize(0 until tasks, tasks)
+        .mapPartitionsWithIndex { (i, it) => Thread.sleep(ms(i)); it }
+        .count()
+    }
+    try {
+      metrics.reset()
+      stage(i => if (i == 7) 400 else 60, tasks = 8)
+      assert(metrics.maxOverMedianTask > 4.0, metrics.stageTaskMs)
+      // under the task-count floor: 7 tasks
+      metrics.reset()
+      stage(i => if (i == 6) 400 else 60, tasks = 7)
+      assert(metrics.maxOverMedianTask == 1.0, metrics.stageTaskMs)
+      // under the median floor: 8 tasks, median a few ms
+      metrics.reset()
+      stage(i => if (i == 7) 400 else 0, tasks = 8)
+      assert(metrics.maxOverMedianTask == 1.0, metrics.stageTaskMs)
+      // under the max floor: 8 tasks, slowest 100 ms
+      metrics.reset()
+      stage(i => if (i == 7) 100 else 60, tasks = 8)
+      assert(metrics.maxOverMedianTask == 1.0, metrics.stageTaskMs)
+    } finally metrics.detach()
+  }
 }

@@ -48,6 +48,20 @@ class StreamingSpec extends SparkTestBase {
     assert(spark.read.text(err).count() == 1)
   }
 
+  test("lake ingest leaves its caller's session conf alone") {
+    val child = spark.newSession()
+    val key = "spark.sql.streaming.schemaInference"
+    child.conf.set(key, "true")
+    implicit val sq = child.sqlContext
+    val mem = MemoryStream[String]
+    val q = LakeIngest.start(mem.toDF(),
+      Files.createTempDirectory("lake_conf").toString,
+      Files.createTempDirectory("lakeerr_conf").toString,
+      Files.createTempDirectory("ckpt_conf").toString,
+      trigger = Trigger.ProcessingTime("1 second"))
+    try assert(child.conf.get(key) == "true") finally q.stop()
+  }
+
   test("streaming stat agg: watermarked windows emit on watermark pass (O-12)") {
     implicit val sq = spark.sqlContext
     import java.sql.Timestamp
