@@ -112,14 +112,13 @@ object Bench {
     // machinery class — parquet scan, shuffle exchange, window,
     // broadcast join, object-hash/sort aggregate, streaming state
     // store + replay — which the subset below covers. The artifact's
-    // "warmup" field records the mode ("subset" / "full" / false).
+    // "warmup" field records the mode ("subset" / "full"), or false
+    // when no selected query was warmed.
     val warmupMode = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "subset") match {
       case "0" => "off"
       case "1" | "full" => "full"
       case _ => "subset"
     }
-    val warmedUp = warmupMode != "off" && warmDir.isDirectory
-    val warmupJson = if (!warmedUp) "false" else "\"" + warmupMode + "\""
     // one query per native-expression family + one per machinery class
     val warmupSubset: Set[String] = Set(
       "q_unigram_encode",      // viterbi_seg + unigram train chain
@@ -182,16 +181,16 @@ object Bench {
       try org.apache.spark.sql.execution.streaming.state.StateStore.stop()
       catch { case scala.util.control.NonFatal(_) => () }
     }
-    if (warmedUp) {
-      val warmNames =
-        if (warmupMode == "full") names
-        else names.filter { case (n, _) => warmupSubset(n) }
-      warmNames.foreach { case (name, fn) =>
-        try fn(spark, warmDir.getPath).queryExecution.toRdd.count()
-        catch { case scala.util.control.NonFatal(_) => () }
-        spark.catalog.clearCache()
-        if (streamingQueries.contains(name)) drainStreamingResidue()
-      }
+    val warmNames =
+      if (warmupMode == "off" || !warmDir.isDirectory) Nil
+      else if (warmupMode == "full") names
+      else names.filter { case (n, _) => warmupSubset(n) }
+    val warmupJson = if (warmNames.isEmpty) "false" else "\"" + warmupMode + "\""
+    warmNames.foreach { case (name, fn) =>
+      try fn(spark, warmDir.getPath).queryExecution.toRdd.count()
+      catch { case scala.util.control.NonFatal(_) => () }
+      spark.catalog.clearCache()
+      if (streamingQueries.contains(name)) drainStreamingResidue()
     }
     val errMsgs = scala.collection.mutable.Map.empty[String, String]
     // per-sample (wall seconds, process-CPU-delta seconds, ok)

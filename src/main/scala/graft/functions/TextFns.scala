@@ -49,24 +49,12 @@ object TextFns {
     trim(regexp_replace(translate(lower(text), accentSrc, accentDst),
       "[^a-z0-9]+", " "))
 
-  /** Word n-grams as space-joined strings (the shingles for MinHash /
-    * Jaccard dedup). Empty when the document has fewer than n tokens. */
-  def wordNgrams(text: Column, n: Int): Column = {
-    val w = tokens(text)
-    // guard: sequence(1, 0) would generate a DESCENDING sequence in
-    // Spark, so short docs return an empty array explicitly.
-    when(size(w) >= n,
-      transform(sequence(lit(1), size(w) - (n - 1)),
-        i => array_join(slice(w, i, lit(n)), " ")))
-      .otherwise(array().cast("array<string>"))
-  }
-
   /** Rolling-hash-style shingle fingerprint: the minimum md5 over the
     * document's word n-grams (a 1-hash MinHash), null for very short
     * docs. Shingles come from the native single-pass
     * [[graft.plans.WordShingles]] (byte-identical to the composed
-    * `wordNgrams`, whose interpreted transform/slice chain re-split
-    * the text per gram). */
+    * `ComposedReferences.wordNgrams` in test scope, whose interpreted
+    * transform/slice chain re-split the text per gram). */
   def shingleFingerprint(text: Column, n: Int = 3): Column =
     array_min(transform(graft.plans.WordShingles.shingles(text, n), s => md5(s)))
 
@@ -109,9 +97,10 @@ object TextFns {
     * deterministic and oracle-replicable. */
   def docSignals(text: Column, n: Int = 2): Column = {
     // Native WordShingles for token/gram counts (round 10): the
-    // composed tokens/wordNgrams chained interpreted higher-order
-    // functions (CodegenFallback), which both run per-element lambdas
-    // AND defeat common-subexpression elimination — through the
+    // composed tokens/wordNgrams (ComposedReferences.wordNgrams)
+    // chained interpreted higher-order functions (CodegenFallback),
+    // which both run per-element lambdas AND defeat
+    // common-subexpression elimination — through the
     // 3-field struct projection every document was re-tokenized up to
     // a dozen times and q_doc_signals alone cost 16 s of the sf0.1
     // bench. Results are bit-identical (WordShingles is byte-for-byte

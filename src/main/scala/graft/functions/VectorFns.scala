@@ -14,17 +14,13 @@ object VectorFns {
 
   /** Sequential dot product of two vectors (double accumulation), via
     * the native [[graft.plans.VecDot]] expression — the composed
-    * aggregate/zip_with form ([[foldDot]]) computes the identical
-    * left-to-right fold but pays interpreted lambda dispatch per
-    * element (higher-order functions are CodegenFallback), and the
-    * re-rank hot path evaluates three folds per candidate pair. */
+    * aggregate/zip_with form (`ComposedReferences.foldDot` in test
+    * scope, the reference the PipelineSpec cross-check asserts is
+    * bit-identical) computes the identical left-to-right fold but pays
+    * interpreted lambda dispatch per element (higher-order functions
+    * are CodegenFallback), and the re-rank hot path evaluates three
+    * folds per candidate pair. */
   def dot(a: Column, b: Column): Column = graft.plans.VecDot(a, b)
-
-  /** Reference implementation of [[dot]]; the PipelineSpec cross-check
-    * asserts the native expression is bit-identical. */
-  private[graft] def foldDot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
 
   /** Euclidean norm. */
   def norm(a: Column): Column = sqrt(dot(a, a))

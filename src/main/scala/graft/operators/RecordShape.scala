@@ -14,12 +14,6 @@ import graft.functions.TimeFns
  */
 object RecordShape {
 
-  /** O-33: fold name/value entry arrays into a JSON object string —
-    * the columnar form of the reference's dict + json.dumps
-    * (metric_stream_producer.py:113-120). Input: array<struct<name,value>>. */
-  def entriesToJson(entries: Column): Column =
-    to_json(map_from_entries(entries))
-
   /** O-34: newest datapoint with null-safe fallback
     * (metric_stream_producer.py:127-128): CloudWatch returns values
     * newest-first, so element 1 is the newest; empty array → null. */

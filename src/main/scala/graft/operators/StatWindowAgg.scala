@@ -56,8 +56,9 @@ object StatWindowAgg {
     require(standardStats.contains(statistic) || percentileFraction(statistic).isDefined,
       s"unsupported statistic: $statistic")
 
-  /** One statistic's aggregate over `valueCol`, shared by
-    * [[aggregateOne]] and the streaming [[graft.streaming.StreamingStatAgg]].
+  /** One statistic's aggregate over `valueCol`: the streaming
+    * [[graft.streaming.StreamingStatAgg]]'s aggregate, and the rule of
+    * its batch reference `ComposedReferences.aggregateOne` (test scope).
     * Average divides AFTER casting the exact decimal sum to double, as
     * [[aggregate]] does. */
   private[graft] def statColumn(statistic: String, valueCol: String): Column = {
@@ -148,15 +149,5 @@ object StatWindowAgg {
 
     grouped.select(col("series_id"), col("statistic"), col("period"), col("frequency"),
       col("window_start"), metricValue.as("metricvalue"))
-  }
-
-  /** Single-statistic variant with an explicit period — the direct
-    * engine form of one MetricDataQuery (stream.py:33-43). */
-  def aggregateOne(datapoints: DataFrame, statistic: String, periodSeconds: Int,
-      valueCol: String = "value", tsCol: String = "ts"): DataFrame = {
-    val windowStart =
-      (floor(unix_timestamp(col(tsCol)) / periodSeconds) * periodSeconds).cast("long")
-    finite(datapoints, valueCol).groupBy(col("series_id"), windowStart.as("window_start"))
-      .agg(statColumn(statistic, valueCol).as("metricvalue"))
   }
 }

@@ -47,78 +47,18 @@ object Classifier {
 
   /** Fractional bits of the fixed-point log2. */
   val FracBits: Int = 20
-  private val One: Long = 1L << FracBits
 
   /**
    * Appends `outCol = ilog2_fx(greatest(xCol, 1))` — the fixed-point
    * base-2 log — as ONE native codegen'd expression
    * ([[graft.plans.Ilog2Fx]]: the 31-iteration int64 loop runs inside
-   * whole-stage codegen). Bit-identical to [[withIlog2FxStaged]],
-   * which is kept as the independent staged-projection reference the
+   * whole-stage codegen). Bit-identical to the staged-projection
+   * reference `ComposedReferences.withIlog2FxStaged` (test scope) the
    * parity spec pins against.
    */
   def withIlog2Fx(df: DataFrame, xCol: String, outCol: String): DataFrame = {
     df.withColumn(outCol, graft.plans.Ilog2Fx.ilog2(
       greatest(col(xCol).cast("long"), lit(1L))))
-  }
-
-  /**
-   * Staged-projection rendition of the same iteration — one plan node
-   * per step (never one nested expression: each of the 31 steps reads
-   * its predecessor twice, and a single substituted tree would be 2³¹
-   * nodes). Superseded in the hot path by the native expression (the
-   * ~51 chained projections were the classifier family's dominant
-   * fixed planning/execution cost); retained as the independent
-   * reference implementation for the PipelineSpec parity pin.
-   *
-   * Algorithm, all int64 and branch-free per row: normalize
-   * `x = m·2^e` with `m ∈ [2³⁰, 2³¹)` by constant-power-of-two
-   * multiply/divide steps (6 down, 5 up — covers 1 ≤ x < 2⁶²), then
-   * 20 square-and-shift iterations extract the fractional bits
-   * (`m² ∈ [2⁶⁰, 2⁶²)` — inside int64). Result
-   * `(30+e)·2²⁰ + frac ∈ [0, 62·2²⁰]`.
-   */
-  def withIlog2FxStaged(df: DataFrame, xCol: String, outCol: String): DataFrame = {
-    var cur = df
-      .withColumn("__t", greatest(col(xCol).cast("long"), lit(1L)))
-      .withColumn("__e", lit(0L))
-    // normalize down: while t >= 2^31, in power-of-two jumps
-    for (s <- Seq(32, 16, 8, 4, 2, 1)) {
-      val thr = 1L << (30 + s)
-      val d = 1L << s
-      cur = cur
-        .withColumn("__c", col("__t") >= lit(thr))
-        .withColumn("__e",
-          when(col("__c"), col("__e") + lit(s.toLong)).otherwise(col("__e")))
-        .withColumn("__t",
-          when(col("__c"), expr(s"__t div ${d}L")).otherwise(col("__t")))
-    }
-    // normalize up: while t < 2^30 (inputs >= 1 need at most 30 doublings)
-    for (s <- Seq(16, 8, 4, 2, 1)) {
-      val thr = 1L << (31 - s)
-      val m = 1L << s
-      cur = cur
-        .withColumn("__c", col("__t") < lit(thr))
-        .withColumn("__e",
-          when(col("__c"), col("__e") - lit(s.toLong)).otherwise(col("__e")))
-        .withColumn("__t",
-          when(col("__c"), col("__t") * lit(m)).otherwise(col("__t")))
-    }
-    // fractional bits: square, compare to 2^61, renormalize
-    cur = cur.withColumn("__f", lit(0L))
-    for (_ <- 1 to FracBits) {
-      cur = cur
-        .withColumn("__sq", col("__t") * col("__t"))
-        .withColumn("__c", col("__sq") >= lit(1L << 61))
-        .withColumn("__t",
-          when(col("__c"), expr(s"__sq div ${1L << 31}L"))
-            .otherwise(expr(s"__sq div ${1L << 30}L")))
-        .withColumn("__f",
-          col("__f") * 2L + when(col("__c"), 1L).otherwise(0L))
-    }
-    cur
-      .withColumn(outCol, (lit(30L) + col("__e")) * lit(One) + col("__f"))
-      .drop("__t", "__e", "__c", "__sq", "__f")
   }
 
   private def tokens(textCol: Column): Column =

@@ -49,7 +49,7 @@ object Dedup {
   def minhashSignatures(docs: DataFrame, textCol: String, idCol: String,
       shingleN: Int, k: Int): DataFrame = {
     // native single-pass shingling: byte-identical to
-    // array_distinct(TextFns.wordNgrams(...)) — the composed form the
+    // array_distinct(ComposedReferences.wordNgrams(...)) — the composed form the
     // oracle replicates — without the five CodegenFallback hops
     val shingles = graft.plans.WordShingles.shingles(col(textCol), shingleN,
       distinct = true)

@@ -234,30 +234,6 @@ object Similarity {
     rank(candidates.withColumn("cosine", VectorFns.cosine(col("v_q"), col("v_c"))), k)
   }
 
-  /** Aggregator-based ranking: same contract as the window path but
-    * via the bounded-heap [[graft.plans.TopKAggregator]] — O(k) state
-    * per query with map-side partials instead of a full per-group
-    * sort; the scale path when candidate sets are large. */
-  def bruteForceTopKAgg(corpus: DataFrame, queries: DataFrame, k: Int,
-      vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    import graft.plans.{ScoredId, TopKAggregator}
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("v_c"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("v_q"))
-    val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        VectorFns.cosine(col("v_q"), col("v_c")).as("cosine"))
-      .as[(Long, Long, Double)]
-    scored.groupByKey(_._1)
-      .mapValues { case (_, nid, cos) => ScoredId(nid, cos) }
-      .agg(new TopKAggregator(k).toColumn)
-      .flatMap { case (qid, tops) =>
-        tops.zipWithIndex.map { case (s, i) => (qid, s.id, s.score, i + 1) } }
-      .toDF("query_id", "neighbor_id", "cosine", "rank")
-      .orderBy("query_id", "rank")
-  }
-
   /**
    * Hard-negative mining for contrastive training: per query vector,
    * the top-k most similar corpus vectors with a DIFFERENT label —

@@ -64,9 +64,10 @@ object UnigramLm {
    *
    * Round-17 optimization (the Ilog2Fx lesson applied to the
    * next-heaviest staged chain): the per-prefix-length staged join
-   * chain ([[viterbiStaged]], `maxWordLen` sequential union + join +
-   * struct-min + eager localCheckpoint steps — ~13 Spark jobs per
-   * call, and the unigram family runs ELEVEN calls per board sweep)
+   * chain (`ComposedReferences.viterbiStaged` in test scope,
+   * `maxWordLen` sequential union + join + struct-min + eager
+   * localCheckpoint steps — ~13 Spark jobs per call, and the unigram
+   * family runs ELEVEN calls per board sweep)
    * is replaced by ONE substring equi-join that materializes each
    * word's admissible candidate set `(s, k, w)` and ONE codegen'd
    * per-word DP expression ([[graft.plans.ViterbiSeg]], parity-pinned
@@ -113,81 +114,6 @@ object UnigramLm {
       .select(col("word"), col("cnt"), col("st.np").as("np"),
         col("st.ws").as("ws"), col("st.seg").as("seg"))
     if (checkpoint) out.localCheckpoint() else out
-  }
-
-  /**
-   * The staged-join rendition of [[viterbi]] — state j is a
-   * DataFrame, step j joins states j-maxPieceLen..j-1 with the piece
-   * table on the connecting substring, the per-step best is a
-   * struct-min aggregation (top-nBest window when `nBest` > 1).
-   * Superseded in the hot path by the native-DP form; retained as the
-   * independent reference implementation for the PipelineSpec parity
-   * pin (the [[graft.pipeline.Classifier.withIlog2FxStaged]]
-   * discipline).
-   */
-  private[graft] def viterbiStaged(words: DataFrame, pieces: DataFrame,
-      maxWordLen: Int, maxPieceLen: Int, nBest: Int = 1): DataFrame = {
-    require(nBest >= 1, "nBest must be positive")
-    val pc = pieces.select(col("piece"), col("w").cast("long").as("__w"))
-    val dp0 = words
-      .filter(length(col("word")).between(1, maxWordLen))
-      .select(col("word"), col("cnt"), lit(0L).as("np"),
-        lit(0L).as("ws"), lit("").as("seg"))
-      .withColumn("j", lit(0))
-      // eager checkpoints: an A/B against lazy (eager = false) showed
-      // no win from collapsing the per-step barriers — the DP frames
-      // are small and the joins dominate — and eager keeps each
-      // step's cost attributable in profiles
-      .localCheckpoint()
-    val perJ = scala.collection.mutable.ArrayBuffer[DataFrame](dp0)
-    for (j <- 1 to maxWordLen) {
-      val from = (math.max(0, j - maxPieceLen) until j).map(perJ(_))
-        .reduce(_ unionByName _)
-      val cand = from
-        .filter(length(col("word")) >= j)
-        .withColumn("k", lit(j) - col("j"))
-        .withColumn("piece", expr("substring(word, j + 1, k)"))
-        .join(pc, Seq("piece"), "left")
-        .filter(col("k") === 1 || col("__w").isNotNull)
-        .select(col("word"), col("cnt"),
-          (col("np") + 1L).as("np"),
-          (col("ws") + coalesce(col("__w"), lit(0L))).as("ws"),
-          concat(col("seg"), lit(Sep), col("piece")).as("seg"),
-          col("k"))
-      // unique best state per word: lexicographic struct-min =
-      // (np asc, ws desc, k desc); k differs across candidates of the
-      // same word (one candidate per predecessor state), so the order
-      // is total and seg is payload, never a comparator
-      val best =
-        if (nBest == 1)
-          cand
-            .groupBy("word", "cnt")
-            .agg(min(struct(col("np"), (-col("ws")).as("nws"),
-              (-col("k")).as("nk"), col("seg"), col("ws"))).as("b"))
-            .select(col("word"), col("cnt"), col("b.np").as("np"),
-              col("b.ws").as("ws"), col("b.seg").as("seg"))
-        else {
-          // n-best: keep the top states under the SAME order extended
-          // by seg — with >1 survivor per predecessor, candidates of
-          // one word can tie on (np, ws, k), and seg (which encodes
-          // the full segmentation, hence is distinct by construction)
-          // restores totality. The window partitions by word — a
-          // per-word top-n, never a global sort.
-          val byState = Window.partitionBy("word")
-            .orderBy(col("np"), col("ws").desc, col("k").desc, col("seg"))
-          cand.withColumn("__rn", row_number().over(byState))
-            .filter(col("__rn") <= nBest)
-            .select("word", "cnt", "np", "ws", "seg")
-        }
-      perJ += best.withColumn("j", lit(j)).localCheckpoint()
-    }
-    val out = perJ.toSeq.reduce(_ unionByName _)
-      .filter(col("j") === length(col("word")))
-      .select(col("word"), col("cnt"), col("np"), col("ws"),
-        expr("substring(seg, 2)").as("seg"))
-      .localCheckpoint()
-    perJ.foreach(Lineage.release)
-    out
   }
 
   /**

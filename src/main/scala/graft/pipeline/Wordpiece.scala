@@ -207,60 +207,4 @@ object Wordpiece {
         coalesce(col("n_pieces"), lit(0L)).as("n_pieces"),
         coalesce(col("n_unk_words"), lit(0L)).as("n_unk_words"))
   }
-
-  /** The driver-loop rendition of [[encode]] — cursor state advanced
-    * one greedy match per round over the settled/live split.
-    * Superseded in the hot path by the native walk; retained as the
-    * independent reference implementation for the PipelineSpec parity
-    * pin (the [[UnigramLm.viterbiStaged]] discipline). */
-  private[graft] def encodeLooped(docs: DataFrame, pieces: DataFrame,
-      maxWordLen: Int = 16, maxPieceLen: Int = 8, textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame = {
-    require(maxWordLen >= 1 && maxPieceLen >= 1, "positive length caps")
-    val p = pieces.select(col("piece").as("__pc"), col("is_initial").as("__pi"),
-      length(col("piece")).as("__pl"))
-    val occurrences = docs.select(col(idCol), explode(
-        graft.plans.WordShingles.shingles(col(textCol), 1)).as("word"))
-      .filter(!col("word").contains(Sep))
-    val words0 = occurrences.select("word").distinct()
-      .withColumn("__len", length(col("word")))
-      .withColumn("__unk", col("__len") > maxWordLen)
-      .withColumn("__pos", lit(0))
-      .withColumn("__n", lit(0L))
-    // loop invariant: rows with __unk or __pos = __len are settled
-    var state = words0.localCheckpoint()
-    var remaining = state.filter(!col("__unk") && col("__pos") < col("__len")).count()
-    while (remaining > 0) {
-      val live = state.filter(!col("__unk") && col("__pos") < col("__len"))
-      val settled = state.filter(col("__unk") || col("__pos") >= col("__len"))
-      val stepped = live
-        .select(col("word"), col("__len"), col("__pos"), col("__n"),
-          explode(sequence(lit(1),
-            least(lit(maxPieceLen), col("__len") - col("__pos")))).as("__l"))
-        .withColumn("__sub", expr("substring(word, __pos + 1, __l)"))
-        .join(p, col("__sub") === col("__pc") &&
-          col("__pi") === (col("__pos") === 0), "left")
-        .groupBy("word", "__len", "__pos", "__n")
-        .agg(max(when(col("__pl").isNotNull, col("__pl"))).as("__best"))
-        .select(col("word"), col("__len"),
-          col("__best").isNull.as("__unk"),
-          (col("__pos") + coalesce(col("__best"), lit(0))).cast("int").as("__pos"),
-          (col("__n") + 1L).as("__n"))
-      state = Lineage.cycle(settled.unionByName(stepped), state)
-      remaining = state.filter(!col("__unk") && col("__pos") < col("__len")).count()
-    }
-    val perWord = state.select(col("word"),
-      when(col("__unk"), 1L).otherwise(col("__n")).as("__units"),
-      col("__unk").cast("long").as("__u"))
-    val counted = occurrences.join(perWord, Seq("word"))
-      .groupBy(idCol)
-      .agg(count(lit(1)).cast("long").as("n_words"),
-        sum("__units").cast("long").as("n_pieces"),
-        sum("__u").cast("long").as("n_unk_words"))
-    docs.select(col(idCol)).join(counted, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("n_words"), lit(0L)).as("n_words"),
-        coalesce(col("n_pieces"), lit(0L)).as("n_pieces"),
-        coalesce(col("n_unk_words"), lit(0L)).as("n_unk_words"))
-  }
 }

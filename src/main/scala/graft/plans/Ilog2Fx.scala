@@ -16,14 +16,14 @@ import org.apache.spark.sql.types.{DataType, LongType}
  * identical on any engine with 64-bit integer arithmetic — the DuckDB
  * oracle unrolls the same iteration in CTEs).
  *
- * Replaces the staged-projection rendition
- * ([[graft.pipeline.Classifier.withIlog2FxStaged]], ~51 chained
- * projections: 11 normalize steps + 20 square-shift iterations, each a
- * full plan node) with ONE codegen'd expression — the 31-iteration
- * int64 loop below runs inside whole-stage codegen like any arithmetic
- * op. Bit-identical to the staged form (parity-pinned in PipelineSpec
- * on the 300+-value set); the staged form is kept solely as the
- * independent reference for that pin.
+ * Replaces the staged-projection rendition (~51 chained projections:
+ * 11 normalize steps + 20 square-shift iterations, each a full plan
+ * node) with ONE codegen'd expression — the 31-iteration int64 loop
+ * below runs inside whole-stage codegen like any arithmetic op.
+ * Bit-identical to the staged form (parity-pinned in PipelineSpec on
+ * the 300+-value set); the staged form lives in test scope as
+ * `ComposedReferences.withIlog2FxStaged`, solely as the independent
+ * reference for that pin.
  *
  * Algorithm, all int64 and total on every input: clamp x to ≥ 1,
  * normalize `x = m·2^e` with `m ∈ [2³⁰, 2³¹)` by power-of-two jumps

@@ -18,7 +18,8 @@ import org.apache.spark.unsafe.types.UTF8String
  * family's dominant fixed cost; the r16 classifier `Ilog2Fx` lesson
  * applied to the next-heaviest staged chain).
  *
- * Contract (bit-identical to the staged DP, which PipelineSpec pins
+ * Contract (bit-identical to the staged DP
+ * `ComposedReferences.viterbiStaged`, which PipelineSpec pins
  * against): given a word and the set of admissible piece candidates
  * `(s, k, w)` — 1-based char start, char length, weight; single chars
  * are always admissible (weight 0 when absent from the inventory),

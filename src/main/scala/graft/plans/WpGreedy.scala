@@ -18,7 +18,8 @@ import org.apache.spark.sql.types._
  * argmax aggregation + localCheckpoint cycle + a counting action —
  * ~2 Spark jobs per round, all fixed cost).
  *
- * Contract (bit-identical to the loop, pinned in PipelineSpec): given
+ * Contract (bit-identical to the loop
+ * `ComposedReferences.encodeLooped`, pinned in PipelineSpec): given
  * a word's char length and the set of piece matches `(pos, l)` —
  * 0-based cursor position, matched piece char length, already
  * class-filtered (word-initial pieces at pos 0, continuation pieces

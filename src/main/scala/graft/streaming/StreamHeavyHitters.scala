@@ -40,13 +40,8 @@ object StreamHeavyHitters {
     val spark = tokens.sparkSession
     import spark.implicits._
 
-    def mgAdd(m: Map[String, Long], x: String): Map[String, Long] =
-      m.get(x) match {
-        case Some(c) => m.updated(x, c + 1)
-        case None if m.size < capacity => m.updated(x, 1L)
-        case None => m.flatMap { case (k, v) =>
-          if (v > 1) Some(k -> (v - 1)) else None }
-      }
+    // the batch aggregator's reduce is the one Misra-Gries step
+    val mg = new graft.pipeline.MisraGriesAggregator(capacity)
 
     tokens
       .select(pmod(hash(col("token")), lit(buckets)).as("bucket"), col("token"))
@@ -56,7 +51,7 @@ object StreamHeavyHitters {
         OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
         case (bucket, rows, state: GroupState[Map[String, Long]]) =>
           val merged = rows.foldLeft(state.getOption.getOrElse(Map.empty)) {
-            case (m, (_, tok)) => mgAdd(m, tok)
+            case (m, (_, tok)) => mg.reduce(m, tok)
           }
           state.update(merged)
           merged.toSeq.sortBy(_._1)

@@ -19,7 +19,8 @@ import graft.operators.StatWindowAgg
  * The statistic rule is the batch one: NaN and ±Infinity are no-data
  * ([[StatWindowAgg.finite]]) and the aggregate is
  * [[StatWindowAgg.statColumn]], so the five standard statistics and
- * pNN read as [[StatWindowAgg.aggregateOne]] reads them.
+ * pNN read as the batch reference `ComposedReferences.aggregateOne`
+ * (test scope) reads them.
  */
 object StreamingStatAgg {
 

@@ -66,7 +66,8 @@ import org.scalatest.funsuite.AnyFunSuite
  * mechanism has one home — MemoryStream replays live in
  * `PipelineReplay`, `AlarmStream` holds the per-slot machine and no
  * stateful wiring, and only `RecordShape` writes the lake partition
- * layout.
+ * layout; and `src/main` holds one rendition of each operator, its
+ * parity references living in `ComposedReferences`.
  */
 class GlobalWindowLintSpec extends AnyFunSuite {
 
@@ -222,5 +223,18 @@ class GlobalWindowLintSpec extends AnyFunSuite {
       .keys.map(_ => "flatMapGroupsWithState in streaming/AlarmStream.scala " +
         "(the operator is StreamingAlarmPipeline.evaluateStream)")
     assert(strays.isEmpty, strays.mkString("\n"))
+  }
+
+  test("src/main keeps one rendition per operator") {
+    // A second rendition kept as a parity reference lives in
+    // ComposedReferences (test scope); one with no caller is deleted.
+    val pat = java.util.regex.Pattern.compile(
+      "\\bdef\\s+(\\w+(Staged|Looped|Composed)|foldDot|wordNgrams|aggregateOne" +
+        "|bruteForceTopKAgg|entriesToJson|mgAdd)\\b")
+    val hits = sources("src/main/scala").flatMap { case (rel, src) =>
+      val m = pat.matcher(src)
+      Iterator.continually(m).takeWhile(_.find()).map(h => s"$rel: ${h.group()}")
+    }
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

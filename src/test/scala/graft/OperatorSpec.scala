@@ -17,7 +17,7 @@ class OperatorSpec extends SparkTestBase {
       ("b", ts(10), 2.0), ("b", ts(20), 4.0))
       .toDF("series_id", "ts", "value")
     def one(stat: String) =
-      StatWindowAgg.aggregateOne(dp, stat, 60)
+      ComposedReferences.aggregateOne(dp, stat, 60)
         .orderBy("series_id", "window_start")
         .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(one("Sum") == Seq(("a", 0L, 4.0), ("a", 60L, 5.0), ("b", 0L, 6.0)))
@@ -53,7 +53,7 @@ class OperatorSpec extends SparkTestBase {
       .map(r => r.getString(0) -> r.getDouble(5)).toMap
     assert(got == stats.toMap)
     stats.foreach { case (s, want) =>
-      val one = StatWindowAgg.aggregateOne(dp.filter(col("series_id") === s), s, 60)
+      val one = ComposedReferences.aggregateOne(dp.filter(col("series_id") === s), s, 60)
         .collect().map(_.getDouble(2)).toSeq
       assert(one == Seq(want), s)
     }
@@ -103,11 +103,19 @@ class OperatorSpec extends SparkTestBase {
     assert(PartitionOps.expired(parts, 30, asOf).count() == 1)
   }
 
-  test("entriesToJson folds entry arrays like json.dumps (O-33)") {
-    val df = Seq(Seq(("a", "1"), ("b", "2"))).toDF("m")
-      .select(col("m").cast("array<struct<name:string,value:string>>").as("m"))
-    assert(df.select(RecordShape.entriesToJson(col("m"))).as[String].head()
-      == """{"a":"1","b":"2"}""")
+  test("jsonObject spells metadata/dimensions the way json.dumps does (O-33)") {
+    // the encoder behind the lake records' metadata and dimensions
+    // columns (seriesKeys -> enrichResults -> toMetricsRecords); each
+    // expected string is Python's json.dumps of the same dict
+    assert(DefinitionExport.jsonObject(Seq("b" -> "2", "a" -> "1"))
+      == """{"b": "2", "a": "1"}""")
+    assert(DefinitionExport.jsonObject(Nil) == "{}")
+    assert(DefinitionExport.jsonObject(Seq(
+        "q\"k" -> "back\\slash", "nl" -> "a\nb\r\tc"))
+      == """{"q\"k": "back\\slash", "nl": "a\nb\r\tc"}""")
+    // other control characters as lowercase four-digit u-escapes
+    assert(DefinitionExport.jsonObject(Seq("ctl" -> "\u0001\u001f"))
+      == "{\"ctl\": \"\\u0001\\u001f\"}")
   }
 
   test("arrayHead takes newest-first head with null fallback (O-34)") {

@@ -710,7 +710,7 @@ class PipelineSpec extends SparkTestBase {
         .viterbi(words, pieces, maxWordLen = 12, maxPieceLen = 4, nBest)
         .orderBy("word", "np", "ws", "seg")
         .as[(String, Long, Long, Long, String)].collect().toSeq
-      val staged = graft.pipeline.UnigramLm
+      val staged = ComposedReferences
         .viterbiStaged(words, pieces, maxWordLen = 12, maxPieceLen = 4, nBest)
         .orderBy("word", "np", "ws", "seg")
         .as[(String, Long, Long, Long, String)].collect().toSeq
@@ -734,7 +734,7 @@ class PipelineSpec extends SparkTestBase {
       ("x", true), ("y", false), ("z", false)).toDF("piece", "is_initial")
     val fast = graft.pipeline.Wordpiece.encode(d, pieces).orderBy("doc_id")
       .as[(Long, Long, Long, Long)].collect().toSeq
-    val looped = graft.pipeline.Wordpiece.encodeLooped(d, pieces)
+    val looped = ComposedReferences.encodeLooped(d, pieces)
       .orderBy("doc_id").as[(Long, Long, Long, Long)].collect().toSeq
     assert(fast == looped, s"native $fast vs looped $looped")
     // spot-check the hand-derivable rows: unhappy = un+happy (2),
@@ -1474,9 +1474,21 @@ class PipelineSpec extends SparkTestBase {
     val windowed = Similarity.bruteForceTopK(e, q, 5)
       .select("query_id", "neighbor_id", "rank")
       .as[(Long, Long, Int)].collect().toSet
-    val agged = Similarity.bruteForceTopKAgg(e, q, 5)
-      .select("query_id", "neighbor_id", "rank")
-      .as[(Long, Long, Int)].collect().toSet
+    // the bounded-heap aggregator q_topk_agg runs, driven over the
+    // same scored (query, neighbor) pairs the window path ranks
+    import graft.plans.{ScoredId, TopKAggregator}
+    val scored = e.select(col("vec_id").as("neighbor_id"), col("embedding").as("v_c"))
+      .join(broadcast(q.select(col("vec_id").as("query_id"), col("embedding").as("v_q"))),
+        col("query_id") =!= col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"),
+        VectorFns.cosine(col("v_q"), col("v_c")).as("cosine"))
+      .as[(Long, Long, Double)]
+    val agged = scored.groupByKey(_._1)
+      .mapValues { case (_, nid, cos) => ScoredId(nid, cos) }
+      .agg(new TopKAggregator(5).toColumn)
+      .flatMap { case (qid, tops) =>
+        tops.zipWithIndex.map { case (s, i) => (qid, s.id, i + 1) } }
+      .collect().toSet
     assert(agged == windowed)
   }
 
@@ -1529,7 +1541,7 @@ class PipelineSpec extends SparkTestBase {
   test("XxMinHash expression: codegen path, determinism, banding finds dups") {
     val sig = docsDf.select(col("doc_id"),
       graft.plans.XxMinHash.minhash(
-        graft.functions.TextFns.wordNgrams(col("text"), 3), 12).as("sig"))
+        ComposedReferences.wordNgrams(col("text"), 3), 12).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(sig(1L) == sig(4L))           // identical docs → identical signatures
     assert(sig(1L) != sig(3L))
@@ -1545,7 +1557,7 @@ class PipelineSpec extends SparkTestBase {
     val tmp = java.nio.file.Files.createTempDirectory("sh").toString
     Tables.read(spark, sf0001, "documents")
       .select(col("doc_id"),
-        graft.functions.TextFns.wordNgrams(col("text"), 3).as("shingles"))
+        ComposedReferences.wordNgrams(col("text"), 3).as("shingles"))
       .write.mode("overwrite").parquet(tmp)
     val plan = spark.read.parquet(tmp)
       .select(graft.plans.XxMinHash.minhash(col("shingles"), 12))
@@ -1560,7 +1572,7 @@ class PipelineSpec extends SparkTestBase {
     // Md5MinHash vs the transform/array_min md5 composition (the form
     // a SQL oracle replicates)
     val withShingles = docs.select(col("doc_id"),
-      array_distinct(graft.functions.TextFns.wordNgrams(col("text"), 3)).as("s"))
+      array_distinct(ComposedReferences.wordNgrams(col("text"), 3)).as("s"))
       .filter(size(col("s")) > 0)
     val composedSig = transform(sequence(lit(0), lit(11)),
       i => array_min(transform(col("s"), sh => md5(concat(i.cast("string"), lit(":"), sh)))))
@@ -1580,7 +1592,7 @@ class PipelineSpec extends SparkTestBase {
     // VecDot vs the aggregate/zip_with fold on real float vectors
     val e = Tables.read(spark, sf0001, "embeddings").limit(100)
     val mismatchDot = e.select(
-        VectorFns.foldDot(col("embedding"), col("embedding")).as("a"),
+        ComposedReferences.foldDot(col("embedding"), col("embedding")).as("a"),
         VectorFns.dot(col("embedding"), col("embedding")).as("b"))
       .filter(col("a") =!= col("b")).count()
     assert(mismatchDot == 0)
@@ -1595,9 +1607,9 @@ class PipelineSpec extends SparkTestBase {
     for (df <- Seq(crafted, docsTxt); n <- Seq(1, 3, 4)) {
       val mismatch = df.select(
           graft.plans.WordShingles.shingles(col("text"), n).as("a"),
-          graft.functions.TextFns.wordNgrams(col("text"), n).as("b"),
+          ComposedReferences.wordNgrams(col("text"), n).as("b"),
           graft.plans.WordShingles.shingles(col("text"), n, distinct = true).as("da"),
-          array_distinct(graft.functions.TextFns.wordNgrams(col("text"), n)).as("db"))
+          array_distinct(ComposedReferences.wordNgrams(col("text"), n)).as("db"))
         .filter(col("a") =!= col("b") || col("da") =!= col("db")).count()
       assert(mismatch == 0, s"n=$n")
     }
@@ -1639,7 +1651,7 @@ class PipelineSpec extends SparkTestBase {
     val vecs = Seq((Seq(1.0f, 2.0f, 3.0f), Seq(1.0f, 1.0f))).toDF("a", "b")
     val strictRow = vecs.select(
       VectorFns.dot(col("a"), col("b")).as("native"),
-      VectorFns.foldDot(col("a"), col("b")).as("composed")).head()
+      ComposedReferences.foldDot(col("a"), col("b")).as("composed")).head()
     assert(strictRow.isNullAt(0) && strictRow.isNullAt(1))
     // padded vec_dot: min-length fold (zero-pad identity for SRP planes)
     val padRow = vecs.select(
@@ -1738,7 +1750,7 @@ class PipelineSpec extends SparkTestBase {
   test("text functions: tokens, ngrams, langId edge cases") {
     val t = Seq(("  hello   world  ", 1L)).toDF("text", "id")
     assert(t.select(TextFns.tokenCount(col("text"))).as[Int].head() == 2)
-    assert(t.select(TextFns.wordNgrams(col("text"), 3)).as[Seq[String]].head().isEmpty)
+    assert(t.select(ComposedReferences.wordNgrams(col("text"), 3)).as[Seq[String]].head().isEmpty)
     val zh = Seq("你好 世界").toDF("text")
     assert(zh.select(TextFns.langId(col("text"))).as[String].head() == "zh")
     val und = Seq("zzz qqq").toDF("text")
@@ -2692,7 +2704,7 @@ class PipelineSpec extends SparkTestBase {
     got.foreach { case (x, lg) => assert(lg == ref(x), s"x=$x") }
     // parity pin: the native codegen'd expression (the hot path) is
     // bit-identical to the staged-projection reference rendition
-    val staged = Classifier.withIlog2FxStaged(
+    val staged = ComposedReferences.withIlog2FxStaged(
         xs.toDF("x"), "x", "lg")
       .orderBy("x").as[(Long, Long)].collect().toSeq
     assert(staged == got)

@@ -97,7 +97,7 @@ class StreamingSpec extends SparkTestBase {
     for (stat <- graft.operators.StatWindowAgg.standardStats :+ "p90") {
       val streamed = graft.streaming.PipelineReplay
         .replayStatAgg(spark, points, stat, 60).toSet
-      val batch = graft.operators.StatWindowAgg
+      val batch = ComposedReferences
         .aggregateOne(points.toDF("series_id", "ts", "value"), stat, 60)
         .as[(String, Long, Double)].collect().toSet
       assert(streamed == batch, s"$stat: stream $streamed vs batch $batch")
@@ -492,7 +492,7 @@ class StreamingSpec extends SparkTestBase {
       val win = values.foldLeft(StreamingAlarmPipeline.EmptyWin)(
         StreamingAlarmPipeline.absorb(_, _, keepSamples = true))
       val streamed = StreamingAlarmPipeline.statValue(stat, win)
-      val batch = graft.operators.StatWindowAgg.aggregateOne(
+      val batch = ComposedReferences.aggregateOne(
         values.map(v => ("s", new java.sql.Timestamp(0L), v))
           .toDF("series_id", "ts", "value"),
         stat, periodSeconds = 60)
@@ -536,7 +536,7 @@ class StreamingSpec extends SparkTestBase {
         pts(660, Seq.fill(10)(1.0)) ++ pts(720, (1 to 10).map(_ * 10.0)) ++
         pts(780, (1 to 10).map(_ * 10.0)))
         .toDF("series_id", "ts", "value")
-      val series = graft.operators.StatWindowAgg.aggregateOne(points, "p90", 60)
+      val series = ComposedReferences.aggregateOne(points, "p90", 60)
       val batch = graft.operators.AlarmStateMachine.evaluate(series, slas)
         .filter(col("transitioned"))
         .select("window_start", "prev_state", "statevalue").orderBy("window_start")
