@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * Queries run through the same SparkEntry contract the correctness
   * gate uses. Only the board's own samples feed the reported numbers;
   * nothing probes the host and nothing re-times a query outside the
-  * sweeps below.
+  * trial sweeps below.
   *
   * What is timed ("format":4, round 10): `queryExecution.toRdd.count()`,
   * which executes the query's own physical plan with every output
@@ -20,29 +20,20 @@ import org.apache.spark.sql.SparkSession
   * round (SPARK_GRAFT_TRIALS, default 5) and per-query statistics
   * aggregate across rounds, so a load spike wider than one query's
   * window inflates at most one sample per query. Each query reports
-  * its MEDIAN; "value" sums the engine medians and "floor" sums the
-  * per-query minima over ok samples. An untimed warm-up at the next
-  * smaller scale factor runs first (SPARK_GRAFT_WARMUP: the subset
-  * below by default, "full" for the whole board, "0" for none).
-  *
-  * Stall filter (round 14): each sample also records its process-CPU
-  * delta. A host stall inflates wall while CPU stays put, so a sample
-  * whose wall is > 1.2x the query's fastest (+50 ms) while its CPU
-  * stays within 1.25x of that sample's CPU is left out of the median
-  * when at least 3 clean samples remain; "stall_excluded" counts them.
-  *
-  * Repair and taint (rounds 8-9): a query whose median sits > 20% and
-  * > 100 ms over its minimum is unstable. Up to SPARK_GRAFT_RERUNS
-  * (default 2) extra sweeps re-time only the unstable queries, and
-  * "reran" counts them. More than 8 queries still unstable marks the
-  * artifact `"tainted":true`.
+  * the plain MEDIAN of its trial samples; "value" sums the engine
+  * medians and "floor" sums their plain minima. No sample is dropped
+  * and no query is re-timed: a filter that acts only on queries that
+  * already look slow pulls their medians toward the minimum, which
+  * "floor" reports on its own. An untimed warm-up at the next smaller
+  * scale factor runs first (SPARK_GRAFT_WARMUP: the subset below by
+  * default, "full" for the whole board, "0" for none).
   *
   * Wall budget (round 17): the driver kills the bench at a fixed wall
   * timeout, and round 16 shipped no artifact (rc=124). After trial 1
   * a projected wall prints to stderr; the trial loop stops early when
   * the next trial would pass 90% of SPARK_GRAFT_WALL_BUDGET (default
-  * 1800 s, 0 = unbounded), and repair sweeps stop at 75% of it.
-  * "trials" is the count actually run; "wall" carries the plan.
+  * 1800 s, 0 = unbounded). "trials" is the count actually run; "wall"
+  * carries the plan.
   *
   * Streaming isolation (rounds 8, 13): `*_stream_parity` queries run
   * LAST in every sweep. After each one the bench stops leftover
@@ -52,10 +43,8 @@ import org.apache.spark.sql.SparkSession
   * under "verification" and outside the engine-only "value".
   *
   * Selection: SPARK_GRAFT_ONLY / SPARK_GRAFT_SKIP (comma-separated
-  * query names). SPARK_GRAFT_ORDER_SEED permutes the batch order; a
-  * permuted run whose medians match the sorted run shows the timings
-  * are order-independent. Each run also writes a mode-keyed copy of
-  * the artifact (BENCH_DETAIL_sorted.json / BENCH_DETAIL_perm<seed>.json).
+  * query names). Batch queries run in name order; a permuted order
+  * gave the same medians (ENGINE.md "Bench harness").
   *
   * Baseline (report only): "baseline_ratios" is each query's minimum
   * over its BENCH_BASELINE_F4.json floor, and ratios > 1.5x are listed
@@ -68,7 +57,7 @@ import org.apache.spark.sql.SparkSession
   * into construction (the query function's eager jobs) and execution
   * by job start time, plus the sample's output rows and its task skew
   * (`RunMetrics.maxOverMedianTask`). `BENCH_DETAIL.json` carries them
-  * under "runs", one per committed sample (schema in ENGINE.md);
+  * under "runs", one per sample (schema in ENGINE.md);
   * `SPARK_GRAFT_ONLY=<q> SPARK_GRAFT_TRIALS=1` gives one query's
   * record, and the same run over `tools/make_sf1.py` copies of an sf
   * directory is a scale profile. The listener is drained and read
@@ -91,8 +80,7 @@ object Bench {
     val cpus = LocalSession.cpus(Runtime.getRuntime.availableProcessors())
     // 5 base trials (round 9; was 3): host stall windows hit 10-30% of
     // samples in bad stretches, and a 3-sample median flips as soon as
-    // 2 samples stall. 5 samples tolerate 2; with the repair passes an
-    // unstable query gets up to 7.
+    // 2 samples stall. A 5-sample median tolerates 2.
     val trials = math.max(1, sys.env.getOrElse("SPARK_GRAFT_TRIALS", "5").toInt)
     val spark = LocalSession(cpus)
     // Untimed warm-up at the next-smaller scale factor pays parquet
@@ -153,18 +141,10 @@ object Bench {
       .split(',').map(_.trim).filter(_.nonEmpty).toSet
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val orderSeed = sys.env.get("SPARK_GRAFT_ORDER_SEED").map(_.toLong)
-    val sorted = SparkEntry.queries.toSeq
+    val names = SparkEntry.queries.toSeq
       .filterNot { case (n, _) => skip.contains(n) }
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .sortBy { case (n, _) => (streamingQueries.contains(n), n) }
-    val names = orderSeed match {
-      case None => sorted
-      case Some(seed) =>
-        val (batch, streaming) = sorted.partition {
-          case (n, _) => !streamingQueries.contains(n) }
-        new scala.util.Random(seed).shuffle(batch) ++ streaming
-    }
     // Drop every trace a streaming query leaves in the shared JVM:
     // stop any stream that outlived its query, unload state-store
     // providers AND their maintenance thread (a fresh stream restarts
@@ -193,9 +173,9 @@ object Bench {
       if (streamingQueries.contains(name)) drainStreamingResidue()
     }
     val errMsgs = scala.collection.mutable.Map.empty[String, String]
-    // per-sample (wall seconds, process-CPU-delta seconds, ok)
+    // per-sample (wall seconds, ok)
     val samples = scala.collection.mutable.Map.empty[String,
-      scala.collection.mutable.ArrayBuffer[(Double, Double, Boolean)]]
+      scala.collection.mutable.ArrayBuffer[(Double, Boolean)]]
     // One run record (JSON object) per sample, tagged with its sweep
     // index: the layer counters that explain a sample's wall time.
     // RunMetrics is attached after the warm-up, so warm-up jobs are
@@ -203,23 +183,17 @@ object Bench {
     val runs = scala.collection.mutable.Map.empty[String,
       scala.collection.mutable.ArrayBuffer[String]]
     val metrics = RunMetrics.attach(spark)
-    // Process CPU time (all JVM threads) — the stall discriminator: a
-    // host stall inflates wall while the query's CPU seconds stay put.
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-    def processCpuSec(): Double = osBean.getProcessCpuTime / 1e9
     // Locale.ROOT: a comma-decimal default locale would emit invalid JSON.
     def f6(v: Double) = String.format(java.util.Locale.ROOT, "%.6f", Double.box(v))
     def f3(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    var sweepIdx = 0
     // Time ONE query: its sample and its run record. The timed window
     // is the QUERY alone — cache-clear and streaming teardown are
     // harness hygiene between timings, and charging them to the query
     // would re-create the measurement distortion the teardown exists
     // to prevent.
-    def timeOne(name: String,
+    def timeOne(sweep: Int, name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : ((Double, Double, Boolean), String) = {
+        : ((Double, Boolean), String) = {
       // a timing starts only on a streaming-quiet JVM (parent
       // session AND the child-session replay registry)
       require(leakedStreams().isEmpty,
@@ -229,7 +203,6 @@ object Bench {
       var df: org.apache.spark.sql.DataFrame = null
       var built = 0L
       var rows = -1L
-      val cpu0 = processCpuSec()
       val t0 = System.nanoTime()
       // toRdd.count(), NOT Dataset.count() (round 10, format 4): see
       // the scaladoc. toRdd executes the query's own physical plan
@@ -253,7 +226,6 @@ object Bench {
             }).replaceAll("[\\u0000-\\u001f\"\\\\]", " ").take(300))
           false }
       val dt = (System.nanoTime() - t0) / 1e9
-      val dcpu = processCpuSec() - cpu0
       // Run record, read after the window closed. Jobs that started
       // by `built` (mapped onto the jobs' wall clock) ran during
       // construction: the eager checkpoint / collect rounds of the
@@ -267,26 +239,13 @@ object Bench {
       val phases = Option(df).fold(Seq.empty[String])(_.queryExecution.tracker
         .phases.toSeq.sortBy(_._1).map { case (phase, p) =>
           "\"" + phase + "\":" + (p.endTimeMs - p.startTimeMs) })
-      val run = s"""{"sweep":$sweepIdx,"construct_s":${f6(constructS)},""" +
+      val run = s"""{"sweep":$sweep,"construct_s":${f6(constructS)},""" +
         s""""execute_s":${f6(dt - constructS)},"construct_jobs":${constructed.jobs},""" +
         all.jsonFields + s""","rows":$rows,"max_over_median_task":""" +
         f3(metrics.maxOverMedianTask) + phases.mkString(",\"phase_ms\":{", ",", "}}")
       spark.catalog.clearCache()
       if (streamingQueries.contains(name)) drainStreamingResidue()
-      ((dt, dcpu, ok), run)
-    }
-    // One timed pass over `qs`; appends one sample and one run record
-    // per query.
-    def sweep(qs: Seq[(String, (SparkSession, String) =>
-        org.apache.spark.sql.DataFrame)]): Unit = {
-      sweepIdx += 1
-      qs.foreach { case (name, fn) =>
-        val (sample, run) = timeOne(name, fn)
-        samples.getOrElseUpdate(name,
-          scala.collection.mutable.ArrayBuffer.empty) += sample
-        runs.getOrElseUpdate(name,
-          scala.collection.mutable.ArrayBuffer.empty) += run
-      }
+      ((dt, ok), run)
     }
     // Interleaved trial rounds: full sweep once per trial, so a load
     // spike lands on at most one sample of any given query. The GC
@@ -303,24 +262,30 @@ object Bench {
     // from fewer trials beats a timeout with none, so the loop stops
     // when the NEXT trial (at the last trial's measured cost, +15%
     // drift allowance) would push elapsed past 90% of the budget.
-    // Medians from ≥3 samples keep the stall filter; 1-2 samples
-    // degrade gracefully (median = min/mean).
+    // 1-2 samples degrade gracefully (median = min/mean).
     var trialsRun = 0
     var budgetAdapted = false
     var continueTrials = true
     while (trialsRun < trials && continueTrials) {
       val t = trialsRun + 1
       val t0 = elapsedSec
-      sweep(names); System.gc()
+      // one sample and one run record per query
+      names.foreach { case (name, fn) =>
+        val (sample, run) = timeOne(t, name, fn)
+        samples.getOrElseUpdate(name,
+          scala.collection.mutable.ArrayBuffer.empty) += sample
+        runs.getOrElseUpdate(name,
+          scala.collection.mutable.ArrayBuffer.empty) += run
+      }
+      System.gc()
       trialWalls += elapsedSec - t0
       trialsRun += 1
       if (t == 1) {
         // Pre-flight budget check: project the full-run wall from the
-        // measured trial-1 sweep (remaining trials at trial-1 cost,
-        // +25% allowance for repair sweeps). Printed to stderr
-        // IMMEDIATELY so a doomed run says so in its first minutes,
-        // and again in the artifact for the round record.
-        wallProjected = elapsedSec + (trials - 1) * trialWalls.head * 1.25
+        // measured trial-1 sweep (remaining trials at trial-1 cost).
+        // Printed to stderr IMMEDIATELY so a doomed run says so in its
+        // first minutes, and again in the artifact for the round record.
+        wallProjected = elapsedSec + (trials - 1) * trialWalls.head
         val verdict = if (wallProjected > wallBudget) "OVER" else "OK"
         System.err.println(f"BENCH WALL BUDGET: trial1=${trialWalls.head}%.1fs " +
           f"elapsed=${elapsedSec}%.1fs projected=${wallProjected}%.1fs " +
@@ -336,73 +301,23 @@ object Bench {
       }
     }
     final case class Timing(name: String, median: Double, min: Double,
-        max: Double, ok: Boolean, stallDropped: Int)
+        max: Double, ok: Boolean)
     def medianOf(ts: Seq[Double]): Double = {
       val s = ts.sorted
       if (s.size % 2 == 1) s(s.size / 2)
       else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
     }
-    def aggregate(): Seq[Timing] = names.map { case (name, _) =>
-      val ss = samples(name).toSeq
-      val ok = ss.forall(_._3)
-      val walls = ss.map(_._1)
-      val minW = walls.min
-      // CPU delta of the fastest-wall sample: the query's own cost in
-      // CPU seconds on an uncontended pass.
-      val minCpu = ss.minBy(_._1)._2
-      // Stall-suspect: wall inflated >20% (+50 ms) over the fastest
-      // sample while CPU stayed within 25% of the fastest sample's —
-      // the extra wall went to waiting, not work. GC/recompile noise
-      // inflates CPU too, so it is NOT excluded here (it is the JVM
-      // genuinely doing more; the repair passes handle it).
-      def stalled(s: (Double, Double, Boolean)) =
-        s._1 > minW * 1.2 && s._1 - minW > 0.05 && s._2 < minCpu * 1.25 + 0.01
-      val clean = ss.filterNot(stalled)
-      val dropped = ss.size - clean.size
-      // medians over clean samples when >=3 remain; minima ALWAYS over
-      // every sample (a stall can only inflate a minimum, never fake
-      // a fast one).
-      val medBase = if (clean.size >= 3) clean.map(_._1) else walls
-      Timing(name, medianOf(medBase), minW, walls.max, ok,
-        if (clean.size >= 3) dropped else 0)
+    // A query is ok only if every sample is. Everything read off `min`
+    // below (spread, floor, baseline ratios) covers ok queries only
+    // (round-15 ADVICE): a failed sample records a fast-exception wall,
+    // and spread minima are floor material (make_baseline.py
+    // min-merges them), so one failed sample could otherwise publish a
+    // fake sub-floor minimum into the committed baseline.
+    val results = names.map { case (name, _) =>
+      val walls = samples(name).map(_._1).toSeq
+      Timing(name, medianOf(walls), walls.min, walls.max,
+        samples(name).forall(_._2))
     }
-    // Unstable = median >20% above the fastest trial AND >100 ms above
-    // it. The relative test alone flags 30 ms wobble on a 0.15 s query
-    // — jitter that cannot distort a ~30 s total; the absolute floor
-    // keeps the flag about distortion that could actually move a
-    // round-over-round comparison.
-    def isUnstable(r: Timing) = r.ok && r.min > 0 &&
-      (r.median - r.min) / r.min > 0.2 && r.median - r.min > 0.1
-    val taintThreshold = 8
-    var results = aggregate()
-    // Auto-repair: extra sweeps over ONLY the currently-unstable
-    // queries (up to SPARK_GRAFT_RERUNS, default 2), re-aggregating
-    // after each. An unstable query ends up with 6-7 samples at the
-    // default 5 base trials, whose median discards up to three
-    // stall-inflated ones — repair fires on ANY instability, not only
-    // past the taint threshold, because the passes are cheap (unstable
-    // queries only) and a 7-unstable run that goes unrepaired reports
-    // inflated medians while still claiming to be clean. Instability
-    // that survives every pass is either genuine or a sustained
-    // outage; the taint flag reports it honestly. Repairs stop at 75%
-    // of the wall budget: the artifact itself is the deliverable.
-    val maxRepairs = math.max(0, sys.env.getOrElse("SPARK_GRAFT_RERUNS", "2").toInt)
-    var repairs = 0
-    while (repairs < maxRepairs && results.exists(isUnstable) &&
-        (wallBudget <= 0 || elapsedSec < wallBudget * 0.75)) {
-      val unstableNames = results.filter(isUnstable).map(_.name).toSet
-      sweep(names.filter { case (n, _) => unstableNames.contains(n) })
-      results = aggregate()
-      repairs += 1
-    }
-    // A query's minimum over its ok samples only (round-15 ADVICE): a
-    // query that fails any sweep records a fast-exception wall, and
-    // spread/floor are floor material (make_baseline.py min-merges
-    // them) — one unguarded failed sample could publish a fake
-    // sub-floor minimum into the committed baseline.
-    def bestMin(name: String): Double =
-      samples.get(name).map(_.filter(_._3).map(_._1)).filter(_.nonEmpty)
-        .fold(Double.NaN)(_.min)
     // Per-query ratios vs the committed format-4 baseline
     // (BENCH_BASELINE_F4.json: per-query floors, see
     // tools/make_baseline.py). Ratio = this run's minimum over the
@@ -431,34 +346,23 @@ object Bench {
     }
     // failed queries report -1 (never a fake wall time) and are listed
     // in "errors" so a broken engine can't benchmark as a fast one.
-    // Spread [bestMin, max] covers ok queries only: spread minima are
-    // floor material, and an all-failed query's bestMin is NaN.
     val spread = results.filter(_.ok).map(r =>
-        "\"" + r.name + "\":[" + f6(bestMin(r.name)) + "," + f6(r.max) + "]")
+        "\"" + r.name + "\":[" + f6(r.min) + "," + f6(r.max) + "]")
       .mkString("{", ",", "}")
-    val unstable = results.filter(isUnstable)
-      .map(r => "\"" + r.name + "\"").mkString("[", ",", "]")
     val errors = results.collect { case r if !r.ok =>
       "\"" + r.name + "\":\"" + errMsgs.getOrElse(r.name, "unknown") + "\""
     }.mkString("{", ",", "}")
-    val stallExcluded = results.map(_.stallDropped).sum
     val (verif, engine) = results.partition(r => verificationQueries(r.name))
     val total = engine.collect { case r if r.ok => r.median }.sum
     // "floor" = sum of per-query MINIMA: the engine's uncontended
     // cost. On a quiet box floor ≈ value; under host stalls value
     // inflates while floor stays put, so the pair separates engine
     // regressions (both move) from environment noise (only value moves).
-    val floor = engine.collect { case r if r.ok => bestMin(r.name) }.sum
+    val floor = engine.collect { case r if r.ok => r.min }.sum
     val verifTotal = verif.collect { case r if r.ok => r.median }.sum
-    val unstableCount = results.count(isUnstable)
-    val tainted = unstableCount > taintThreshold
-    if (tainted) System.err.println(
-      s"BENCH TAINTED: $unstableCount unstable queries (>$taintThreshold) " +
-        "after auto-rerun — treat totals as environment noise, not " +
-        "engine performance")
-    // Full-precision medians + spread + instability flags go to a side
-    // file: the harness that captures this process's stdout keeps only
-    // the last ~2000 characters, and a 69-query spread map pushed the
+    // Full-precision medians + spread go to a side file: the harness
+    // that captures this process's stdout keeps only the last ~2000
+    // characters, and a 69-query spread map pushed the
     // start of the JSON line out of that window every round (BENCH_r01
     // ..r06 all record parsed:null). The final stdout line is kept
     // compact (3-decimal medians, no spread) so it always fits.
@@ -468,7 +372,7 @@ object Bench {
       rs.map(r => "\"" + r.name + "\":" + (if (r.ok) f(r.median) else "-1.0"))
         .mkString("{", ",", "}")
     val ratios = results.flatMap(r => baseline.get(r.name).collect {
-      case b if r.ok && r.min > 0 => r.name -> bestMin(r.name) / b })
+      case b if r.ok && r.min > 0 => r.name -> r.min / b })
     val regressions = ratios.filter(_._2 > 1.5).sortBy(-_._2)
     def ratioMap(rs: Seq[(String, Double)]) =
       rs.map { case (n, v) => "\"" + n + "\":" + f3(v) }.mkString("{", ",", "}")
@@ -483,27 +387,15 @@ object Bench {
     val runsJson = runs.toSeq.sortBy(_._1)
       .map { case (n, rs) => "\"" + n + "\":" + rs.mkString("[", ",", "]") }
       .mkString("{", ",", "}")
-    val detail = s"""{"format":4,"metric":"total","value":$total,"floor":$floor,"unit":"sec","wall":$wallJson,"warmup":$warmupJson,"trials":$trialsRun,"reran":$repairs,"tainted":$tainted,"queries":${qmap(engine, f6)},"verification":${qmap(verif, f6)},"verification_total":$verifTotal,"spread":$spread,"unstable":$unstable,"errors":$errors,"baseline_n":${ratios.size},"baseline_ratios":${ratioMap(ratios)},"regressions":${ratioMap(regressions)},"stall_excluded":$stallExcluded,"runs":$runsJson,"cpus":$cpus,"sf":"$sfDir"}"""
-    // Two detail files per run (round-15 lesson, encoded): the
-    // canonical BENCH_DETAIL.json (what make_baseline.py and the
-    // round tooling read — latest run wins) PLUS a mode-keyed copy
-    // whose name derives from the query order, so a sorted closing
-    // run and a permuted one launched from the same cwd can never
-    // clobber each other's evidence.
-    val runMode = orderSeed match {
-      case None => "sorted"
-      case Some(s) => s"perm$s"
-    }
-    Seq("BENCH_DETAIL.json", s"BENCH_DETAIL_$runMode.json").foreach { p =>
-      try {
-        val w = new java.io.PrintWriter(p, "UTF-8")
-        try w.println(detail) finally w.close()
-      } catch { case scala.util.control.NonFatal(_) => () }
-    }
+    val detail = s"""{"format":4,"metric":"total","value":$total,"floor":$floor,"unit":"sec","wall":$wallJson,"warmup":$warmupJson,"trials":$trialsRun,"queries":${qmap(engine, f6)},"verification":${qmap(verif, f6)},"verification_total":$verifTotal,"spread":$spread,"errors":$errors,"baseline_n":${ratios.size},"baseline_ratios":${ratioMap(ratios)},"regressions":${ratioMap(regressions)},"runs":$runsJson,"cpus":$cpus,"sf":"$sfDir"}"""
+    try {
+      val w = new java.io.PrintWriter("BENCH_DETAIL.json", "UTF-8")
+      try w.println(detail) finally w.close()
+    } catch { case scala.util.control.NonFatal(_) => () }
     // "warmup" records whether the untimed warm-up pass ran, so
     // cross-round deltas stay attributable (warm vs cold JIT numbers
     // are not comparable).
-    println(s"""{"format":4,"metric":"total","value":${f3(total)},"floor":${f3(floor)},"unit":"sec","warmup":$warmupJson,"trials":$trialsRun,"reran":$repairs,"tainted":$tainted,"queries":${qmap(engine, f3)},"verification":${qmap(verif, f3)},"verification_total":${f3(verifTotal)},"sf":"$sfDir"}""")
+    println(s"""{"format":4,"metric":"total","value":${f3(total)},"floor":${f3(floor)},"unit":"sec","warmup":$warmupJson,"trials":$trialsRun,"queries":${qmap(engine, f3)},"verification":${qmap(verif, f3)},"verification_total":${f3(verifTotal)},"sf":"$sfDir"}""")
     // The driver's artifact keeps only the last ~2000 characters of
     // stdout; round 9's compact line outgrew that window and the
     // capture clipped value/floor off the FRONT (BENCH_r09.json starts
@@ -511,7 +403,7 @@ object Bench {
     // capture always retains it whole — keeps the official artifact
     // self-contained however many queries the compact line carries.
     // Top-8 regressions only here (full list in BENCH_DETAIL.json).
-    println(s"""{"format":4,"metric":"total","value":${f3(total)},"floor":${f3(floor)},"unit":"sec","wall":$wallJson,"trials":$trialsRun,"reran":$repairs,"tainted":$tainted,"unstable_n":$unstableCount,"nqueries":${engine.size},"baseline_n":${ratios.size},"regressions_n":${regressions.size},"regressions_top":${ratioMap(regressions.take(8))},"stall_excluded":$stallExcluded,"cpus":$cpus,"sf":"$sfDir"}""")
+    println(s"""{"format":4,"metric":"total","value":${f3(total)},"floor":${f3(floor)},"unit":"sec","wall":$wallJson,"trials":$trialsRun,"nqueries":${engine.size},"baseline_n":${ratios.size},"regressions_n":${regressions.size},"regressions_top":${ratioMap(regressions.take(8))},"cpus":$cpus,"sf":"$sfDir"}""")
     // THE driver-contract line, printed LAST (round-17 VERDICT #2):
     // one JSON object in exactly the documented shape — {"metric",
     // "value", "unit", "queries", "sf"} — whose "queries" map carries

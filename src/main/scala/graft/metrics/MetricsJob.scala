@@ -44,13 +44,6 @@ object MetricsJob {
       metricSetName: String = DefinitionRegistry.businessMetricSet.name,
       collectionTime: Instant = Instant.EPOCH): DataFrame = {
 
-    // crossJoin opt-in for parity with business_metrics.py:18 —
-    // restored afterwards so one metrics run doesn't disable the
-    // cartesian guard for everything else in a shared session.
-    val prevCrossJoin = spark.conf.getOption("spark.sql.crossJoin.enabled")
-    spark.conf.set("spark.sql.crossJoin.enabled", "true")
-    try {
-
     val set = DefinitionRegistry.forAccount(account).metricSet(metricSetName)
     val business = set.metrics.collect { case bm: BusinessMetric => bm }
 
@@ -79,12 +72,6 @@ object MetricsJob {
     }}, Duration.Inf).flatten
 
     toPublishedDf(spark, published, collectionTime)
-    } finally {
-      prevCrossJoin match {
-        case Some(v) => spark.conf.set("spark.sql.crossJoin.enabled", v)
-        case None => spark.conf.unset("spark.sql.crossJoin.enabled")
-      }
-    }
   }
 
   private def toPublishedDf(

@@ -58,6 +58,10 @@ object MetricsMain {
         Runtime.getRuntime.availableProcessors().toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      // cartesian opt-in, set once for the application as the
+      // reference sets it (business_metrics.py:18); Spark's default
+      // is already true
+      .config("spark.sql.crossJoin.enabled", "true")
       // business-metric SQL may call the native expressions by name
       .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()

@@ -67,20 +67,4 @@ object RobustStats {
         sum(when(col("__dev") > col("mad") * k, 1L).otherwise(0L))
           .cast("long").as("n_outliers"))
   }
-
-  /** The outlier rows themselves: (groupCol, idCol, value, median,
-    * mad) for every row with |value − median| > k·MAD. */
-  def madOutliers(df: DataFrame, groupCol: String, valueCol: String,
-      idCol: String, k: Int = 3): DataFrame = {
-    val vals = df.filter(col(valueCol).isNotNull)
-      .select(col(groupCol), col(idCol), col(valueCol).cast("long").as("value"))
-    val med = groupMedian(vals, groupCol, "value")
-    val withDev = vals.join(med, Seq(groupCol))
-      .withColumn("__dev", abs(col("value") - col("median")))
-    val mad = groupMedian(withDev, groupCol, "__dev")
-      .withColumnRenamed("median", "mad")
-    withDev.join(mad, Seq(groupCol))
-      .filter(col("__dev") > col("mad") * k)
-      .select(col(groupCol), col(idCol), col("value"), col("median"), col("mad"))
-  }
 }

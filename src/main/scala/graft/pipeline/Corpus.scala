@@ -275,14 +275,6 @@ object Corpus {
         }), 1)
   }
 
-  /** Reconstruct a quantized embedding (array<double>). */
-  def dequantize(q: Column): Column = {
-    val lo = q.getField("vmin")
-    val hi = q.getField("vmax")
-    val scale = when(hi > lo, (hi - lo) / 255.0).otherwise(lit(1.0))
-    transform(q.getField("codes"), c => lo + c.cast("double") * scale)
-  }
-
   /**
    * Benchmark decontamination: drop training documents that share any
    * word n-gram with a benchmark/eval set — the standard leakage guard

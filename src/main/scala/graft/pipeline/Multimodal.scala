@@ -251,14 +251,6 @@ object Multimodal {
     media.as[MediaRecord].mapPartitions(it => decodeBatch(it, frameStride))
   }
 
-  /** Resize metadata transform (pure column math — no decode needed):
-    * clamps to maxDim preserving aspect ratio. */
-  def resizePlan(media: DataFrame, maxDim: Int): DataFrame = {
-    val scale = least(lit(maxDim) / greatest(col("width"), col("height")).cast("double"), lit(1.0))
-    media.withColumn("target_width", ceil(col("width") * scale).cast("int"))
-      .withColumn("target_height", ceil(col("height") * scale).cast("int"))
-  }
-
   /**
    * Header-only media metadata scan: container kind, dimensions, and
    * audio parameters parsed from the FIRST BYTES of the payload with

@@ -445,37 +445,6 @@ object Similarity {
   }
 
   /**
-   * PQ with exact refinement — the deployed two-stage shape: ADC
-   * produces a cheap shortlist of `r` candidates per query, then
-   * ONLY those r vectors are fetched and re-ranked by exact L2.
-   * Pure ADC cannot order vectors sharing a code tuple (on strongly
-   * clustered corpora whole clusters collapse to one tuple, so
-   * recall@k craters — measured 0.06 at 4×10 codes on the synthetic
-   * embeddings); the refine stage restores it while still touching
-   * r rows per query instead of the corpus.
-   *
-   * @return (query_id, neighbor_id, dist2, rank) — exact distances
-   */
-  def pqAdcRerank(codes: DataFrame, queries: DataFrame, books: DataFrame,
-      corpus: DataFrame, k: Int, r: Int, m: Int, subDim: Int,
-      vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-    require(r >= k, s"shortlist r=$r must cover k=$k")
-    val shortlist = pqAdcTopK(codes, queries, books, r, m, subDim, vecCol, idCol)
-      .select(col("query_id"), col("neighbor_id"))
-    val cand = shortlist
-      .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("v_c")),
-        Seq("neighbor_id"))
-      .join(broadcast(queries.select(col(idCol).as("query_id"),
-        col(vecCol).as("v_q"))), Seq("query_id"))
-      .withColumn("dist2", dist2Fold(col("v_q"), col("v_c")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("dist2").asc, col("neighbor_id"))
-    cand.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "dist2", "rank")
-  }
-
-  /**
    * Maximal-marginal-relevance diversification (Carbonell & Goldstein
    * 1998) at λ = 0.5: greedily select `select` results from each
    * query's top-`poolSize` candidate pool, each round picking

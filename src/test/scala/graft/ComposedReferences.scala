@@ -11,7 +11,8 @@ import graft.pipeline.{Classifier, Lineage, UnigramLm, Wordpiece}
   * references: the composed built-in-function forms the native
   * expressions replaced, the staged-projection and staged-join chains
   * the codegen'd DPs replaced, the driver loop the native greedy walk
-  * replaced, and the single-statistic window aggregation. Each is an
+  * replaced, and the single-statistic window aggregation, plus the
+  * int8 dequantizer the quantize round trip checks against. Each is an
   * independent reference (it shares no code with the native
   * digest/fold/DP path it checks), and the PipelineSpec, OperatorSpec
   * and StreamingSpec parity pins compare the production operator
@@ -26,6 +27,16 @@ object ComposedReferences {
       zip_with(a, b, (x, y) => (x.cast("double") - y.cast("double")) *
         (x.cast("double") - y.cast("double"))),
       lit(0.0), (acc, v) => acc + v)
+
+  /** Reconstruct a quantized embedding (array<double>): the inverse of
+    * [[graft.pipeline.Corpus.quantize]] that its round-trip test checks
+    * the codes against. */
+  def dequantize(q: Column): Column = {
+    val lo = q.getField("vmin")
+    val hi = q.getField("vmax")
+    val scale = when(hi > lo, (hi - lo) / 255.0).otherwise(lit(1.0))
+    transform(q.getField("codes"), c => lo + c.cast("double") * scale)
+  }
 
   /** [[graft.pipeline.Corpus.hashFold]], natively
     * [[graft.plans.Md5Fold31]] (straight off the digest bytes — no

@@ -66,8 +66,9 @@ import org.scalatest.funsuite.AnyFunSuite
  * mechanism has one home — MemoryStream replays live in
  * `PipelineReplay`, `AlarmStream` holds the per-slot machine and no
  * stateful wiring, and only `RecordShape` writes the lake partition
- * layout; and `src/main` holds one rendition of each operator, its
- * parity references living in `ComposedReferences`.
+ * layout; `src/main` holds one rendition of each operator, its
+ * parity references living in `ComposedReferences`; and `src/main`
+ * writes session conf only in sessions it owns.
  */
 class GlobalWindowLintSpec extends AnyFunSuite {
 
@@ -177,7 +178,7 @@ class GlobalWindowLintSpec extends AnyFunSuite {
     // Every key is a configuration the tests and the benchmark must
     // cover; a new one must be added here on purpose.
     val keys = Set("CPUS", "SF_DIR", "ONLY", "SKIP", "TRIALS", "WARMUP",
-      "WALL_BUDGET", "RERUNS", "ORDER_SEED").map("SPARK_GRAFT_" + _)
+      "WALL_BUDGET").map("SPARK_GRAFT_" + _)
     val pat = java.util.regex.Pattern.compile("SPARK_GRAFT_[A-Z0-9_]+")
     val found = sources("src/main").flatMap { case (_, src) =>
       val m = pat.matcher(src)
@@ -223,6 +224,18 @@ class GlobalWindowLintSpec extends AnyFunSuite {
       .keys.map(_ => "flatMapGroupsWithState in streaming/AlarmStream.scala " +
         "(the operator is StreamingAlarmPipeline.evaluateStream)")
     assert(strays.isEmpty, strays.mkString("\n"))
+  }
+
+  test("src/main writes session conf only in its own sessions") {
+    // A conf write on a caller's session changes it under every other
+    // thread's queries; a production setting goes in the session's
+    // builder. PipelineReplay writes to its own child session. Tables
+    // still sets nanosAsLong per read until the lake tables carry
+    // declared schemas (ROADMAP direction 1).
+    val pat = java.util.regex.Pattern.compile("\\bconf\\s*\\.\\s*(set|unset)\\s*\\(")
+    val allowed = Set("graft/streaming/PipelineReplay.scala", "graft/catalog/Tables.scala")
+    val strays = countSites("src/main/scala", pat).keySet -- allowed
+    assert(strays.isEmpty, s"conf.set/conf.unset in: ${strays.toSeq.sorted.mkString(", ")}")
   }
 
   test("src/main keeps one rendition per operator") {

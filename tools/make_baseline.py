@@ -1,17 +1,16 @@
 #!/usr/bin/env python3
-"""Build BENCH_BASELINE_F4.json from one or more clean (untainted)
-format-4 bench detail artifacts: per-query baseline floor = min over
-all inputs of that query's spread minimum. Only untainted inputs are
-accepted unless --force. All inputs must share one sf and one "cpus"
-(a floor is a reference only at the core count it was taken at; Bench
-ignores a floor file whose cpus differs from its run's). Usage:
+"""Build BENCH_BASELINE_F4.json from one or more format-4 bench detail
+artifacts: per-query baseline floor = min over all inputs of that
+query's spread minimum. A host stall can only inflate a minimum, so
+every run's minima are floor material. All inputs must share one sf
+and one "cpus" (a floor is a reference only at the core count it was
+taken at; Bench ignores a floor file whose cpus differs from its
+run's). Usage:
   make_baseline.py out.json detail1.json [detail2.json ...]
 """
 import json, sys
 
-args = [a for a in sys.argv[1:] if a != "--force"]
-force = "--force" in sys.argv
-out, inputs = args[0], args[1:]
+out, inputs = sys.argv[1], sys.argv[2:]
 
 floors, sf, cpus = {}, None, None
 for path in inputs:
@@ -19,8 +18,6 @@ for path in inputs:
     if d.get("format") != 4:
         sys.exit(f"{path}: format {d.get('format')} != 4 — pre-format-4 "
                  "numbers are void (count()-pruned plans)")
-    if d.get("tainted") and not force:
-        sys.exit(f"{path}: tainted — pass --force to use anyway")
     sf = sf or d.get("sf")
     if d.get("sf") != sf:
         sys.exit(f"{path}: sf {d.get('sf')} != {sf}")
