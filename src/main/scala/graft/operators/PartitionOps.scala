@@ -99,10 +99,14 @@ object PartitionOps {
   /** Executable retention enforcement: drop expired partition
     * directories of a partitioned lake table (the engine-side form of
     * the S3 lifecycle rules). Deletes ONLY paths under `lakeDir` that
-    * match the expired partition tuples. Returns the dropped paths. */
+    * match the expired partition tuples. Returns the dropped paths.
+    * The read declares only the partition keys: `expired` touches
+    * nothing else, so no schema-inference job runs, any data schema
+    * works, and an empty lake has nothing to drop. */
   def enforceRetention(spark: SparkSession, lakeDir: String, ttlDays: Int,
       asOfEpoch: Long): Seq[String] = {
-    val drop = expired(spark.read.parquet(lakeDir), ttlDays, asOfEpoch)
+    val lake = spark.read.schema(Schemas.partitionKeys).parquet(lakeDir)
+    val drop = expired(lake, ttlDays, asOfEpoch)
       .collect().map(RecordShape.partitionDir(lakeDir, _)).toSeq
     // recursive delete via Hadoop FileSystem (hdfs://, s3a://, and
     // plain local paths all resolve), and report only what was

@@ -61,9 +61,20 @@ object RecordShape {
     * (kinesis_construct.py:125-146 conversion + prefix scheme
     * metrics_streamer.py:90-91). Partition registration is native —
     * no add_partition step (O-27 collapses away). The one lake write
-    * site: batch records and streaming ingest both land through it. */
+    * site: batch records and streaming ingest both land through it.
+    *
+    * Sized like Firehose's per-prefix buffer objects
+    * (kinesis_construct.py:121-124): an AQE rebalance on the five
+    * partition keys sends each Hive partition to one writer, so a
+    * write lands one file per partition instead of one per task per
+    * partition. AQE coalesces the empty reducers and splits a partition
+    * larger than `spark.sql.adaptive.advisoryPartitionSizeInBytes`
+    * (64 MB by default, Firehose's buffer size), so a hot hour never
+    * lands in a single task. The cost is one hash exchange of the
+    * landed rows. */
   def writePartitioned(records: DataFrame, path: String): Unit =
-    records.write.mode("append")
+    records.hint("rebalance", Schemas.partitionColumnNames.map(col): _*)
+      .write.mode("append")
       .partitionBy(Schemas.partitionColumnNames: _*)
       .parquet(path)
 

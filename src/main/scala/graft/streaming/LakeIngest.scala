@@ -40,9 +40,15 @@ object LakeIngest {
    *                considered closed (event time moved past it) and is
    *                rewritten to target-size files via
    *                [[graft.operators.PartitionOps.compactPartition]].
-   *                Without it the 60 s trigger lands 1,440 files/day/
-   *                partition and every downstream scan pays the
-   *                open-file tax. Driver-side state is one (path,
+   *                A micro-batch lands one file per partition it
+   *                touches (the landing rebalances on the partition
+   *                keys; more only past the advisory partition size,
+   *                see [[RecordShape.writePartitioned]]), so without
+   *                compaction the 60 s trigger still
+   *                lands up to 1,440 files/day/partition and every
+   *                downstream scan pays the open-file tax. A closed
+   *                partition that already holds one file is left as
+   *                it is. Driver-side state is one (path,
    *                batchId) entry per OPEN partition — bounded by the
    *                ingest's event-time spread, not by history.
    */

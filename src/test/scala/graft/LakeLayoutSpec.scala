@@ -44,6 +44,60 @@ class LakeLayoutSpec extends SparkTestBase {
     assert(read.count() > 0)
   }
 
+  /** Parquet files per partition directory under `lake`, keyed by the
+    * directory's path relative to `lake`. */
+  private def filesPerPartition(lake: String): Map[String, Int] = {
+    val root = java.nio.file.Paths.get(lake)
+    val walk = Files.walk(root)
+    try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet"))
+        .toSeq.groupBy(_.getParent).map { case (d, fs) =>
+          root.relativize(d).toString -> fs.size }
+    } finally walk.close()
+  }
+
+  /** `n` records over `hours` consecutive hours (hour = id % hours) in
+    * `inputParts` input partitions, so every input partition holds every
+    * hour; `pad` is a hash payload that does not compress away. */
+  private def spreadRecords(session: org.apache.spark.sql.SparkSession,
+      n: Long, hours: Int, inputParts: Int): org.apache.spark.sql.DataFrame = {
+    val ts = timestamp_seconds(lit(1704153600L) + (col("id") % hours) * 3600L)
+    session.range(0, n, 1, inputParts)
+      .select(col("id") +: sha2(col("id").cast("string"), 256).as("pad") +:
+        RecordShape.partitionColumns(ts, "local-1"): _*)
+  }
+
+  test("a landing writes one parquet file per Hive partition, not one per task (O-9)") {
+    val records = spreadRecords(spark, 400, hours = 3, inputParts = 4)
+    assert(records.rdd.getNumPartitions == 4)
+    val lake = Files.createTempDirectory("lake_files").toString
+    RecordShape.writePartitioned(records, lake)
+    val files = filesPerPartition(lake)
+    // 4 tasks each holding all 3 hours would land 12 files
+    assert(files.size == 3, files)
+    assert(files.values.forall(_ == 1), files)
+    def sorted(df: org.apache.spark.sql.DataFrame) = df
+      .select("id", "pad", "region", "year", "month", "day", "hour")
+      .orderBy("id").collect().toSeq
+    assert(sorted(spark.read.schema(records.schema).parquet(lake)) == sorted(records))
+  }
+
+  test("a hot hour larger than the advisory partition size lands in more than one file") {
+    // AQE splits a rebalance partition above the advisory size, so a hot
+    // hour never lands in one task; a small advisory size on a child
+    // session shows the split at test scale
+    val child = spark.newSession()
+    child.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16k")
+    val records = spreadRecords(child, 8000, hours = 1, inputParts = 4)
+    val lake = Files.createTempDirectory("lake_hot").toString
+    RecordShape.writePartitioned(records, lake)
+    val files = filesPerPartition(lake)
+    assert(files.size == 1 && files.values.head > 1, files)
+    assert(child.read.parquet(lake).count() == 8000)
+  }
+
   test("data filters push down to parquet and columns prune (O-6)") {
     val li = Tables.read(spark, sf0001, "lineitem")
       .filter(col("l_shipdate") >= lit("1997-01-01").cast("timestamp"))

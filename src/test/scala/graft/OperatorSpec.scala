@@ -169,6 +169,12 @@ class OperatorSpec extends SparkTestBase {
     assert(spark.read.parquet(lake).select("month").distinct().count() == 1)
   }
 
+  test("retention enforcement on an empty lake drops nothing (O-28)") {
+    val lake = java.nio.file.Files.createTempDirectory("ret_empty").toString
+    val asOf = java.time.Instant.parse("2024-03-02T00:00:00Z").getEpochSecond
+    assert(PartitionOps.enforceRetention(spark, lake, 30, asOf).isEmpty)
+  }
+
   test("job entry scheduling maps (O-37/O-38)") {
     import graft.metrics.MetricsMain
     import graft.model.Frequency

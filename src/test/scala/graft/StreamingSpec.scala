@@ -476,6 +476,53 @@ class StreamingSpec extends SparkTestBase {
     } finally q.stop()
   }
 
+  /** Ingest one micro-batch of `n` JSON records spread over 4 input
+    * partitions, record i stamped in hour 3 + i * hours / n, on
+    * `session`; returns the parquet files per touched hour and the
+    * landed rows. */
+  private def ingestOneBatch(session: org.apache.spark.sql.SparkSession, n: Int,
+      hours: Int): (Seq[Int], Long) = {
+    implicit val sq = session.sqlContext
+    val mem = MemoryStream[String](4)
+    val out = Files.createTempDirectory("lakef").toString
+    def rec(i: Int): String = {
+      val ts = f"2024-01-02T0${3 + i * hours / n}:${i % 60}%02d:00"
+      s"""{"collectiontime":"$ts","namespace":"NS","name":"N","period":60,
+         |"frequency":"minute","statistic":"Sum","metadata":null,"dimensions":null,
+         |"accountid":"a","metrictimestamp":"$ts","metricvalue":$i.5,"id":"r$i",
+         |"label":"N"}""".stripMargin.replace("\n", "")
+    }
+    val q = LakeIngest.start(mem.toDF(), out,
+      Files.createTempDirectory("lakeferr").toString,
+      Files.createTempDirectory("ckptf").toString,
+      trigger = Trigger.ProcessingTime("1 second"))
+    try {
+      mem.addData((0 until n).map(rec))
+      q.processAllAvailable()
+    } finally q.stop()
+    val files = (3 until 3 + hours).map { h =>
+      Option(new java.io.File(s"$out/region=local-1/year=2024/month=1/day=2/hour=$h")
+        .listFiles()).getOrElse(Array.empty).count(_.getName.endsWith(".parquet"))
+    }
+    (files, session.read.parquet(out).count())
+  }
+
+  test("one ingest micro-batch over several input partitions lands one file per partition (O-9)") {
+    val (files, rows) = ingestOneBatch(spark, 40, hours = 2)
+    assert(files == Seq(1, 1), s"files per partition: $files")
+    assert(rows == 40)
+  }
+
+  test("a hot hour in one ingest micro-batch splits past the advisory partition size") {
+    // the stream runs without AQE, but its foreachBatch write plans
+    // with AQE on, so the micro-batch landing splits a hot hour too
+    val child = spark.newSession()
+    child.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16k")
+    val (files, rows) = ingestOneBatch(child, 8000, hours = 1)
+    assert(files.head > 1, s"files per partition: $files")
+    assert(rows == 8000)
+  }
+
   test("streaming percentile statValue crosses the sample fold and matches batch percentile_approx") {
     import graft.streaming.StreamingAlarmPipeline
     // 10,000 values in one window: crosses the 4096-sample foldSamples
