@@ -1,6 +1,7 @@
 package graft.metrics
 
 import java.time.Instant
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import graft.catalog.Tables
@@ -81,10 +82,13 @@ object MetricsJob {
         DefinitionExport.jsonObject(p.metric.dimensions.map(d => d.name -> d.value)),
         at.toString, p.value)
     }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), publishedSchema)
+    spark.createDataFrame(rows.asJava, publishedSchema)
   }
 
-  /** Append published metrics to the local metrics_published table. */
+  /** Append published metrics to the local metrics_published table, one
+    * file per run: a run publishes one row per business metric of its
+    * set, and a local relation of those rows would otherwise split into
+    * as many files as the default parallelism. */
   def publish(df: DataFrame, outDir: String): Unit =
-    df.write.mode("append").parquet(s"$outDir/metrics_published")
+    df.coalesce(1).write.mode("append").parquet(s"$outDir/metrics_published")
 }

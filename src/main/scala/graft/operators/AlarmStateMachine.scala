@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, StringType, StructField, StructType}
 import graft.model.{ComparisonOperator, TreatMissingData}
+import graft.pipeline.DriverBounds
 
 /**
  * Threshold comparison + alarm state machine, batch variant (O-23;
@@ -26,9 +27,12 @@ import graft.model.{ComparisonOperator, TreatMissingData}
  *  - state-change rows (OK→ALARM etc.) are flagged for notification
  *    (alarm actions fire on transition, not level).
  *
- * One pass: a broadcast join of the SLAs, one hash repartition on the
- * full SLA key (a series may carry several SLAs, and two differing only
- * in `period` have separate grids and vote streams), a sort by key and
+ * The SLA side is collected once under [[DriverBounds.DefinitionRows]],
+ * checked on the driver and broadcast as a local relation of the same
+ * rows (the reference matches its small definition set in memory too).
+ * Then one pass: the broadcast join, one hash repartition on the full
+ * SLA key (a series may carry several SLAs, and two differing only in
+ * `period` have separate grids and vote streams), a sort by key and
  * window_start within partitions, and one walk per key over its dense
  * slot grid. The walk keeps the last N votes in a ring buffer with a
  * running breach count, so a slot costs O(1). Its vote and state rule
@@ -45,7 +49,7 @@ object AlarmStateMachine {
   val StateAlarm = "ALARM"
   val StateInsufficient = "INSUFFICIENT_DATA"
 
-  private val KeyCols = Seq("series_id", "period", "threshold",
+  private[graft] val KeyCols = Seq("series_id", "period", "threshold",
     "comparison_operator", "datapoints_to_alarm", "evaluation_periods",
     "treat_missing_data")
 
@@ -69,22 +73,26 @@ object AlarmStateMachine {
     * evaluation_periods of at least 1. A typo'd operator would
     * otherwise make every slot silently abstain — the alarm could
     * never fire and nothing would report it; a null threshold would
-    * fail only once the first window is evaluated. */
-  private[graft] def requireSlaConfig(slas: DataFrame): Unit =
-    graft.pipeline.DriverBounds.boundedCollect(
-      slas.select(col("period").cast("long"), col("comparison_operator"),
-        col("treat_missing_data"), coalesce(col("threshold").isNotNull &&
-          col("datapoints_to_alarm").isNotNull && col("evaluation_periods") >= 1,
-          lit(false))).distinct(), 10000L,
+    * fail only once the first window is evaluated. `slas` are collected
+    * SLA rows that start with the [[KeyCols]], in that order. */
+  private[graft] def requireSlaConfig(slas: Seq[Row]): Unit = {
+    // the walk reads period and evaluation_periods as numbers
+    def atLeastOne(v: Any): Boolean = v match {
+      case n: Number => n.doubleValue >= 1
+      case _ => false
+    }
+    val configs = slas.map(r => (r.get(1), r.getString(3), r.getString(6),
+      !r.isNullAt(2) && !r.isNullAt(4) && atLeastOne(r.get(5)))).distinct
+    DriverBounds.requireBound(configs.length, 10000L,
       "AlarmStateMachine distinct SLA configs (definition metadata)")
-      .foreach { r =>
-        require(!r.isNullAt(0) && r.getLong(0) > 0,
-          s"SLA period must be positive, got ${r.get(0)}")
-        ComparisonOperator.fromName(r.getString(1))
-        TreatMissingData.fromName(r.getString(2))
-        require(r.getBoolean(3), "SLA threshold and datapoints_to_alarm must " +
-          "be set and evaluation_periods must be at least 1")
-      }
+    configs.foreach { case (period, op, policy, complete) =>
+      require(atLeastOne(period), s"SLA period must be positive, got $period")
+      ComparisonOperator.fromName(op)
+      TreatMissingData.fromName(policy)
+      require(complete, "SLA threshold and datapoints_to_alarm must " +
+        "be set and evaluation_periods must be at least 1")
+    }
+  }
 
   /**
    * Evaluate alarm states over windowed series values.
@@ -93,20 +101,23 @@ object AlarmStateMachine {
    *               output of StatWindowAgg
    * @param slas   (series_id, period, threshold, comparison_operator,
    *               datapoints_to_alarm, evaluation_periods,
-   *               treat_missing_data) — tiny; broadcast
+   *               treat_missing_data) — collected once, with a bound,
+   *               checked on the driver, and broadcast
    * @return one row per (SLA key, slot): the key columns, window_start,
    *         metricvalue (null when the slot was missing), breaching,
    *         statevalue, prev_state (null on the first slot), transitioned
    */
   def evaluate(series: DataFrame, slas: DataFrame,
       maxSlotsPerSeries: Long = 200000L): DataFrame = {
-    requireSlaConfig(slas)
     val key = KeyCols.map(col)
+    val (slaRows, slasLocal) = DriverBounds.collectDefinitions(slas.select(key: _*),
+      "AlarmStateMachine SLA definitions")
+    requireSlaConfig(slaRows)
     val rows = series
       .select(col("series_id"), col("window_start").cast("long").as("window_start"),
         col("metricvalue"))
       .filter(col("window_start").isNotNull)
-      .join(broadcast(slas.select(key: _*)), Seq("series_id"))
+      .join(broadcast(slasLocal), Seq("series_id"))
       .select(key :+ col("window_start") :+ col("metricvalue"): _*)
     val out = StructType(rows.schema.fields ++ Seq(
       StructField("breaching", BooleanType), StructField("statevalue", StringType),

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.pipeline.DriverBounds
 
 /**
  * CloudWatch-statistic window aggregation (O-12/O-13/O-14/O-17;
@@ -12,8 +13,10 @@ import org.apache.spark.sql.functions._
  * The engine-side model: a raw datapoints fact table (series_id, ts,
  * value) aggregated into tumbling windows of each series' period with
  * the series' declared statistic. Scale notes:
- *  - definitions are broadcast (tiny by construction) so the fact side
- *    never shuffles for the join;
+ *  - the definition side is collected once, under
+ *    [[DriverBounds.DefinitionRows]], and broadcast as a local relation
+ *    of those rows, so the fact side never shuffles for the join and
+ *    the definition side is never planned as a query of its own;
  *  - the groupBy keys on (series_id, window_start) — partial (map-side)
  *    aggregation collapses each partition before the single shuffle;
  *  - Sum/Average run over DECIMAL so results are independent of
@@ -86,28 +89,31 @@ object StatWindowAgg {
    *
    * @param datapoints fact table with columns (series_id, ts:timestamp, value:double)
    * @param defs       definition table with (unique_id, statistic, period, frequency)
-   *                   — tiny; broadcast
+   *                   — collected once, with a bound, and broadcast
    * @param frequency  O-14 frequency filter (minute/hour/day), or null for all
    * @return (series_id, statistic, period, frequency, window_start:long, metricvalue:double)
    */
   def aggregate(datapoints: DataFrame, defs: DataFrame, frequency: String = null): DataFrame = {
     val defsF = if (frequency == null) defs else defs.filter(col("frequency") === frequency)
 
-    // The distinct pNN statistics are definition METADATA (a handful of
-    // strings), not data — resolving them driver-side keeps
-    // percentile_approx's fraction foldable for codegen.
-    val allStats = graft.pipeline.DriverBounds.boundedCollect(
-      defsF.select("statistic").distinct(), 10000L,
+    // The definition side is collected once: its distinct pNN
+    // statistics are definition METADATA (a handful of strings), not
+    // data — resolving them driver-side keeps percentile_approx's
+    // fraction foldable for codegen — and the broadcast below reads a
+    // local relation of the same rows instead of re-planning the side.
+    val (defRows, defsLocal) = DriverBounds.collectDefinitions(
+      defsF.select("unique_id", "statistic", "period", "frequency"),
+      "StatWindowAgg definitions")
+    val allStats = defRows.map(_.getString(1)).distinct.toSeq
+    DriverBounds.requireBound(allStats.length, 10000L,
       "StatWindowAgg distinct statistics (definition metadata)")
-      .map(_.getString(0)).toSeq
     allStats.foreach(requireStatistic)
     val pStats: Seq[(String, Double)] =
       allStats.flatMap(s => percentileFraction(s).map(s -> _))
 
     val dps = finite(datapoints, "value")
-    val joined = dps.join(
-      broadcast(defsF.select("unique_id", "statistic", "period", "frequency")),
-      dps("series_id") === defsF("unique_id"), "inner")
+    val joined = dps.join(broadcast(defsLocal),
+      dps("series_id") === defsLocal("unique_id"), "inner")
 
     // O-17: windows are per-period; period is a group key so series
     // with different periods coexist in one pass.

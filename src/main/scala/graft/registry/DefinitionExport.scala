@@ -1,5 +1,7 @@
 package graft.registry
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import graft.catalog.Schemas
 import graft.model._
@@ -10,6 +12,12 @@ import graft.model._
  * "metadata-as-data"). Nested structures become JSON object strings
  * exactly as the reference's json.dumps of name→value maps
  * (definition.py:97-116).
+ *
+ * Each table is a local relation of driver rows, as the reference
+ * keeps its definition set in memory (SURVEY.md O-20/O-21). Projecting,
+ * filtering or collecting one runs no Spark job, and the operators that
+ * read a definition side collect it once, with a bound
+ * ([[graft.pipeline.DriverBounds.DefinitionRows]]).
  *
  * Divergence from reference (intended semantics, SURVEY.md §2 quirks
  * (d)): we build fresh rows instead of mutating live definition
@@ -63,8 +71,7 @@ object DefinitionExport {
         set.name, null, m.dashboard.dashboardName, d.account,
         dataset, refDatasets, query)
     }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), Schemas.metricDefs)
+    spark.createDataFrame(rows.asJava, Schemas.metricDefs)
   }
 
   def slaDefs(spark: SparkSession, defs: Seq[AccountDefinition]): DataFrame = {
@@ -89,8 +96,7 @@ object DefinitionExport {
       sla.metric.namespace, sla.metric.name, set.name,
       metadataJson(sla.metric.metadata), dimensionsJson(sla.metric.dimensions),
       d.account)
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), Schemas.slaDefs)
+    spark.createDataFrame(rows.asJava, Schemas.slaDefs)
   }
 
   /** Dump both definition tables as JSON files (O-11; reference deploys
@@ -102,8 +108,9 @@ object DefinitionExport {
   }
 
   /** Series-key lookup table used by enrichment joins (O-20): one row
-    * per metric with its derived unique_id and alarm key. Tiny by
-    * construction → always broadcast on the fact side of joins. */
+    * per metric with its derived unique_id and alarm key, broadcast to
+    * the fact side of joins; the window operator collects it once,
+    * with a bound. */
   def seriesKeys(spark: SparkSession, defs: Seq[AccountDefinition]): DataFrame = {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
@@ -123,6 +130,6 @@ object DefinitionExport {
     } yield Row(m.uniqueId, m.alarmUniqueId.dropRight(1), m.namespace, m.name,
       m.frequency.name, m.period, m.statistic,
       metadataJson(m.metadata), dimensionsJson(m.dimensions))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    spark.createDataFrame(rows.asJava, schema)
   }
 }

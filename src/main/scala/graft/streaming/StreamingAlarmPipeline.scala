@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.{AlarmStateMachine, StatWindowAgg}
+import graft.pipeline.DriverBounds
 import graft.streaming.AlarmStream.{AlarmState, SlaConf, Transition}
 
 /**
@@ -286,18 +287,24 @@ object StreamingAlarmPipeline {
       idleTtlPeriods: Int = 0): Dataset[Transition] = {
     val spark = datapoints.sparkSession
     import spark.implicits._
-    // Fail fast on bad SLA config — the table is static and tiny, so
-    // the collect is bounded, and a typo'd value must die HERE with a
-    // clear message, not minutes later inside flatMapGroupsWithState
-    // when the first window closes (a mid-stream throw checkpoints a
-    // poisoned source offset and crash-loops every restart).
+    // Fail fast on bad SLA config — the table is static and small, so
+    // one collect under the definition bound holds it, and a typo'd
+    // value must die HERE with a clear message, not minutes later
+    // inside flatMapGroupsWithState when the first window closes (a
+    // mid-stream throw checkpoints a poisoned source offset and
+    // crash-loops every restart).
     val perSla = slas.columns.contains("statistic")
     StatWindowAgg.requireStatistic(statistic)
-    if (perSla) graft.pipeline.DriverBounds.boundedCollect(
-        slas.select("statistic").distinct(), 10000L,
+    val (slaRows, slasLocal) = DriverBounds.collectDefinitions(
+      slas.select((AlarmStateMachine.KeyCols ++ (if (perSla) Seq("statistic") else Nil))
+        .map(col): _*), "StreamingAlarmPipeline SLA definitions")
+    if (perSla) {
+      val stats = slaRows.map(_.getString(AlarmStateMachine.KeyCols.length)).distinct
+      DriverBounds.requireBound(stats.length, 10000L,
         "StreamingAlarmPipeline distinct statistics (definition metadata)")
-      .foreach(r => Option(r.getString(0)).foreach(StatWindowAgg.requireStatistic))
-    AlarmStateMachine.requireSlaConfig(slas)
+      stats.foreach(s => Option(s).foreach(StatWindowAgg.requireStatistic))
+    }
+    AlarmStateMachine.requireSlaConfig(slaRows)
     val statCol =
       if (perSla)
         org.apache.spark.sql.functions.coalesce(col("statistic"),
@@ -305,7 +312,7 @@ object StreamingAlarmPipeline {
       else org.apache.spark.sql.functions.lit(statistic)
     datapoints
       .withWatermark("ts", watermark)
-      .join(broadcast(slas), Seq("series_id")) // stateless stream-static join
+      .join(broadcast(slasLocal), Seq("series_id")) // stateless stream-static join
       .select(col("series_id").as("seriesId"), col("ts").as("eventTime"),
         col("value").cast("double").as("value"),
         col("period").cast("long").as("period"), col("threshold").cast("double"),

@@ -238,6 +238,16 @@ class GlobalWindowLintSpec extends AnyFunSuite {
     assert(strays.isEmpty, s"conf.set/conf.unset in: ${strays.toSeq.sorted.mkString(", ")}")
   }
 
+  test("src/main builds definition and published tables as local relations") {
+    // A local relation keeps its rows on the driver: projecting or
+    // collecting it runs no Spark job, where an RDD of the same rows
+    // runs one each time (ENGINE.md "Definition sides").
+    val pat = java.util.regex.Pattern.compile("\\bsparkContext\\s*\\.\\s*parallelize\\b")
+    val strays = Seq("registry", "metrics").flatMap(pkg =>
+      countSites(s"src/main/scala/graft/$pkg", pat).keys.map(rel => s"graft/$pkg/$rel"))
+    assert(strays.isEmpty, s"sparkContext.parallelize in: ${strays.sorted.mkString(", ")}")
+  }
+
   test("src/main keeps one rendition per operator") {
     // A second rendition kept as a parity reference lives in
     // ComposedReferences (test scope); one with no caller is deleted.

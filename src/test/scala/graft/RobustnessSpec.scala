@@ -303,6 +303,36 @@ class RobustnessSpec extends SparkTestBase {
     assert(e.getMessage.contains("AlarmStateMachine distinct SLA configs"))
   }
 
+  test("definition sides past the row bound fail loudly, before any join") {
+    // one row per series (or SLA) past DriverBounds.DefinitionRows:
+    // every operator stops at its construction-time collect, naming
+    // its definition side and the bound
+    val over = graft.pipeline.DriverBounds.DefinitionRows + 1
+    val slas = spark.range(over)
+      .selectExpr("concat('u', id) AS series_id", "60 AS period", "0.5 AS threshold",
+        "'GREATER_THAN_THRESHOLD' AS comparison_operator",
+        "1 AS datapoints_to_alarm", "1 AS evaluation_periods",
+        "'MISSING' AS treat_missing_data")
+    val defs = spark.range(over)
+      .selectExpr("concat('u', id) AS unique_id", "'Sum' AS statistic",
+        "60 AS period", "'minute' AS frequency")
+    val dps = Seq(("u1", java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1.0))
+      .toDF("series_id", "ts", "value")
+    val series = Seq(("u1", 0L, 1.0)).toDF("series_id", "window_start", "metricvalue")
+    val cases = Seq[(String, () => Any)](
+      "StatWindowAgg definitions" -> (() =>
+        graft.operators.StatWindowAgg.aggregate(dps, defs)),
+      "AlarmStateMachine SLA definitions" -> (() =>
+        graft.operators.AlarmStateMachine.evaluate(series, slas)),
+      "StreamingAlarmPipeline SLA definitions" -> (() =>
+        graft.streaming.StreamingAlarmPipeline.evaluateStream(dps, slas, "Sum")))
+    cases.foreach { case (what, run) =>
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains(what) &&
+        e.getMessage.contains(s"documented bound of ${over - 1} rows"), e.getMessage)
+    }
+  }
+
   test("StreamingAlarmPipeline: per-SLA statistics past the metadata bound fail loudly") {
     val slas = spark.range(10001)
       .selectExpr("id AS series_id", "60 AS period", "0.5 AS threshold",

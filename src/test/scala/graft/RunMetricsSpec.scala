@@ -54,4 +54,46 @@ class RunMetricsSpec extends SparkTestBase {
       assert(metrics.maxOverMedianTask == 1.0, metrics.stageTaskMs)
     } finally metrics.detach()
   }
+
+  test("definition sides run no construction job; a broadcast of one runs one job") {
+    import spark.implicits._
+    import graft.operators.{AlarmStateMachine, StatWindowAgg}
+    val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:10")
+    val dps = Seq(("u1", ts, 1.0), ("u2", ts, 2.0)).toDF("series_id", "ts", "value")
+    // local relations of several rows, as DefinitionExport builds them
+    // (Catalyst folds a distinct over a one-row table, which would hide
+    // a query on the definition side)
+    val defs = Seq(("u1", "Sum", 60, "minute"), ("u2", "p90", 60, "minute"),
+      ("u3", "Average", 3600, "hour")).toDF("unique_id", "statistic", "period", "frequency")
+    val slaCols = Seq("series_id", "period", "threshold", "comparison_operator",
+      "datapoints_to_alarm", "evaluation_periods", "treat_missing_data")
+    val slas = Seq(("u1", 60, 1.5, "GREATER_THAN_THRESHOLD", 1, 1, "MISSING"),
+      ("u1", 60, 3.0, "GREATER_THAN_OR_EQUAL_TO_THRESHOLD", 2, 3, "BREACHING"))
+      .toDF(slaCols: _*)
+    val series = Seq(("u1", 0L, 2.0)).toDF("series_id", "window_start", "metricvalue")
+    val metrics = RunMetrics.attach(spark)
+    def jobs[T](body: => T): Int = {
+      metrics.reset()
+      body
+      metrics.read()._2.jobs
+    }
+    try {
+      // a distinct query on a definition side would run 2 jobs here
+      // (an AQE shuffle stage and the result stage)
+      assert(jobs(StatWindowAgg.aggregate(dps, defs)) == 0)
+      assert(jobs(StatWindowAgg.aggregate(dps, defs, "minute")) == 0)
+      assert(jobs(AlarmStateMachine.evaluate(series, slas)) == 0)
+      // a non-local SLA table is collected by exactly one job
+      val ranged = spark.range(0, 2, 1, 1).selectExpr("concat('u', id) AS series_id",
+        "60 * (id + 1) AS period", "1.5 AS threshold", "'GREATER_THAN_THRESHOLD' AS comparison_operator",
+        "1 AS datapoints_to_alarm", "1 AS evaluation_periods", "'MISSING' AS treat_missing_data")
+      assert(jobs(AlarmStateMachine.evaluate(series, ranged)) == 1)
+      // a broadcast of a local relation still runs one job, which
+      // ships the driver rows (LocalTableScanExec collects through the
+      // generic RDD path); with the result stage over the one-partition
+      // fact side that makes two
+      val facts = spark.range(0, 4, 1, 1).selectExpr("concat('u', id) AS unique_id")
+      assert(jobs(facts.join(broadcast(defs), "unique_id").collect()) == 2)
+    } finally metrics.detach()
+  }
 }
