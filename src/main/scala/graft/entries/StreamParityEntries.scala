@@ -130,7 +130,7 @@ private[graft] object StreamParityEntries {
     "q_statagg_stream_parity" -> { (s, dir) =>
       import s.implicits._
       val fx = datapoints(s, dir)
-        .as[(String, Timestamp, Double)].collect().toSeq
+        .as[(String, Timestamp, Option[Double])].collect().toSeq
       PipelineReplay.replayStatAgg(s, fx, "Sum", periodSeconds = 3600)
         .toDF("series_id", "window_start", "metricvalue")
         .orderBy("series_id", "window_start")

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftDatasets}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -22,6 +22,15 @@ import graft.operators.{PartitionOps, RecordShape}
  * ([[RecordShape.partitionColumns]], [[RecordShape.writePartitioned]]) — and
  * append unparseable records to an errors path exactly like Firehose's
  * `metric_errors/` prefix.
+ *
+ * Each micro-batch runs in the caller's session (`records.sparkSession`):
+ * a streaming query runs on a clone with a new session id, and with
+ * artifact isolation (on by default outside spark-shell) executors give
+ * each session id its own task class loader, so the codegen cache (keyed
+ * on loader and source) would compile every task-side class again on
+ * each `start`. The micro-batch plan is a `LogicalRDD`, which no session
+ * owns; it is rebound and persisted once for the landing, one metadata
+ * pass, the errors write and compaction.
  */
 object LakeIngest {
 
@@ -72,52 +81,41 @@ object LakeIngest {
     // open-partition tracker for the compaction pass; foreachBatch
     // invocations are serialized per query, so no synchronization
     val openPartitions = scala.collection.mutable.Map.empty[String, Long]
+    // a record is corrupt, and goes to the errors output (Firehose's
+    // error prefix), when from_json could not parse the line. Checking a
+    // data field like `id` instead would silently divert VALID records
+    // that merely omit that nullable field — data loss with no signal.
+    val corrupt = col(s"parsed.$corruptCol").isNotNull
+    val parts = RecordShape.partitionColumns(
+      to_timestamp(col("parsed.metrictimestamp")), region)
 
     parsed.writeStream
       .queryName("lake_ingest")
       .trigger(trigger)
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.persist()
+      .foreachBatch { (micro: DataFrame, batchId: Long) =>
+        val b = GraftDatasets.rebind(records.sparkSession, micro).persist()
         try {
-          // corrupt-record side output (Firehose error prefix): a
-          // record is corrupt when from_json could not parse the line
-          // (corrupt marker populated). Checking a data field like
-          // `id` instead would silently divert VALID records that
-          // merely omit that nullable field — data loss with no
-          // signal, and not what "conversion failure" means.
-          val good = b.filter(col(s"parsed.$corruptCol").isNull)
-            .select("parsed.*").drop(corruptCol)
-          val bad = b.filter(col(s"parsed.$corruptCol").isNotNull)
-            .select(col("value"))
-          val withParts = good
-            .select(col("*") +: RecordShape.partitionColumns(
-              to_timestamp(col("metrictimestamp")), region): _*)
-            .persist()
-          try {
-            RecordShape.writePartitioned(withParts, outDir)
-            if (!bad.isEmpty) bad.write.mode("append").text(errDir)
-            if (compactLagBatches > 0) {
-              // distinct partition tuples of THIS batch: metadata-scale
-              // (a micro-batch spans minutes of event time — even a
-              // full day of regions is thousands of tuples, not data)
-              val touched = graft.pipeline.DriverBounds.boundedCollect(
-                withParts
-                  .select(Schemas.partitionColumnNames.map(col): _*)
-                  .filter(col("year").isNotNull)
-                  .distinct(), 100000L,
-                "LakeIngest touched-partition tuples (batch metadata)")
-                .map(RecordShape.partitionDir(outDir, _))
-              touched.foreach(p => openPartitions(p) = batchId)
-              val closed = openPartitions.collect {
-                case (p, last) if batchId - last >= compactLagBatches => p
-              }.toSeq
-              closed.foreach { p =>
-                PartitionOps.compactPartition(batch.sparkSession, p)
-                openPartitions.remove(p)
-              }
+          RecordShape.writePartitioned(b.filter(!corrupt)
+            .select(col("parsed.*") +: parts: _*).drop(corruptCol), outDir)
+          // one metadata pass, corrupt and good rows per partition tuple:
+          // a micro-batch spans minutes of event time, so few tuples
+          val meta = graft.pipeline.DriverBounds.boundedCollect(b.groupBy(parts: _*)
+            .agg(count_if(corrupt).as("corrupt"), count_if(!corrupt).as("good")), 100000L,
+            "LakeIngest touched-partition tuples (batch metadata)")
+          if (meta.exists(_.getAs[Long]("corrupt") > 0))
+            b.filter(corrupt).select(col("value")).write.mode("append").text(errDir)
+          if (compactLagBatches > 0) {
+            meta.filter(r => r.getAs[Long]("good") > 0 && r.getAs[Any]("year") != null)
+              .foreach(r => openPartitions(RecordShape.partitionDir(outDir, r)) = batchId)
+            val closed = openPartitions.collect {
+              case (p, last) if batchId - last >= compactLagBatches => p
+            }.toSeq
+            closed.foreach { p =>
+              PartitionOps.compactPartition(records.sparkSession, p)
+              openPartitions.remove(p)
             }
-          } finally { withParts.unpersist(); () }
+          }
         } finally { b.unpersist(); () }
       }
       .start()

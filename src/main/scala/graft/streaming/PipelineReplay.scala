@@ -260,15 +260,17 @@ object PipelineReplay {
 
   /** Replay (series_id, ts, value) datapoints through
     * [[StreamingStatAgg.aggregate]]; returns the closed
-    * (series_id, window_start, metricvalue) windows. */
+    * (series_id, window_start, metricvalue) windows. A value and a
+    * statistic may be null, as in the batch aggregate: a window of
+    * null values keeps its row, and its statistic is null. */
   def replayStatAgg(spark: SparkSession,
-      points: Seq[(String, Timestamp, Double)],
-      statistic: String, periodSeconds: Int): Seq[(String, Long, Double)] = {
+      points: Seq[(String, Timestamp, Option[Double])],
+      statistic: String, periodSeconds: Int): Seq[(String, Long, Option[Double])] = {
     if (points.isEmpty) return Seq.empty
     val sess = child(spark)
     import sess.implicits._
     implicit val sq = sess.sqlContext
-    val mem = MemoryStream[(String, Timestamp, Double)]
+    val mem = MemoryStream[(String, Timestamp, Option[Double])]
     val out = StreamingStatAgg.aggregate(
       mem.toDF().toDF("series_id", "ts", "value"), statistic, periodSeconds,
       watermark = "0 seconds")
@@ -277,9 +279,10 @@ object PipelineReplay {
       q.processAllAvailable()
       val maxTs = points.iterator.map(_._2.getTime).max
       mem.addData(("__sentinel__",
-        new Timestamp(maxTs + 2L * periodSeconds * 1000L), 0.0))
+        new Timestamp(maxTs + 2L * periodSeconds * 1000L), Some(0.0)))
       q.processAllAvailable()
-    }.map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
+    }.map(r => (r.getString(0), r.getLong(1),
+      if (r.isNullAt(2)) None else Some(r.getDouble(2))))
       .filter(_._1 != "__sentinel__")
   }
 

@@ -96,4 +96,34 @@ class RunMetricsSpec extends SparkTestBase {
       assert(jobs(facts.join(broadcast(defs), "unique_id").collect()) == 2)
     } finally metrics.detach()
   }
+
+  test("a lake ingest micro-batch runs its landing, one metadata pass and the errors write") {
+    import java.nio.file.Files
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.Trigger
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val mem = MemoryStream[String](4)
+    val good =
+      """{"collectiontime":"2024-01-02T03:00:00","namespace":"NS","name":"N",
+        |"period":3600,"frequency":"hour","statistic":"Sum","metadata":null,
+        |"dimensions":null,"accountid":"a","metrictimestamp":"2024-01-02T03:00:00",
+        |"metricvalue":7.5,"id":"u1","label":"N"}""".stripMargin.replace("\n", "")
+    val metrics = RunMetrics.attach(spark)
+    val q = graft.streaming.LakeIngest.start(mem.toDF(),
+      Files.createTempDirectory("lakejobs").toString,
+      Files.createTempDirectory("lakejobserr").toString,
+      Files.createTempDirectory("ckptjobs").toString,
+      trigger = Trigger.ProcessingTime("1 second"), compactLagBatches = 1)
+    try {
+      metrics.reset()
+      mem.addData("{ not json }" +: Seq.fill(7)(good): _*)
+      q.processAllAvailable()
+      // the landing (the batch cache stage, the rebalance's AQE shuffle
+      // stage and the write), the metadata groupBy (a shuffle stage and
+      // the collect) and the errors write; a separate corrupt check and
+      // touched-partition collect make 7
+      assert(metrics.read()._2.jobs == 6, s"${metrics.read()._2}")
+    } finally { q.stop(); metrics.detach() }
+  }
 }

@@ -88,18 +88,23 @@ class StreamingSpec extends SparkTestBase {
   test("streaming stat agg applies the batch statistic rule: non-finite values are no-data") {
     import java.sql.Timestamp
     def t(e: Long) = new Timestamp(e * 1000)
-    // NaN / ±Infinity beside finite values, and a window holding only NaN
+    // NaN / ±Infinity beside finite values, a window holding only NaN
+    // (no row), and a window holding only NaN and null (a row whose
+    // statistic is null, SampleCount 0)
     val points = Seq(
       ("s1", t(10), 1.0), ("s1", t(20), Double.NaN),
       ("s1", t(70), 2.0), ("s1", t(75), Double.PositiveInfinity), ("s1", t(80), 3.0),
       ("s1", t(130), Double.NegativeInfinity), ("s1", t(140), 4.0),
-      ("s2", t(10), Double.NaN), ("s2", t(70), 5.0))
+      ("s2", t(10), Double.NaN), ("s2", t(70), 5.0),
+      ("s3", t(10), Double.NaN)).map { case (s, ts, v) => (s, ts, Option(v)) } :+
+      (("s3", t(20), None))
     for (stat <- graft.operators.StatWindowAgg.standardStats :+ "p90") {
       val streamed = graft.streaming.PipelineReplay
         .replayStatAgg(spark, points, stat, 60).toSet
       val batch = ComposedReferences
         .aggregateOne(points.toDF("series_id", "ts", "value"), stat, 60)
-        .as[(String, Long, Double)].collect().toSet
+        .as[(String, Long, Option[Double])].collect().toSet
+      assert(streamed.exists(_._1 == "s3"), s"$stat: the null window has no row")
       assert(streamed == batch, s"$stat: stream $streamed vs batch $batch")
     }
   }
@@ -474,6 +479,69 @@ class StreamingSpec extends SparkTestBase {
         .select("id").collect().map(_.getString(0)).sorted.toSeq ==
         Seq("h3-1", "h3-2", "h3-3"))
     } finally q.stop()
+  }
+
+  test("lake ingest: an all-corrupt batch lands nothing, a null timestamp lands in the default partition") {
+    implicit val sq = spark.sqlContext
+    val mem = MemoryStream[String]
+    val out = Files.createTempDirectory("lakenull").toString
+    val err = Files.createTempDirectory("lakenullerr").toString
+    def rec(id: String, ts: String): String =
+      s"""{"collectiontime":"2024-01-02T03:00:00","namespace":"NS","name":"N",
+         |"period":3600,"frequency":"hour","statistic":"Sum","metadata":null,
+         |"dimensions":null,"accountid":"a","metrictimestamp":$ts,
+         |"metricvalue":7.5,"id":"$id","label":"N"}""".stripMargin.replace("\n", "")
+    val q = LakeIngest.start(mem.toDF(), out, err,
+      Files.createTempDirectory("ckptnull").toString,
+      trigger = Trigger.ProcessingTime("1 second"), compactLagBatches = 1)
+    try {
+      mem.addData("{ not json", "[1, 2"); q.processAllAvailable()
+      assert(!new java.io.File(s"$out/region=local-1").exists())
+      mem.addData(rec("n", "null"), rec("h3", "\"2024-01-02T03:00:00\""))
+      q.processAllAvailable()
+      mem.addData(rec("h4", "\"2024-01-02T04:00:00\"")); q.processAllAvailable()
+    } finally q.stop()
+    assert(new java.io.File(s"$out/region=local-1/year=__HIVE_DEFAULT_PARTITION__").isDirectory)
+    assert(spark.read.parquet(out).select("id").collect().map(_.getString(0)).sorted.toSeq ==
+      Seq("h3", "h4", "n"))
+    assert(spark.read.text(err).count() == 2)
+  }
+
+  test("a second lake ingest run in one session compiles no generated class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // three input files, one micro-batch each (hour 3 and a corrupt
+    // line; hours 3 and 4; hour 4), so the third batch compacts hour 3
+    val in = Files.createTempDirectory("lakecg_in")
+    def rec(id: String, hour: Int): String =
+      s"""{"collectiontime":"2024-01-02T0$hour:00:00","namespace":"NS","name":"N",
+         |"period":3600,"frequency":"hour","statistic":"Sum","metadata":null,
+         |"dimensions":null,"accountid":"a","metrictimestamp":"2024-01-02T0$hour:00:00",
+         |"metricvalue":7.5,"id":"$id","label":"N"}""".stripMargin.replace("\n", "")
+    Seq(Seq(rec("a", 3), "{ not json"), Seq(rec("b", 3), rec("c", 4)), Seq(rec("d", 4)))
+      .zipWithIndex.foreach { case (lines, i) =>
+        val p = in.resolve(s"records-$i.json")
+        Files.write(p, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+        // the file source orders files by modification time
+        Files.setLastModifiedTime(p,
+          java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 1000L))
+      }
+    // classes compiled by one AvailableNow run into fresh directories
+    def ingest(): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val out = Files.createTempDirectory("lakecg").toString
+      val q = LakeIngest.start(spark.readStream.format("text")
+          .option("maxFilesPerTrigger", 1L).load(in.toString),
+        out, Files.createTempDirectory("lakecgerr").toString,
+        Files.createTempDirectory("ckptcg").toString,
+        trigger = Trigger.AvailableNow(), compactLagBatches = 1)
+      q.awaitTermination()
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      assert(spark.read.parquet(out).count() == 4)
+      compiled
+    }
+    val first = ingest()
+    val second = ingest()
+    assert(second == 0, s"the second run compiled $second classes (first run: $first)")
   }
 
   /** Ingest one micro-batch of `n` JSON records spread over 4 input
