@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, StringType, StructField, StructType}
 import graft.model.{ComparisonOperator, TreatMissingData}
 import graft.pipeline.DriverBounds
+import graft.streaming.AlarmStream
 
 /**
  * Threshold comparison + alarm state machine, batch variant (O-23;
@@ -34,9 +35,9 @@ import graft.pipeline.DriverBounds
  * SLA key (a series may carry several SLAs, and two differing only in
  * `period` have separate grids and vote streams), a sort by key and
  * window_start within partitions, and one walk per key over its dense
- * slot grid. The walk keeps the last N votes in a ring buffer with a
- * running breach count, so a slot costs O(1). Its vote and state rule
- * ([[vote]], [[state]]) is the one streaming.AlarmStream.applySlot runs.
+ * slot grid. The walk folds the streaming pipeline's own per-slot
+ * machine ([[graft.streaming.AlarmStream.stepSlot]], O(1) per slot)
+ * over the grid, so batch and stream step one machine.
  *
  * The grid is CLAMPED to the key's last maxSlotsPerSeries slots: one
  * corrupt far-future timestamp (epoch-millis read as seconds) would
@@ -45,27 +46,9 @@ import graft.pipeline.DriverBounds
  */
 object AlarmStateMachine {
 
-  val StateOk = "OK"
-  val StateAlarm = "ALARM"
-  val StateInsufficient = "INSUFFICIENT_DATA"
-
   private[graft] val KeyCols = Seq("series_id", "period", "threshold",
     "comparison_operator", "datapoints_to_alarm", "evaluation_periods",
     "treat_missing_data")
-
-  /** A slot's vote: a real datapoint votes whether it breaches, a
-    * missing slot casts the policy's missing vote (None = abstains). */
-  private[graft] def vote(value: Option[Double], op: ComparisonOperator,
-      threshold: Double, policy: TreatMissingData): Option[Boolean] =
-    value.map(op.breaches(_, threshold)).orElse(policy.missingVote)
-
-  /** The state after a slot, from the breaches among the last N votes
-    * cast and whether any of the last N slots held a real datapoint. */
-  private[graft] def state(policy: TreatMissingData, datapointsToAlarm: Int,
-      breaches: Int, realInLastN: Boolean): String =
-    if (policy == TreatMissingData.Missing && !realInLastN) StateInsufficient
-    else if (breaches >= datapointsToAlarm) StateAlarm
-    else StateOk
 
   /** Fail fast on bad SLA config, for the batch machine and the
     * streaming pipeline alike: a positive period, known operator and
@@ -149,9 +132,7 @@ object AlarmStateMachine {
       val m = first.getAs[Number](4).intValue
       val n = first.getAs[Number](5).intValue
       val policy = TreatMissingData.fromName(first.getString(6))
-      val votes = mutable.Queue.empty[Boolean] // the last n votes cast
-      var breaches = 0
-      var sinceReal = n // slots since the last real datapoint, capped at n
+      var st = AlarmStream.EmptyState
       var prev: String = null
       var i = 0
       val hi = ws(kept.last)
@@ -162,17 +143,12 @@ object AlarmStateMachine {
         if (from == i) Iterator.single(w -> null)
         else (from until i).iterator.map(j => w -> kept(j).get(KeyCols.length + 1))
       }.map { case (w, value) => // value null: a missing slot
-        val v = vote(Option(value).map(_.asInstanceOf[Number].doubleValue), op, threshold, policy)
-        v.foreach { b =>
-          votes += b
-          if (b) breaches += 1
-          if (votes.length > n && votes.dequeue()) breaches -= 1
-        }
-        sinceReal = if (value != null) 0 else math.min(sinceReal + 1, n)
-        val s = state(policy, m, breaches, sinceReal < n)
-        val row = Row.fromSeq(key ++ Seq(w, value, v.getOrElse(false), s, prev,
-          prev != null && prev != s))
-        prev = s
+        val v = AlarmStream.vote(Option(value).map(_.asInstanceOf[Number].doubleValue),
+          op, threshold, policy)
+        st = AlarmStream.stepSlot(st, w, value != null, v, m, n, policy)
+        val row = Row.fromSeq(key ++ Seq(w, value, v.getOrElse(false), st.state, prev,
+          prev != null && prev != st.state))
+        prev = st.state
         row
       }
     }

@@ -56,8 +56,18 @@ object StatWindowAgg {
     * it an unmatched statistic silently produces NULL metricvalue rows
     * (batch) or dies mid-stream when the first window closes. */
   private[graft] def requireStatistic(statistic: String): Unit =
-    require(standardStats.contains(statistic) || percentileFraction(statistic).isDefined,
-      s"unsupported statistic: $statistic")
+    require(statistic != null && (standardStats.contains(statistic) ||
+      percentileFraction(statistic).isDefined), s"unsupported statistic: $statistic")
+
+  /** The distinct statistics of `owner`'s definition side: bounded as
+    * definition metadata, each checked by [[requireStatistic]]. */
+  private[graft] def requireStatistics(stats: Seq[String], owner: String): Seq[String] = {
+    val distinct = stats.distinct
+    DriverBounds.requireBound(distinct.length, 10000L,
+      s"$owner distinct statistics (definition metadata)")
+    distinct.foreach(requireStatistic)
+    distinct
+  }
 
   /** One statistic's aggregate over `valueCol`: the streaming
     * [[graft.streaming.StreamingStatAgg]]'s aggregate, and the rule of
@@ -104,12 +114,9 @@ object StatWindowAgg {
     val (defRows, defsLocal) = DriverBounds.collectDefinitions(
       defsF.select("unique_id", "statistic", "period", "frequency"),
       "StatWindowAgg definitions")
-    val allStats = defRows.map(_.getString(1)).distinct.toSeq
-    DriverBounds.requireBound(allStats.length, 10000L,
-      "StatWindowAgg distinct statistics (definition metadata)")
-    allStats.foreach(requireStatistic)
     val pStats: Seq[(String, Double)] =
-      allStats.flatMap(s => percentileFraction(s).map(s -> _))
+      requireStatistics(defRows.map(_.getString(1)).toSeq, "StatWindowAgg")
+        .flatMap(s => percentileFraction(s).map(s -> _))
 
     val dps = finite(datapoints, "value")
     val joined = dps.join(broadcast(defsLocal),

@@ -1,21 +1,20 @@
 package graft.streaming
 
 import graft.model.{ComparisonOperator, TreatMissingData}
-import graft.operators.AlarmStateMachine
 
 /**
- * The per-slot alarm machine of the streaming O-23 path (SURVEY.md §7
- * "What's hard" #1/#5): CloudWatch-style M-of-N evaluation over one
- * SLA's vote history. It holds no Dataset wiring — the only streaming
- * operator is [[StreamingAlarmPipeline.evaluateStream]], whose
- * `flatMapGroupsWithState` keeps one [[AlarmState]] per (series, SLA)
- * and feeds it closed windows and missing slots through the functions
- * here. State *transitions* are emitted (alarm actions fire on change,
- * not level — cw_alarm.py:52-62).
+ * The per-slot M-of-N alarm machine of both O-23 operators (SURVEY.md
+ * §7 "What's hard" #1/#5): CloudWatch-style evaluation over one SLA's
+ * vote history, with no Dataset wiring. The batch
+ * [[graft.operators.AlarmStateMachine]] walk folds [[stepSlot]] over
+ * each key's dense slot grid; [[StreamingAlarmPipeline.evaluateStream]]
+ * keeps one [[AlarmState]] per (series, SLA) and feeds it closed
+ * windows and missing slots through [[applySlot]], emitting state
+ * *transitions* (alarm actions fire on change — cw_alarm.py:52-62).
  *
  * CloudWatch evaluates every period on the wall clock, not only when a
  * datapoint arrives (cw_alarm.py:46-49 — the missing-data policies are
- * about exactly this), so the machine advances on two clocks:
+ * about exactly this), so the streaming machine advances on two clocks:
  *
  *  - a window closing after a gap first DENSIFIES the gap
  *    ([[synthesizeSlots]]) — every skipped period slot casts its own
@@ -27,7 +26,8 @@ import graft.operators.AlarmStateMachine
  *    INSUFFICIENT_DATA (MISSING policy) / OK (NOT_BREACHING) / ALARM
  *    (BREACHING) without any further input.
  *
- * Scale: state is O(evaluation_periods) booleans per series. A silence
+ * Scale: state is O(evaluation_periods) booleans per series, and a
+ * slot costs O(1): the window keeps a running breach count. A silence
  * of any length costs at most evaluation_periods synthesized slots per
  * timer firing (after N missing votes the vote window is saturated and
  * the state can no longer change, so longer gaps jump straight to the
@@ -35,52 +35,70 @@ import graft.operators.AlarmStateMachine
  */
 object AlarmStream {
 
-  /** SLA config snapshot carried in state so timer firings can
-    * evaluate missing slots without an incoming point. */
+  /** SLA config snapshot carried in the pipeline state so timer
+    * firings can evaluate missing slots without an incoming point. */
   final case class SlaConf(
       period: Long, threshold: Double, comparisonOperator: String,
       datapointsToAlarm: Int, evaluationPeriods: Int,
       treatMissingData: String)
 
-  /** Per-series machine state, mirroring the batch variant's two
-    * views of history: `slotVotes` = last N slots (missing slots as
-    * None — drives MISSING insufficiency and the NB/B policies);
-    * `realVotes` = last N breach flags of REAL datapoints (drives
-    * IGNORE/MISSING vote counting, where missing slots don't vote).
-    * `lastWindow`/`conf` drive gap densification and timer-based
-    * evaluation of silent series. */
+  /** One SLA's machine after its last slot: `votes` are the last N
+    * votes cast (oldest first), `breaches` how many of them breach,
+    * `sinceReal` the slots since the last real datapoint (capped at N;
+    * `Int.MaxValue` before any slot), `state` the alarm state and
+    * `lastWindow` the last slot's start, which drives gap densification
+    * and timer-based evaluation of silent series. */
   final case class AlarmState(
-      slotVotes: List[Option[Boolean]], realVotes: List[Boolean],
-      state: String, lastWindow: Option[Long], conf: Option[SlaConf])
+      votes: Vector[Boolean], breaches: Int, sinceReal: Int,
+      state: String, lastWindow: Option[Long])
 
   val EmptyState: AlarmState =
-    AlarmState(Nil, Nil, "INSUFFICIENT_DATA", None, None)
+    AlarmState(Vector.empty, 0, Int.MaxValue, "INSUFFICIENT_DATA", None)
 
   final case class Transition(
       seriesId: String, windowStart: Long, prevState: String,
       newState: String)
 
-  /** Evaluate ONE slot (real or missing) against the machine, by the
-    * vote and state rule the batch variant runs
-    * ([[AlarmStateMachine.vote]], [[AlarmStateMachine.state]]). */
+  /** A slot's vote: a real datapoint votes whether it breaches, a
+    * missing slot casts the policy's missing vote (None = abstains). */
+  private[graft] def vote(value: Option[Double], op: ComparisonOperator,
+      threshold: Double, policy: TreatMissingData): Option[Boolean] =
+    value.map(op.breaches(_, threshold)).orElse(policy.missingVote)
+
+  /** The per-slot step: slot `ws` (`real` when it holds a datapoint)
+    * casts `slotVote`, the oldest vote leaves once more than N are held,
+    * and the state follows — INSUFFICIENT_DATA under MISSING when none
+    * of the last N slots held a real datapoint, else ALARM when at
+    * least M of the last N votes cast breach, else OK. Under IGNORE and
+    * MISSING a missing slot abstains, so the window spans the last N
+    * real datapoints. */
+  private[graft] def stepSlot(s: AlarmState, ws: Long, real: Boolean,
+      slotVote: Option[Boolean], m: Int, n: Int,
+      policy: TreatMissingData): AlarmState = {
+    val (votes, breaches) = slotVote.fold((s.votes, s.breaches)) { b =>
+      val cast = s.votes :+ b
+      val count = s.breaches + (if (b) 1 else 0)
+      if (cast.length > n) (cast.tail, count - (if (cast.head) 1 else 0)) else (cast, count)
+    }
+    val sinceReal = if (real) 0 else math.min(s.sinceReal, n - 1) + 1
+    val state =
+      if (policy == TreatMissingData.Missing && sinceReal >= n) "INSUFFICIENT_DATA"
+      else if (breaches >= m) "ALARM"
+      else "OK"
+    AlarmState(votes, breaches, sinceReal, state, Some(ws))
+  }
+
+  /** Evaluate ONE slot (real or missing) of a streaming SLA: its
+    * [[vote]] through [[stepSlot]], with the transition it causes. */
   private[graft] def applySlot(s: AlarmState, seriesId: String, ws: Long,
       value: Option[Double], conf: SlaConf): (AlarmState, Option[Transition]) = {
-    val op = ComparisonOperator.fromName(conf.comparisonOperator)
-    val n = math.max(conf.evaluationPeriods, 1)
     val policy = TreatMissingData.fromName(conf.treatMissingData)
-    val slotVote = AlarmStateMachine.vote(value, op, conf.threshold, policy)
-    val slotVotes = (s.slotVotes :+ slotVote).takeRight(n)
-    val realVotes = (s.realVotes ++ slotVote.filter(_ => value.isDefined)).takeRight(n)
-    // the last N cast votes: every slot votes unless the policy
-    // abstains on missing slots, then only real datapoints do (so
-    // under MISSING a voting slot is a real one)
-    val cast = if (policy.missingVote.isEmpty) realVotes else slotVotes.flatten
-    val newState = AlarmStateMachine.state(policy, conf.datapointsToAlarm,
-      cast.count(identity), slotVotes.exists(_.isDefined))
-    val next = AlarmState(slotVotes, realVotes, newState,
-      Some(ws), Some(conf))
-    val out = if (newState != s.state)
-      Some(Transition(seriesId, ws, s.state, newState)) else None
+    val next = stepSlot(s, ws, value.isDefined,
+      vote(value, ComparisonOperator.fromName(conf.comparisonOperator),
+        conf.threshold, policy),
+      conf.datapointsToAlarm, math.max(conf.evaluationPeriods, 1), policy)
+    val out = if (next.state != s.state)
+      Some(Transition(seriesId, ws, s.state, next.state)) else None
     (next, out)
   }
 
@@ -116,9 +134,9 @@ object AlarmStream {
   /** Timer path: evaluate every slot the watermark has already closed
     * (slot [w, w+period) is closed once w + period <= watermark). */
   private[graft] def advanceToWatermark(s: AlarmState, seriesId: String,
-      watermarkSec: Long): (AlarmState, List[Transition]) =
-    (s.lastWindow, s.conf) match {
-      case (Some(last), Some(conf)) if conf.period > 0 =>
+      watermarkSec: Long, conf: SlaConf): (AlarmState, List[Transition]) =
+    s.lastWindow match {
+      case Some(last) if conf.period > 0 =>
         // largest closed slot start, on the series' own slot grid
         val maxClosed = watermarkSec - conf.period
         if (maxClosed <= last) (s, Nil)

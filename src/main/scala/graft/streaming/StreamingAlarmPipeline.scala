@@ -58,13 +58,16 @@ import graft.streaming.AlarmStream.{AlarmState, SlaConf, Transition}
  *    folded into the compressed GK triplet array — the same
  *    O(min(n, accuracy)) memory the batch aggregation buffer holds.
  *
- * State schema version: [[StateVersion]] (currently 3). Version 1
+ * State schema version: [[StateVersion]] (currently 4). Version 1
  * (rounds ≤5) accumulated `sum` as Double and had no percentile
  * fields; version 2 (rounds 6–7) added the DECIMAL(38,18) sum +
  * samples/sketch/sketchCount [[WinAgg]] fields and keyed groups by
  * (series, SLA config) WITHOUT a statistic dimension; version 3
  * (round 8) adds the `stateVersion` and `lastDataSec` fields and the
- * statistic group-key dimension. Each bump is NOT checkpoint-compatible with its
+ * statistic group-key dimension; version 4 swaps the machine's
+ * `slotVotes`/`realVotes` lists and config copy for the batch walk's
+ * O(1) window (`votes`, `breaches`, `sinceReal`), so batch and stream
+ * step one machine. Each bump is NOT checkpoint-compatible with its
  * predecessor (restore fails Spark's state-schema validation by
  * design; v2→v3 also redistributes groups across the new key).
  * Interim round-8 builds briefly carried the v3 shape still labeled
@@ -145,12 +148,13 @@ object StreamingAlarmPipeline {
 
   /** Current [[PipeState.stateVersion]]; bump on ANY semantic change
     * to the state encoding OR the group key (see the class scaladoc). */
-  private[graft] val StateVersion = 3
+  private[graft] val StateVersion = 4
 
   /** Per-series pipeline state: open windows + the alarm machine.
-    * `conf` is captured from the first absorbed point so timer-only
-    * invocations (watermark passes an open window with no new data)
-    * can close windows before the machine ever evaluated a slot.
+    * `conf`, the one copy of the SLA config, is captured from the
+    * first absorbed point so timer-only invocations (watermark passes
+    * an open window with no new data) can close windows before the
+    * machine ever evaluated a slot.
     * `lastDataSec` is the newest REAL datapoint's event time — the
     * idle-TTL signal (the alarm cursor can't serve: missing-data
     * synthesis keeps it tracking the watermark even for a series that
@@ -195,7 +199,7 @@ object StreamingAlarmPipeline {
       (PipeState, List[Transition], Option[Long]) = {
     val conf = points.headOption.map(p => SlaConf(p.period, p.threshold,
       p.comparisonOperator, p.datapointsToAlarm, p.evaluationPeriods,
-      p.treatMissingData)).orElse(st.conf).orElse(st.alarm.conf)
+      p.treatMissingData)).orElse(st.conf)
 
     conf match {
       case None => (st, Nil, None)
@@ -246,7 +250,7 @@ object StreamingAlarmPipeline {
         //    open forever and silently disable missing-data evaluation
         //    for the series.
         val (s4, wmOut) = AlarmStream.advanceToWatermark(alarm, seriesId,
-          watermarkSec)
+          watermarkSec, c)
         alarm = s4; out = wmOut.reverse ::: out
         // 4) next timer: the earliest pending closure — an open
         //    window's end, or the silent series' next expected slot
@@ -298,12 +302,10 @@ object StreamingAlarmPipeline {
     val (slaRows, slasLocal) = DriverBounds.collectDefinitions(
       slas.select((AlarmStateMachine.KeyCols ++ (if (perSla) Seq("statistic") else Nil))
         .map(col): _*), "StreamingAlarmPipeline SLA definitions")
-    if (perSla) {
-      val stats = slaRows.map(_.getString(AlarmStateMachine.KeyCols.length)).distinct
-      DriverBounds.requireBound(stats.length, 10000L,
-        "StreamingAlarmPipeline distinct statistics (definition metadata)")
-      stats.foreach(s => Option(s).foreach(StatWindowAgg.requireStatistic))
-    }
+    // a null per-SLA statistic takes the stream-wide default
+    if (perSla) StatWindowAgg.requireStatistics(
+      slaRows.map(_.getString(AlarmStateMachine.KeyCols.length)).filter(_ != null).toSeq,
+      "StreamingAlarmPipeline")
     AlarmStateMachine.requireSlaConfig(slaRows)
     val statCol =
       if (perSla)

@@ -142,10 +142,33 @@ class AlarmMachineSpec extends SparkTestBase {
     assert(states(s, 5.0, "LESS_THAN_THRESHOLD", 1, 1)(1) == 60L -> "OK")
   }
 
+  test("evaluation_periods 500 over 2,000 slots: batch equals the streaming fold") {
+    val rnd = new scala.util.Random(7)
+    // low, high and low breach rates around a 520-slot silence, so a
+    // 250-of-500 window crosses M both ways and MISSING runs dry
+    val slots = (0 until 2000).map { i =>
+      val p = if (i >= 600 && i < 1200) 0.8 else 0.2
+      (i * 60L, if (i >= 1200 && i < 1720 || rnd.nextDouble() < 0.15) None
+        else Some(if (rnd.nextDouble() < p) 9.0 else 1.0))
+    }
+    for (missing <- TreatMissingData.all.map(_.name)) {
+      val conf = SlaConf(60L, 5.0, "GREATER_THAN_THRESHOLD", 250, 500, missing)
+      val fold = slots.scanLeft(AlarmStream.EmptyState) { case (st, (ws, v)) =>
+        AlarmStream.applySlot(st, "s1", ws, v, conf)._1 }.tail
+        .map(st => st.lastWindow.get -> st.state)
+      val batch = states(slots, 5.0, "GREATER_THAN_THRESHOLD", 250, 500, missing)
+      assert(batch == fold, missing)
+      assert(batch.map(_._2).toSet.contains("ALARM") &&
+        batch.map(_._2).toSet.contains("OK"), s"$missing never crossed M")
+    }
+    assert(states(slots, 5.0, "GREATER_THAN_THRESHOLD", 250, 500, "MISSING")
+      .map(_._2).contains("INSUFFICIENT_DATA"))
+  }
+
   test("streaming IGNORE matches batch across gaps") {
     val conf = SlaConf(60L, 5.0, "LESS_THAN_THRESHOLD", 2, 2, "IGNORE")
     // batch asserts ALARM at the second real breach despite the gap
-    val (st, t) = foldSlots(AlarmState(Nil, Nil, "OK", None, None), conf,
+    val (st, t) = foldSlots(AlarmStream.EmptyState.copy(state = "OK"), conf,
       0L -> Some(1.0), 60L -> None, 120L -> Some(1.0))
     assert(st.state == "ALARM", s"streaming IGNORE diverged: $st")
     assert(t.map(_.newState) == List("ALARM"))
@@ -164,7 +187,7 @@ class AlarmMachineSpec extends SparkTestBase {
     val conf = SlaConf(60L, 5.0, "GREATER_THAN_OR_EQUAL_TO_THRESHOLD", 2, 3,
       "NOT_BREACHING")
     val (st1, t1) = foldSlots(
-      AlarmState(Nil, Nil, "INSUFFICIENT_DATA", None, None), conf,
+      AlarmStream.EmptyState, conf,
       0L -> Some(10.0), 60L -> Some(1.0))
     assert(t1.map(_.newState) == List("OK"))
     val (st2, t2) = foldSlots(st1, conf, 120L -> Some(10.0))
@@ -175,7 +198,7 @@ class AlarmMachineSpec extends SparkTestBase {
 
   test("streaming core: MISSING policy yields INSUFFICIENT_DATA on empty window") {
     val conf = SlaConf(60L, 5.0, "GREATER_THAN_THRESHOLD", 1, 2, "MISSING")
-    val (_, t) = foldSlots(AlarmState(Nil, Nil, "OK", None, None), conf,
+    val (_, t) = foldSlots(AlarmStream.EmptyState.copy(state = "OK"), conf,
       0L -> None, 60L -> None)
     assert(t.map(_.newState) == List("INSUFFICIENT_DATA"))
   }

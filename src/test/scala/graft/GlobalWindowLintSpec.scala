@@ -64,8 +64,9 @@ import org.scalatest.funsuite.AnyFunSuite
  * harness mains `Bench`, `Verify` and `PlanDump` and the production
  * `MetricsMain`; and each streaming or lake
  * mechanism has one home — MemoryStream replays live in
- * `PipelineReplay`, `AlarmStream` holds the per-slot machine and no
- * stateful wiring, and only `RecordShape` writes the lake partition
+ * `PipelineReplay`, `AlarmStream` holds the one per-slot alarm machine
+ * (its state and step) and no stateful wiring, the batch walk keeps no
+ * vote window of its own, and only `RecordShape` writes the lake partition
  * layout; `src/main` holds one rendition of each operator, its
  * parity references living in `ComposedReferences`; and `src/main`
  * writes session conf only in sessions it owns.
@@ -215,14 +216,23 @@ class GlobalWindowLintSpec extends AnyFunSuite {
       // the literal key list or the schema's name list
       "partitionBy(\"region\"" -> (
         "\\.partitionBy\\s*\\(\\s*(\"region\"|Schemas\\s*\\.\\s*partitionColumnNames)",
-        "graft/operators/RecordShape.scala"))
+        "graft/operators/RecordShape.scala"),
+      // the alarm machine both operators step
+      "case class AlarmState" -> ("\\bcase\\s+class\\s+AlarmState\\b",
+        "graft/streaming/AlarmStream.scala"),
+      "the per-slot step" -> ("\\bdef\\s+(stepSlot|applySlot)\\b",
+        "graft/streaming/AlarmStream.scala"))
     val strays = homes.flatMap { case (what, (re, home)) =>
       countSites("src/main/scala", java.util.regex.Pattern.compile(re))
         .keys.filter(_ != home).map(rel => s"$what in $rel (belongs in $home)")
     } ++ countSites("src/main/scala/graft/streaming/AlarmStream.scala",
         java.util.regex.Pattern.compile("\\bflatMapGroupsWithState\\b"))
       .keys.map(_ => "flatMapGroupsWithState in streaming/AlarmStream.scala " +
-        "(the operator is StreamingAlarmPipeline.evaluateStream)")
+        "(the operator is StreamingAlarmPipeline.evaluateStream)") ++
+      countSites("src/main/scala/graft/operators/AlarmStateMachine.scala",
+        java.util.regex.Pattern.compile("\\bQueue\\b"))
+      .keys.map(_ => "a Queue vote window in operators/AlarmStateMachine.scala " +
+        "(the walk steps AlarmStream.stepSlot)")
     assert(strays.isEmpty, strays.mkString("\n"))
   }
 

@@ -55,7 +55,7 @@ class PropertySpec extends AnyFunSuite {
       def run(values: List[Double]): String = {
         val conf = AlarmStream.SlaConf(60L, 5.0, "GREATER_THAN_THRESHOLD", m, n,
           "NOT_BREACHING")
-        values.zipWithIndex.foldLeft(AlarmState(Nil, Nil, "OK", None, None)) {
+        values.zipWithIndex.foldLeft(AlarmStream.EmptyState.copy(state = "OK")) {
           case (st, (v, i)) => AlarmStream.applySlot(st, "s", i * 60L, Some(v), conf)._1
         }.state
       }
@@ -64,6 +64,38 @@ class PropertySpec extends AnyFunSuite {
       val raised = run(vs.map(v => math.max(v, 6.0)))
       assert(!(base == "ALARM" && raised == "OK"),
         s"raising values un-alarmed: $vs")
+    }
+  }
+
+  test("alarm machine: the window holds at most N votes, counts their breaches, " +
+      "and its state is the recount over the slot history") {
+    // N far past the parity case's 6, gapped slots, every policy; the
+    // reference recounts the last N votes cast from the whole history
+    val slotGen = Gen.frequency(5 -> Gen.chooseNum(0.0, 10.0).map(Option(_)),
+      3 -> Gen.const(None))
+    val caseGen = for {
+      n <- Gen.chooseNum(1, 40); m <- Gen.chooseNum(1, n)
+      len <- Gen.chooseNum(1, 120); slots <- Gen.listOfN(len, slotGen)
+    } yield (m, n, slots.toVector)
+    forAll(caseGen, n = 100) { case (m, n, slots) =>
+      for (policy <- TreatMissingData.all) {
+        val conf = AlarmStream.SlaConf(60L, 5.0, "GREATER_THAN_THRESHOLD", m, n,
+          policy.name)
+        slots.indices.foldLeft(AlarmStream.EmptyState) { (st, i) =>
+          val next: AlarmState = AlarmStream.applySlot(st, "s", i * 60L, slots(i), conf)._1
+          assert(next.votes.length <= n && next.breaches == next.votes.count(identity),
+            s"$policy M$m N$n slot $i: $next")
+          val history = slots.take(i + 1)
+          val cast = history.flatMap(_.map(_ > 5.0).orElse(policy.missingVote)).takeRight(n)
+          val want =
+            if (policy == TreatMissingData.Missing && history.takeRight(n).forall(_.isEmpty))
+              "INSUFFICIENT_DATA"
+            else if (cast.count(identity) >= m) "ALARM"
+            else "OK"
+          assert(next.state == want, s"$policy M$m N$n slot $i over $history")
+          next
+        }
+      }
     }
   }
 

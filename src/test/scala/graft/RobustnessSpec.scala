@@ -289,6 +289,23 @@ class RobustnessSpec extends SparkTestBase {
     assert(e.getMessage.contains("StatWindowAgg distinct statistics"))
   }
 
+  test("a null statistic fails as unsupported, and a null per-SLA statistic streams the default") {
+    val dps = Seq(("u1", java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1.0))
+      .toDF("series_id", "ts", "value")
+    val defs = Seq(("u1", null.asInstanceOf[String], 60, "minute"))
+      .toDF("unique_id", "statistic", "period", "frequency")
+    val slas = Seq(("u1", 60L, 0.5, "GREATER_THAN_THRESHOLD", 1, 1, "MISSING",
+        null.asInstanceOf[String]))
+      .toDF("series_id", "period", "threshold", "comparison_operator",
+        "datapoints_to_alarm", "evaluation_periods", "treat_missing_data", "statistic")
+    for (run <- Seq(() => graft.operators.StatWindowAgg.aggregate(dps, defs),
+        () => graft.streaming.StreamingAlarmPipeline.evaluateStream(dps, slas, null))) {
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains("unsupported statistic: null"), e.getMessage)
+    }
+    graft.streaming.StreamingAlarmPipeline.evaluateStream(dps, slas, "Sum")
+  }
+
   test("AlarmStateMachine: an SLA table past the metadata bound fails loudly") {
     val slas = spark.range(10001)
       .selectExpr("id AS series_id", "id + 1 AS period", "0.5 AS threshold",
