@@ -1,11 +1,13 @@
 package graft.operators
 
 import scala.collection.mutable
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField, StructType}
 import graft.model.{ComparisonOperator, TreatMissingData}
 import graft.pipeline.DriverBounds
+import graft.plans.{DefinitionLookup, DefinitionTable}
 import graft.streaming.AlarmStream
 
 /**
@@ -29,20 +31,24 @@ import graft.streaming.AlarmStream
  *    (alarm actions fire on transition, not level).
  *
  * The SLA side is collected once under [[DriverBounds.DefinitionRows]],
- * checked on the driver and broadcast as a local relation of the same
- * rows (the reference matches its small definition set in memory too).
- * Then one pass: the broadcast join, one hash repartition on the full
- * SLA key (a series may carry several SLAs, and two differing only in
- * `period` have separate grids and vote streams), a sort by key and
- * window_start within partitions, and one walk per key over its dense
- * slot grid. The walk folds the streaming pipeline's own per-slot
- * machine ([[graft.streaming.AlarmStream.stepSlot]], O(1) per slot)
- * over the grid, so batch and stream step one machine.
+ * checked on the driver and shipped as one broadcast variable keyed by
+ * series id ([[graft.plans.DefinitionLookup]]; the reference matches
+ * its small definition set in memory too). Then one pass: one hash
+ * repartition of the windows on series_id (series without an SLA are
+ * dropped before it), a sort by series_id and window_start within
+ * partitions, and per series one walk per SLA of that series (a series
+ * may carry several SLAs, and two differing only in `period` have
+ * separate grids and vote streams) over its dense slot grid. The walk
+ * folds the streaming pipeline's own per-slot machine
+ * ([[graft.streaming.AlarmStream.stepSlot]], O(1) per slot) over the
+ * grid, so batch and stream step one machine.
  *
- * The grid is CLAMPED to the key's last maxSlotsPerSeries slots: one
+ * Each SLA's grid is CLAMPED to its last maxSlotsPerSeries slots: one
  * corrupt far-future timestamp (epoch-millis read as seconds) would
  * otherwise ask for ~1e10 slots and kill alarming for every healthy
- * series with it.
+ * series with it. The clamp spans maxSlotsPerSeries periods of that
+ * SLA back from the series' newest window, so SLAs of different
+ * periods on one series keep different spans.
  */
 object AlarmStateMachine {
 
@@ -85,72 +91,93 @@ object AlarmStateMachine {
    * @param slas   (series_id, period, threshold, comparison_operator,
    *               datapoints_to_alarm, evaluation_periods,
    *               treat_missing_data) — collected once, with a bound,
-   *               checked on the driver, and broadcast
-   * @return one row per (SLA key, slot): the key columns, window_start,
+   *               checked on the driver, and looked up by series id
+   * @return one row per (SLA, slot): the key columns, window_start,
    *         metricvalue (null when the slot was missing), breaching,
    *         statevalue, prev_state (null on the first slot), transitioned
    */
   def evaluate(series: DataFrame, slas: DataFrame,
       maxSlotsPerSeries: Long = 200000L): DataFrame = {
-    val key = KeyCols.map(col)
-    val (slaRows, slasLocal) = DriverBounds.collectDefinitions(slas.select(key: _*),
+    val slaCols = slas.select(KeyCols.map(col): _*)
+    val slaRows = DriverBounds.collectDefinitions(slaCols,
       "AlarmStateMachine SLA definitions")
     requireSlaConfig(slaRows)
+    val table = DefinitionLookup.table(series.sparkSession, slaRows.toSeq, slaCols.schema)
     val rows = series
-      .select(col("series_id"), col("window_start").cast("long").as("window_start"),
+      .select(col("series_id").cast("string").as("series_id"),
+        col("window_start").cast("long").as("window_start"),
         col("metricvalue"))
-      .filter(col("window_start").isNotNull)
-      .join(broadcast(slasLocal), Seq("series_id"))
-      .select(key :+ col("window_start") :+ col("metricvalue"): _*)
-    val out = StructType(rows.schema.fields ++ Seq(
+      .filter(col("window_start").isNotNull &&
+        DefinitionLookup.rowsFor(col("series_id"), table).isNotNull)
+    val out = StructType(slaCols.schema.fields ++ Seq(
+      StructField("window_start", LongType), rows.schema("metricvalue").copy(nullable = true),
       StructField("breaching", BooleanType), StructField("statevalue", StringType),
       StructField("prev_state", StringType), StructField("transitioned", BooleanType)))
-    rows.repartition(key: _*)
-      .sortWithinPartitions(key :+ col("window_start"): _*)
-      .mapPartitions(walk(_, maxSlotsPerSeries))(Encoders.row(out))
+    rows.repartition(col("series_id"))
+      .sortWithinPartitions(col("series_id"), col("window_start"))
+      .mapPartitions(walk(_, table, maxSlotsPerSeries))(Encoders.row(out))
   }
 
-  /** Walks one partition, sorted by key then window_start, key by key:
-    * one output row per slot, or per row where rows share a slot. Rows
-    * are (key columns, window_start, metricvalue). */
-  private def walk(rows: Iterator[Row], maxSlots: Long): Iterator[Row] = {
+  /** Walks one partition, sorted by series_id then window_start, series
+    * by series and, within a series, SLA by SLA: one output row per
+    * slot, or per row where rows share a slot. Rows are (series_id,
+    * window_start, metricvalue). */
+  private def walk(rows: Iterator[Row], table: Broadcast[DefinitionTable],
+      maxSlots: Long): Iterator[Row] = {
+    val defs = table.value
     val in = rows.buffered
-    def ws(r: Row): Long = r.getLong(KeyCols.length)
+    def ws(r: Row): Long = r.getLong(1)
     Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
       val first = in.next()
-      val key = KeyCols.indices.map(first.get)
-      val period = first.getAs[Number](1).longValue
-      // rows a clamp span behind the newest can hold no slot: drop them
+      val sid = first.getString(0)
+      val slas = defs.rowsOf(sid)
+      val span = slas.map(_.getAs[Number](0).longValue).max * maxSlots
+      // rows the widest SLA's clamp span behind the newest can hold no
+      // slot of any SLA: drop them
       val kept = mutable.ArrayDeque(first)
-      while (in.hasNext && key.indices.forall(i =>
-          java.util.Objects.equals(in.head.get(i), key(i)))) {
+      while (in.hasNext && in.head.getString(0) == sid) {
         kept += in.next()
-        while (ws(kept.head) < ws(kept.last) - maxSlots * period) kept.removeHead()
+        while (ws(kept.head) < ws(kept.last) - span) kept.removeHead()
       }
-      val threshold = first.getAs[Number](2).doubleValue
-      val op = ComparisonOperator.fromName(first.getString(3))
-      val m = first.getAs[Number](4).intValue
-      val n = first.getAs[Number](5).intValue
-      val policy = TreatMissingData.fromName(first.getString(6))
-      var st = AlarmStream.EmptyState
-      var prev: String = null
-      var i = 0
-      val hi = ws(kept.last)
-      (math.max(ws(first), hi - maxSlots * period) to hi by period).iterator.flatMap { w =>
-        while (i < kept.length && ws(kept(i)) < w) i += 1 // off the grid
-        val from = i
-        while (i < kept.length && ws(kept(i)) == w) i += 1
-        if (from == i) Iterator.single(w -> null)
-        else (from until i).iterator.map(j => w -> kept(j).get(KeyCols.length + 1))
-      }.map { case (w, value) => // value null: a missing slot
-        val v = AlarmStream.vote(Option(value).map(_.asInstanceOf[Number].doubleValue),
-          op, threshold, policy)
-        st = AlarmStream.stepSlot(st, w, value != null, v, m, n, policy)
-        val row = Row.fromSeq(key ++ Seq(w, value, v.getOrElse(false), st.state, prev,
-          prev != null && prev != st.state))
-        prev = st.state
-        row
-      }
+      // an SLA listed k times walks once with every row k times, as the
+      // join gave its key k copies of the series
+      slas.distinct.iterator.flatMap(sla =>
+        walkSla(sid, sla, slas.count(_ == sla), ws(first), kept, maxSlots))
+    }
+  }
+
+  /** One SLA's walk over its series' rows: the grid runs from the first
+    * row, or a clamp span of this SLA's period behind the newest row if
+    * that is later, to the newest row. `sla` holds the [[KeyCols]] after
+    * series_id; each row counts `copies` times. */
+  private def walkSla(sid: String, sla: Row, copies: Int, first: Long,
+      kept: collection.IndexedSeq[Row], maxSlots: Long): Iterator[Row] = {
+    def ws(r: Row): Long = r.getLong(1)
+    val period = sla.getAs[Number](0).longValue
+    val threshold = sla.getAs[Number](1).doubleValue
+    val op = ComparisonOperator.fromName(sla.getString(2))
+    val m = sla.getAs[Number](3).intValue
+    val n = sla.getAs[Number](4).intValue
+    val policy = TreatMissingData.fromName(sla.getString(5))
+    val key = sid +: sla.toSeq
+    var st = AlarmStream.EmptyState
+    var prev: String = null
+    var i = 0
+    val hi = ws(kept.last)
+    (math.max(first, hi - maxSlots * period) to hi by period).iterator.flatMap { w =>
+      while (i < kept.length && ws(kept(i)) < w) i += 1 // off the grid
+      val from = i
+      while (i < kept.length && ws(kept(i)) == w) i += 1
+      if (from == i) Iterator.single(w -> null)
+      else (from until i).iterator.flatMap(j => Iterator.fill(copies)(w -> kept(j).get(2)))
+    }.map { case (w, value) => // value null: a missing slot
+      val v = AlarmStream.vote(Option(value).map(_.asInstanceOf[Number].doubleValue),
+        op, threshold, policy)
+      st = AlarmStream.stepSlot(st, w, value != null, v, m, n, policy)
+      val row = Row.fromSeq(key ++ Seq(w, value, v.getOrElse(false), st.state, prev,
+        prev != null && prev != st.state))
+      prev = st.state
+      row
     }
   }
 }

@@ -70,6 +70,12 @@ object EnrichmentJoins {
    * Divergence from reference (intended semantics, quirk (b)):
    * non-matching SLAs are skipped, not a hard error.
    *
+   * Membership of lower(dimension_value) is an equi-join: each alarm
+   * fans out to its distinct derived tokens, which hash-join on
+   * lower(dimension_value), and the other two tokens are checked on the
+   * matched pairs only. A distinct token matches a value at most once,
+   * so each matching (alarm, SLA) pair is still one row.
+   *
    * @param alarms  (alarmname, ...) fact side
    * @param slaDefs (metric_name, frequency, dimension_value, ...) —
    *                tiny; broadcast. dimension_value = the last
@@ -78,11 +84,12 @@ object EnrichmentJoins {
   def resolveSlas(alarms: DataFrame, slaDefs: DataFrame): DataFrame = {
     val tokens = KeyFns.alarmDerivedTokens(col("alarmname"))
     val withTokens = alarms.withColumn("_derived", tokens)
+      .withColumn("_token", explode(array_distinct(col("_derived"))))
     val matched = withTokens.join(broadcast(slaDefs),
-      array_contains(col("_derived"), lower(col("metric_name"))) &&
-      array_contains(col("_derived"), col("frequency")) &&
-      array_contains(col("_derived"), lower(col("dimension_value"))),
+      col("_token") === lower(slaDefs("dimension_value")) &&
+      array_contains(col("_derived"), lower(slaDefs("metric_name"))) &&
+      array_contains(col("_derived"), slaDefs("frequency")),
       "inner")
-    matched.drop("_derived")
+    matched.drop("_derived", "_token")
   }
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.pipeline.DriverBounds
+import graft.plans.DefinitionLookup
 
 /**
  * CloudWatch-statistic window aggregation (O-12/O-13/O-14/O-17;
@@ -14,9 +15,11 @@ import graft.pipeline.DriverBounds
  * value) aggregated into tumbling windows of each series' period with
  * the series' declared statistic. Scale notes:
  *  - the definition side is collected once, under
- *    [[DriverBounds.DefinitionRows]], and broadcast as a local relation
- *    of those rows, so the fact side never shuffles for the join and
- *    the definition side is never planned as a query of its own;
+ *    [[DriverBounds.DefinitionRows]], and shipped as one broadcast
+ *    variable keyed by series id; each datapoint looks its series'
+ *    definition rows up ([[graft.plans.DefinitionLookup]]) and fans
+ *    out to each, so the fact side never shuffles or joins for them
+ *    and the definition side is never planned as a query of its own;
  *  - the groupBy keys on (series_id, window_start) — partial (map-side)
  *    aggregation collapses each partition before the single shuffle;
  *  - Sum/Average run over DECIMAL so results are independent of
@@ -99,7 +102,8 @@ object StatWindowAgg {
    *
    * @param datapoints fact table with columns (series_id, ts:timestamp, value:double)
    * @param defs       definition table with (unique_id, statistic, period, frequency)
-   *                   — collected once, with a bound, and broadcast
+   *                   — collected once, with a bound, and looked up
+   *                   by series id
    * @param frequency  O-14 frequency filter (minute/hour/day), or null for all
    * @return (series_id, statistic, period, frequency, window_start:long, metricvalue:double)
    */
@@ -109,18 +113,19 @@ object StatWindowAgg {
     // The definition side is collected once: its distinct pNN
     // statistics are definition METADATA (a handful of strings), not
     // data — resolving them driver-side keeps percentile_approx's
-    // fraction foldable for codegen — and the broadcast below reads a
-    // local relation of the same rows instead of re-planning the side.
-    val (defRows, defsLocal) = DriverBounds.collectDefinitions(
-      defsF.select("unique_id", "statistic", "period", "frequency"),
-      "StatWindowAgg definitions")
+    // fraction foldable for codegen — and the lookup below ships the
+    // same rows instead of re-planning the side.
+    val defCols = defsF.select("unique_id", "statistic", "period", "frequency")
+    val defRows = DriverBounds.collectDefinitions(defCols, "StatWindowAgg definitions")
     val pStats: Seq[(String, Double)] =
       requireStatistics(defRows.map(_.getString(1)).toSeq, "StatWindowAgg")
         .flatMap(s => percentileFraction(s).map(s -> _))
 
-    val dps = finite(datapoints, "value")
-    val joined = dps.join(broadcast(defsLocal),
-      dps("series_id") === defsLocal("unique_id"), "inner")
+    // one output row per (datapoint, definition row of its series): an
+    // inner equi-join on the series id, without the join
+    val table = DefinitionLookup.table(datapoints.sparkSession, defRows.toSeq, defCols.schema)
+    val joined = finite(datapoints, "value").select(col("*"),
+      inline(DefinitionLookup.rowsFor(col("series_id"), table)))
 
     // O-17: windows are per-period; period is a group key so series
     // with different periods coexist in one pass.

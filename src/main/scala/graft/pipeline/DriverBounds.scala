@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, Row}
 
 /**
@@ -20,9 +18,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 object DriverBounds {
 
   /** Row bound on a collected definition side: the window and alarm
-    * operators' definition tables (one row per series or per SLA). The
-    * broadcast join these tables feed already held every row on the
-    * driver; collecting them makes that explicit and bounded (ENGINE.md
+    * operators' definition tables (one row per series or per SLA),
+    * which they look up by series id instead of joining (ENGINE.md
     * "Definition sides"). */
   val DefinitionRows = 100000L
 
@@ -45,12 +42,9 @@ object DriverBounds {
         "see the operator's scaladoc for the distributed alternative")
 
   /** A definition side held on the driver: `df`'s rows collected once
-    * under [[DefinitionRows]], and a local relation of the same rows.
-    * Projecting or collecting the local relation runs no Spark job, a
-    * broadcast of it runs one that ships the rows, and the rows never
-    * enter generated code. */
-  def collectDefinitions(df: DataFrame, what: String): (Array[Row], DataFrame) = {
-    val rows = boundedCollect(df, DefinitionRows, what)
-    (rows, df.sparkSession.createDataFrame(rows.toSeq.asJava, df.schema))
-  }
+    * under [[DefinitionRows]]. The operators check them there and ship
+    * them as one broadcast variable ([[graft.plans.DefinitionLookup]]),
+    * so the rows never enter generated code. */
+  def collectDefinitions(df: DataFrame, what: String): Array[Row] =
+    boundedCollect(df, DefinitionRows, what)
 }

@@ -2,11 +2,12 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.util.QuantileSummaries
-import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.functions.{col, inline}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.{AlarmStateMachine, StatWindowAgg}
 import graft.pipeline.DriverBounds
+import graft.plans.DefinitionLookup
 import graft.streaming.AlarmStream.{AlarmState, SlaConf, Transition}
 
 /**
@@ -83,7 +84,7 @@ import graft.streaming.AlarmStream.{AlarmState, SlaConf, Transition}
  */
 object StreamingAlarmPipeline {
 
-  /** Raw datapoint with its (broadcast-joined) SLA config. `statistic`
+  /** Raw datapoint with its (looked-up) SLA config. `statistic`
     * rides with the SLA row (CloudWatch semantics: the statistic is an
     * alarm property, not a stream property). */
   final case class ConfiguredPoint(
@@ -270,8 +271,9 @@ object StreamingAlarmPipeline {
    * @param slas       static (series_id, period, threshold,
    *                   comparison_operator, datapoints_to_alarm,
    *                   evaluation_periods, treat_missing_data
-   *                   [, statistic]); tiny — broadcast into a
-   *                   stateless stream-static join. A `statistic`
+   *                   [, statistic]); tiny — collected once and
+   *                   looked up by series id in a stateless projection
+   *                   ([[graft.plans.DefinitionLookup]]). A `statistic`
    *                   column overrides the stream-wide default per SLA
    *                   row (CloudWatch semantics: each alarm carries its
    *                   own statistic), so one stream evaluates
@@ -299,9 +301,9 @@ object StreamingAlarmPipeline {
     // crash-loops every restart).
     val perSla = slas.columns.contains("statistic")
     StatWindowAgg.requireStatistic(statistic)
-    val (slaRows, slasLocal) = DriverBounds.collectDefinitions(
-      slas.select((AlarmStateMachine.KeyCols ++ (if (perSla) Seq("statistic") else Nil))
-        .map(col): _*), "StreamingAlarmPipeline SLA definitions")
+    val slaCols = slas.select((AlarmStateMachine.KeyCols ++
+      (if (perSla) Seq("statistic") else Nil)).map(col): _*)
+    val slaRows = DriverBounds.collectDefinitions(slaCols, "StreamingAlarmPipeline SLA definitions")
     // a null per-SLA statistic takes the stream-wide default
     if (perSla) StatWindowAgg.requireStatistics(
       slaRows.map(_.getString(AlarmStateMachine.KeyCols.length)).filter(_ != null).toSeq,
@@ -312,9 +314,11 @@ object StreamingAlarmPipeline {
         org.apache.spark.sql.functions.coalesce(col("statistic"),
           org.apache.spark.sql.functions.lit(statistic))
       else org.apache.spark.sql.functions.lit(statistic)
+    val table = DefinitionLookup.table(spark, slaRows.toSeq, slaCols.schema)
     datapoints
       .withWatermark("ts", watermark)
-      .join(broadcast(slasLocal), Seq("series_id")) // stateless stream-static join
+      // every SLA row of the point's series, as a stream-static join would
+      .select(col("*"), inline(DefinitionLookup.rowsFor(col("series_id"), table)))
       .select(col("series_id").as("seriesId"), col("ts").as("eventTime"),
         col("value").cast("double").as("value"),
         col("period").cast("long").as("period"), col("threshold").cast("double"),
@@ -327,7 +331,7 @@ object StreamingAlarmPipeline {
       // key by series AND full SLA config (incl. statistic): a series
       // may carry several SLAs (warning + critical), and mixing their
       // vote streams in one machine would interleave states — same
-      // reason the batch variant's window partitions by the full config
+      // reason the batch variant walks each SLA of a series on its own
       .groupByKey(p => (p.seriesId, p.period, p.threshold,
         p.comparisonOperator, p.datapointsToAlarm, p.evaluationPeriods,
         p.treatMissingData, p.statistic))

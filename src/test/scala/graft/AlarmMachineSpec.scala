@@ -126,6 +126,42 @@ class AlarmMachineSpec extends SparkTestBase {
       (5999940L, None, "OK", Some("OK")), (6000000L, Some(9.0), "ALARM", Some("OK"))))
   }
 
+  test("SLAs of different periods on one series keep their own clamp and grid") {
+    // every 60 s from 300 to 1500 but 900; three SLAs, maxSlotsPerSeries
+    // 3: each grid starts at max(first row, newest - 3 * its period)
+    val series = seriesDf((300L to 1500L by 60L).filter(_ != 900L).map(_ -> Some(9.0)))
+    val slas = Seq(60, 300, 600).map(p =>
+      ("s1", p, 5.0, "GREATER_THAN_THRESHOLD", 1, 1, "MISSING"))
+      .toDF("series_id", "period", "threshold", "comparison_operator",
+        "datapoints_to_alarm", "evaluation_periods", "treat_missing_data")
+    def slots(slaRows: org.apache.spark.sql.DataFrame) =
+      AlarmStateMachine.evaluate(series, slaRows, maxSlotsPerSeries = 3)
+        .select("period", "window_start", "metricvalue", "statevalue").collect()
+        .map(r => (r.getInt(0), r.getLong(1), Option(r.get(2)), r.getString(3))).toSet
+    val got = slots(slas)
+    def grid(p: Int) = got.filter(_._1 == p).map(_._2).toSeq.sorted
+    assert(grid(60) == Seq(1320L, 1380L, 1440L, 1500L), s"$got")   // 1500 - 180
+    assert(grid(300) == Seq(600L, 900L, 1200L, 1500L), s"$got")    // 1500 - 900
+    assert(grid(600) == Seq(300L, 900L, 1500L), s"$got")           // the first row
+    assert(got.filter(_._2 == 900L).forall(s => s._3.isEmpty && s._4 == "INSUFFICIENT_DATA"),
+      s"$got")
+    // walking them together equals walking each alone
+    assert(got == Seq(60, 300, 600).flatMap(p => slots(slas.filter(col("period") === p))).toSet)
+  }
+
+  test("an SLA listed twice walks as a join of it would: every row twice") {
+    // the series joined to two copies of an SLA is the doubled series
+    // joined to one
+    val values = Seq(0L -> Some(9.0), 60L -> Some(1.0), 180L -> Some(9.0), 240L -> Some(9.0))
+    val sla = slaDf(5.0, "GREATER_THAN_THRESHOLD", 2, 3, "MISSING")
+    def slots(series: org.apache.spark.sql.DataFrame, slas: org.apache.spark.sql.DataFrame) =
+      AlarmStateMachine.evaluate(series, slas).collect().map(_.toSeq).toSeq
+        .groupBy(identity).map { case (r, rs) => r -> rs.length }
+    val got = slots(seriesDf(values), sla.union(sla))
+    assert(got == slots(seriesDf(values ++ values), sla), s"$got")
+    assert(got.values.sum == 9, s"$got") // 4 rows twice, one missing slot once
+  }
+
   test("NaN metricvalue breaches by Spark ordering, batch and stream alike") {
     // NaN sorts above every double: it breaches GREATER_*, never LESS_*
     val s = Seq(0L -> Some(1.0), 60L -> Some(Double.NaN), 120L -> None,

@@ -68,8 +68,11 @@ import org.scalatest.funsuite.AnyFunSuite
  * (its state and step) and no stateful wiring, the batch walk keeps no
  * vote window of its own, and only `RecordShape` writes the lake partition
  * layout; `src/main` holds one rendition of each operator, its
- * parity references living in `ComposedReferences`; and `src/main`
- * writes session conf only in sessions it owns.
+ * parity references living in `ComposedReferences`; `src/main`
+ * writes session conf only in sessions it owns; and the window and
+ * alarm operators look their definitions up instead of broadcast-joining
+ * them, through the one lookup in `plans/DefinitionLookup.scala`, which
+ * is also the one place that creates a broadcast variable.
  */
 class GlobalWindowLintSpec extends AnyFunSuite {
 
@@ -256,6 +259,28 @@ class GlobalWindowLintSpec extends AnyFunSuite {
     val strays = Seq("registry", "metrics").flatMap(pkg =>
       countSites(s"src/main/scala/graft/$pkg", pat).keys.map(rel => s"graft/$pkg/$rel"))
     assert(strays.isEmpty, s"sparkContext.parallelize in: ${strays.sorted.mkString(", ")}")
+  }
+
+  test("the window and alarm operators look definitions up, never broadcast-join them") {
+    // A broadcast join of a collected definition side runs one job and
+    // builds a hash relation whose page a cached output pins (ENGINE.md
+    // "Definition sides"); the lookup ships the rows as one broadcast
+    // variable, and both live in one file.
+    val operators = Set("graft/operators/StatWindowAgg.scala",
+      "graft/operators/AlarmStateMachine.scala", "graft/streaming/StreamingAlarmPipeline.scala")
+    val home = "graft/plans/DefinitionLookup.scala"
+    val files = sources("src/main/scala").map(_._1).toSet
+    val missing = (operators + home) -- files
+    val joins = countSites("src/main/scala",
+      java.util.regex.Pattern.compile("\\bbroadcast\\s*\\(")).keySet.intersect(operators)
+      .toSeq.sorted.map(rel => s"broadcast( in $rel (look definitions up through $home)")
+    val lookups = countSites("src/main/scala", java.util.regex.Pattern.compile(
+      "\\bcase\\s+class\\s+DefinitionLookup\\b|\\bclass\\s+DefinitionTable\\b" +
+        "|\\bsparkContext\\s*\\.\\s*broadcast\\b"))
+      .keys.filter(_ != home).toSeq.sorted
+      .map(rel => s"a definition lookup or broadcast variable in $rel (belongs in $home)")
+    assert(missing.isEmpty, s"moved or renamed: ${missing.toSeq.sorted.mkString(", ")}")
+    assert((joins ++ lookups).isEmpty, (joins ++ lookups).mkString("\n"))
   }
 
   test("src/main keeps one rendition per operator") {

@@ -72,9 +72,13 @@ class NativeExpressionSpec extends SparkTestBase {
       .flatMap(p => decl.findAllMatchIn(Files.readString(p)).map("graft.plans." + _.group(1)))
       .toSet
     finally stream.close()
-    assert(declared.size == 17, s"$declared")
+    // a definition lookup reads a broadcast variable built on the
+    // driver from collected rows; SQL text cannot name one
+    val driverBuilt = Set("graft.plans.DefinitionLookup")
+    assert(driverBuilt.subsetOf(declared), s"$declared")
+    assert(declared.size - driverBuilt.size == 17, s"$declared")
     val tabled = GraftExtensions.functions.map(_._2.getClassName)
-    assert(tabled.toSet == declared)
+    assert(tabled.toSet == declared -- driverBuilt)
     assert(tabled.distinct.size == tabled.size && names.distinct.size == names.size)
     GraftExtensions.functions.foreach { case (id, info, _) =>
       assert(info.getName == id.funcName)

@@ -1,6 +1,12 @@
 package graft
 
 import java.sql.Timestamp
+import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+import org.apache.spark.sql.execution.GenerateExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import graft.functions.{KeyFns, TextFns, TimeFns}
 import graft.operators._
@@ -29,16 +35,76 @@ class OperatorSpec extends SparkTestBase {
     assert(one("p50") == Seq(("a", 0L, 1.0), ("a", 60L, 5.0), ("b", 0L, 2.0)))
   }
 
-  test("aggregate() filters frequency and joins defs broadcast (O-14/O-20)") {
+  test("aggregate() filters frequency and looks defs up without a join (O-14/O-20)") {
     val dp = Seq(("u1", ts(10), 1.0), ("u2", ts(10), 2.0))
       .toDF("series_id", "ts", "value")
     val defs = Seq(("u1", "Sum", 60, "minute"), ("u2", "Sum", 3600, "hour"))
       .toDF("unique_id", "statistic", "period", "frequency")
     val out = StatWindowAgg.aggregate(dp, defs, "minute").collect()
     assert(out.map(_.getString(0)).toSeq == Seq("u1"))
-    val plan = StatWindowAgg.aggregate(dp, defs, null).queryExecution
-      .executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), s"defs join must broadcast:\n$plan")
+    // the definitions enter through the lookup, not a join: the run
+    // plan (query stages included) holds no Join and no
+    // BroadcastExchange, and its one Exchange is the aggregate's, over
+    // partial aggregates
+    val all = StatWindowAgg.aggregate(dp, defs, null)
+    all.collect()
+    val plan = all.queryExecution.executedPlan
+    val nodes = new AdaptiveSparkPlanHelper {}.collect(plan) { case p => p }
+    assert(nodes.collect { case j: BaseJoinExec => j }.isEmpty, s"definitions joined:\n$plan")
+    assert(nodes.collect { case b: BroadcastExchangeExec => b }.isEmpty,
+      s"definitions broadcast as a relation:\n$plan")
+    val exchanges = nodes.collect { case e: Exchange => e }
+    assert(exchanges.length == 1, s"exchanges besides the aggregate's:\n$plan")
+    val below = exchanges.head.child.collectFirst { case a: BaseAggregateExec => a }
+    assert(below.exists(_.aggregateExpressions.forall(_.mode == Partial)),
+      s"the exchange does not follow partial aggregation:\n$plan")
+    assert(exchanges.head.child.collectFirst { case g: GenerateExec => g }.nonEmpty &&
+      plan.toString.contains("definition_lookup"), s"no definition lookup:\n$plan")
+  }
+
+  test("StatWindowAgg: definition rows sharing a unique_id each get their windows") {
+    // Metric.uniqueId omits the statistic, so one series id may carry
+    // several statistics; each must come out, as a join would give
+    val dp = Seq(("u1", ts(10), 1.0), ("u1", ts(20), 3.0), ("u1", ts(70), 5.0),
+      ("u2", ts(10), 2.0)).toDF("series_id", "ts", "value")
+    val defs = Seq(("u1", "Sum", 60, "minute"), ("u1", "Maximum", 60, "minute"),
+      ("u1", "SampleCount", 3600, "hour"), ("u3", "Sum", 60, "minute"))
+      .toDF("unique_id", "statistic", "period", "frequency")
+    val got = StatWindowAgg.aggregate(dp, defs).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(4), r.getDouble(5))).toSet
+    assert(got == Set(("u1", "Sum", 0L, 4.0), ("u1", "Sum", 60L, 5.0),
+      ("u1", "Maximum", 0L, 3.0), ("u1", "Maximum", 60L, 5.0),
+      ("u1", "SampleCount", 0L, 3.0)), s"$got")
+  }
+
+  test("resolveSlas hash-joins on the dimension token and keeps every matching pair once (O-22)") {
+    // tokens: (4th, 5th, 7th.. hyphen part of the name before "-SLA")
+    val alarms = Seq("p-p-p-cpu-hour-p-host-a-SLA-1", "p-p-p-cpu-hour-p-cpu-SLA-2",
+      "p-p-p-mem-day-p-host-b-SLA-3", "p-p-p-cpu-hour-p-HOST-A-SLA-4", "short-SLA-5", null)
+      .toDF("alarmname")
+    val slaDefs = Seq(("CPU", "hour", "Host-A", 1), ("cpu", "hour", "CPU", 2),
+      ("mem", "day", "host-b", 3), ("mem", "hour", "host-b", 4), ("cpu", "hour", null, 5))
+      .toDF("metric_name", "frequency", "dimension_value", "sla")
+    val resolved = EnrichmentJoins.resolveSlas(alarms, slaDefs)
+    // the membership test over every (alarm, SLA) pair
+    val derived = KeyFns.alarmDerivedTokens(col("alarmname"))
+    val pairs = alarms.crossJoin(slaDefs).filter(
+      array_contains(derived, lower(col("metric_name"))) &&
+      array_contains(derived, col("frequency")) &&
+      array_contains(derived, lower(col("dimension_value"))))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))
+    assert(resolved.columns.toSeq == pairs.columns.toSeq)
+    assert(rows(resolved) == rows(pairs))
+    // "p-p-p-cpu-hour-p-cpu" derives cpu twice and still matches SLA 2
+    // once; SLA 2's dimension value is cpu, so every cpu/hour alarm
+    // matches it
+    assert(rows(resolved).map(r => (r(0), r(4))) == Seq(("p-p-p-cpu-hour-p-HOST-A-SLA-4", 2),
+      ("p-p-p-cpu-hour-p-cpu-SLA-2", 2), ("p-p-p-cpu-hour-p-host-a-SLA-1", 1),
+      ("p-p-p-cpu-hour-p-host-a-SLA-1", 2), ("p-p-p-mem-day-p-host-b-SLA-3", 3)))
+    val plan = resolved.queryExecution.executedPlan.toString
+    assert(!plan.contains("BroadcastNestedLoopJoin") && plan.contains("BroadcastHashJoin"),
+      s"resolveSlas must hash-join:\n$plan")
   }
 
   test("StatWindowAgg: NaN and ±Infinity datapoints are no-data") {

@@ -88,6 +88,11 @@ class RunMetricsSpec extends SparkTestBase {
         "60 * (id + 1) AS period", "1.5 AS threshold", "'GREATER_THAN_THRESHOLD' AS comparison_operator",
         "1 AS datapoints_to_alarm", "1 AS evaluation_periods", "'MISSING' AS treat_missing_data")
       assert(jobs(AlarmStateMachine.evaluate(series, ranged)) == 1)
+      // executing them runs no job for the definitions either: the
+      // lookup ships them as a broadcast variable where a broadcast
+      // join of the local relation ran one job each
+      assert(jobs(StatWindowAgg.aggregate(dps, defs).collect()) == 2)
+      assert(jobs(AlarmStateMachine.evaluate(series, slas).collect()) == 2)
       // a broadcast of a local relation still runs one job, which
       // ships the driver rows (LocalTableScanExec collects through the
       // generic RDD path); with the result stage over the one-partition
